@@ -20,8 +20,6 @@ side by side so the two definitions can't drift apart.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd  # noqa: F401  (pandas-UDF type hints resolve via module globals)
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -68,50 +66,6 @@ def cosine(a: Column, b: Column) -> Column:
     """cos(a,b) = dot/sqrt(norm_a*norm_b) — the exact formula the DuckDB
     snippet uses, so results are bit-identical."""
     return dot_fold(a, b) / F.sqrt(dot_fold(a, a) * dot_fold(b, b))
-
-
-def _dot_fold_pd(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized twin of ``dot_fold`` — BIT-IDENTICAL by construction.
-
-    Per row the accumulation order is the same sequential left-to-right
-    IEEE-double fold ``aggregate()`` performs (acc starts at 0.0, one
-    rounded multiply then one rounded add per element, in element
-    order); across rows each step is one NumPy vector op, so a batch of
-    N pairs costs dim vector ops instead of N*dim interpreted Catalyst
-    expression evaluations (the HOF fold is CodegenFallback).  float32
-    inputs are widened to float64 first — exact, the same cast the HOF
-    fold applies per element.  Pinned against the HOF fold by
-    tests/test_fold_vectorized.py (bitwise, all pairs)."""
-    if len(a) == 0:
-        return pd.Series(np.empty(0, dtype=np.float64))
-    av = np.vstack(a.to_numpy()).astype(np.float64, copy=False)
-    bv = np.vstack(b.to_numpy()).astype(np.float64, copy=False)
-    acc = np.zeros(av.shape[0], dtype=np.float64)
-    for j in range(av.shape[1]):
-        acc += av[:, j] * bv[:, j]
-    return pd.Series(acc)
-
-
-#: Lazily-built pandas UDF wrapper (the decorator parses its DDL return
-#: type through the active session, so it cannot run at import time).
-_DOT_FOLD_UDF = None
-
-
-def dot_fold_vec(a: Column, b: Column) -> Column:
-    """Arrow-vectorized sequential dot fold (see ``_dot_fold_pd``).
-
-    Use ONLY in pair-scan filters where the fold runs once per candidate
-    PAIR: there the per-row Arrow transfer (2 x dim doubles) is amortized
-    by removing dim interpreted expression evaluations per row (guide
-    §4.2/§4.3 — vectorize the per-batch work, cross the boundary in
-    Arrow).  For per-document folds the JVM HOF is fine and avoids the
-    Python boundary entirely."""
-    global _DOT_FOLD_UDF
-    if _DOT_FOLD_UDF is None:
-        from pyspark.sql.types import DoubleType
-
-        _DOT_FOLD_UDF = F.pandas_udf(_dot_fold_pd, DoubleType())
-    return _DOT_FOLD_UDF(a, b)
 
 
 # ---------- DuckDB snippet builders (oracle side) ----------

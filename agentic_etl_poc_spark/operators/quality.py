@@ -25,6 +25,50 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def lag_minutes(ts: _dt.datetime | None) -> float | None:
+    """Minutes from ``ts`` to now; a tz-naive ``ts`` is read as UTC."""
+    if ts is None:
+        return None
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    return (_dt.datetime.now(_dt.timezone.utc) - ts).total_seconds() / 60.0
+
+
+def gate_stats(
+    df: DataFrame, nonnull_cols: list[str] | None = None, ts_col: str = ""
+) -> dict:
+    """The ONE aggregate behind every gate: ``count(*)``, one null count
+    per listed column present in ``df``, and ``max(ts_col)`` when that
+    column is present.  ``dq_verdict``, ``verify_csv`` and
+    ``verify_parquet`` each derive their result dict from this; a caller
+    that needs two verdicts over the same frame (the stream tail) passes
+    the union of their columns and pays one scan.
+
+    Null sums stay raw (``None`` over zero rows): each verdict keeps its
+    own reading of an empty frame."""
+    present = [c for c in dict.fromkeys(nonnull_cols or []) if c in df.columns]
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in present:
+        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls__{c}"))
+    has_ts = bool(ts_col) and ts_col in df.columns
+    if has_ts:
+        aggs.append(F.max(F.col(ts_col).cast("timestamp")).alias("__max_ts"))
+
+    from agentic_etl_poc_spark import plan_capture
+
+    agg_df = df.agg(*aggs)
+    plan_capture.note("dq_agg", agg_df)
+    row = agg_df.collect()[0].asDict()
+    stats = {
+        "columns": list(df.columns),
+        "rows": int(row["__rows"]),
+        "nulls": {c: row[f"__nulls__{c}"] for c in present},
+    }
+    if has_ts:
+        stats["max_ts"] = row["__max_ts"]
+    return stats
+
+
 def dq_check(
     df: DataFrame,
     min_rows: int = 1,
@@ -32,27 +76,32 @@ def dq_check(
     freshness_minutes: float | None = None,
     timestamp_col: str = "",
 ) -> dict:
+    stats = gate_stats(
+        df, nonnull_cols, timestamp_col if freshness_minutes else ""
+    )
+    return dq_verdict(
+        stats, min_rows, nonnull_cols, freshness_minutes, timestamp_col
+    )
+
+
+def dq_verdict(
+    stats: dict,
+    min_rows: int = 1,
+    nonnull_cols: list[str] | None = None,
+    freshness_minutes: float | None = None,
+    timestamp_col: str = "",
+) -> dict:
+    """The DQ result dict from ``gate_stats`` over (at least) these
+    columns."""
     # A configured nonnull column that is missing from the frame is itself
     # a DQ FAILURE (misspelled config or a transform dropped the column) —
     # silently skipping it would make the gate vacuously pass, which is
     # the opposite of what a gate is for.  The reference fails loudly here
     # too (tools.py dq_check raises KeyError).
     requested = list(nonnull_cols or [])
-    missing = [c for c in requested if c not in df.columns]
-    nonnull_cols = [c for c in requested if c in df.columns]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in nonnull_cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls__{c}"))
-    check_fresh = bool(freshness_minutes) and timestamp_col in df.columns
-    if check_fresh:
-        aggs.append(F.max(F.col(timestamp_col).cast("timestamp")).alias("__max_ts"))
-
-    from agentic_etl_poc_spark import plan_capture
-
-    agg_df = df.agg(*aggs)
-    plan_capture.note("dq_agg", agg_df)
-    row = agg_df.collect()[0].asDict()
-    rows = int(row["__rows"])
+    missing = [c for c in requested if c not in stats["columns"]]
+    nonnull_cols = [c for c in requested if c in stats["columns"]]
+    rows = stats["rows"]
 
     ok, err = True, None
     if missing:
@@ -61,21 +110,15 @@ def dq_check(
         ok, err = False, f"min_rows check failed: {rows} < {min_rows}"
     else:
         for c in nonnull_cols:
-            if int(row[f"__nulls__{c}"] or 0) > 0:
+            if int(stats["nulls"][c] or 0) > 0:
                 ok, err = False, f"nonnull check failed: {c}"
                 break
 
     result: dict = {"rows": rows, "status": bool(ok), "error": err}
+    check_fresh = bool(freshness_minutes) and timestamp_col in stats["columns"]
     if check_fresh:
-        max_ts = row["__max_ts"]
-        lag_min = None
-        fresh_ok = True
-        if max_ts is not None:
-            if max_ts.tzinfo is None:
-                max_ts = max_ts.replace(tzinfo=_dt.timezone.utc)
-            now = _dt.datetime.now(_dt.timezone.utc)
-            lag_min = (now - max_ts).total_seconds() / 60.0
-            fresh_ok = lag_min <= float(freshness_minutes)
+        lag_min = lag_minutes(stats["max_ts"])
+        fresh_ok = lag_min is None or lag_min <= float(freshness_minutes)
         result["lag_minutes"] = lag_min
         result["fresh_ok"] = fresh_ok
         if ok and not fresh_ok:
@@ -91,7 +134,9 @@ def observed_write(
 ) -> dict:
     """Single-action write-plus-metrics via Spark's Observation API: the
     row count and per-column null counts are accumulated DURING the sink
-    action, so the pipeline pays ONE pass instead of DQ-then-write.
+    action, so the pipeline pays ONE pass instead of write-then-count.
+    The plan runtime's quarantine split writes its violating rows through
+    here and reports the observed row count as ``dq.quarantined``.
 
     Trade-off vs the pre-load gate (dq_check): metrics arrive only after
     the write has happened, so this is validate-after-write (pair it with

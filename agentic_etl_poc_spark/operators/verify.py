@@ -23,7 +23,8 @@ import datetime as _dt
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from agentic_etl_poc_spark.operators.quality import gate_stats, lag_minutes
 
 DEFAULT_MAX_LAG_MINUTES = 180
 
@@ -54,14 +55,6 @@ def _quote_ident(name: str, conn_str: str) -> str:
             "`" + p.replace("`", "``") + "`" for p in name.split(".")
         )
     return quote_ident(name)
-
-
-def _lag_minutes_from(ts: _dt.datetime | None) -> float | None:
-    if ts is None:
-        return None
-    if ts.tzinfo is None:
-        ts = ts.replace(tzinfo=_dt.timezone.utc)
-    return (_dt.datetime.now(_dt.timezone.utc) - ts).total_seconds() / 60.0
 
 
 def verify_csv(
@@ -96,18 +89,11 @@ def verify_csv(
             .option("nullValue", "NA")
             .csv(path)
         )
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        present = [c for c in nonnull_cols if c in df.columns]
-        for c in present:
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls__{c}"))
-        has_ts = timestamp_col and timestamp_col in df.columns
-        if has_ts:
-            aggs.append(F.max(F.col(timestamp_col).cast("timestamp")).alias("__max_ts"))
-        row = df.agg(*aggs).collect()[0].asDict()
-        rows = int(row["__rows"])
-        nonnull_ok = all(int(row[f"__nulls__{c}"] or 0) == 0 for c in present)
-        if has_ts:
-            lag_min = _lag_minutes_from(row["__max_ts"])
+        stats = gate_stats(df, nonnull_cols, timestamp_col)
+        rows = stats["rows"]
+        nonnull_ok = all(int(n or 0) == 0 for n in stats["nulls"].values())
+        if "max_ts" in stats:
+            lag_min = lag_minutes(stats["max_ts"])
             if lag_min is not None:
                 fresh_ok = lag_min <= max_lag_minutes
     else:
@@ -117,7 +103,7 @@ def verify_csv(
         with open(path, encoding="utf-8", errors="ignore") as f:
             rows = sum(1 for _ in f) - (1 if include_header else 0)
         mtime = _dt.datetime.fromtimestamp(os.path.getmtime(path), _dt.timezone.utc)
-        lag_min = (_dt.datetime.now(_dt.timezone.utc) - mtime).total_seconds() / 60.0
+        lag_min = lag_minutes(mtime)
         fresh_ok = lag_min <= max_lag_minutes
 
     status = (rows >= min_rows) and nonnull_ok and fresh_ok
@@ -168,7 +154,7 @@ def verify_table(
                 f"SELECT MAX({ts_col}) AS {_quote_ident('m', conn_str)} "
                 f"FROM {table}",
             )
-            lag_min = _lag_minutes_from(ts_df.collect()[0]["m"])
+            lag_min = lag_minutes(ts_df.collect()[0]["m"])
             if lag_min is not None:
                 fresh_ok = lag_min <= max_lag_minutes
         except Exception as e:

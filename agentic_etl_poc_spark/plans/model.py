@@ -40,6 +40,11 @@ class CsvSource:
     #: same pipeline), declaring them skips Spark's schema-inference
     #: pass — one scan per source instead of two (guide §6.2).  Sources
     #: without an entry keep the reference's inference behavior.
+    #: Declared types are taken as written and need not equal what
+    #: inference would pick (inference narrows small integers to INT, a
+    #: declaration may say BIGINT), so a plan that declares schemas must
+    #: CAST in its transform, or join only on keys whose declared types
+    #: match, rather than rely on the inferred types.
     schemas: dict[str, str] | None = None
     schema: str | None = None  # single-path variant
 

@@ -15,6 +15,26 @@ Spark-native twists:
 - alert/status hooks are injectable callables; defaults print like the
   reference (``ALERT to {channel}: {message}`` / ``STATUS[{step}]:``,
   reference: tools.py:267-277).
+
+Spark actions per stage (each stage runs one; a number the run already
+holds is passed on, not recounted):
+
+- extract: only the reader's own (a source without a declared schema
+  infers one with one job).
+- incremental: one ``max(ts)`` aggregate for the new watermark, over the
+  filtered source, kept apart from the DQ aggregate so the watermark
+  means "newest source row seen" whatever the transform filters.
+- quarantine split: one write of the violating rows; their count is an
+  observed metric of that write (``observed_write``), not a second pass.
+- DQ gate: one aggregate (rows, per-column nulls, max ts).
+- load: the sink write; every sink takes the DQ row count as
+  ``row_count`` instead of counting again.  A parquet upsert also
+  collects its touched partition values.
+- verify: one re-read of the written artifact and one aggregate — a
+  separate scan on purpose, because catching sink corruption is its job.
+- stream plans: the AvailableNow drain, then ONE scan of the drained
+  artifact aggregates the union of the DQ and verify columns, and both
+  verdicts are derived from that row (``gate_stats``).
 """
 
 from __future__ import annotations
@@ -25,7 +45,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from agentic_etl_poc_spark.operators.quality import dq_check
+from agentic_etl_poc_spark.operators.quality import (
+    dq_check,
+    dq_verdict,
+    gate_stats,
+    observed_write,
+)
 from agentic_etl_poc_spark.operators.transform import run_single_sql, run_steps
 from agentic_etl_poc_spark.operators.verify import verify_csv, verify_table
 from agentic_etl_poc_spark.plans.model import Plan
@@ -329,8 +354,14 @@ def run_from_plan(
             )
             bad = out.filter(viol)
             plan_capture.note("quarantine_sink", bad)
-            bad.write.mode("overwrite").parquet(cks.quarantine_path)
-            n_quarantined = bad.count()  # persisted parent: cheap re-read
+            # the row count rides the write as an observed metric: one
+            # action, not a write then a count
+            n_quarantined = observed_write(
+                bad,
+                lambda d: d.write.mode("overwrite").parquet(
+                    cks.quarantine_path
+                ),
+            )["rows"]
             out = out.filter(~viol)
 
         # 3) DQ gate (first action)
@@ -374,6 +405,7 @@ def run_from_plan(
                 partition_by=ld.partition_by,
                 key_cols=ld.key_cols,
                 change_feed=ld.change_feed,
+                row_count=dq["rows"],
             )
         else:
             msg = load_to_postgres(
@@ -477,9 +509,20 @@ def _run_stream_plan_tail(
 
     run_available_now(out, checkpoint, ld.file_path)
 
-    artifact = spark.read.parquet(ld.file_path)
-    dq = dq_check(
-        artifact,
+    # Both gates read the same drained artifact and nothing is written
+    # between them, so ONE scan aggregates the union of their columns and
+    # each verdict is derived from that row.
+    from agentic_etl_poc_spark.sinks.parquet_sink import parquet_verdict
+
+    vf = plan.verify
+    ver_cols = vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols
+    stats = gate_stats(
+        spark.read.parquet(ld.file_path),
+        [*(cks.nonnull_cols or []), *(ver_cols or [])],
+        cks.timestamp_col if cks.freshness_minutes else "",
+    )
+    dq = dq_verdict(
+        stats,
         min_rows=cks.min_rows,
         nonnull_cols=cks.nonnull_cols,
         freshness_minutes=cks.freshness_minutes,
@@ -490,16 +533,10 @@ def _run_stream_plan_tail(
             send_alert(alerts.get("on_fail", ""), f"DQ failed: {json.dumps(dq)}")
         return {"status": "failed", "dq": dq}
 
-    from agentic_etl_poc_spark.sinks.parquet_sink import verify_parquet
-
-    vf = plan.verify
-    ver = verify_parquet(
-        spark,
-        ld.file_path,
+    ver = parquet_verdict(
+        stats,
         min_rows=vf.min_rows if vf.min_rows is not None else cks.min_rows,
-        nonnull_cols=(
-            vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols
-        ),
+        nonnull_cols=ver_cols,
     )
     if not ver.get("status", False):
         if alerts:

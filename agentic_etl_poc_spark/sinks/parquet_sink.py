@@ -193,12 +193,18 @@ def write_parquet(
     partition_by: list[str] | None = None,
     key_cols: list[str] | None = None,
     change_feed: bool = False,
+    row_count: int | None = None,
 ) -> str:
+    """Write ``df`` as parquet (``mode="upsert"`` delegates to
+    ``upsert_parquet``).  ``row_count``, when the caller already holds
+    it (the plan runtime's DQ count of the same persisted frame), skips
+    the count job the message would otherwise cost."""
     if mode == "upsert":
         return upsert_parquet(
-            df, path, key_cols or [], partition_by or [], change_feed
+            df, path, key_cols or [], partition_by or [], change_feed,
+            row_count=row_count,
         )
-    n = df.count()
+    n = df.count() if row_count is None else row_count
     if partition_by:
         # cluster rows by the partition columns first — otherwise every
         # upstream task writes a sliver into every partition directory
@@ -243,6 +249,7 @@ def upsert_parquet(
     key_cols: list[str],
     partition_by: list[str],
     change_feed: bool = False,
+    row_count: int | None = None,
 ) -> str:
     """Copy-on-write MERGE into a hive-partitioned parquet table — the
     lakehouse upsert (what Delta/Iceberg/Hudi call COW ``MERGE INTO``),
@@ -288,7 +295,11 @@ def upsert_parquet(
     MERGE makes).  Single writer per table (the journal serializes
     crash recovery, not concurrent commits).  Multi-column
     ``partition_by`` is supported: swaps operate on leaf
-    ``a=1/b=2`` directories."""
+    ``a=1/b=2`` directories.
+
+    ``row_count`` is the batch's row count when the caller already holds
+    it (counted before this call, so before the commit); ``None`` counts
+    here."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -303,7 +314,7 @@ def upsert_parquet(
     spark = df.sparkSession
 
     if not os.path.exists(path):
-        n = df.count()
+        n = df.count() if row_count is None else row_count
         # cluster by the partition columns before the partitioned write:
         # without it every upstream task writes a sliver into every
         # partition directory (tasks x partitions tiny files — the
@@ -327,7 +338,7 @@ def upsert_parquet(
 
     # count BEFORE the commit: a batch whose lineage read the target
     # would recompute over swapped files afterwards
-    batch_rows = df.count()
+    batch_rows = df.count() if row_count is None else row_count
     touched = [
         tuple(r) for r in df.select(*pcols).distinct().collect()
     ]
@@ -466,22 +477,28 @@ def verify_parquet(
     footers make the full check cheap)."""
     if not os.path.exists(path):
         return {"status": False, "error": f"path_not_found: {path}"}
-    from pyspark.sql import functions as F
+    from agentic_etl_poc_spark.operators.quality import gate_stats
 
-    df = spark.read.parquet(path)
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    cols = [c for c in (nonnull_cols or []) if c in df.columns]
-    for c in cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("int")).alias(f"nulls_{c}"))
-    row = df.agg(*aggs).collect()[0]
-    rows = row["rows"]
-    nonnull_ok = all(row[f"nulls_{c}"] == 0 for c in cols)
+    stats = gate_stats(spark.read.parquet(path), nonnull_cols)
+    return parquet_verdict(stats, min_rows, nonnull_cols)
+
+
+def parquet_verdict(
+    stats: dict, min_rows: int = 1, nonnull_cols: list[str] | None = None
+) -> dict:
+    """The ``verify_parquet`` result dict from ``gate_stats`` over (at
+    least) these columns; configured columns the artifact lacks are
+    skipped.  Over zero rows a null sum is NULL, which reads as "not
+    nonnull-ok"."""
+    cols = [c for c in (nonnull_cols or []) if c in stats["columns"]]
+    rows, nulls = stats["rows"], stats["nulls"]
+    nonnull_ok = all(nulls[c] == 0 for c in cols)
     status = rows >= min_rows and nonnull_ok
     out = {"rows": rows, "nonnull_ok": nonnull_ok, "status": status}
     if not status:
         out["error"] = (
             f"rows {rows} < min_rows {min_rows}" if rows < min_rows
-            else "null values in " + ",".join(c for c in cols if row[f"nulls_{c}"])
+            else "null values in " + ",".join(c for c in cols if nulls[c])
         )
     return out
 

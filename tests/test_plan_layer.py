@@ -324,6 +324,12 @@ def test_csv_triplet_schemas_match_inference(spark, tmp_path):
     inferred = read_csv_triplet(spark, paths)
     declared = read_csv_triplet(spark, paths, schemas=schemas)
     for name in paths:
+        # the declared DDL is the frame's schema, field for field; only
+        # the names are guaranteed to match inference (types may not:
+        # plans that declare schemas CAST or join on same-typed keys)
+        want = spark.createDataFrame([], schemas[name]).schema
+        assert declared[name].schema == want, name
+        assert declared[name].columns == inferred[name].columns, name
         a = [tuple(r) for r in inferred[name].collect()]
         b = [tuple(r) for r in declared[name].collect()]
         # inference narrows small ints to INT; values must agree exactly
