@@ -3,13 +3,18 @@
 The driver's synthetic tables (TESTDATA.md) are the oracle-checked input
 surface.  Registration is cheap (schema-only read; scans stay lazy) and
 Catalyst prunes columns/pushes filters into the parquet scan, so registering
-all tables per query costs nothing at runtime.
+all tables per query costs nothing at runtime.  ``read_parquet`` is the
+session's memo of parquet read handles behind ``table()``; the plan
+runtime's parquet sources use it too.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import weakref
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,40 +31,97 @@ EXTENSION_TABLES = ("events", "documents", "embeddings")
 ALL_TABLES = TPCH_TABLES + EXTENSION_TABLES
 
 
-#: Session-scoped LAZY DataFrame handles per (realpath, stat fingerprint)
-#: — round-12 optimization: every ``spark.read.parquet`` call rebuilds a
-#: file index + re-reads the footer schema (~0.25-0.5 s of driver-side
-#: work), and the battery makes hundreds of ``table()`` calls per run
-#: (register_views alone makes ten).  The memo stores the UNEXECUTED
-#: plan handle only — no persist(), no data, nothing survives the
-#: process — so every bench/oracle invocation still computes from the
-#: parquet inputs; the fingerprint (mtime_ns + size) makes a rewritten
-#: fixture read fresh.  Weak-keyed by the session object (the core.py
-#: _SHARED discipline: ids can be reused after GC).
+#: Session-scoped LAZY DataFrame handles per (variant, path), each with
+#: the stat fingerprint it was read at.  Every ``spark.read.parquet``
+#: call rebuilds a file index and infers the schema from the footers,
+#: which launches one Spark job even for a single file (~0.1 s for one
+#: small file on a local[4] session).  The battery makes hundreds of
+#: ``table()`` calls per run (register_views alone makes ten), and the
+#: plan runtime re-reads its parquet sources on every run of a plan
+#: (scheduled ticks, the p-family entries); both go through
+#: ``read_parquet``.  The memo stores the UNEXECUTED plan handle only —
+#: no persist(), no data, nothing survives the process — so every
+#: invocation still computes from the parquet inputs; the fingerprint
+#: (per matched path: mtime_ns, size, file count) makes a rewritten or
+#: added file read fresh, and a path with no local fingerprint is never
+#: memoized.  Weak-keyed by the session object (the core.py _SHARED
+#: discipline: ids can be reused after GC).
 _HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def _stat_sig(path: str) -> tuple[int, int]:
-    """(max mtime_ns, total size) over a parquet file or directory of
-    part files — cheap (one stat per file) and regeneration-sensitive."""
+def _stat_sig(path: str) -> tuple[int, int, int]:
+    """(max mtime_ns, total size, file count) over a parquet file or a
+    directory of part files — one stat per file, regeneration-sensitive.
+    Raises OSError when ``path`` cannot be stat'ed."""
+    if os.path.isdir(path):
+        mtime = size = n = 0
+        for root, _, fs in os.walk(path):
+            for f in fs:
+                if f.startswith(("_", ".")):
+                    continue
+                st = os.stat(os.path.join(root, f))
+                mtime = max(mtime, st.st_mtime_ns)
+                size += st.st_size
+                n += 1
+        return mtime, size, n
+    st = os.stat(path)
+    return st.st_mtime_ns, st.st_size, 1
+
+
+_is_glob = re.compile(r"[*?[{]").search
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """``(realpath, *_stat_sig)`` of ``path``, or of every match when it
+    is a glob; None when there is nothing local to stat (a missing path,
+    a glob without matches, a URI)."""
     try:
-        if os.path.isdir(path):
-            mtime = 0
-            size = 0
-            for root, _, fs in os.walk(path):
-                for f in fs:
-                    if f.startswith(("_", ".")):
-                        continue
-                    st = os.stat(os.path.join(root, f))
-                    mtime = max(mtime, st.st_mtime_ns)
-                    size += st.st_size
-            return mtime, size
-        st = os.stat(path)
-        return st.st_mtime_ns, st.st_size
+        if not _is_glob(path):
+            return ((os.path.realpath(path), *_stat_sig(path)),)
+        paths = sorted(glob.glob(path))
+        return tuple((os.path.realpath(p), *_stat_sig(p)) for p in paths) or None
     except OSError:
-        return 0, 0
+        return None
+
+
+def read_parquet(
+    spark: SparkSession,
+    path: str,
+    build: Callable[[str], DataFrame] | None = None,
+    variant: Hashable = None,
+) -> DataFrame:
+    """``build(path)`` (default ``spark.read.parquet(path)``), memoized
+    per session on ``(variant, path)`` while the fingerprint of ``path``
+    stays the same; a new fingerprint replaces the entry, so the memo
+    holds one handle per source however often its files change.  A
+    caller whose ``build`` post-processes the read names it with its own
+    ``variant``, so callers that read the same files differently never
+    share a handle."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return build(path) if build is not None else spark.read.parquet(path)
+    per = _HANDLES.setdefault(spark, {})
+    hit = per.get((variant, path))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    df = build(path) if build is not None else spark.read.parquet(path)
+    per[(variant, path)] = (fp, df)
+    return df
+
+
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    from pyspark.sql import functions as F, types as T
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    # Only TIMESTAMP(NANOS) files surface ts as long under nanosAsLong;
+    # an events table written at µs/ms precision arrives as a real
+    # timestamp already and needs no truncation.
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -76,28 +138,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_semantics(spark)  # battery must be correct on ANY caller's session
     tune_for_data(spark, sf_dir)  # ...and sized to the data, not the default
     path = os.path.join(sf_dir, f"{name}.parquet")
-    per = _HANDLES.get(spark)
-    if per is None:
-        per = {}
-        _HANDLES[spark] = per
-    key = (os.path.realpath(path), _stat_sig(path))
-    df = per.get(key)
-    if df is not None:
-        return df
     if name == "events":
-        from pyspark.sql import functions as F, types as T
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        # Only TIMESTAMP(NANOS) files surface ts as long under nanosAsLong;
-        # an events table written at µs/ms precision arrives as a real
-        # timestamp already and needs no truncation.
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    per[key] = df
-    return df
+        return read_parquet(
+            spark, path, lambda p: _read_events(spark, p), "table:events"
+        )
+    return read_parquet(spark, path)
 
 
 def register_views(

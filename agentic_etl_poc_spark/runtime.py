@@ -20,7 +20,9 @@ Spark actions per stage (each stage runs one; a number the run already
 holds is passed on, not recounted):
 
 - extract: only the reader's own (a source without a declared schema
-  infers one with one job).
+  infers one with one job).  Parquet sources go through the session's
+  read memo (``io_tables.read_parquet``), so a later run over unchanged
+  files infers nothing.
 - incremental: one ``max(ts)`` aggregate for the new watermark, over the
   filtered source, kept apart from the DQ aggregate so the watermark
   means "newest source row seen" whatever the transform filters.
@@ -32,9 +34,14 @@ holds is passed on, not recounted):
   collects its touched partition values.
 - verify: one re-read of the written artifact and one aggregate — a
   separate scan on purpose, because catching sink corruption is its job.
+  A parquet overwrite or append is re-read with the schema it was
+  written with, so no inference job; an upsert's re-read infers, because
+  its merge can widen the table.  A re-read that raises fails the run
+  with ``read_error``.
 - stream plans: the AvailableNow drain, then ONE scan of the drained
-  artifact aggregates the union of the DQ and verify columns, and both
-  verdicts are derived from that row (``gate_stats``).
+  artifact, read with the stream's schema, aggregates the union of the
+  DQ and verify columns, and both verdicts are derived from that row
+  (``gate_stats``).
 """
 
 from __future__ import annotations
@@ -184,12 +191,15 @@ def _extract_frame(
         df = fetch_api(spark, src.api.url, src.api.params, src.api.json_path)
     elif kind == "parquet":
         # engine-native scale source: no size cap (admission control for
-        # parquet happens via partition pruning, not a byte wall)
+        # parquet happens via partition pruning, not a byte wall).  Reads
+        # go through the session's read memo (io_tables): an unchanged
+        # source is not re-listed nor its schema re-inferred on the next
+        # run of a plan.
+        from agentic_etl_poc_spark.io_tables import read_parquet as _memo
+
         pq = src.parquet
 
-        def read_parquet(p: str):
-            if not pq.nanos_ts_cols:
-                return spark.read.parquet(p)
+        def read_nanos(p: str):
             from pyspark.sql import functions as _F
 
             # TIMESTAMP(NANOS) columns → truncate to µs TimestampType.
@@ -215,6 +225,13 @@ def _extract_frame(
                     out = out.withColumn(c, _F.col(c).cast("timestamp"))
                 # already TimestampType: nothing to do
             return out
+
+        def read_parquet(p: str):
+            if not pq.nanos_ts_cols:
+                return _memo(spark, p)
+            return _memo(
+                spark, p, read_nanos, ("plan:nanos_ts", *pq.nanos_ts_cols)
+            )
 
         if pq.tables:
             for name, p in pq.tables.items():
@@ -247,6 +264,20 @@ def _extract_frame(
     return df
 
 
+def _failed(
+    plan: Plan, send_alert: Callable[[str, str], str], gate: str, verdict: dict
+) -> dict:
+    """A failed gate: alert the plan's ``on_fail`` channel (if any) and
+    return ``{"status": "failed", gate: verdict}``."""
+    if plan.alerts:
+        label = "DQ" if gate == "dq" else "Verify"
+        send_alert(
+            plan.alerts.get("on_fail", ""),
+            f"{label} failed: {json.dumps(verdict)}",
+        )
+    return {"status": "failed", gate: verdict}
+
+
 def run_from_plan(
     spark: SparkSession,
     plan_or_text: Plan | str,
@@ -259,7 +290,6 @@ def run_from_plan(
     plan = (
         plan_or_text if isinstance(plan_or_text, Plan) else parse_plan(plan_or_text)
     )
-    alerts = plan.alerts
 
     # 1) extract
     src_df = extract(spark, plan)
@@ -375,11 +405,7 @@ def run_from_plan(
         if n_quarantined is not None:
             dq["quarantined"] = n_quarantined
         if not dq["status"]:
-            if alerts:
-                send_alert(
-                    alerts.get("on_fail", ""), f"DQ failed: {json.dumps(dq)}"
-                )
-            return {"status": "failed", "dq": dq}
+            return _failed(plan, send_alert, "dq", dq)
 
         # 4) load
         from agentic_etl_poc_spark import plan_capture
@@ -429,6 +455,8 @@ def run_from_plan(
                 if vf.nonnull_cols is not None
                 else plan.checks.nonnull_cols
             ),
+            # an upsert's merge can evolve the table wider than the batch
+            schema=None if ld.mode == "upsert" else out.schema,
         )
     elif ld.to == "csv":
         ver = verify_csv(
@@ -450,11 +478,7 @@ def run_from_plan(
             ts_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
         )
     if not ver.get("status", False):
-        if alerts:
-            send_alert(
-                alerts.get("on_fail", ""), f"Verify failed: {json.dumps(ver)}"
-            )
-        return {"status": "failed", "verify": ver}
+        return _failed(plan, send_alert, "verify", ver)
 
     report_status("load", msg)
 
@@ -482,7 +506,6 @@ def _run_stream_plan_tail(
     batch lifecycle (a stream cannot be counted before writing).  A
     failed gate still alerts and returns ``failed``; the checkpoint
     guarantees the bad increment is never silently re-consumed."""
-    alerts = plan.alerts
     cks = plan.checks
     if cks.quarantine_path:
         raise ValueError(
@@ -511,16 +534,24 @@ def _run_stream_plan_tail(
 
     # Both gates read the same drained artifact and nothing is written
     # between them, so ONE scan aggregates the union of their columns and
-    # each verdict is derived from that row.
-    from agentic_etl_poc_spark.sinks.parquet_sink import parquet_verdict
+    # each verdict is derived from that row.  The scan declares the
+    # stream's schema, so there is nothing to infer.
+    from agentic_etl_poc_spark.sinks.parquet_sink import (
+        READ_ERRORS,
+        parquet_verdict,
+        read_error,
+    )
 
     vf = plan.verify
     ver_cols = vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols
-    stats = gate_stats(
-        spark.read.parquet(ld.file_path),
-        [*(cks.nonnull_cols or []), *(ver_cols or [])],
-        cks.timestamp_col if cks.freshness_minutes else "",
-    )
+    try:
+        stats = gate_stats(
+            spark.read.schema(out.schema).parquet(ld.file_path),
+            [*(cks.nonnull_cols or []), *(ver_cols or [])],
+            cks.timestamp_col if cks.freshness_minutes else "",
+        )
+    except READ_ERRORS as e:
+        return _failed(plan, send_alert, "verify", read_error(e))
     dq = dq_verdict(
         stats,
         min_rows=cks.min_rows,
@@ -529,9 +560,7 @@ def _run_stream_plan_tail(
         timestamp_col=cks.timestamp_col,
     )
     if not dq["status"]:
-        if alerts:
-            send_alert(alerts.get("on_fail", ""), f"DQ failed: {json.dumps(dq)}")
-        return {"status": "failed", "dq": dq}
+        return _failed(plan, send_alert, "dq", dq)
 
     ver = parquet_verdict(
         stats,
@@ -539,11 +568,7 @@ def _run_stream_plan_tail(
         nonnull_cols=ver_cols,
     )
     if not ver.get("status", False):
-        if alerts:
-            send_alert(
-                alerts.get("on_fail", ""), f"Verify failed: {json.dumps(ver)}"
-            )
-        return {"status": "failed", "verify": ver}
+        return _failed(plan, send_alert, "verify", ver)
 
     msg = (
         f"stream drained to {ld.file_path} "

@@ -17,7 +17,10 @@ import json
 import os
 import shutil
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Journal file name (dot-prefixed: invisible to Spark listings, to
 #: partition_signatures, and to this table's readers).
@@ -464,22 +467,51 @@ def upsert_parquet(
     )
 
 
+#: What a failed artifact re-read raises: Spark's captured errors and
+#: JVM exceptions PySpark does not convert.
+READ_ERRORS = (PySparkException, Py4JJavaError)
+
+
+def read_error(e: Exception) -> dict:
+    """The verify dict for an artifact re-read that raised: the first
+    line of the error (of the JVM exception's own message when PySpark
+    left it unconverted — its Python text only names the py4j call)."""
+    text = e.java_exception.getMessage() if isinstance(e, Py4JJavaError) else str(e)
+    first = (text or "").strip().split("\n", 1)[0] or type(e).__name__
+    return {"status": False, "error": f"read_error: {first}"}
+
+
 def verify_parquet(
     spark: SparkSession,
     path: str,
     min_rows: int = 1,
     nonnull_cols: list[str] | None = None,
+    schema: StructType | None = None,
 ) -> dict:
     """Post-load verification of the parquet artifact: re-read what was
     WRITTEN (not the in-memory frame) and check rows / not-null — the
     same artifact-first contract as verify_csv (reference:
     etl_agent/ops.py:49-109), minus the line-count fast path (parquet
-    footers make the full check cheap)."""
+    footers make the full check cheap).
+
+    ``schema`` is the schema the sink wrote, when the caller holds it:
+    the re-read then declares it instead of inferring it from the
+    footers, which saves a Spark job.  The scan still opens every file
+    the sink wrote, so a corrupt file still fails.  It is also the
+    stricter check: a declared column that the artifact lacks reads as
+    all-null, so listing it in ``nonnull_cols`` fails verify, where the
+    inferring read skips a column it does not find.  An artifact that
+    cannot be read (a truncated part file, say) fails with
+    ``read_error``."""
     if not os.path.exists(path):
         return {"status": False, "error": f"path_not_found: {path}"}
     from agentic_etl_poc_spark.operators.quality import gate_stats
 
-    stats = gate_stats(spark.read.parquet(path), nonnull_cols)
+    try:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        stats = gate_stats(reader.parquet(path), nonnull_cols)
+    except READ_ERRORS as e:
+        return read_error(e)
     return parquet_verdict(stats, min_rows, nonnull_cols)
 
 
@@ -488,11 +520,12 @@ def parquet_verdict(
 ) -> dict:
     """The ``verify_parquet`` result dict from ``gate_stats`` over (at
     least) these columns; configured columns the artifact lacks are
-    skipped.  Over zero rows a null sum is NULL, which reads as "not
-    nonnull-ok"."""
+    skipped.  Over zero rows a null sum is NULL, which reads as no
+    nulls (as in ``dq_verdict``)."""
     cols = [c for c in (nonnull_cols or []) if c in stats["columns"]]
-    rows, nulls = stats["rows"], stats["nulls"]
-    nonnull_ok = all(nulls[c] == 0 for c in cols)
+    rows = stats["rows"]
+    nulls = {c: int(stats["nulls"][c] or 0) for c in cols}
+    nonnull_ok = not any(nulls.values())
     status = rows >= min_rows and nonnull_ok
     out = {"rows": rows, "nonnull_ok": nonnull_ok, "status": status}
     if not status:

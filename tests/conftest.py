@@ -23,6 +23,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def fresh_read_memo(spark):
+    """Empty the session's parquet read memo (``io_tables.read_parquet``),
+    so a test's first read of a source infers its schema whatever ran
+    before it."""
+    from agentic_etl_poc_spark import io_tables
+
+    io_tables._HANDLES.pop(spark, None)
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

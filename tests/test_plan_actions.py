@@ -12,6 +12,9 @@ stream is gated by one scan of its artifact.  These tests pin
 - the stream tail's single-scan gates: the result dicts equal the ones
   the two separate gate calls (``dq_check`` then ``verify_parquet`` on the
   artifact) produce.
+
+Every test starts with an empty parquet read memo (``io_tables``), so a
+first run pays its source's schema inference whatever ran before it.
 """
 
 from __future__ import annotations
@@ -29,6 +32,8 @@ from agentic_etl_poc_spark.sinks.parquet_sink import (
     verify_parquet,
     write_parquet,
 )
+
+pytestmark = pytest.mark.usefixtures("fresh_read_memo")
 
 _GROUP_KEYS = (
     "spark.jobGroup.id",
@@ -116,11 +121,10 @@ source:
 def test_jobs_quarantine_plan(spark, sf_smoke, tmp_path):
     """Source schema inference 1; the quarantine write, which builds the
     persisted frame and observes its row count, 1; DQ aggregate 2; sink
-    write 1; verify re-read: schema inference 1 + aggregate 2."""
+    write 1; verify re-read with the written schema: aggregate 2.  The
+    second run reads its source from the memo: one job fewer."""
     bad, clean = tmp_path / "bad", tmp_path / "clean"
-    (res, alerts), jobs = _count_jobs(spark, "plan-quarantine", lambda: _run(
-        spark,
-        _orders(sf_smoke) + f"""
+    plan = _orders(sf_smoke) + f"""
 transform:
   sql: |
     SELECT o_orderkey,
@@ -133,19 +137,20 @@ checks:
 load:
   to: parquet
   file_path: {clean}
-""",
-    ))
-    assert res["status"] == "ok" and not alerts, res
-    n_bad = spark.read.parquet(str(bad)).count()
-    assert res["dq"]["quarantined"] == n_bad > 0
-    assert res["dq"]["rows"] + n_bad == 1500
-    assert jobs == 8
+"""
+    for group, want in (("plan-quarantine", 7), ("plan-quarantine-warm", 6)):
+        (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
+        assert res["status"] == "ok" and not alerts, res
+        n_bad = spark.read.parquet(str(bad)).count()
+        assert res["dq"]["quarantined"] == n_bad > 0
+        assert res["dq"]["rows"] + n_bad == 1500
+        assert jobs == want, group
 
 
 def test_jobs_parquet_overwrite_plan(spark, sf_smoke, tmp_path):
     """Source schema inference 1; DQ aggregate 3 (the first action also
     builds the persisted frame); sink write 1, no recount; verify
-    re-read: schema inference 1 + aggregate 2."""
+    re-read with the written schema: aggregate 2."""
     out = tmp_path / "ow"
     (res, _), jobs = _count_jobs(spark, "plan-overwrite", lambda: _run(
         spark,
@@ -162,12 +167,14 @@ load:
     ))
     assert res["status"] == "ok", res
     assert res["message"] == f"wrote 1,500 rows to {out} (parquet)"
-    assert jobs == 8
+    assert jobs == 7
 
 
 def test_jobs_parquet_upsert_plan(spark, sf_smoke, tmp_path):
     """An upsert into an existing table: the batch is not recounted
-    before the commit (the DQ count already ran before it)."""
+    before the commit (the DQ count already ran before it), and the
+    source comes from the memo the first run filled.  The verify re-read
+    still infers: a merge can evolve the table wider than the batch."""
     out = tmp_path / "up"
     plan = _orders(sf_smoke) + f"""
 transform:
@@ -190,13 +197,14 @@ load:
     assert res["status"] == "ok", res
     assert res["message"].startswith(f"upserted 300 rows into {out} ")
     assert res["verify"]["rows"] == 700  # 500 + 300 - 100 shared keys
-    assert jobs == 14
+    assert jobs == 13
 
 
 def test_jobs_stream_plan(spark, tmp_path):
     """The drain's micro-batch jobs carry the stream's own job group;
-    what runs in the caller's group is the gate: one artifact schema
-    inference and one aggregate (2 jobs) for DQ and verify together."""
+    what runs in the caller's group is the gate: one aggregate (2 jobs)
+    over the artifact, read with the stream's schema, for DQ and verify
+    together."""
     topic = _stage_topic(tmp_path / "topic")
     out = tmp_path / "out"
     (res, alerts), jobs = _count_jobs(spark, "plan-stream", lambda: _run(
@@ -205,16 +213,15 @@ def test_jobs_stream_plan(spark, tmp_path):
     ))
     assert res["status"] == "ok" and not alerts, res
     assert res["dq"]["rows"] == res["verify"]["rows"] == 30
-    assert jobs == 3
+    assert jobs == 2
 
 
 def test_jobs_dq_rejected_plan(spark, sf_smoke, tmp_path):
     """Source schema inference 1 + DQ aggregate 3, then the pre-load
-    abort: nothing written, one alert."""
+    abort: nothing written, one alert.  The second run reads its source
+    from the memo: 3 jobs."""
     out = tmp_path / "rej"
-    (res, alerts), jobs = _count_jobs(spark, "plan-reject", lambda: _run(
-        spark,
-        f"""
+    plan = f"""
 source:
   kind: parquet
   parquet:
@@ -231,15 +238,16 @@ load:
   file_path: {out}
 alerts:
   on_fail: "slack://#x"
-""",
-    ))
-    assert res == {
-        "status": "failed",
-        "dq": {"rows": 150, "status": False, "error": "nonnull check failed: bal"},
-    }
-    assert len(alerts) == 1
-    assert not out.exists()
-    assert jobs == 4
+"""
+    for group, want in (("plan-reject", 4), ("plan-reject-warm", 3)):
+        (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
+        assert res == {
+            "status": "failed",
+            "dq": {"rows": 150, "status": False, "error": "nonnull check failed: bal"},
+        }
+        assert len(alerts) == 1
+        assert not out.exists()
+        assert jobs == want, group
 
 
 # -- row_count on the parquet sinks -----------------------------------------
