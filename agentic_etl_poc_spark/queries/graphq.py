@@ -1,13 +1,15 @@
-"""Graph-analytics battery entries: iterative fixpoint algorithms as lazy
-Catalyst dataflows.
+"""Graph-analytics battery entries: iterative fixpoint algorithms over
+session-memoized graph intermediates.
 
 The connected-components operator (operators/graph.py, driven by d07)
 covers the driver-loop-until-convergence shape; this module covers the
-FIXED-ITERATION shape — a bounded number of join/aggregate rounds
-unrolled into ONE lazy plan the optimizer sees whole.  Everything runs
-on exact integer arithmetic (floor-division redistribution) so Spark
-and the DuckDB oracle agree bit-for-bit — the classic damped-PageRank
-double would drift in the last ulp across engines.
+FIXED-ITERATION shape — a bounded number of join/aggregate rounds the
+optimizer sees whole: g01 writes its rounds as ONE SQL statement over the
+session's checkpointed graph, g03 unrolls its frontier levels with a
+checkpoint per level.  Everything runs on exact integer arithmetic
+(floor-division redistribution) so Spark and the DuckDB oracle agree
+bit-for-bit — the classic damped-PageRank double would drift in the last
+ulp across engines.
 
 Reference parity: the closest surface in mounikavas/agentic-etl-poc is
 the SQL pass-through (etl_agent/tools.py transform_sql); iterative graph
@@ -17,8 +19,9 @@ analytics is engine-extension surface (SURVEY.md §2.3 "free in Spark").
 from __future__ import annotations
 
 import weakref
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.io_tables import table
@@ -28,31 +31,36 @@ PR_SCALE = 1_000_000  # initial integer rank per node
 PR_ITERS = 3
 PR_TOP = 20
 
+#: bytes per row of the node-scale frames g01 broadcasts — (node, d) and
+#: (node, contrib), two BIGINTs each
+NODE_ROW_BYTES = 16
 
-#: Session-scoped checkpointed edge frames, keyed (sf_dir,) — g01 and
-#: g03 walk the SAME customer<->supplier interaction graph, and the
+
+class _Graph(NamedTuple):
+    edges: DataFrame  # (src, dst), rows hash-partitioned on src
+    degrees: DataFrame  # (node, d), one row per node
+    n_nodes: int
+
+
+#: Session-scoped checkpointed graph intermediates, keyed (sf_dir,) — g01
+#: and g03 walk the SAME customer<->supplier interaction graph, and the
 #: edge derivation (orders⋈lineitem + 58.7M-pair distinct at sf10) is
 #: ~90% of each entry's isolated sf10 wall (38 of 42 s measured).  One
-#: battery session derives it once; the memo holds the LogicalRDD-backed
-#: frame (localCheckpoint blocks die with the session — same lifetime
-#: discipline as queries/core.py::shared_frame, weak-keyed so a stopped
-#: session's entry dies with it).  This is the compute-once-fan-out
-#: shape the dedup family already uses (minhash stats, twin parts).
-_EDGES: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+#: battery session derives the edge list and its degree frame once; the
+#: memo holds the LogicalRDD-backed frames (localCheckpoint blocks die
+#: with the session — same lifetime discipline as
+#: queries/core.py::shared_frame, weak-keyed so a stopped session's entry
+#: dies with it).  This is the compute-once-fan-out shape the dedup
+#: family already uses (minhash stats, twin parts).
+_EDGES: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Graph]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The interaction graph's edge list (src, dst) — BOTH directions of
-    the distinct customer<->supplier pairs, hash-partitioned on src and
-    localCheckpointed once per (session, sf_dir)."""
-    per = _EDGES.get(spark)
-    if per is None:
-        per = {}
-        _EDGES[spark] = per
-    e = per.get(sf_dir)
-    if e is None:
+def _graph(spark: SparkSession, sf_dir: str) -> _Graph:
+    per = _EDGES.setdefault(spark, {})
+    g = per.get(sf_dir)
+    if g is None:
         o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         li = table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_suppkey"
@@ -72,12 +80,48 @@ def shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("snode").alias("src"), F.col("cnode").alias("dst")
             )
         )
-        # one explicit exchange on src: every consumer (degree agg, seed
-        # min, node distinct, three frontier/rank joins) is src-keyed,
-        # and LogicalRDD preserves the hash partitioning
+        # clustered on src, the key of every consumer (the degree agg and
+        # the rank and frontier joins).  The checkpointed frame reports
+        # UnknownPartitioning, so a src-keyed aggregate over it still
+        # shuffles — the degree agg's is node-scale (map-side combined)
         e = edges.repartition("src").localCheckpoint(eager=True)
-        per[sf_dir] = e
-    return e
+        # the node count is observed during the degree checkpoint's own
+        # job (g01's broadcast guard), so it costs no action.
+        # localCheckpoint, not persist(): AQE reads a cached frame through
+        # a TableCacheQueryStage, and a warm g01 call over a persisted
+        # degree frame ran 9 jobs instead of 8
+        nodes = Observation()
+        deg = (
+            e.groupBy(F.col("src").alias("node"))
+            .agg(F.count(F.lit(1)).alias("d"))
+            .observe(nodes, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        g = per[sf_dir] = _Graph(e, deg, int(nodes.get["n"]))
+    return g
+
+
+def shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The interaction graph's edge list (src, dst) — BOTH directions of
+    the distinct customer<->supplier pairs, hash-partitioned on src and
+    localCheckpointed once per (session, sf_dir)."""
+    return _graph(spark, sf_dir).edges
+
+
+def shared_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The interaction graph's out-degrees (node, d) — one row per node
+    (every node is a src: both edge directions are in the edge list),
+    localCheckpointed with the edge list once per (session, sf_dir)."""
+    return _graph(spark, sf_dir).degrees
+
+
+def _broadcast_fits(spark: SparkSession, n_nodes: int) -> bool:
+    """Whether a node-scale frame of ``n_nodes`` rows fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (a negative one disables
+    broadcasting)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    return 0 <= n_nodes * NODE_ROW_BYTES <= limit
 
 
 def _duck_pr_iter(prev: str, out: str) -> str:
@@ -94,6 +138,40 @@ r{out} AS (
          CAST(150000 + (85 * s) // 100 AS BIGINT) AS rank
   FROM c{out}
 )"""
+
+
+def _spark_pr_sql(edges: str, deg: str, hint: bool) -> str:
+    """g01's rounds as one statement over the ``edges`` (src, dst) and
+    ``deg`` (node, d) views; the same integer arithmetic as
+    ``_duck_pr_iter``.  Each round attaches the node-scale per-edge
+    contribution c{k} = rank div d to the edges by one src-keyed join;
+    round 1 reads it straight off the degrees (every starting rank is
+    PR_SCALE).  ``hint`` broadcasts the two node-scale join sides."""
+
+    def bc(alias: str) -> str:
+        return f"/*+ BROADCAST({alias}) */ " if hint else ""
+
+    ctes = [f"c1 AS (SELECT node, {PR_SCALE} div d AS contrib FROM {deg})"]
+    for k in range(1, PR_ITERS + 1):
+        if k > 1:
+            ctes.append(
+                f"""c{k} AS (
+  SELECT {bc('g')}r.node, r.rank div g.d AS contrib
+  FROM r{k - 1} r JOIN {deg} g ON r.node = g.node
+)"""
+            )
+        ctes.append(
+            f"""r{k} AS (
+  SELECT {bc('c')}e.dst AS node,
+         CAST(150000 + (85 * SUM(c.contrib)) div 100 AS BIGINT) AS rank
+  FROM {edges} e JOIN c{k} c ON e.src = c.node
+  GROUP BY e.dst
+)"""
+        )
+    return (
+        "WITH " + ",\n".join(ctes) + f"\nSELECT node, rank FROM r{PR_ITERS}"
+        f"\nORDER BY rank DESC, node ASC\nLIMIT {PR_TOP}"
+    )
 
 
 @register(
@@ -117,66 +195,40 @@ SELECT node, rank FROM r3
 ORDER BY rank DESC, node ASC
 LIMIT {PR_TOP}
 """,
-    description=f"Integer PageRank, {PR_ITERS} damped rounds unrolled "
-    "into one lazy plan — the fixed-iteration graph-fixpoint shape "
-    "(d07's connected components covers the loop-until-convergence "
-    "shape).  The graph is the customer<->supplier interaction graph "
-    "(distinct order lineage pairs, both directions, so no dangling "
-    "nodes); ranks live on an integer grid and every redistribution is "
-    "a FLOOR DIVISION (rank div degree), every damping step integer "
-    "(0.15*SCALE + floor(0.85*sum)) — exact in both engines, where the "
-    "textbook double formulation would drift in the final ulp under "
-    "different summation orders.  Scale shape: each round is one "
-    "edge-keyed broadcast-free join (edges co-shuffled with ranks on "
-    "src) plus one map-side-combinable sum by dst — the round cost is "
-    "O(|E|) shuffle, the plan depth is the iteration count, and "
-    "Catalyst sees the whole unrolled dataflow (at larger iteration "
-    "counts, localCheckpoint per round bounds lineage — the d07 "
-    "discipline).  Top-20 is TakeOrderedAndProject.",
+    description=f"Integer PageRank, {PR_ITERS} damped rounds written as "
+    "ONE SQL statement over the session's memoized graph — the "
+    "fixed-iteration graph-fixpoint shape (d07's connected components "
+    "covers the loop-until-convergence shape).  The graph is the "
+    "customer<->supplier interaction graph (distinct order lineage "
+    "pairs, both directions, so no dangling nodes); ranks live on an "
+    "integer grid and every redistribution is a FLOOR DIVISION (rank div "
+    "degree), every damping step integer (0.15*SCALE + floor(0.85*sum)) "
+    "— exact in both engines, where the textbook double formulation "
+    "would drift in the final ulp under different summation orders.  "
+    "Scale shape: the edge list and its degree frame are checkpointed "
+    "once per session (shared with g03), so a call is one parse, one "
+    "analysis and the rounds' own jobs; each round computes the "
+    "per-edge contribution (rank div degree) on the NODE-scale frame, "
+    "attaches it to the src-partitioned edges by one join and sums it by "
+    "dst (map-side combinable) — O(|E|) scan, node-scale shuffle.  The "
+    "two node-scale join sides are BROADCAST while node count x 16 B "
+    "fits the session's autoBroadcastJoinThreshold, and left to the "
+    "planner beyond it.  Top-20 is TakeOrderedAndProject.",
 )
 def g01_integer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 13: the edge list comes from the session-shared checkpoint
-    # (see shared_edges — g03 walks the same graph; deriving it was ~90%
-    # of each entry's isolated sf10 wall).  The round-12 shape also
-    # materialized a SECOND edge-scale frame (ew = edges ⋈ deg, 3 int64
-    # columns, 117M rows at sf10); the degree now annotates the
-    # NODE-scale rank frame instead (rank div d is computed after the
-    # node-keyed join, same integer arithmetic), so the only edge-scale
-    # materialization left is the shared edge list itself and each round
-    # joins e against a node-scale (node, contrib-per-edge) frame
-    # (guide §2.3 — shuffle node-scale metadata, not edge payloads).
-    e = shared_edges(spark, sf_dir)
-    # degree agg rides e's src partitioning (no exchange); node-scale,
-    # checkpointed once so rounds scan a tiny LogicalRDD
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("rank")
-    )
-    for _ in range(PR_ITERS):
-        # per-edge contribution = rank(u) div deg(u): computed on the
-        # NODE-scale frame, then attached to edges by one src-keyed join.
-        # The node frame is BROADCAST (g02's precedent for this graph's
-        # dim-scale frames): statically the planner saw an unknown-size
-        # aggregate and picked sort-merge, which re-SORTED the 117M-row
-        # checkpointed e every round — 3 avoidable edge-scale sorts.
-        rankdeg = ranks.join(
-            F.broadcast(deg), ranks["node"] == deg["src"]
-        ).select(ranks["node"], F.expr("rank div d").alias("contrib"))
-        contrib = e.join(
-            F.broadcast(rankdeg), e["src"] == rankdeg["node"]
-        ).select("dst", "contrib")
-        sums = contrib.groupBy("dst").agg(F.sum("contrib").alias("s"))
-        ranks = sums.select(
-            F.col("dst").alias("node"),
-            (F.lit(150000) + F.expr("(85 * s) div 100"))
-            .cast("bigint")
-            .alias("rank"),
-        )
-    return ranks.orderBy(F.desc("rank"), F.asc("node")).limit(PR_TOP)
+    # Nothing but the rounds runs per call: the graph and its degrees come
+    # from the session memo, and the rounds are one statement, parsed and
+    # analyzed once — as ~20 DataFrame calls, each call would re-analyze
+    # the growing self-joined plan (warm build at sf0.01 on 4 cores: 0.13 s
+    # as one statement, 0.5 s as DataFrame calls plus a degree checkpoint).
+    # The node-scale join sides are broadcast (statically the planner saw
+    # an unknown-size aggregate and picked sort-merge, which re-SORTED
+    # the checkpointed edge list every round) — but only while they fit
+    # the session's broadcast threshold.
+    shared_edges(spark, sf_dir).createOrReplaceTempView("g01_edges")
+    shared_degrees(spark, sf_dir).createOrReplaceTempView("g01_deg")
+    hint = _broadcast_fits(spark, _graph(spark, sf_dir).n_nodes)
+    return spark.sql(_spark_pr_sql("g01_edges", "g01_deg", hint))
 
 
 @register(
@@ -403,12 +455,14 @@ ORDER BY level
     "pushed on src, and the EXCEPTs are frontier-sized anti-joins; each "
     "round is localCheckpointed (the d07 discipline) — left lazy, the "
     "unrolled plan re-derives the base join ~2^rounds times per "
-    "consumer (75 s vs 7 s at sf0.01, measured).",
+    "consumer (75 s vs 7 s at sf0.01, measured).  The edge list and the "
+    "node set (the key column of the degree frame; the seed is its min) "
+    "come from the session's graph memo, shared with g01.",
 )
 def g03_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round 13: the checkpointed edge list is session-shared with g01
-    # (see shared_edges); in a battery session only the first consumer
-    # pays the orders⋈lineitem + distinct derivation.
+    # The checkpointed edge list and degree frame are session-shared with
+    # g01 (see _graph); in a battery session only the first consumer pays
+    # the orders⋈lineitem + distinct derivation.
     #
     # The d07 discipline for iterative frontier algorithms: each round's
     # frontier is consumed three times (next round's join, the seen
@@ -420,13 +474,11 @@ def g03_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames are frontier-sized (node ids only), so the checkpoint cost
     # is trivial next to the recompute it prevents (~7 s at sf0.01).
     e = shared_edges(spark, sf_dir)
-    # node set rides e's src partitioning (distinct groups on the same
-    # key the checkpoint preserved — no exchange)
-    nodes = e.select(F.col("src").alias("node")).distinct()
-    # min over e.src == min over distinct nodes (every node appears as a
-    # src — both edge directions are in e), so the seed job skips the
-    # distinct's shuffle entirely (round-12: one less exchange per run)
-    l0 = e.agg(F.min("src").alias("node")).localCheckpoint(eager=True)
+    # the node set is the session-shared degree frame's key column (every
+    # node is a src — both edge directions are in e), and the seed is its
+    # min: one scalar aggregate over node-scale rows, no per-call distinct
+    nodes = shared_degrees(spark, sf_dir).select("node")
+    l0 = nodes.agg(F.min("node").alias("node")).localCheckpoint(eager=True)
     frontiers = [l0]
     seen = l0
     for _ in range(3):

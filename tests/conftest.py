@@ -51,3 +51,24 @@ def formatted_plan(df) -> str:
             "formatted"
         )
     )
+
+
+_GROUP_KEYS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def count_jobs(spark, group: str, fn):
+    """Run ``fn()`` with every job it submits from this thread tagged
+    ``group``; return (result, number of jobs in the group)."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _GROUP_KEYS]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in zip(_GROUP_KEYS, saved):
+            sc.setLocalProperty(k, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -32,28 +32,9 @@ from agentic_etl_poc_spark.sinks.parquet_sink import (
     verify_parquet,
     write_parquet,
 )
+from tests.conftest import count_jobs as _count_jobs
 
 pytestmark = pytest.mark.usefixtures("fresh_read_memo")
-
-_GROUP_KEYS = (
-    "spark.jobGroup.id",
-    "spark.job.description",
-    "spark.job.interruptOnCancel",
-)
-
-
-def _count_jobs(spark, group: str, fn):
-    """Run ``fn()`` with every job it submits from this thread tagged
-    ``group``; return (result, number of jobs in the group)."""
-    sc = spark.sparkContext
-    saved = [sc.getLocalProperty(k) for k in _GROUP_KEYS]
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        for k, v in zip(_GROUP_KEYS, saved):
-            sc.setLocalProperty(k, v)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _run(spark, text):
