@@ -2,12 +2,15 @@
 
 The reference checks row count then scans each nonnull column separately in
 pandas (reference: etl_agent/ops.py:34-47).  Here all checks collapse into
-a single aggregate:
+one set of aggregates:
 
-    agg(count(*), sum(isnull(c1)), ..., max(ts))
+    count(*), sum(isnull(c1)), ..., max(ts)
 
-one distributed pass, map-side partial aggregation, no per-column rescans —
-the shape that still works when the frame is 100 TB.
+observed (Spark's ``Observation``) on a ``noop`` write of only the checked
+columns: one distributed pass and one Spark job, with per-task partial
+aggregates merged on the driver — no exchange, no per-column rescans, the
+shape that still works when the frame is 100 TB.  The quarantine write
+(``observed_write``) reads the same metrics off its own sink action.
 
 Result dict matches the reference's JSON exactly:
 ``{"rows": n, "status": bool, "error": str|None}`` with first-failure-wins
@@ -34,38 +37,69 @@ def lag_minutes(ts: _dt.datetime | None) -> float | None:
     return (_dt.datetime.now(_dt.timezone.utc) - ts).total_seconds() / 60.0
 
 
+def observe_metrics(df: DataFrame, metrics: list, action) -> dict:
+    """The one ``Observation`` builder: run ``action(observed_df)``, which
+    must trigger exactly one Spark action, and return the ``metrics``
+    (aggregate columns, by alias) accumulated during that action."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    action(df.observe(obs, *metrics))
+    return obs.get
+
+
+def observed_scan(df: DataFrame, cols: list[str], metrics: list, label: str) -> dict:
+    """``metrics`` over ``df`` as ONE Spark job with no exchange: they are
+    observed on a ``noop`` write of only ``cols``.  A collected global
+    aggregate would cost two jobs under AQE (the ``SinglePartition``
+    exchange, then the result).  On a persisted frame the same job fills
+    the cache, so a later sink write reads it.  The observed plan is
+    noted under ``label`` for the eager plan lint."""
+    from agentic_etl_poc_spark import plan_capture
+
+    def scan(observed: DataFrame) -> None:
+        plan_capture.note(label, observed)
+        observed.write.format("noop").mode("overwrite").save()
+
+    return observe_metrics(df.select(*cols), metrics, scan)
+
+
+def _row_metrics(cols: list[str]) -> list:
+    """``count(*)`` as ``rows`` and one null count per column as
+    ``nulls_<c>``: the metrics every gate and ``observed_write`` read."""
+    return [F.count(F.lit(1)).alias("rows")] + [
+        F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in cols
+    ]
+
+
 def gate_stats(
     df: DataFrame, nonnull_cols: list[str] | None = None, ts_col: str = ""
 ) -> dict:
     """The ONE aggregate behind every gate: ``count(*)``, one null count
     per listed column present in ``df``, and ``max(ts_col)`` when that
-    column is present.  ``dq_verdict``, ``verify_csv`` and
-    ``verify_parquet`` each derive their result dict from this; a caller
-    that needs two verdicts over the same frame (the stream tail) passes
-    the union of their columns and pays one scan.
+    column is present, observed on one scan (``observed_scan``).
+    ``dq_verdict``, ``verify_csv`` and ``verify_parquet`` each derive
+    their result dict from this; a caller that needs two verdicts over
+    the same frame (the stream tail) passes the union of their columns
+    and pays one scan.
 
     Null sums stay raw (``None`` over zero rows): each verdict keeps its
     own reading of an empty frame."""
     present = [c for c in dict.fromkeys(nonnull_cols or []) if c in df.columns]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in present:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nulls__{c}"))
+    metrics = _row_metrics(present)
     has_ts = bool(ts_col) and ts_col in df.columns
     if has_ts:
-        aggs.append(F.max(F.col(ts_col).cast("timestamp")).alias("__max_ts"))
+        metrics.append(F.max(F.col(ts_col).cast("timestamp")).alias("max_ts"))
 
-    from agentic_etl_poc_spark import plan_capture
-
-    agg_df = df.agg(*aggs)
-    plan_capture.note("dq_agg", agg_df)
-    row = agg_df.collect()[0].asDict()
+    cols = [*present, ts_col] if has_ts else present
+    got = observed_scan(df, cols, metrics, "dq_agg")
     stats = {
         "columns": list(df.columns),
-        "rows": int(row["__rows"]),
-        "nulls": {c: row[f"__nulls__{c}"] for c in present},
+        "rows": int(got["rows"]),
+        "nulls": {c: got[f"nulls_{c}"] for c in present},
     }
     if has_ts:
-        stats["max_ts"] = row["__max_ts"]
+        stats["max_ts"] = got["max_ts"]
     return stats
 
 
@@ -147,15 +181,8 @@ def observed_write(
 
     ``write_fn(observed_df)`` must trigger exactly one action.
     """
-    from pyspark.sql import Observation
-
     nonnull_cols = [c for c in (nonnull_cols or []) if c in df.columns]
-    metrics = [F.count(F.lit(1)).alias("rows")]
-    for c in nonnull_cols:
-        metrics.append(F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}"))
-    obs = Observation("dq")
-    write_fn(df.observe(obs, *metrics))
-    got = obs.get
+    got = observe_metrics(df, _row_metrics(nonnull_cols), write_fn)
     null_counts = {c: int(got[f"nulls_{c}"] or 0) for c in nonnull_cols}
     return {
         "rows": int(got["rows"]),

@@ -4,12 +4,14 @@ extract → transform → DQ gate → load → verify gate → result JSON, with
 reference's exact control flow and result shapes:
 
 - DQ fail → alert → ``{"status": "failed", "dq": {...}}`` (no load).
+- sink write fails → alert → ``{"status": "failed", "load": {...}}``.
 - verify fail → alert → ``{"status": "failed", "verify": {...}}``.
 - success → ``{"status": "ok", "dq", "message", "verify"}``.
   (reference: etl_agent/templates.py:123-170)
 
 Spark-native twists:
-- the transform chain stays lazy; the FIRST action is the DQ aggregate.
+- the transform chain stays lazy; its FIRST action is the DQ gate (the
+  quarantine write, when the plan splits one off).
 - the output frame is persisted (memory-and-disk) across the DQ action and
   the sink write, so the pipeline computes the transform once, not twice.
 - alert/status hooks are injectable callables; defaults print like the
@@ -17,30 +19,37 @@ Spark-native twists:
   reference: tools.py:267-277).
 
 Spark actions per stage (each stage runs one; a number the run already
-holds is passed on, not recounted):
+holds is passed on, not recounted).  Every gate aggregate is observed on
+a ``noop`` scan of the columns it checks (``quality.observed_scan``): one
+Spark job, no exchange.
 
 - extract: only the reader's own (a source without a declared schema
   infers one with one job).  Parquet sources go through the session's
   read memo (``io_tables.read_parquet``), so a later run over unchanged
   files infers nothing.
-- incremental: one ``max(ts)`` aggregate for the new watermark, over the
-  filtered source, kept apart from the DQ aggregate so the watermark
+- incremental: one observed ``max(ts)`` scan for the new watermark, over
+  the filtered source, kept apart from the DQ gate so the watermark
   means "newest source row seen" whatever the transform filters.
 - quarantine split: one write of the violating rows; their count is an
   observed metric of that write (``observed_write``), not a second pass.
-- DQ gate: one aggregate (rows, per-column nulls, max ts).
+  It is the first action over the persisted transform, so it also fills
+  the cache.
+- DQ gate: one observed scan (rows, per-column nulls, max ts).  Without
+  a quarantine split it is the first action, and the same job fills the
+  cache the sink then reads.
 - load: the sink write; every sink takes the DQ row count as
   ``row_count`` instead of counting again.  A parquet upsert also
-  collects its touched partition values.
-- verify: one re-read of the written artifact and one aggregate — a
+  collects its touched partition values.  A write that raises fails the
+  run with ``write_error`` (``{"status": "failed", "load": {...}}``).
+- verify: one re-read of the written artifact and one observed scan — a
   separate scan on purpose, because catching sink corruption is its job.
   A parquet overwrite or append is re-read with the schema it was
   written with, so no inference job; an upsert's re-read infers, because
   its merge can widen the table.  A re-read that raises fails the run
   with ``read_error``.
-- stream plans: the AvailableNow drain, then ONE scan of the drained
-  artifact, read with the stream's schema, aggregates the union of the
-  DQ and verify columns, and both verdicts are derived from that row
+- stream plans: the AvailableNow drain, then ONE observed scan of the
+  drained artifact, read with the stream's schema, over the union of the
+  DQ and verify columns; both verdicts are derived from its metrics
   (``gate_stats``).
 """
 
@@ -56,6 +65,7 @@ from agentic_etl_poc_spark.operators.quality import (
     dq_check,
     dq_verdict,
     gate_stats,
+    observed_scan,
     observed_write,
 )
 from agentic_etl_poc_spark.operators.transform import run_single_sql, run_steps
@@ -267,15 +277,46 @@ def _extract_frame(
 def _failed(
     plan: Plan, send_alert: Callable[[str, str], str], gate: str, verdict: dict
 ) -> dict:
-    """A failed gate: alert the plan's ``on_fail`` channel (if any) and
-    return ``{"status": "failed", gate: verdict}``."""
+    """A failed stage (``dq``, ``load`` or ``verify``): alert the plan's
+    ``on_fail`` channel (if any) and return ``{"status": "failed", gate:
+    verdict}``."""
     if plan.alerts:
-        label = "DQ" if gate == "dq" else "Verify"
+        label = {"dq": "DQ", "load": "Load", "verify": "Verify"}[gate]
         send_alert(
             plan.alerts.get("on_fail", ""),
             f"{label} failed: {json.dumps(verdict)}",
         )
     return {"status": "failed", gate: verdict}
+
+
+def _load(out: DataFrame, ld, row_count: int) -> str:
+    """Write ``out`` to the plan's sink; every sink takes the DQ row
+    count instead of counting again.  Returns the sink's message."""
+    if ld.to == "csv":
+        if not ld.file_path:
+            raise ValueError("csv load requires load.file_path")
+        return write_csv(
+            out, ld.file_path, include_header=ld.include_header,
+            row_count=row_count,
+        )
+    if ld.to == "parquet":
+        from agentic_etl_poc_spark.sinks.parquet_sink import write_parquet
+
+        if not ld.file_path:
+            raise ValueError("parquet load requires load.file_path")
+        return write_parquet(
+            out,
+            ld.file_path,
+            mode=ld.mode,
+            partition_by=ld.partition_by,
+            key_cols=ld.key_cols,
+            change_feed=ld.change_feed,
+            row_count=row_count,
+        )
+    return load_to_postgres(
+        out, ld.conn_str, ld.table, mode=ld.mode,
+        key_cols=ld.key_cols, row_count=row_count,
+    )
 
 
 def run_from_plan(
@@ -319,24 +360,23 @@ def run_from_plan(
                 _F.col(inc.ts_col) > _F.lit(wm).cast("timestamp")
             )
             src_df.createOrReplaceTempView("input_df")
-        # High-watermark of THIS increment: one pushed-down max over the
-        # filtered scan (cheap — one column, predicate at the reader).
-        # Formatted to a string IN-ENGINE: collect() would hand back a
-        # naive datetime in the DRIVER's local timezone while the read-back
-        # cast above parses under the SESSION timezone (UTC) — on a
-        # non-UTC driver the watermark would shift by the UTC offset and
-        # silently skip or reprocess rows.
-        from agentic_etl_poc_spark import plan_capture
-
-        max_df = src_df.agg(
-            _F.date_format(
-                _F.max(inc.ts_col), "yyyy-MM-dd HH:mm:ss.SSSSSS"
-            ).alias("m")
-        )
-        plan_capture.note("incremental_max", max_df)
-        max_row = max_df.collect()[0]
-        if max_row["m"] is not None:
-            new_watermark = max_row["m"]
+        # High-watermark of THIS increment: a max observed on one scan of
+        # the filtered source (one column, predicate at the reader).
+        # Formatted to a string IN-ENGINE: a timestamp metric would come
+        # back as a naive datetime in the DRIVER's local timezone while
+        # the read-back cast above parses under the SESSION timezone
+        # (UTC) — on a non-UTC driver the watermark would shift by the
+        # UTC offset and silently skip or reprocess rows.
+        new_watermark = observed_scan(
+            src_df,
+            [inc.ts_col],
+            [
+                _F.date_format(
+                    _F.max(inc.ts_col), "yyyy-MM-dd HH:mm:ss.SSSSSS"
+                ).alias("m")
+            ],
+            "incremental_max",
+        )["m"]
 
     # 2) transform (lazy)
     if plan.transform.steps:
@@ -407,36 +447,21 @@ def run_from_plan(
         if not dq["status"]:
             return _failed(plan, send_alert, "dq", dq)
 
-        # 4) load
+        # 4) load: a sink write that raises fails the run; nothing is
+        # verified and the watermark stays where it was
         from agentic_etl_poc_spark import plan_capture
+        from agentic_etl_poc_spark.sinks.parquet_sink import (
+            READ_ERRORS,
+            error_verdict,
+        )
 
         plan_capture.note("sink_input", out)
         ld = plan.load
-        if ld.to == "csv":
-            if not ld.file_path:
-                raise ValueError("csv load requires load.file_path")
-            msg = write_csv(
-                out, ld.file_path, include_header=ld.include_header,
-                row_count=dq["rows"],
-            )
-        elif ld.to == "parquet":
-            from agentic_etl_poc_spark.sinks.parquet_sink import write_parquet
-
-            if not ld.file_path:
-                raise ValueError("parquet load requires load.file_path")
-            msg = write_parquet(
-                out,
-                ld.file_path,
-                mode=ld.mode,
-                partition_by=ld.partition_by,
-                key_cols=ld.key_cols,
-                change_feed=ld.change_feed,
-                row_count=dq["rows"],
-            )
-        else:
-            msg = load_to_postgres(
-                out, ld.conn_str, ld.table, mode=ld.mode,
-                key_cols=ld.key_cols, row_count=dq["rows"],
+        try:
+            msg = _load(out, ld, dq["rows"])
+        except READ_ERRORS as e:
+            return _failed(
+                plan, send_alert, "load", error_verdict(e, "write_error")
             )
     finally:
         persisted.unpersist()
@@ -538,8 +563,8 @@ def _run_stream_plan_tail(
     # stream's schema, so there is nothing to infer.
     from agentic_etl_poc_spark.sinks.parquet_sink import (
         READ_ERRORS,
+        error_verdict,
         parquet_verdict,
-        read_error,
     )
 
     vf = plan.verify
@@ -551,7 +576,7 @@ def _run_stream_plan_tail(
             cks.timestamp_col if cks.freshness_minutes else "",
         )
     except READ_ERRORS as e:
-        return _failed(plan, send_alert, "verify", read_error(e))
+        return _failed(plan, send_alert, "verify", error_verdict(e))
     dq = dq_verdict(
         stats,
         min_rows=cks.min_rows,

@@ -467,18 +467,19 @@ def upsert_parquet(
     )
 
 
-#: What a failed artifact re-read raises: Spark's captured errors and
-#: JVM exceptions PySpark does not convert.
+#: What a failed artifact re-read or sink write raises: Spark's captured
+#: errors and JVM exceptions PySpark does not convert.
 READ_ERRORS = (PySparkException, Py4JJavaError)
 
 
-def read_error(e: Exception) -> dict:
-    """The verify dict for an artifact re-read that raised: the first
-    line of the error (of the JVM exception's own message when PySpark
-    left it unconverted — its Python text only names the py4j call)."""
+def error_verdict(e: Exception, kind: str = "read_error") -> dict:
+    """The stage dict for a re-read (or, with ``kind="write_error"``, a
+    sink write) that raised: the first line of the error (of the JVM
+    exception's own message when PySpark left it unconverted — its
+    Python text only names the py4j call)."""
     text = e.java_exception.getMessage() if isinstance(e, Py4JJavaError) else str(e)
     first = (text or "").strip().split("\n", 1)[0] or type(e).__name__
-    return {"status": False, "error": f"read_error: {first}"}
+    return {"status": False, "error": f"{kind}: {first}"}
 
 
 def verify_parquet(
@@ -511,7 +512,7 @@ def verify_parquet(
         reader = spark.read if schema is None else spark.read.schema(schema)
         stats = gate_stats(reader.parquet(path), nonnull_cols)
     except READ_ERRORS as e:
-        return read_error(e)
+        return error_verdict(e)
     return parquet_verdict(stats, min_rows, nonnull_cols)
 
 

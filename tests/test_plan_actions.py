@@ -1,9 +1,12 @@
 """Spark actions per plan-lifecycle stage.
 
-``run_from_plan`` runs one action per stage: the DQ aggregate counts the
+``run_from_plan`` runs one action per stage: the DQ gate counts the
 persisted frame, the parquet sinks reuse that count instead of recounting,
 the quarantine split takes its count during its own write, and a drained
-stream is gated by one scan of its artifact.  These tests pin
+stream is gated by one scan of its artifact.  Every gate (DQ, verify, the
+stream tail) is one job: its aggregates are observed on a ``noop`` scan
+(``quality.observed_scan``), and on the persisted frame that same job
+fills the cache.  These tests pin
 
 - the exact number of Spark jobs each plan shape runs, counted through a
   test-owned job group (an added action shows up as a diff here);
@@ -101,9 +104,9 @@ source:
 
 def test_jobs_quarantine_plan(spark, sf_smoke, tmp_path):
     """Source schema inference 1; the quarantine write, which builds the
-    persisted frame and observes its row count, 1; DQ aggregate 2; sink
-    write 1; verify re-read with the written schema: aggregate 2.  The
-    second run reads its source from the memo: one job fewer."""
+    persisted frame and observes its row count, 1; DQ scan 1; sink write
+    1; verify re-read with the written schema: scan 1.  The second run
+    reads its source from the memo: one job fewer."""
     bad, clean = tmp_path / "bad", tmp_path / "clean"
     plan = _orders(sf_smoke) + f"""
 transform:
@@ -119,7 +122,7 @@ load:
   to: parquet
   file_path: {clean}
 """
-    for group, want in (("plan-quarantine", 7), ("plan-quarantine-warm", 6)):
+    for group, want in (("plan-quarantine", 5), ("plan-quarantine-warm", 4)):
         (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
         assert res["status"] == "ok" and not alerts, res
         n_bad = spark.read.parquet(str(bad)).count()
@@ -129,9 +132,9 @@ load:
 
 
 def test_jobs_parquet_overwrite_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1; DQ aggregate 3 (the first action also
-    builds the persisted frame); sink write 1, no recount; verify
-    re-read with the written schema: aggregate 2."""
+    """Source schema inference 1; DQ scan 1 (the first action, so it
+    also builds the persisted frame); sink write 1, no recount; verify
+    re-read with the written schema: scan 1."""
     out = tmp_path / "ow"
     (res, _), jobs = _count_jobs(spark, "plan-overwrite", lambda: _run(
         spark,
@@ -148,14 +151,17 @@ load:
     ))
     assert res["status"] == "ok", res
     assert res["message"] == f"wrote 1,500 rows to {out} (parquet)"
-    assert jobs == 7
+    assert jobs == 4
 
 
 def test_jobs_parquet_upsert_plan(spark, sf_smoke, tmp_path):
-    """An upsert into an existing table: the batch is not recounted
-    before the commit (the DQ count already ran before it), and the
-    source comes from the memo the first run filled.  The verify re-read
-    still infers: a merge can evolve the table wider than the batch."""
+    """An upsert into an existing table: DQ scan 1, which also builds
+    the persisted frame; the merge 7 (touched partitions 2, the target's
+    schema 1, the merge write with its query stages 4); verify re-read
+    inference 1 and scan 1.  The batch is not recounted before the
+    commit (the DQ count already ran before it), and the source comes
+    from the memo the first run filled.  The verify re-read still
+    infers: a merge can evolve the table wider than the batch."""
     out = tmp_path / "up"
     plan = _orders(sf_smoke) + f"""
 transform:
@@ -178,14 +184,14 @@ load:
     assert res["status"] == "ok", res
     assert res["message"].startswith(f"upserted 300 rows into {out} ")
     assert res["verify"]["rows"] == 700  # 500 + 300 - 100 shared keys
-    assert jobs == 13
+    assert jobs == 10
 
 
 def test_jobs_stream_plan(spark, tmp_path):
     """The drain's micro-batch jobs carry the stream's own job group;
-    what runs in the caller's group is the gate: one aggregate (2 jobs)
-    over the artifact, read with the stream's schema, for DQ and verify
-    together."""
+    what runs in the caller's group is the gate: one observed scan (1
+    job) of the artifact, read with the stream's schema, for DQ and
+    verify together."""
     topic = _stage_topic(tmp_path / "topic")
     out = tmp_path / "out"
     (res, alerts), jobs = _count_jobs(spark, "plan-stream", lambda: _run(
@@ -194,13 +200,13 @@ def test_jobs_stream_plan(spark, tmp_path):
     ))
     assert res["status"] == "ok" and not alerts, res
     assert res["dq"]["rows"] == res["verify"]["rows"] == 30
-    assert jobs == 2
+    assert jobs == 1
 
 
 def test_jobs_dq_rejected_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1 + DQ aggregate 3, then the pre-load
-    abort: nothing written, one alert.  The second run reads its source
-    from the memo: 3 jobs."""
+    """Source schema inference 1 + DQ scan 1 (which also builds the
+    persisted frame), then the pre-load abort: nothing written, one
+    alert.  The second run reads its source from the memo: 1 job."""
     out = tmp_path / "rej"
     plan = f"""
 source:
@@ -220,7 +226,7 @@ load:
 alerts:
   on_fail: "slack://#x"
 """
-    for group, want in (("plan-reject", 4), ("plan-reject-warm", 3)):
+    for group, want in (("plan-reject", 2), ("plan-reject-warm", 1)):
         (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
         assert res == {
             "status": "failed",

@@ -137,8 +137,6 @@ def test_no_scale_antipatterns(spark, sf_smoke, name):
 #: Captured-plan label -> why a single-partition exchange there is a
 #: consciously bounded step at 100 TB.
 EAGER_SINGLE_PARTITION_OK: dict[str, str] = {
-    "dq_agg": "one-pass DQ gate is a scalar aggregate (one output row)",
-    "incremental_max": "watermark high-water mark is a scalar aggregate",
     "result_frame": "eager entries' returned frame is a presentation "
     "sort over an already-drained memory table / re-read artifact — "
     "bounded by the entry's (small) result set, not the input",

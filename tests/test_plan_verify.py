@@ -12,7 +12,9 @@ inferring one.  These tests pin that
   nonnull check (the inferring read skips it);
 - a zero-row artifact passes nonnull checks at ``min_rows: 0``;
 - a re-read that raises ends the run with ``status: failed``, a
-  ``read_error``, one alert and an unchanged watermark.
+  ``read_error``, one alert and an unchanged watermark;
+- a sink write that raises ends it the same way with a ``write_error``
+  under ``load``.
 """
 
 from __future__ import annotations
@@ -22,6 +24,9 @@ import os
 
 import pytest
 
+from pyspark.errors import PySparkException
+
+from agentic_etl_poc_spark import runtime
 from agentic_etl_poc_spark.memory import RunLedger
 from agentic_etl_poc_spark.sinks import parquet_sink
 from agentic_etl_poc_spark.sinks.parquet_sink import verify_parquet
@@ -170,6 +175,50 @@ def test_truncated_artifact_fails_batch_run(spark, sf_smoke, tmp_path, monkeypat
     monkeypatch.setattr(parquet_sink, "write_parquet", write_then_truncate)
     res, alerts = _run(spark, _incremental_plan(sf_smoke, out, ledger, mode))
     _assert_read_error(res, alerts)
+    assert RunLedger(ledger).get_state("watermark:o") == _WM
+
+
+# -- a sink write that raises ----------------------------------------------
+def _assert_load_failed(res, alerts):
+    assert res["status"] == "failed" and set(res) == {"status", "load"}, res
+    assert res["load"]["status"] is False
+    assert res["load"]["error"].startswith("write_error: "), res
+    assert len(alerts) == 1 and alerts[0].startswith("Load failed: ")
+
+
+@pytest.mark.parametrize("sink", ["parquet", "csv"])
+def test_failing_sink_write_fails_batch_run(
+    spark, sf_smoke, tmp_path, monkeypatch, sink
+):
+    """The sink raises a Spark error: failed run, one alert, nothing
+    verified, watermark unchanged."""
+    out, ledger = tmp_path / "out", str(tmp_path / "ledger.db")
+    plan = _incremental_plan(sf_smoke, out, ledger, "append")
+    if sink == "csv":
+        plan = plan.replace("  to: parquet\n", "  to: csv\n")
+        owner, name = runtime, "write_csv"
+    else:
+        owner, name = parquet_sink, "write_parquet"
+
+    def boom(df, path, **kw):
+        raise PySparkException("sink unavailable")
+
+    monkeypatch.setattr(owner, name, boom)
+    res, alerts = _run(spark, plan)
+    _assert_load_failed(res, alerts)
+    assert "sink unavailable" in res["load"]["error"]
+    assert not out.exists()
+    assert RunLedger(ledger).get_state("watermark:o") == _WM
+
+
+def test_sink_write_onto_a_file_fails_batch_run(spark, sf_smoke, tmp_path):
+    """A real write fault, no patching: the parquet target path is a
+    plain file, so Spark's append cannot create its directory."""
+    out, ledger = tmp_path / "out", str(tmp_path / "ledger.db")
+    out.write_text("not a table")
+    res, alerts = _run(spark, _incremental_plan(sf_smoke, out, ledger, "append"))
+    _assert_load_failed(res, alerts)
+    assert out.read_text() == "not a table"
     assert RunLedger(ledger).get_state("watermark:o") == _WM
 
 
