@@ -52,10 +52,6 @@ def md5_48(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
 
 
-def minhash_perm(h_mod_p: Column, a: int, b: int) -> Column:
-    return (F.lit(a) * h_mod_p + F.lit(b)) % F.lit(MERSENNE_P)
-
-
 def dot_fold(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product of two float arrays."""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))

@@ -8,7 +8,7 @@ record runs via ``RunLedger``; the CLI enables it with
 
 Schema kept compatible: runs(run_id, started_at, ended_at, prompt,
 prompt_hash, plan_yaml, status, rows_written, dq_json, verify_json, error)
-plus a key/value state table and a source-schema cache.
+plus a key/value state table.
 """
 
 from __future__ import annotations
@@ -36,10 +36,6 @@ class RunLedger:
             con.execute(
                 """CREATE TABLE IF NOT EXISTS etl_agent_state (
                     key TEXT PRIMARY KEY, value_json TEXT)"""
-            )
-            con.execute(
-                """CREATE TABLE IF NOT EXISTS etl_agent_source_schema (
-                    source_hash TEXT PRIMARY KEY, schema_json TEXT)"""
             )
         con.close()
 

@@ -1,52 +1,27 @@
-"""Scale-out join strategies: bucketed co-location and skew salting.
+"""Scale-out building blocks shared by battery entries: a skew salt and
+small-file compaction.
 
 The reference runs single-process DuckDB over pandas and needs neither
 (reference: etl_agent/templates.py:79-121 — one process, no partitions).
-On a 1000-executor cluster both are load-bearing:
+On a cluster both are load-bearing:
 
-- **Bucketing** pre-shuffles a table ONCE at write time (``bucketBy`` on
-  the join key).  Any later equi-join or aggregation on that key reads
-  co-located buckets and skips its exchange entirely — the write-once,
-  join-many amortization that matters when the same 100 TB fact table is
-  joined every hour.
-- **Salting** spreads ONE pathologically hot key across N reducer
-  partitions: the fact side gets a deterministic per-row salt in [0, N),
-  the dim side is replicated N times, and the join key becomes
-  (key, salt).  AQE's skew-join splitting (enabled in session.py) handles
-  moderate skew automatically; explicit salting is the escape hatch for
-  the "one key is 30% of the table" case where even a split partition
-  won't fit an executor.
+- ``salt_column`` spreads ONE pathologically hot key across N reducer
+  partitions: a deterministic per-row salt in [0, N) joins the key
+  (q51's two-stage aggregate, q59's salted join).  AQE's skew-join
+  splitting (enabled in session.py) handles moderate skew automatically;
+  explicit salting is the escape hatch for the "one key is 30% of the
+  table" case where even a split partition won't fit an executor.
+- ``compact_parquet`` rewrites a many-small-files directory into
+  right-sized files (q82).
+
+Bucketed co-location (q65) and AQE skew joins (q80) live in their
+battery entries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-
-SALT_COL = "__salt"
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    num_buckets: int = 32,
-    sort_key: str | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed table.
-
-    Equi-joins and groupBys on ``bucket_key`` between tables bucketed with
-    the SAME bucket count then require no shuffle (and with ``sort_key``,
-    no sort) — verified by plan assertion in tests/test_scale.py.
-    """
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_key)
-    if sort_key:
-        w = w.sortBy(sort_key)
-    w.saveAsTable(table_name, format="parquet")
-
-
-def bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def salt_column(*cols: Column, parts: int) -> Column:
@@ -54,32 +29,6 @@ def salt_column(*cols: Column, parts: int) -> Column:
     row-varying columns (NOT the hot key itself, which is constant within
     the skewed group)."""
     return F.pmod(F.xxhash64(*cols), F.lit(parts)).cast("int")
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_from: list[str],
-    parts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join ``fact`` to a small-ish ``dim`` on ``key`` with the fact
-    side salted across ``parts`` partitions per key.
-
-    ``salt_from`` names fact columns whose hash spreads rows of the same
-    hot key (e.g. a row id).  The dim side is exploded ``parts``-fold —
-    keep dims small relative to the cluster, or broadcast instead.
-    Result equals the plain join exactly (salt columns are internal).
-    """
-    salted_fact = fact.withColumn(
-        SALT_COL, salt_column(*[F.col(c) for c in salt_from], parts=parts)
-    )
-    replicated_dim = dim.withColumn(
-        SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(parts - 1)).cast("array<int>"))
-    )
-    out = salted_fact.join(replicated_dim, on=[key, SALT_COL], how=how)
-    return out.drop(SALT_COL)
 
 
 def compact_parquet(
@@ -138,60 +87,3 @@ def compact_parquet(
         "files_after": n_files_after,
         "bytes": total_bytes,
     }
-
-
-ZORDER_BITS = 16
-
-
-def zorder_key(*cols: Column, bits: int = ZORDER_BITS) -> Column:
-    """Interleave the low ``bits`` bits of each (non-negative integer)
-    column into a single Z-order (Morton) key.
-
-    Sorting/range-partitioning by this key clusters rows so that files
-    are simultaneously tight in EVERY interleaved dimension — min/max
-    parquet pruning then skips files for predicates on any of the
-    columns, not just the leading sort column.  This is the layout trick
-    (Delta/Iceberg call it Z-ORDER) for the 100 TB fact table that gets
-    filtered by ts one hour and by user_id the next.
-
-    Callers pre-normalize: each column should already be a bounded
-    non-negative int (bucket timestamps to epoch-minutes, hash strings
-    to ints, etc.).  Values wider than ``bits`` cluster by their low
-    bits only.  Pure bit arithmetic, JVM-side, whole-stage-codegen.
-    """
-    n = len(cols)
-    if n < 2:
-        raise ValueError("zorder_key needs at least two columns")
-    if n * bits > 62:
-        raise ValueError(f"{n} cols x {bits} bits overflows a signed long")
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        for j, c in enumerate(cols):
-            bit = F.shiftright(c.cast("long"), b).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, b * n + j))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = ZORDER_BITS,
-) -> None:
-    """Write ``df`` as parquet range-partitioned AND sorted by the
-    Z-order key of ``cols`` — every output file covers a compact Z-range,
-    i.e. a small rectangle in the keyspace, so min/max stats prune on
-    all ``cols`` (verified against a row-order layout in
-    tests/test_scale.py).  repartitionByRange samples the key (one extra
-    pass) — at 100 TB, reuse persisted bounds or bucket the key instead
-    of re-sampling every write."""
-    z = zorder_key(*[F.col(c) for c in cols], bits=bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -29,8 +29,12 @@ approximately):
 
 from __future__ import annotations
 
+import json
+import math
+import os
+import re
 import weakref
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -96,8 +100,6 @@ def fixture_fingerprint(sf_dir: str, tables: list[str]) -> str:
     reusing stale /tmp copies (which would surface later as a confusing
     oracle hash mismatch).  A parquet table may be a single file or a
     directory of part files."""
-    import os
-
     parts = []
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -123,8 +125,6 @@ def fixture_fingerprint(sf_dir: str, tables: list[str]) -> str:
 
 def marker_current(marker: str, fingerprint: str) -> bool:
     """True iff the staging marker exists and records ``fingerprint``."""
-    import os
-
     if not os.path.exists(marker):
         return False
     with open(marker) as f:
@@ -132,8 +132,6 @@ def marker_current(marker: str, fingerprint: str) -> bool:
 
 
 def write_marker(marker: str, fingerprint: str) -> None:
-    import os
-
     os.makedirs(os.path.dirname(marker), exist_ok=True)
     with open(marker, "w") as f:
         f.write(fingerprint)
@@ -149,233 +147,65 @@ def register(name: str, oracle: str | None, description: str = ""):
     return deco
 
 
-#: Explicit registry order.  The external correctness sweep walks this
-#: order and records only the FIRST ~50 entries per round.  Round-13
-#: rotation: entries sorted by the round of their LATEST driver-green
-#: row ascending (the r08-era cohort has now waited longest), cheap-first
-#: (round-12 per-query bench) within a cohort — so the 50-slot window
-#: holds exactly the entries that have gone longest without a driver
-#: row, and the 50 freshly-green r12 entries sit at the tail.
-#:
-#: tests/test_battery_contract.py::test_sweep_priority_block_leads
-#: recomputes this invariant from the CORRECTNESS_r*.json files and goes
-#: red the moment a new sweep lands — rotating this tuple is each
-#: round's first task.
-#:
-#: bench.py iterates sorted(battery), so this order never skews
-#: per-query bench attribution.
-SWEEP_ORDER: tuple[str, ...] = (
-    # -- last driver-green in the r08 sweep, cheap-first ----------
-    "q16_math_funcs",
-    "m01_multimodal_metadata",
-    "q30_null_semantics",
-    "t10_source_mixture",
-    "q42_json_struct_parse",
-    "t21_training_shuffle",
-    "q47_bitwise_agg",
-    "t12_length_deciles",
-    "q02_cast_coalesce_project",
-    "q32_histogram",
-    "t09_corpus_stats",
-    "t08_train_test_split",
-    "q83_parameterized_sql",
-    "q52_funnel",
-    "m09_image_center_crop",
-    "q53_retention_cohorts",
-    "q19_range_join",
-    "t02_quality_score",
-    "q10_window_rank",
-    "s02_ann_lsh",
-    "q21_cube_grouping",
-    "q09_distinct_agg",
-    "q17_hourly_json",
-    "d01_dedup_exact",
-    "q11_running_window",
-    "t03_langid",
-    "q23_approx_distinct",
-    "t06_boilerplate_ratio",
-    "t05_pandas_tokens",
-    "q24_sessionize_batch",
-    "s03_ann_ivf",
-    "t11_repetition_score",
-    "d02_dedup_fingerprint",
-    "q03_try_dateparse",
-    "t04_fingerprint",
-    "u03_pandas_udaf_weighted",
-    "v13_stream_dedup_within_watermark",
-    "v15_stream_dim_refresh",
-    "d07_dedup_clusters",
-    "q01_pricing_summary",
-    "p10_plan_jdbc_roundtrip",
-    "d06_embedding_neardup",
-    "d05_simhash",
-    "d03_ngram_jaccard",
-    "v14_stream_quarantine",
-    # -- last driver-green in the r09 sweep, cheap-first ----------
-    "q13_semi_anti_join",
-    "q31_date_spine_gapfill",
-    # -- last driver-green in the r10 sweep, cheap-first ----------
-    "q40_union_by_name",
-    "q58_forecast_revenue",
-    "q38_string_agg",
-    "t20_quality_upsample",
-    "q33_scd2_versions",
-    "q43_rank_family",
-    "s01_knn_bruteforce",
-    "d11_sketch_error",
-    "q46_ignore_nulls_fill",
-    "q35_not_in_null_trap",
-    "q29_range_frame_interval",
-    "q15_string_funcs",
-    "q36_explode_outer",
-    "q06_join_cast_key_broadcast",
-    "u04_arrow_scalar_udf",
-    "s10_filtered_knn",
-    "q61_small_quantity_avg",
-    "u05_arrow_map_batches",
-    "t13_vocab_by_source",
-    "q20_tumbling_window",
-    "t19_token_rarity",
-    "q07_conditional_agg",
-    "q04_weekly_rollup",
-    "m04_image_decode",
-    "m03_audio_decode",
-    "m06_audio_resample",
-    "s09_matryoshka_recall",
-    "m05_image_resize",
-    "t18_sliding_chunks",
-    "t22_bpe_merges",
-    "u07_python_writer",
-    "t24_bpe_apply",
-    "p04_plan_json_pipeline",
-    "p11_jdbc_partitioned_read",
-    "v06_stream_static_enrich",
-    "u06_python_datasource",
-    "v03_stream_dedup_exact",
-    "p12_jdbc_live_upsert",
-    "t17_chunk_dedup",
-    "p01_curation_pipeline",
-    "s11_pq_adc",
-    "v05_stream_watermark_eviction",
-    "d17_multiprobe_semantic_dedup",
-    "t25_bpe_n16",
-    "v04_stream_stream_join",
-    "v07_stream_python_source",
-    "d12_semantic_dedup",
-    "p03_plan_incremental",
-    "p02_plan_csv_pipeline",
-    "d16_semantic_recall_audit",
-    # -- last driver-green in the r11 sweep, cheap-first ----------
-    "q80_aqe_skew_split",
-    "q66_bloom_runtime_filter",
-    "q69_promo_revenue_share",
-    "q55_lateral_topn",
-    "q14_rollup",
-    "q44_arg_extremes",
-    "q49_latest_record_dedup",
-    "q57_returned_items",
-    "q82_compaction_roundtrip",
-    "q34_full_outer_reconcile",
-    "q28_array_map_agg",
-    "q12_set_ops",
-    "q22_percentiles",
-    "t16_sequence_packing",
-    "t27_stratified_sample",
-    "u02_python_udtf",
-    "s07_int8_quantization",
-    "q26_sliding_window",
-    "q60_dynamic_partition_pruning",
-    "d10_cluster_survivors",
-    "q48_shipping_priority",
-    "s04_ann_recall",
-    "p14_incremental_partition_consume",
-    "q51_salted_skew_agg",
-    "s05_ann_multiprobe",
-    "d09_containment",
-    "q50_higher_order_funcs",
-    "t01_token_stats",
-    "q56_local_supplier_volume",
-    "q54_recursive_year_ladder",
-    "q18_asof_join",
-    "s06_knn_join",
-    "q45_grouping_sets",
-    "t26_hashing_embed",
-    "m07_shot_detection",
-    "q59_salted_skew_join",
-    "t23_bigram_novelty",
-    "t15_benchmark_decontam",
-    "v01_stream_tumbling_agg",
-    "p05_plan_multi_source",
-    "p06_plan_multi_step",
-    "s12_quantized_rerank",
-    "u08_polymorphic_udtf",
-    "p13_lakehouse_upsert",
-    "s08_kmeans_refine",
-    "v08_stream_session_window",
-    "d15_lsh_semantic_dedup",
-    "v02_stream_sessionize",
-    "v16_stream_lakehouse_upsert",
-    "d04_minhash_lsh",
-    # -- last driver-green in the r12 sweep, cheap-first ----------
-    "q08_topk_orders",
-    "q39_regexp_groups",
-    "q37_map_functions",
-    "p16_schema_evolution",
-    "q70_disjunctive_predicate_join",
-    "q75_part_promotion_suppliers",
-    "q72_dormant_rich_customers",
-    "q81_sql_variables",
-    "q64_customer_distribution",
-    "u01_grouped_pandas_agg",
-    "q77_market_share",
-    "p15_row_change_feed",
-    "t14_tfidf_keywords",
-    "q68_late_shipment_priority",
-    "q73_parts_supplier_counts",
-    "q25_pivot_unpivot",
-    "u09_arrow_udtf",
-    "q27_correlated_subquery",
-    "q41_set_ops_all",
-    "q74_top_supplier_revenue",
-    "q76_volume_shipping",
-    "m02_frame_fingerprints",
-    "p08_xml_roundtrip",
-    "s15_binary_quantization",
-    "q05_left_join_multikey",
-    "q78_product_type_profit",
-    "d08_fuzzy_levenshtein",
-    "u11_arrow_grouped_map",
-    "s14_radius_search",
-    "t07_pii_scan_redact",
-    "m08_audio_vad",
-    "q71_important_part_values",
-    "d14_incremental_dedup",
-    "q62_large_volume_customers",
-    "q63_suppliers_kept_waiting",
-    "d13_perceptual_dhash",
-    "v12_stream_sliding_window",
-    "q79_min_cost_supplier",
-    "p09_plan_stream",
-    "p07_plan_quarantine",
-    "v09_stream_rocksdb_session",
-    "q65_bucketed_colocated_join",
-    "q67_variant_extract",
-    "v11_stream_upsert_sink",
-    "v10_stream_outer_join",
-    "s13_ivfadc",
-    "g03_bfs_levels",
-    "g02_triangle_count",
-    "g01_integer_pagerank",
-    "u10_python_stream_writer",
+#: Checkout root: the committed sweep records and bench map live here.
+REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+_SWEEP_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def _green(row: dict) -> bool:
+    return bool(
+        row.get("rows_match")
+        and row.get("schema_match")
+        and row.get("hash_match") is not False
+    )
+
+
+def sweep_order(names: Iterable[str], root: str = REPO_ROOT) -> list[str]:
+    """``names`` in external-sweep priority, derived from the committed
+    ``CORRECTNESS_r{N}.json`` sweeps (by integer round) and the per-query
+    seconds in ``BENCH_QUERIES.json``.
+
+    The external correctness sweep records only the first ~50 entries of
+    ``load_all()`` per round, so the order decides what gets checked.
+    Sort key: red in the latest sweep first; then the round of the latest
+    green row, oldest first (never-sampled or never-green = round 0);
+    then cheap-first (missing bench seconds = last); then name.  A row
+    is green iff ``rows_match and schema_match and hash_match is not
+    False``.
+    """
+    rounds = sorted(
+        (int(m.group(1)), m.group(0))
+        for m in map(_SWEEP_FILE.fullmatch, os.listdir(root))
+        if m
+    )
+    last_green: dict[str, int] = {}
+    red: set[str] = set()
+    for n, fname in rounds:
+        with open(os.path.join(root, fname)) as f:
+            rows = json.load(f)
+        red = {q for q, row in rows.items() if not _green(row)}
+        last_green.update((q, n) for q in rows if q not in red)
+    try:
+        with open(os.path.join(root, "BENCH_QUERIES.json")) as f:
+            sec = json.load(f)["queries"]
+    except OSError:
+        sec = {}
+    return sorted(
+        names,
+        key=lambda q: (
+            q not in red, last_green.get(q, 0), sec.get(q, math.inf), q
+        ),
+    )
 
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every battery module (side effect: registration) and return
-    the registry in SWEEP_ORDER (see its docstring for why the order is
-    load-bearing).  Names registered but absent from SWEEP_ORDER go last —
-    and tests/test_battery_contract.py asserts that never happens, so new
-    queries must take an explicit sweep position.
+    the registry in ``sweep_order`` — recomputed on every call from the
+    committed sweep records, so a new sweep or a new entry needs no edit
+    here (a new entry ranks with the never-sampled ones).
     """
     from agentic_etl_poc_spark.queries import (  # noqa: F401
         dedup,
@@ -389,10 +219,4 @@ def load_all() -> dict[str, QuerySpec]:
         udx,
     )
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in SWEEP_ORDER:
-        if name in QUERIES:
-            ordered[name] = QUERIES[name]
-    for name, spec in QUERIES.items():
-        ordered.setdefault(name, spec)
-    return ordered
+    return {name: QUERIES[name] for name in sweep_order(QUERIES)}

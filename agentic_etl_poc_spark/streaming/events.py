@@ -434,25 +434,6 @@ def enrich_with_dim(events: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     return events.join(F.broadcast(dim), on=key, how="left")
 
 
-def run_foreach_batch(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    batch_fn,
-) -> None:
-    """foreachBatch drain: each micro-batch DataFrame is handed to
-    ``batch_fn(df, batch_id)`` — the escape hatch for sinks Structured
-    Streaming lacks natively (JDBC upsert, multi-table writes), with
-    exactly-once via the checkpoint + idempotent batch ids."""
-    q = (
-        stream_df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _note_executed_stream_plan(q)
-
-
 def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Streaming exact deduplication: dropDuplicates keyed on event_id,
     bounded by the event-time watermark — state for ids older than the

@@ -3,13 +3,6 @@
 Output contract (round 2 — BENCH_r01 had parsed:null because the single
 ~2.5 KB JSON line overflowed the driver's capture window):
 
-  line 0: compact per-query map  {"metric": "per_query_sec",
-                           "queries": {...}}  (round 13, additions-only:
-                           the r12 driver's tail capture truncated the
-                           full line 2 and lost the per-query comparison
-                           for 148 of 197 entries; a compact line at the
-                           HEAD survives a head-window capture, and the
-                           three-line contract below is unchanged)
   line 1: short headline  {"metric": "battery_wall_sec", "value": N,
                            "unit": "sec", "sf": 0.1, "n_queries": 73}
   line 2: full record     headline + {"queries": {"q01_...": sec, ...}}
@@ -17,7 +10,8 @@ Output contract (round 2 — BENCH_r01 had parsed:null because the single
                            complete JSON line whichever end survives)
 
 The full per-query map is also written to BENCH_QUERIES.json at the repo
-root for post-hoc inspection.
+root (committed every round), which is where per-query seconds are read
+from — a tail-window capture may truncate line 2.
 
 Each query is forced end-to-end with a noop sink (full compute, no driver
 collect). Session setup/JVM start is excluded; a warmup action precedes
@@ -302,16 +296,6 @@ def main() -> None:
             "target": "builtin twin grows <= ~1.5x linearly with sf; "
             "udaf/builtin ratio is the measured Arrow-boundary price",
         }
-    # Compact per-query line FIRST (minified separators, distinct metric
-    # name so no headline parser can mistake it), then the unchanged
-    # three-line contract.
-    print(
-        json.dumps(
-            {"metric": "per_query_sec", "sf": sf, "queries": timings},
-            separators=(",", ":"),
-        ),
-        flush=True,
-    )
     print(json.dumps(headline), flush=True)
     print(json.dumps(full), flush=True)
     print(json.dumps(headline), flush=True)

@@ -1,109 +1,15 @@
-"""Plan-shape tests for the scale-out join strategies (operators/scale.py).
+"""Tests for the scale-out building blocks (operators/scale.py) and for
+result invariance under shuffle parallelism.
 
-These assert on the PHYSICAL plan, not just results: bucketing must remove
-the shuffle, salting must preserve exact results while changing the
-distribution key.
+Salting must spread a hot key evenly; compaction must rewrite small files
+without losing rows.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.operators.scale import (
-    salted_join,
-    write_bucketed,
-)
-
-
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _reset_bucketed_table(spark, name: str) -> None:
-    """Self-healing setup: an interrupted prior run can leave the managed
-    table's LOCATION on disk with no entry in this process's fresh Derby
-    metastore, and every later ``write_bucketed`` then fails with
-    LOCATION_ALREADY_EXISTS.  Drop the (possibly stale) metastore entry
-    AND remove the leftover warehouse directory before writing."""
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse.rstrip('/')}/{name}", ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def bucketed_pair(spark, sf_smoke):
-    # warehouse.dir is a static conf — managed tables land in the session's
-    # default warehouse; DROP TABLE below removes the files.
-    _reset_bucketed_table(spark, "orders_b")
-    _reset_bucketed_table(spark, "lineitem_b")
-    orders = table(spark, sf_smoke, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    lineitem = table(spark, sf_smoke, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    write_bucketed(orders, "orders_b", "o_orderkey", num_buckets=8)
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "lineitem_b",
-        "o_orderkey",
-        num_buckets=8,
-    )
-    yield "orders_b", "lineitem_b"
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed_pair):
-    o_name, l_name = bucketed_pair
-    # disable broadcast so the join would otherwise shuffle both sides
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table(o_name).join(spark.table(l_name), "o_orderkey")
-        plan = _physical_plan(j)
-        assert "ShuffleExchange" not in plan and "Exchange hashpartitioning" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-
-
-def test_bucketed_groupby_has_no_shuffle(spark, bucketed_pair):
-    o_name, _ = bucketed_pair
-    agg = (
-        spark.table(o_name)
-        .groupBy("o_orderkey")
-        .agg(F.sum("o_totalprice").alias("s"))
-    )
-    plan = _physical_plan(agg)
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert agg.count() > 0
-
-
-def test_salted_join_matches_plain_join(spark, sf_smoke):
-    li = table(spark, sf_smoke, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
-    # synthetic skew: everything hashes onto 3 hot keys
-    fact = li.withColumn("hot_key", (F.col("l_orderkey") % 3).cast("int"))
-    dim = spark.createDataFrame(
-        [(0, "a"), (1, "b"), (2, "c")], "hot_key int, tag string"
-    )
-    plain = fact.join(dim, "hot_key").select(
-        "l_orderkey", "l_linenumber", "tag"
-    )
-    salted = salted_join(
-        fact, dim, "hot_key", salt_from=["l_orderkey", "l_linenumber"], parts=8
-    ).select("l_orderkey", "l_linenumber", "tag")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-    assert salted.count() == fact.count()
 
 
 def test_salt_spreads_hot_key(spark, sf_smoke):
@@ -184,47 +90,3 @@ def test_results_invariant_under_parallelism(spark, sf_smoke):
                     f"{name}: result depends on shuffle parallelism"
                 )
             results[name] = rows
-
-
-def test_zorder_key_interleaves_bits(spark):
-    from agentic_etl_poc_spark.operators.scale import zorder_key
-
-    df = spark.createDataFrame([(0b101, 0b011)], "x long, y long").select(
-        zorder_key(F.col("x"), F.col("y"), bits=3).alias("z")
-    )
-    # x bits at even positions, y bits at odd: x=101, y=011
-    # -> z = y2 x2 y1 x1 y0 x0 = 0 1 1 0 1 1 = 0b011011
-    assert df.collect()[0]["z"] == 0b011011
-
-
-def test_zorder_layout_clusters_both_dims(spark, tmp_path):
-    """Range-partitioning by the Z key must localize BOTH dimensions:
-    a thin selective range on either column maps to a minority of files,
-    while a plain x-sorted layout localizes only x (a y-range query hits
-    every file — no pruning possible at 100 TB)."""
-    from agentic_etl_poc_spark.operators.scale import write_zordered
-
-    df = spark.range(0, 65536).select(
-        (F.col("id") % 256).alias("x"),
-        (F.col("id") / 256).cast("long").alias("y"),  # full 256x256 grid
-        F.col("id").alias("payload"),
-    )
-    p_lin = str(tmp_path / "lin")
-    p_z = str(tmp_path / "z")
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(p_lin)
-    )
-    write_zordered(df, p_z, ["x", "y"], n_files=16, bits=8)
-
-    def files_with_rows(path, col):
-        d = spark.read.parquet(path).filter(F.col(col) < 16)  # 1/16 strip
-        return d.select(F.input_file_name()).distinct().count()
-
-    assert files_with_rows(p_lin, "x") <= 2  # x-sorted: x localized
-    assert files_with_rows(p_lin, "y") == 16  # ...but y in EVERY file
-    # z-layout: both strips touch only the quadrant-overlapping minority
-    assert files_with_rows(p_z, "x") <= 6
-    assert files_with_rows(p_z, "y") <= 6

@@ -339,48 +339,6 @@ def test_stream_static_enrichment(spark, sf_smoke, events_json_dir):
     assert kinds.get("view") == "passive"
 
 
-def test_foreach_batch_upsert_sink(spark, events_json_dir, tmp_path):
-    """foreachBatch driving the custom JDBC-upsert writer — the two custom
-    pieces composed: streaming drain + transactional merge."""
-    import sqlite3
-
-    from agentic_etl_poc_spark.sinks.jdbc_sink import _merge_on_conflict
-    from agentic_etl_poc_spark.streaming.events import run_foreach_batch
-
-    db = tmp_path / "stream_sink.db"
-    conn_str = f"sqlite:///{db}"
-
-    def write_batch(df, batch_id):
-        agg = df.groupBy("event_type").count().toPandas()
-        con = sqlite3.connect(db)
-        with con:
-            con.execute(
-                "CREATE TABLE IF NOT EXISTS counts_stg "
-                "(event_type TEXT, count INTEGER)"
-            )
-            con.execute("DELETE FROM counts_stg")
-            con.executemany(
-                "INSERT INTO counts_stg VALUES (?, ?)",
-                list(agg.itertuples(index=False, name=None)),
-            )
-        con.close()
-        _merge_on_conflict(
-            conn_str, "counts", "counts_stg", ["event_type"],
-            ["event_type", "count"],
-        )
-
-    stream = stream_events(spark, events_json_dir, watermark="1 minute")
-    run_foreach_batch(
-        stream.select("event_id", "event_type"),
-        str(tmp_path / "ckpt"),
-        write_batch,
-    )
-    con = sqlite3.connect(db)
-    rows = dict(con.execute("SELECT event_type, count FROM counts").fetchall())
-    con.close()
-    assert sum(rows.values()) > 0
-
-
 def test_stream_dedup(spark, sf_smoke, tmp_path):
     """Duplicate every event in the source; the watermarked streaming dedup
     must restore the original count."""
