@@ -9,20 +9,23 @@ one set of aggregates:
 observed (Spark's ``Observation``) on a ``noop`` write of only the checked
 columns: one distributed pass and one Spark job, with per-task partial
 aggregates merged on the driver — no exchange, no per-column rescans, the
-shape that still works when the frame is 100 TB.  The quarantine write
-(``observed_write``) reads the same metrics off its own sink action.
+shape that still works when the frame is 100 TB.  A quarantine split
+(``quarantine_split``) needs no scan at all: the same metrics, restricted
+to the clean rows, ride the write of the violating rows.
 
 Result dict matches the reference's JSON exactly:
 ``{"rows": n, "status": bool, "error": str|None}`` with first-failure-wins
 error text (``min_rows check failed: n < m`` / ``nonnull check failed: c``);
 optional freshness adds ``lag_minutes``/``fresh_ok`` (reference:
 tools.py:106-118 declares freshness; the executor never passes it —
-SURVEY §2.4 — we support it properly).
+SURVEY §2.4 — we support it properly).  A plan with a quarantine split
+adds ``quarantined``, the count of rows routed away.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,12 +67,36 @@ def observed_scan(df: DataFrame, cols: list[str], metrics: list, label: str) -> 
     return observe_metrics(df.select(*cols), metrics, scan)
 
 
-def _row_metrics(cols: list[str]) -> list:
-    """``count(*)`` as ``rows`` and one null count per column as
-    ``nulls_<c>``: the metrics every gate and ``observed_write`` read."""
-    return [F.count(F.lit(1)).alias("rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in cols
+def _gate_metrics(cols: list[str], ts_col: str, where=None) -> list:
+    """The metrics every gate reads: ``count(*)`` as ``rows``, one null
+    count per column as ``nulls_<c>`` and, when ``ts_col`` is set,
+    ``max(ts_col)`` as ``max_ts`` — over the rows where ``where`` holds
+    (every row when it is None)."""
+
+    def among(e):
+        return e if where is None else F.when(where, e)
+
+    metrics = [F.count(among(F.lit(1))).alias("rows")] + [
+        F.sum(among(F.col(c).isNull().cast("long"))).alias(f"nulls_{c}")
+        for c in cols
     ]
+    if ts_col:
+        metrics.append(
+            F.max(among(F.col(ts_col).cast("timestamp"))).alias("max_ts")
+        )
+    return metrics
+
+
+def _stats(got: dict, columns: list[str], cols: list[str], ts_col: str) -> dict:
+    """``_gate_metrics``' observed values in ``gate_stats``' shape."""
+    stats = {
+        "columns": list(columns),
+        "rows": int(got["rows"]),
+        "nulls": {c: got[f"nulls_{c}"] for c in cols},
+    }
+    if ts_col:
+        stats["max_ts"] = got["max_ts"]
+    return stats
 
 
 def gate_stats(
@@ -86,21 +113,49 @@ def gate_stats(
     Null sums stay raw (``None`` over zero rows): each verdict keeps its
     own reading of an empty frame."""
     present = [c for c in dict.fromkeys(nonnull_cols or []) if c in df.columns]
-    metrics = _row_metrics(present)
-    has_ts = bool(ts_col) and ts_col in df.columns
-    if has_ts:
-        metrics.append(F.max(F.col(ts_col).cast("timestamp")).alias("max_ts"))
+    ts = ts_col if ts_col and ts_col in df.columns else ""
+    got = observed_scan(
+        df, [*present, ts] if ts else present, _gate_metrics(present, ts),
+        "dq_agg",
+    )
+    return _stats(got, df.columns, present, ts)
 
-    cols = [*present, ts_col] if has_ts else present
-    got = observed_scan(df, cols, metrics, "dq_agg")
-    stats = {
-        "columns": list(df.columns),
-        "rows": int(got["rows"]),
-        "nulls": {c: got[f"nulls_{c}"] for c in present},
-    }
-    if has_ts:
-        stats["max_ts"] = got["max_ts"]
-    return stats
+
+def quarantine_split(
+    df: DataFrame, nonnull_cols: list[str], write_bad, ts_col: str = ""
+) -> tuple[DataFrame, dict]:
+    """Route the rows of ``df`` with a null in any of ``nonnull_cols`` to
+    ``write_bad(bad_rows)``, which must trigger exactly one action, and
+    take the DQ gate's numbers for the CLEAN rows from that same job.
+
+    Returns the clean rows and their stats in ``gate_stats``' shape
+    (``ts_col``'s max when set) plus ``quarantined``, the violating row
+    count; ``dq_verdict`` reads them as if it had scanned the clean rows.
+    The metrics are observed below the ``filter(viol)``: Spark pushes no
+    Filter below ``CollectMetrics``, so they see every row and select
+    the clean ones themselves (``when(~viol, ...)``).  On a persisted
+    ``df`` the write also fills the cache the sink then reads."""
+    from agentic_etl_poc_spark import plan_capture
+
+    cols = list(dict.fromkeys(nonnull_cols))
+    missing = [c for c in cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"quarantine nonnull column not found: {missing[0]}")
+    viol = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in cols])
+    ts = ts_col if ts_col and ts_col in df.columns else ""
+    metrics = _gate_metrics(cols, ts, where=~viol) + [
+        F.count(F.when(viol, F.lit(1))).alias("quarantined")
+    ]
+
+    def write(observed: DataFrame) -> None:
+        bad = observed.filter(viol)
+        plan_capture.note("quarantine_sink", bad)
+        write_bad(bad)
+
+    got = observe_metrics(df, metrics, write)
+    stats = _stats(got, df.columns, cols, ts)
+    stats["quarantined"] = int(got["quarantined"])
+    return df.filter(~viol), stats
 
 
 def dq_check(
@@ -159,33 +214,3 @@ def dq_verdict(
             result["status"] = False
             result["error"] = f"freshness check failed: lag {lag_min:.1f} min"
     return result
-
-
-def observed_write(
-    df: DataFrame,
-    write_fn,
-    nonnull_cols: list[str] | None = None,
-) -> dict:
-    """Single-action write-plus-metrics via Spark's Observation API: the
-    row count and per-column null counts are accumulated DURING the sink
-    action, so the pipeline pays ONE pass instead of write-then-count.
-    The plan runtime's quarantine split writes its violating rows through
-    here and reports the observed row count as ``dq.quarantined``.
-
-    Trade-off vs the pre-load gate (dq_check): metrics arrive only after
-    the write has happened, so this is validate-after-write (pair it with
-    a staging path + promote-on-ok), while dq_check aborts BEFORE the sink
-    sees any data at the cost of a second pass.  Both shapes are needed;
-    the reference only had the two-pass form (reference:
-    etl_agent/templates.py:123-140).
-
-    ``write_fn(observed_df)`` must trigger exactly one action.
-    """
-    nonnull_cols = [c for c in (nonnull_cols or []) if c in df.columns]
-    got = observe_metrics(df, _row_metrics(nonnull_cols), write_fn)
-    null_counts = {c: int(got[f"nulls_{c}"] or 0) for c in nonnull_cols}
-    return {
-        "rows": int(got["rows"]),
-        "null_counts": null_counts,
-        "nonnull_ok": all(v == 0 for v in null_counts.values()),
-    }

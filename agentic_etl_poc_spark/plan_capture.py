@@ -6,16 +6,18 @@ pipelines (p-family), streaming drains (v-family), and the custom-sink
 write (u07) — execute their real work at build time, so linting their
 *returned* frame would miss the executed pipelines.  This module is the
 bridge: action sites in runtime.py / streaming/events.py / the u07 entry
-call ``note(label, df)`` (or ``note_text`` for an already-formatted
+call ``note(label, df)`` (or ``note_text`` with a renderer for a
 streaming execution plan) immediately before/after their action, and the
 lint wraps the entry in ``capture()`` to receive every executed plan.
 
-Zero overhead when no capture is active: ``note`` is a None-check.
+Zero overhead when no capture is active: ``note`` and ``note_text`` are
+a None-check, and neither renders a plan outside ``capture()``.
 """
 
 from __future__ import annotations
 
 import contextlib
+from collections.abc import Callable
 
 #: Active sink for (label, formatted_plan) pairs, or None outside capture().
 _SINK: list[tuple[str, str]] | None = None
@@ -46,9 +48,11 @@ def note(label: str, df) -> None:
     _SINK.append((label, plan))
 
 
-def note_text(label: str, plan_text: str) -> None:
-    """Record an already-formatted plan string (streaming executions
-    expose their last micro-batch plan as text, not as a DataFrame)."""
+def note_text(label: str, render: Callable[[], str]) -> None:
+    """Record the plan string ``render()`` returns (streaming executions
+    expose their last micro-batch plan as text, not as a DataFrame).
+    ``render`` runs only inside capture(): rendering a stream plan costs
+    a JVM explain per drain."""
     if _SINK is None:
         return
-    _SINK.append((label, plan_text))
+    _SINK.append((label, render()))

@@ -30,13 +30,13 @@ Spark job, no exchange.
 - incremental: one observed ``max(ts)`` scan for the new watermark, over
   the filtered source, kept apart from the DQ gate so the watermark
   means "newest source row seen" whatever the transform filters.
-- quarantine split: one write of the violating rows; their count is an
-  observed metric of that write (``observed_write``), not a second pass.
-  It is the first action over the persisted transform, so it also fills
-  the cache.
-- DQ gate: one observed scan (rows, per-column nulls, max ts).  Without
-  a quarantine split it is the first action, and the same job fills the
-  cache the sink then reads.
+- DQ gate: one observed scan (rows, per-column nulls, max ts).  It is
+  the first action, and the same job fills the cache the sink then reads.
+- quarantine split: the split and the DQ gate are ONE job, the write of
+  the violating rows (``quality.quarantine_split``).  The gate's metrics,
+  restricted to the clean rows, plus the quarantined count are observed
+  on the persisted frame below the write's filter, so the gate runs no
+  scan of its own; the write is the first action and fills the cache.
 - load: the sink write; every sink takes the DQ row count as
   ``row_count`` instead of counting again.  A parquet upsert also
   collects its touched partition values.  A write that raises fails the
@@ -66,7 +66,7 @@ from agentic_etl_poc_spark.operators.quality import (
     dq_verdict,
     gate_stats,
     observed_scan,
-    observed_write,
+    quarantine_split,
 )
 from agentic_etl_poc_spark.operators.transform import run_single_sql, run_steps
 from agentic_etl_poc_spark.operators.verify import verify_csv, verify_table
@@ -400,50 +400,32 @@ def run_from_plan(
     out = persisted = out.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         cks = plan.checks
-        # 2b) quarantine split (engine extension, plans/model.py): rows
-        # violating the nonnull checks are ROUTED to a parquet quarantine
-        # sink instead of failing the plan; the DQ gate below then judges
-        # only the clean rows (min_rows applies to what reaches the sink;
-        # an unset path keeps the reference's alert-and-abort gate).
-        n_quarantined = None
-        if cks.quarantine_path and cks.nonnull_cols:
-            from functools import reduce as _reduce
-
-            from pyspark.sql import functions as _F
-
-            from agentic_etl_poc_spark import plan_capture
-
-            missing = [c for c in cks.nonnull_cols if c not in out.columns]
-            if missing:
-                raise ValueError(
-                    f"quarantine nonnull column not found: {missing[0]}"
-                )
-            viol = _reduce(
-                lambda a, b: a | b,
-                [_F.col(c).isNull() for c in cks.nonnull_cols],
-            )
-            bad = out.filter(viol)
-            plan_capture.note("quarantine_sink", bad)
-            # the row count rides the write as an observed metric: one
-            # action, not a write then a count
-            n_quarantined = observed_write(
-                bad,
-                lambda d: d.write.mode("overwrite").parquet(
-                    cks.quarantine_path
-                ),
-            )["rows"]
-            out = out.filter(~viol)
-
-        # 3) DQ gate (first action)
-        dq = dq_check(
-            out,
+        # 3) DQ gate, the first action.  With a quarantine split (engine
+        # extension, plans/model.py) rows violating the nonnull checks are
+        # ROUTED to a parquet quarantine sink instead of failing the plan,
+        # and the gate judges only the clean rows (min_rows applies to
+        # what reaches the sink; an unset path keeps the reference's
+        # alert-and-abort gate).  The gate's numbers then ride the
+        # quarantine write instead of a scan of their own.
+        gate = dict(
             min_rows=cks.min_rows,
             nonnull_cols=cks.nonnull_cols,
             freshness_minutes=cks.freshness_minutes,
             timestamp_col=cks.timestamp_col,
         )
-        if n_quarantined is not None:
-            dq["quarantined"] = n_quarantined
+        if cks.quarantine_path and cks.nonnull_cols:
+            out, stats = quarantine_split(
+                out,
+                cks.nonnull_cols,
+                lambda bad: bad.write.mode("overwrite").parquet(
+                    cks.quarantine_path
+                ),
+                cks.timestamp_col if cks.freshness_minutes else "",
+            )
+            dq = dq_verdict(stats, **gate)
+            dq["quarantined"] = stats["quarantined"]
+        else:
+            dq = dq_check(out, **gate)
         if not dq["status"]:
             return _failed(plan, send_alert, "dq", dq)
 

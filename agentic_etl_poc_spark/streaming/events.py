@@ -383,12 +383,15 @@ def noop_state(events: DataFrame) -> DataFrame:
 def _note_executed_stream_plan(q) -> None:
     """Hand the drained query's LAST EXECUTED micro-batch plan to the
     plan-capture hook (tests/test_plan_lint.py lints eager streaming
-    entries through this).  No-op outside a capture block; a drain that
-    never executed a batch (empty source) has no plan to note."""
+    entries through this).  Outside a capture block the plan is never
+    rendered; a drain that never executed a batch (empty source) has no
+    plan to note."""
     from agentic_etl_poc_spark import plan_capture
 
     try:
-        plan_capture.note_text("stream_exec", q._jsq.explainInternal(False))
+        plan_capture.note_text(
+            "stream_exec", lambda: q._jsq.explainInternal(False)
+        )
     except Exception:
         pass  # no executed batch — nothing to lint
 

@@ -716,28 +716,6 @@ checks:
     assert dict(back.dtypes)["hour"].startswith("timestamp")
 
 
-def test_observed_write_single_action(spark, tmp_path):
-    """Observation-API DQ: metrics accumulate during the ONE write action
-    (no separate count job), and match a direct recount."""
-    from agentic_etl_poc_spark.operators.quality import observed_write
-
-    from pyspark.sql import functions as F
-
-    out = str(tmp_path / "observed_out")
-    df = spark.range(1000).withColumn(
-        "v", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id"))
-    )
-    stats = observed_write(
-        df,
-        lambda d: d.write.mode("overwrite").parquet(out),
-        nonnull_cols=["v"],
-    )
-    assert stats["rows"] == 1000
-    assert stats["null_counts"] == {"v": 100}
-    assert stats["nonnull_ok"] is False
-    assert spark.read.parquet(out).count() == 1000
-
-
 def test_jdbc_derby_live_roundtrip(spark, tmp_path):
     """The one §2 path previously proven only by construction/golden
     tests, run LIVE: load_to_postgres append+replace through Spark's JDBC

@@ -2,11 +2,11 @@
 
 ``run_from_plan`` runs one action per stage: the DQ gate counts the
 persisted frame, the parquet sinks reuse that count instead of recounting,
-the quarantine split takes its count during its own write, and a drained
-stream is gated by one scan of its artifact.  Every gate (DQ, verify, the
-stream tail) is one job: its aggregates are observed on a ``noop`` scan
-(``quality.observed_scan``), and on the persisted frame that same job
-fills the cache.  These tests pin
+the quarantine split and the DQ gate read their numbers off one write of
+the violating rows, and a drained stream is gated by one scan of its
+artifact.  Every other gate (DQ, verify, the stream tail) is one job: its
+aggregates are observed on a ``noop`` scan (``quality.observed_scan``),
+and on the persisted frame that same job fills the cache.  These tests pin
 
 - the exact number of Spark jobs each plan shape runs, counted through a
   test-owned job group (an added action shows up as a diff here);
@@ -22,6 +22,7 @@ first run pays its source's schema inference whatever ran before it.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -103,10 +104,11 @@ source:
 
 
 def test_jobs_quarantine_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1; the quarantine write, which builds the
-    persisted frame and observes its row count, 1; DQ scan 1; sink write
-    1; verify re-read with the written schema: scan 1.  The second run
-    reads its source from the memo: one job fewer."""
+    """Source schema inference 1; the quarantine write 1, which builds
+    the persisted frame and observes the quarantined count and the DQ
+    gate's clean-row metrics, so the gate runs no scan of its own; sink
+    write 1; verify re-read with the written schema: scan 1.  The second
+    run reads its source from the memo: one job fewer."""
     bad, clean = tmp_path / "bad", tmp_path / "clean"
     plan = _orders(sf_smoke) + f"""
 transform:
@@ -122,7 +124,7 @@ load:
   to: parquet
   file_path: {clean}
 """
-    for group, want in (("plan-quarantine", 5), ("plan-quarantine-warm", 4)):
+    for group, want in (("plan-quarantine", 4), ("plan-quarantine-warm", 3)):
         (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
         assert res["status"] == "ok" and not alerts, res
         n_bad = spark.read.parquet(str(bad)).count()
@@ -389,3 +391,90 @@ def test_stream_tail_gates_match_separate_gates(
     assert res["status"] == "ok" and not alerts, res
     _same_verdict(res["dq"], want_dq)
     assert res["verify"] == want_ver
+
+
+# -- the quarantine split's folded DQ gate -----------------------------------
+def _two_step_quarantine_dq(spark, src, bad, nonnull_cols, **dq_kw) -> dict:
+    """The split's previous shape: an observed write of the violating
+    rows, then ``dq_check`` scanning the clean rows."""
+    from functools import reduce
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    out = spark.read.parquet(src)
+    viol = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in nonnull_cols])
+    obs = Observation()
+    out.filter(viol).observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(bad)
+    dq = dq_check(out.filter(~viol), nonnull_cols=nonnull_cols, **dq_kw)
+    dq["quarantined"] = int(obs.get["rows"])
+    return dq
+
+
+def _quarantine_rows(case):
+    """(id, s, ts) rows; a null ``s`` is a violation.  The newest
+    timestamp sits on a violating row wherever one exists, so a gate that
+    read it would see a different lag."""
+    now = dt.datetime.now(dt.timezone.utc).replace(microsecond=0)
+    ago = lambda minutes: now - dt.timedelta(minutes=minutes)  # noqa: E731
+    if case == "no_bad_rows":
+        return [(1, "a", ago(5)), (2, "b", None), (3, "c", ago(90))]
+    if case == "every_row_bad":
+        return [(1, None, ago(5)), (2, None, ago(50))]
+    if case == "freshness_fails":
+        return [(1, "a", ago(600)), (2, None, now), (3, "c", None)]
+    return [(1, "a", ago(30)), (2, None, now), (3, "c", ago(90)), (4, None, None)]
+
+
+@pytest.mark.parametrize(
+    "case, freshness, status",
+    [
+        ("some_bad_rows", None, "ok"),
+        ("no_bad_rows", None, "ok"),
+        ("every_row_bad", None, "failed"),
+        ("freshness_passes", 60, "ok"),
+        ("freshness_fails", 60, "failed"),
+    ],
+)
+def test_quarantine_fold_matches_two_step_gate(
+    spark, tmp_path, case, freshness, status
+):
+    """The DQ gate's numbers taken from the quarantine write give the same
+    ``dq`` dict as the old observed write plus a ``dq_check`` scan of the
+    clean rows, ``lag_minutes`` (clock-relative) aside."""
+    src, bad, clean = (str(tmp_path / n) for n in ("src", "bad", "clean"))
+    spark.createDataFrame(
+        _quarantine_rows(case), "id long, s string, ts timestamp"
+    ).write.parquet(src)
+    fresh = (
+        f"  freshness_minutes: {freshness}\n  timestamp_col: ts\n"
+        if freshness else ""
+    )
+    res, alerts = _run(spark, f"""
+source:
+  kind: parquet
+  parquet:
+    path: {src}
+transform:
+  sql: SELECT id, s, ts FROM input_df
+checks:
+  min_rows: 1
+  nonnull_cols: [id, s]
+  quarantine_path: {bad}
+{fresh}load:
+  to: parquet
+  file_path: {clean}
+alerts:
+  on_fail: "slack://#x"
+""")
+    want = _two_step_quarantine_dq(
+        spark, src, str(tmp_path / "bad_ref"), ["id", "s"], min_rows=1,
+        freshness_minutes=freshness, timestamp_col="ts" if freshness else "",
+    )
+    assert res["status"] == status and len(alerts) == (status == "failed"), res
+    _same_verdict(res["dq"], want)
+    assert _rows(spark.read.parquet(bad)) == _rows(
+        spark.read.parquet(str(tmp_path / "bad_ref"))
+    )
