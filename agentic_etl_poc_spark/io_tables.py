@@ -3,9 +3,13 @@
 The driver's synthetic tables (TESTDATA.md) are the oracle-checked input
 surface.  Registration is cheap (schema-only read; scans stay lazy) and
 Catalyst prunes columns/pushes filters into the parquet scan, so registering
-all tables per query costs nothing at runtime.  ``read_parquet`` is the
-session's memo of parquet read handles behind ``table()``; the plan
-runtime's parquet sources use it too.
+all tables per query costs nothing at runtime.
+
+Session reuse has one rule, kept here: ``memo`` holds a value per
+(session, key) for as long as ``fingerprint`` of its source path stays
+the same.  ``read_parquet`` (behind ``table()`` and the plan runtime's
+parquet sources), ``queries/core.py::shared_frame`` and the graph memo
+in ``queries/graphq.py`` are its callers.
 """
 
 from __future__ import annotations
@@ -15,6 +19,7 @@ import os
 import re
 import weakref
 from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,8 +36,8 @@ EXTENSION_TABLES = ("events", "documents", "embeddings")
 ALL_TABLES = TPCH_TABLES + EXTENSION_TABLES
 
 
-#: Session-scoped LAZY DataFrame handles per (variant, path), each with
-#: the stat fingerprint it was read at.  Every ``spark.read.parquet``
+#: Session-scoped LAZY read handles per (variant, path), each with the
+#: fingerprint it was read at (``memo``).  Every ``spark.read.parquet``
 #: call rebuilds a file index and infers the schema from the footers,
 #: which launches one Spark job even for a single file (~0.1 s for one
 #: small file on a local[4] session).  The battery makes hundreds of
@@ -41,11 +46,7 @@ ALL_TABLES = TPCH_TABLES + EXTENSION_TABLES
 #: (scheduled ticks, the p-family entries); both go through
 #: ``read_parquet``.  The memo stores the UNEXECUTED plan handle only —
 #: no persist(), no data, nothing survives the process — so every
-#: invocation still computes from the parquet inputs; the fingerprint
-#: (per matched path: mtime_ns, size, file count) makes a rewritten or
-#: added file read fresh, and a path with no local fingerprint is never
-#: memoized.  Weak-keyed by the session object (the core.py _SHARED
-#: discipline: ids can be reused after GC).
+#: invocation still computes from the parquet inputs.
 _HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -73,10 +74,12 @@ def _stat_sig(path: str) -> tuple[int, int, int]:
 _is_glob = re.compile(r"[*?[{]").search
 
 
-def _fingerprint(path: str) -> tuple | None:
+def fingerprint(path: str) -> tuple | None:
     """``(realpath, *_stat_sig)`` of ``path``, or of every match when it
     is a glob; None when there is nothing local to stat (a missing path,
-    a glob without matches, a URI)."""
+    a glob without matches, a URI).  The one invalidation key of every
+    session memo (``memo``) and of every staged copy
+    (``queries/core.py::staged``)."""
     try:
         if not _is_glob(path):
             return ((os.path.realpath(path), *_stat_sig(path)),)
@@ -84,6 +87,44 @@ def _fingerprint(path: str) -> tuple | None:
         return tuple((os.path.realpath(p), *_stat_sig(p)) for p in paths) or None
     except OSError:
         return None
+
+
+def memo(
+    store: weakref.WeakKeyDictionary,
+    spark: SparkSession,
+    key: Hashable,
+    path: str,
+    build: Callable[[], Any],
+) -> Any:
+    """``build()``, memoized as ``store[spark][key] = (fingerprint(path),
+    value)`` while the fingerprint of ``path`` stays the same.
+
+    A changed fingerprint replaces the entry, so a store holds one value
+    per key however often its files change; a path with no fingerprint
+    is never memoized.  A replaced DataFrame is uncached, together with
+    every cached plan built on it, BEFORE ``build()`` runs: Spark's
+    CacheManager matches plans by their source paths, so a stale
+    persisted frame would otherwise serve the rebuilt plan (and any
+    fresh read of the same files) its old rows.  ``store`` is weak-keyed
+    by the session object, not ``id(spark)``: a stopped session's entries
+    die with it instead of passing to a new session that reuses the id.
+    """
+    fp = fingerprint(path)
+    if fp is None:
+        return build()
+    per = store.setdefault(spark, {})
+    hit = per.get(key)
+    if hit is not None:
+        if hit[0] == fp:
+            return hit[1]
+        del per[key]
+        if isinstance(hit[1], DataFrame):
+            spark._jsparkSession.sharedState().cacheManager().uncacheQuery(
+                hit[1]._jdf, True
+            )
+    value = build()
+    per[key] = (fp, value)
+    return value
 
 
 def read_parquet(
@@ -94,21 +135,13 @@ def read_parquet(
 ) -> DataFrame:
     """``build(path)`` (default ``spark.read.parquet(path)``), memoized
     per session on ``(variant, path)`` while the fingerprint of ``path``
-    stays the same; a new fingerprint replaces the entry, so the memo
-    holds one handle per source however often its files change.  A
-    caller whose ``build`` post-processes the read names it with its own
-    ``variant``, so callers that read the same files differently never
-    share a handle."""
-    fp = _fingerprint(path)
-    if fp is None:
-        return build(path) if build is not None else spark.read.parquet(path)
-    per = _HANDLES.setdefault(spark, {})
-    hit = per.get((variant, path))
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = build(path) if build is not None else spark.read.parquet(path)
-    per[(variant, path)] = (fp, df)
-    return df
+    stays the same (``memo``).  A caller whose ``build`` post-processes
+    the read names it with its own ``variant``, so callers that read the
+    same files differently never share a handle."""
+    return memo(
+        _HANDLES, spark, (variant, path), path,
+        lambda: build(path) if build is not None else spark.read.parquet(path),
+    )
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:

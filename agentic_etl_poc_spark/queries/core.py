@@ -29,15 +29,21 @@ approximately):
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import json
 import math
 import os
 import re
+import shutil
+import tempfile
 import weakref
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from agentic_etl_poc_spark.io_tables import fingerprint, memo
 
 
 @dataclass(frozen=True)
@@ -53,32 +59,23 @@ QUERIES: dict[str, QuerySpec] = {}
 #: (dedup shingles/pairs/labels, similarity signatures/norms).  In a real
 #: pipeline these are computed ONCE and fanned out; the battery does the
 #: same when several queries run in one session (a correctness sweep,
-#: bench).  Keyed by (session, data dir, name); persist() keeps the
-#: logical plan visible to Catalyst while caching the data.  CAVEAT
-#: (learned on d03): do NOT feed a cached frame into a plan whose
-#: efficiency depends on ReuseExchange across self-join consumers — AQE
-#: wraps the cache in TableCacheQueryStages and stops unifying the
-#: identical exchanges above it.
-#:
-#: Weak-keyed by the SESSION OBJECT, not id(spark): after a session is
-#: stopped and garbage-collected, a new session can reuse the same id()
-#: and would inherit a persisted frame bound to the dead JVM state; a
-#: WeakKeyDictionary entry dies with the session instead.
-_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+#: bench).  ``{session: {(data dir, name): (fingerprint, frame)}}``
+#: through ``io_tables.memo``, keyed on the whole data dir's fingerprint:
+#: a rewritten fixture rebuilds the frame (the stale one is uncached
+#: first).  persist() keeps the logical plan visible to Catalyst while
+#: caching the data.  CAVEAT (learned on d03): do NOT feed a cached frame
+#: into a plan whose efficiency depends on ReuseExchange across self-join
+#: consumers — AQE wraps the cache in TableCacheQueryStages and stops
+#: unifying the identical exchanges above it.
+_SHARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def shared_frame(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    per = _SHARED.get(spark)
-    if per is None:
-        per = {}
-        _SHARED[spark] = per
-    df = per.get((sf_dir, name))
-    if df is None:
-        df = build().persist()
-        per[(sf_dir, name)] = df
-    return df
+    """``build()``, persisted once per (session, ``sf_dir``, ``name``)
+    while the files under ``sf_dir`` stay the same."""
+    return memo(_SHARED, spark, (sf_dir, name), sf_dir, lambda: build().persist())
 
 
 def clear_shared_frames(spark: SparkSession | None = None) -> None:
@@ -87,54 +84,58 @@ def clear_shared_frames(spark: SparkSession | None = None) -> None:
     the end of a battery run."""
     sessions = [spark] if spark is not None else list(_SHARED.keys())
     for s in sessions:
-        for df in (_SHARED.pop(s, None) or {}).values():
+        for _, df in (_SHARED.pop(s, None) or {}).values():
             try:
                 df.unpersist()
             except Exception:
                 pass  # session already stopped; nothing to free
 
 
-def fixture_fingerprint(sf_dir: str, tables: list[str]) -> str:
-    """mtime/size fingerprint of source fixture tables — written into a
-    staging marker so regenerated fixtures RESTAGE instead of silently
-    reusing stale /tmp copies (which would surface later as a confusing
-    oracle hash mismatch).  A parquet table may be a single file or a
-    directory of part files."""
-    parts = []
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(p):
-            files = [
-                os.path.join(root, f)
-                for root, _, fs in os.walk(p)
-                for f in fs
-                if not f.startswith(("_", "."))
-            ]
-            size = sum(os.path.getsize(f) for f in files)
-            # nanosecond mtimes: a fixture regenerated within the same
-            # second (same byte size) must still read as changed
-            mtime = max((os.stat(f).st_mtime_ns for f in files), default=0)
-        elif os.path.exists(p):
-            size = os.path.getsize(p)
-            mtime = os.stat(p).st_mtime_ns
-        else:
-            size = mtime = 0
-        parts.append(f"{t}:{mtime}:{size}")
-    return ";".join(parts)
+def staged(
+    sf_dir: str, tag: str, tables: Iterable[str], build: Callable[[str], object]
+) -> str:
+    """The directory holding ``build(root)``'s output for the current
+    content of ``tables`` (fixture table names under ``sf_dir``).
 
-
-def marker_current(marker: str, fingerprint: str) -> bool:
-    """True iff the staging marker exists and records ``fingerprint``."""
-    if not os.path.exists(marker):
-        return False
-    with open(marker) as f:
-        return f.read() == fingerprint
-
-
-def write_marker(marker: str, fingerprint: str) -> None:
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    with open(marker, "w") as f:
-        f.write(fingerprint)
+    The root is content-addressed:
+    ``<tmp>/spark_graft_<tag>/<flattened realpath(sf_dir)>/<digest>``,
+    the digest taken over the tables' ``io_tables.fingerprint``s.  So a
+    relative and an absolute ``sf_dir`` share one copy, a regenerated
+    fixture gets a fresh root (a stale copy is never read, and a booted
+    embedded database is never deleted under its JVM), and the copy
+    outlives the process.  ``build`` runs, into an emptied root, only
+    while the root has no done-marker, under an exclusive ``flock`` on
+    the tag directory (kernel-released on a crash), so two processes
+    never build the same copy at once; the marker is written last,
+    through tmp + rename.  Give a stager a new ``tag`` when its output
+    layout changes.
+    """
+    fps = repr(
+        tuple(fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
+    )
+    base = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}")
+    root = os.path.join(
+        base,
+        os.path.realpath(sf_dir).strip(os.sep).replace(os.sep, "_"),
+        hashlib.sha1(fps.encode()).hexdigest()[:16],
+    )
+    done = os.path.join(root, "_STAGED")
+    if os.path.exists(done):
+        return root
+    os.makedirs(base, exist_ok=True)
+    lock = os.open(os.path.join(base, "_stage.lock"), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if not os.path.exists(done):  # not staged while we waited
+            shutil.rmtree(root, ignore_errors=True)  # a dead build's debris
+            os.makedirs(root)
+            build(root)
+            with open(done + ".tmp", "w") as f:
+                f.write(fps)
+            os.rename(done + ".tmp", done)
+    finally:
+        os.close(lock)
+    return root
 
 
 def register(name: str, oracle: str | None, description: str = ""):

@@ -24,7 +24,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from agentic_etl_poc_spark.io_tables import table
+from agentic_etl_poc_spark.io_tables import memo, table
 from agentic_etl_poc_spark.queries.core import register
 
 PR_SCALE = 1_000_000  # initial integer rank per node
@@ -42,25 +42,24 @@ class _Graph(NamedTuple):
     n_nodes: int
 
 
-#: Session-scoped checkpointed graph intermediates, keyed (sf_dir,) — g01
-#: and g03 walk the SAME customer<->supplier interaction graph, and the
-#: edge derivation (orders⋈lineitem + 58.7M-pair distinct at sf10) is
-#: ~90% of each entry's isolated sf10 wall (38 of 42 s measured).  One
-#: battery session derives the edge list and its degree frame once; the
-#: memo holds the LogicalRDD-backed frames (localCheckpoint blocks die
-#: with the session — same lifetime discipline as
-#: queries/core.py::shared_frame, weak-keyed so a stopped session's entry
-#: dies with it).  This is the compute-once-fan-out shape the dedup
-#: family already uses (minhash stats, twin parts).
-_EDGES: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Graph]]" = (
+#: Session-scoped checkpointed graph intermediates — g01 and g03 walk
+#: the SAME customer<->supplier interaction graph, and the edge
+#: derivation (orders⋈lineitem + 58.7M-pair distinct at sf10) is ~90% of
+#: each entry's isolated sf10 wall (38 of 42 s measured).  One battery
+#: session derives the edge list and its degree frame once:
+#: ``{session: {sf_dir: (fingerprint, graph)}}`` through ``io_tables.memo``,
+#: keyed on the data dir's fingerprint, so a rewritten fixture rebuilds
+#: the graph.  The memo holds the LogicalRDD-backed frames
+#: (localCheckpoint blocks die with the session).  This is the
+#: compute-once-fan-out shape the dedup family already uses (minhash
+#: stats, twin parts).
+_EDGES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def _graph(spark: SparkSession, sf_dir: str) -> _Graph:
-    per = _EDGES.setdefault(spark, {})
-    g = per.get(sf_dir)
-    if g is None:
+    def build() -> _Graph:
         o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         li = table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_suppkey"
@@ -97,8 +96,9 @@ def _graph(spark: SparkSession, sf_dir: str) -> _Graph:
             .observe(nodes, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        g = per[sf_dir] = _Graph(e, deg, int(nodes.get["n"]))
-    return g
+        return _Graph(e, deg, int(nodes.get["n"]))
+
+    return memo(_EDGES, spark, sf_dir, sf_dir, build)
 
 
 def shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.queries.core import register
+from agentic_etl_poc_spark.queries.core import register, staged
 
 #: Word n-gram order for decontamination.  Real pipelines use 8-13-gram
 #: exact overlap (the n-gram ORDER is a knob, not a design change); the
@@ -383,28 +383,12 @@ ORDER BY store_id, week
 )
 def p02_plan_csv_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.runtime import run_from_plan
     from agentic_etl_poc_spark.sinks.csv_sink import write_csv
     from agentic_etl_poc_spark.sources.csv_source import read_csv
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p02",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    out_path = os.path.join(root, "weekly_sales.csv")
-    marker = os.path.join(root, "_STAGED")
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
-    fp = fixture_fingerprint(sf_dir, ["orders", "customer", "nation"])
-    if not marker_current(marker, fp):
-        os.makedirs(root, exist_ok=True)
+    def stage(root: str) -> None:
         orders = table(spark, sf_dir, "orders")
         write_csv(
             orders.select(
@@ -430,8 +414,9 @@ def p02_plan_csv_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             os.path.join(root, "features.csv"),
         )
-        write_marker(marker, fp)
 
+    root = staged(sf_dir, "p02", ["orders", "customer", "nation"], stage)
+    out_path = os.path.join(root, "weekly_sales.csv")
     plan = f"""
 limits:
   max_input_bytes: 1073741824
@@ -627,41 +612,22 @@ ORDER BY event_type
 )
 def p04_plan_json_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.runtime import run_from_plan
     from agentic_etl_poc_spark.sources.csv_source import read_csv
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p04",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
+    def stage(root: str) -> None:
+        events = table(spark, sf_dir, "events").filter(F.col("user_id") % 20 == 0)
+        events.select(
+            "event_id",
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
+            F.struct("user_id", "event_type").alias("who"),
+            "value",
+        ).write.json(os.path.join(root, "events_topic.ndjson"))
+
+    root = staged(sf_dir, "p04", ["events"], stage)
     topic = os.path.join(root, "events_topic.ndjson")
     out_path = os.path.join(root, "type_totals.csv")
-    marker = os.path.join(root, "_STAGED")
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    if not marker_current(marker, fp):
-        os.makedirs(root, exist_ok=True)
-        events = table(spark, sf_dir, "events").filter(F.col("user_id") % 20 == 0)
-        (
-            events.select(
-                "event_id",
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-                F.struct("user_id", "event_type").alias("who"),
-                "value",
-            )
-            .write.mode("overwrite")
-            .json(topic)
-        )
-        write_marker(marker, fp)
-
     plan = f"""
 limits:
   max_input_bytes: 1073741824
@@ -739,39 +705,24 @@ ORDER BY region, nation
 def p05_plan_multi_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.runtime import run_from_plan
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p05",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    nation_feed = os.path.join(root, "nation_feed")  # deliberately suffix-free
-    region_api = os.path.join(root, "regions_api.json")
-    out_path = os.path.join(root, "acctbal_by_nation")
-    marker = os.path.join(root, "_STAGED")
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
-    fp = fixture_fingerprint(sf_dir, ["nation", "region"])
-    if not marker_current(marker, fp):
-        os.makedirs(root, exist_ok=True)
-        table(spark, sf_dir, "nation").write.mode("overwrite").json(nation_feed)
+    def stage(root: str) -> None:
+        table(spark, sf_dir, "nation").write.json(os.path.join(root, "nation_feed"))
         regions = [
             {"r_regionkey": r["r_regionkey"], "r_name": r["r_name"]}
             for r in table(spark, sf_dir, "region").collect()
         ]
         # selector convention: in "data['regions']", `data` IS the document
         # root (reference binds the loaded doc to a variable named `data`)
-        with open(region_api, "w") as f:
+        with open(os.path.join(root, "regions_api.json"), "w") as f:
             _json.dump({"regions": regions}, f)
-        write_marker(marker, fp)
 
+    root = staged(sf_dir, "p05", ["nation", "region"], stage)
+    nation_feed = os.path.join(root, "nation_feed")  # deliberately suffix-free
+    region_api = os.path.join(root, "regions_api.json")
+    out_path = os.path.join(root, "acctbal_by_nation")
     plan = f"""
 limits:
   max_input_bytes: 1073741824
@@ -1055,24 +1006,10 @@ ORDER BY r_name
 )
 def p08_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agentic_etl_poc_spark import plan_capture
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p08",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    xml_dir = os.path.join(root, "nation_xml")
-    marker = os.path.join(root, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["nation"])
-    if not marker_current(marker, fp):
+    def stage(root: str) -> None:
         n = table(spark, sf_dir, "nation")
         plan_capture.note("xml_stage", n)
         (
@@ -1080,14 +1017,14 @@ def p08_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.format("xml")
             .option("rootTag", "nations")
             .option("rowTag", "nation")
-            .mode("overwrite")
-            .save(xml_dir)
+            .save(os.path.join(root, "nation_xml"))
         )
-        write_marker(marker, fp)
+
+    root = staged(sf_dir, "p08", ["nation"], stage)
     nx = (
         spark.read.format("xml")
         .option("rowTag", "nation")
-        .load(xml_dir)
+        .load(os.path.join(root, "nation_xml"))
         .select(
             F.col("n_nationkey").cast("bigint").alias("n_nationkey"),
             F.col("n_name").cast("string").alias("n_name"),
@@ -1204,22 +1141,18 @@ def derby_url(db_dir: str, create: bool = False) -> str:
 
 def _derby_orders_db(spark: SparkSession, sf_dir: str) -> str:
     """Stage the orders table INTO an embedded Derby database (one-time
-    per fixture fingerprint) so the p10 plan can exercise the REAL JDBC
-    source/sink path: ``fetch_db`` pulls from a live database and
-    ``load_to_postgres`` writes back to one, instead of the golden-test
-    SQLite stand-ins.  Strings are pre-coded to integers before the JDBC
-    write: Spark's DerbyDialect maps StringType to CLOB, which Derby
-    refuses to GROUP BY or index — numeric/date columns keep the staged
-    table fully queryable upstream."""
-    import hashlib
+    per fixture fingerprint, ``staged``) so the p10 plan can exercise the
+    REAL JDBC source/sink path: ``fetch_db`` pulls from a live database
+    and ``load_to_postgres`` writes back to one, instead of the
+    golden-test SQLite stand-ins.  Strings are pre-coded to integers
+    before the JDBC write: Spark's DerbyDialect maps StringType to CLOB,
+    which Derby refuses to GROUP BY or index — numeric/date columns keep
+    the staged table fully queryable upstream.  Embedded Derby lets one
+    JVM boot a database, which ``staged``'s cross-process lock
+    guarantees."""
     import os
     import tempfile
 
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
     from agentic_etl_poc_spark.sinks.jdbc_sink import load_to_postgres
 
     # Derby writes its boot log to derby.log in user.dir unless told
@@ -1232,54 +1165,23 @@ def _derby_orders_db(spark: SparkSession, sf_dir: str) -> str:
     except Exception:
         pass  # already booted in this JVM — the log location is set
 
-    # Key the staging root on the REALPATH so the same fixture reached
-    # via a relative and an absolute sf_dir shares one staged database
-    # (a path-string key re-staged sf10's 6M rows — ~16 min — when a
-    # probe used /root/repo/testdata_sf10 beside bench's testdata_sf10).
-    # Content identity is still the fingerprint's job: a changed fixture
-    # under the same path gets a fresh db_dir below.
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p10",
-        os.path.realpath(sf_dir).strip(os.sep).replace(os.sep, "_"),
-    )
-    fp = fixture_fingerprint(sf_dir, ["orders"])
-    # a CHANGED fixture gets a fresh database directory (Derby databases
-    # are not safely rmtree-able while booted in this JVM); the stale one
-    # dies with /tmp
-    db_dir = os.path.join(root, "db_" + hashlib.md5(fp.encode()).hexdigest()[:8])
-    marker = os.path.join(root, f"_STAGED_{os.path.basename(db_dir)}")
-    if not marker_current(marker, fp):
-        # Cross-PROCESS stage lock: embedded Derby allows only one JVM to
-        # boot a database, so two processes that both see a stale marker
-        # (parallel pytest + battery) must not create it concurrently —
-        # unlike the parquet stagers, whose overwrite writes tolerate the
-        # race.  flock: kernel-released on crash, nothing stale to break.
-        import fcntl
+    def stage(root: str) -> None:
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_custkey",
+            F.col("o_totalprice").alias("total"),
+            "o_orderdate",
+            # '1-URGENT' -> 1 ... '5-LOW' -> 5: integer priority code
+            F.substring("o_orderpriority", 1, 1).cast("int").alias("prio_code"),
+        )
+        # a handful of writer connections is plenty for a dim-scale
+        # stage; embedded Derby serializes page writes anyway
+        load_to_postgres(
+            orders.coalesce(4), derby_url(os.path.join(root, "db"), create=True),
+            "orders_src", mode="replace",
+        )
 
-        os.makedirs(root, exist_ok=True)
-        lock_fd = os.open(os.path.join(root, "_stage.lock"), os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(lock_fd, fcntl.LOCK_EX)
-            if not marker_current(marker, fp):  # may have staged while we waited
-                orders = table(spark, sf_dir, "orders").select(
-                    "o_orderkey",
-                    "o_custkey",
-                    F.col("o_totalprice").alias("total"),
-                    "o_orderdate",
-                    # '1-URGENT' -> 1 ... '5-LOW' -> 5: integer priority code
-                    F.substring("o_orderpriority", 1, 1).cast("int").alias("prio_code"),
-                )
-                # a handful of writer connections is plenty for a dim-scale
-                # stage; embedded Derby serializes page writes anyway
-                load_to_postgres(
-                    orders.coalesce(4), derby_url(db_dir, create=True),
-                    "orders_src", mode="replace",
-                )
-                write_marker(marker, fp)
-        finally:
-            os.close(lock_fd)
-    return db_dir
+    return os.path.join(staged(sf_dir, "p10", ["orders"], stage), "db")
 
 
 @register(
@@ -1623,17 +1525,6 @@ _DUCK_P13_PRED_S1 = (
 _DUCK_P13_PRED_S2 = "o_orderdate >= TIMESTAMP '1996-01-01'"
 
 
-#: Per-process memo of the p13/p14 table build, keyed on the fixture
-#: realpath: the two entries share ONE two-plan lifecycle per sweep
-#: instead of each re-running the bootstrap+upsert over orders (at sf10
-#: that second build is a redundant multi-scan of millions of rows).
-#: Each entry stays independently runnable — whichever runs first
-#: builds.  Fixtures never change mid-process (the staging markers
-#: guard cross-process staleness), so content invalidation is not
-#: needed here.
-_P13_BUILDS: dict[str, tuple[str, dict, dict]] = {}
-
-
 def _p13_build_table(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, dict, dict]:
@@ -1641,97 +1532,44 @@ def _p13_build_table(
     upsert) into a fresh table directory; returns (table path,
     signature snapshot BEFORE the upsert, snapshot AFTER) — the
     snapshots come from sinks.parquet_sink.partition_signatures, the
-    same primitive a downstream incremental consumer diffs.  Builds are
-    memoized per process, serialized across processes with a file lock,
-    and keyed on a fingerprint marker: a process that misses its memo
-    REUSES a finished build (marker current) instead of rebuilding under
-    a concurrent reader's lazy collect — the same marker discipline as
-    _derby_orders_db's staging."""
-    import fcntl
+    same primitive a downstream incremental consumer diffs.  The build
+    is ``staged``: p13, p14 and p15 share ONE lifecycle per fixture (at
+    sf10 a second build is a redundant multi-scan of millions of rows),
+    and a process that finds a finished build reuses it instead of
+    rebuilding a table a concurrent reader may be lazily collecting
+    from.  Only the build itself can observe the snapshots, so they are
+    stored in the staged root beside the table."""
+    import json
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.runtime import run_from_plan
     from agentic_etl_poc_spark.sinks.parquet_sink import partition_signatures
-
-    key = os.path.realpath(sf_dir)
-    memo = _P13_BUILDS.get(key)
-    if memo is not None and os.path.isdir(memo[0]):
-        return memo
 
     # session parity with the rest of the battery (semantic confs +
     # data-sized shuffle partitions come from the table() path)
     table(spark, sf_dir, "orders")
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p13",
-        key.strip(os.sep).replace(os.sep, "_"),
-    )
-    tbl = os.path.join(root, "monthly_orders")
-    os.makedirs(root, exist_ok=True)
-    lock_fd = os.open(os.path.join(root, "_build.lock"), os.O_CREAT | os.O_RDWR)
-    try:
-        fcntl.flock(lock_fd, fcntl.LOCK_EX)
-        return _p13_build_locked(
-            spark, sf_dir, key, tbl, run_from_plan, partition_signatures
-        )
-    finally:
-        os.close(lock_fd)
-
-
-def _p13_build_locked(
-    spark, sf_dir, key, tbl, run_from_plan, partition_signatures
-) -> tuple[str, dict, dict]:
-    import json
-    import os
-    import shutil
-
-    from agentic_etl_poc_spark.queries.core import fixture_fingerprint
-
-    # fingerprint-keyed built marker (written atomically under the same
-    # lock): a second process that misses its in-process memo REUSES the
-    # finished build instead of rmtree+rebuilding a table a concurrent
-    # reader may be lazily collecting from — and the redundant multi-scan
-    # rebuild per process disappears at sf10 (ADVICE r12).  The marker
-    # stores the signature snapshots, which only the builder can observe.
-    marker = tbl + ".built.json"
-    fp = fixture_fingerprint(sf_dir, ["orders"]) + ";p13v3"
-    if os.path.isdir(tbl) and os.path.exists(marker):
-        with open(marker) as f:
-            m = json.load(f)
-        if m.get("fingerprint") == fp:
-            def _untuple(sig):
-                return {k: (tuple(v[0]), v[1]) for k, v in sig.items()}
-
-            built = (tbl, _untuple(m["sig_before"]), _untuple(m["sig_after"]))
-            _P13_BUILDS[key] = built
-            return built
-
-    # deterministic re-runs: fresh table, plan 1 is a pure bootstrap
-    shutil.rmtree(tbl, ignore_errors=True)
-    if os.path.exists(marker):
-        os.remove(marker)
-
-    orders_path = os.path.join(sf_dir, "orders.parquet")
-    # both plans run mode=upsert with the row-level change feed on: plan
-    # 1 hits the bootstrap path (fresh dir) and records batch 0 as pure
-    # inserts, plan 2's merge records batch 1 — p15 consumes the feed
-    plans = [
-        ("s1", _P13_PRED_S1, "upsert"),
-        ("s2", _P13_PRED_S2, "upsert"),
-    ]
-    sig_before: dict = {}
-    for src, pred, mode in plans:
-        if mode == "upsert":
-            sig_before = partition_signatures(tbl, "yr")
-        sql_block = "\n".join(
-            "    " + ln
-            for ln in _P13_TRANSFORM.format(src=src, pred=pred)
-            .strip()
-            .splitlines()
-        )
-        plan = f"""
+    def stage(root: str) -> None:
+        tbl = os.path.join(root, "monthly_orders")
+        orders_path = os.path.join(sf_dir, "orders.parquet")
+        # both plans run mode=upsert with the row-level change feed on: plan
+        # 1 hits the bootstrap path (fresh dir) and records batch 0 as pure
+        # inserts, plan 2's merge records batch 1 — p15 consumes the feed
+        plans = [
+            ("s1", _P13_PRED_S1, "upsert"),
+            ("s2", _P13_PRED_S2, "upsert"),
+        ]
+        sig_before: dict = {}
+        for src, pred, mode in plans:
+            if mode == "upsert":
+                sig_before = partition_signatures(tbl, "yr")
+            sql_block = "\n".join(
+                "    " + ln
+                for ln in _P13_TRANSFORM.format(src=src, pred=pred)
+                .strip()
+                .splitlines()
+            )
+            plan = f"""
 source:
   kind: parquet
   parquet:
@@ -1754,22 +1592,18 @@ verify:
 alerts:
   on_fail: "slack://#data-alerts"
 """
-        result = run_from_plan(spark, plan)
-        if result.get("status") != "ok":
-            raise RuntimeError(f"p13 upsert plan ({src}) failed: {result}")
-    built = (tbl, sig_before, partition_signatures(tbl, "yr"))
-    with open(marker + ".tmp", "w") as f:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "sig_before": built[1],
-                "sig_after": built[2],
-            },
-            f,
+            result = run_from_plan(spark, plan)
+            if result.get("status") != "ok":
+                raise RuntimeError(f"p13 upsert plan ({src}) failed: {result}")
+        with open(os.path.join(root, "signatures.json"), "w") as f:
+            json.dump([sig_before, partition_signatures(tbl, "yr")], f)
+
+    root = staged(sf_dir, "p13", ["orders"], stage)
+    with open(os.path.join(root, "signatures.json")) as f:
+        before, after = (
+            {k: (tuple(v[0]), v[1]) for k, v in sig.items()} for sig in json.load(f)
         )
-    os.rename(marker + ".tmp", marker)
-    _P13_BUILDS[key] = built
-    return built
+    return os.path.join(root, "monthly_orders"), before, after
 
 
 @register(
@@ -2051,46 +1885,18 @@ WHERE {pred}
 GROUP BY YEAR(o_orderdate) * 100 + MONTH(o_orderdate), YEAR(o_orderdate)
 """
 
-_P16_BUILDS: dict[str, str] = {}
-
-
 def _p16_build_table(spark: SparkSession, sf_dir: str) -> str:
     """p16's evolving-table build: bootstrap (ym, yr, n_orders), then
-    upsert a batch that adds total_s — memoized + marker-keyed with the
-    same discipline as _p13_build_table."""
-    import fcntl
-    import json
+    upsert a batch that adds total_s — ``staged`` like
+    _p13_build_table."""
     import os
-    import shutil
-    import tempfile
 
-    from agentic_etl_poc_spark.queries.core import fixture_fingerprint
     from agentic_etl_poc_spark.runtime import run_from_plan
 
-    key = os.path.realpath(sf_dir)
-    memo = _P16_BUILDS.get(key)
-    if memo is not None and os.path.isdir(memo):
-        return memo
-
     table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_p16",
-        key.strip(os.sep).replace(os.sep, "_"),
-    )
-    tbl = os.path.join(root, "evolving_orders")
-    os.makedirs(root, exist_ok=True)
-    marker = tbl + ".built.json"
-    fp = fixture_fingerprint(sf_dir, ["orders"]) + ";p16v1"
-    lock_fd = os.open(os.path.join(root, "_build.lock"), os.O_CREAT | os.O_RDWR)
-    try:
-        fcntl.flock(lock_fd, fcntl.LOCK_EX)
-        if os.path.isdir(tbl) and os.path.exists(marker):
-            with open(marker) as f:
-                if json.load(f).get("fingerprint") == fp:
-                    _P16_BUILDS[key] = tbl
-                    return tbl
-        shutil.rmtree(tbl, ignore_errors=True)
+
+    def stage(root: str) -> None:
+        tbl = os.path.join(root, "evolving_orders")
         orders_path = os.path.join(sf_dir, "orders.parquet")
         for tmpl, pred in (
             (_P16_TRANSFORM_S1, _P13_PRED_S1),
@@ -2123,13 +1929,8 @@ verify:
             result = run_from_plan(spark, plan)
             if result.get("status") != "ok":
                 raise RuntimeError(f"p16 evolution plan failed: {result}")
-        with open(marker + ".tmp", "w") as f:
-            json.dump({"fingerprint": fp}, f)
-        os.rename(marker + ".tmp", marker)
-        _P16_BUILDS[key] = tbl
-        return tbl
-    finally:
-        os.close(lock_fd)
+
+    return os.path.join(staged(sf_dir, "p16", ["orders"], stage), "evolving_orders")
 
 
 @register(

@@ -20,8 +20,8 @@ import contextlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.queries.core import register
+from agentic_etl_poc_spark.io_tables import read_parquet, table
+from agentic_etl_poc_spark.queries.core import register, staged
 
 
 def _dec(col: str | Column, scale: int = 2, precision: int = 28) -> Column:
@@ -1952,44 +1952,24 @@ ORDER BY month
     "predicate applied statically.",
 )
 def q60_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_q60",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    fact_dir = os.path.join(root, "orders_by_year")
-    dim_dir = os.path.join(root, "year_dim")
-    marker = os.path.join(root, "_STAGED")
-    # marker records the source fixture's mtime/size: a regenerated
-    # orders.parquet RESTAGES instead of silently reusing stale copies
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
-    fp = fixture_fingerprint(sf_dir, ["orders"])
-    if not marker_current(marker, fp):
-        os.makedirs(root, exist_ok=True)
+    def stage(root: str) -> None:
         o = table(spark, sf_dir, "orders")
-        o.withColumn("o_year", F.year("o_orderdate")).write.mode(
-            "overwrite"
-        ).partitionBy("o_year").parquet(fact_dir)
+        o.withColumn("o_year", F.year("o_orderdate")).write.partitionBy(
+            "o_year"
+        ).parquet(f"{root}/orders_by_year")
         (
             o.select(F.year("o_orderdate").alias("year"))
             .distinct()
             .withColumn("year_tag", F.concat(F.lit("Y"), F.col("year")))
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dim_dir)
+            .write.parquet(f"{root}/year_dim")
         )
-        write_marker(marker, fp)
 
-    fact = spark.read.parquet(fact_dir)
-    dim = spark.read.parquet(dim_dir).filter(F.col("year_tag") == "Y1997")
+    root = staged(sf_dir, "q60", ["orders"], stage)
+    fact = read_parquet(spark, f"{root}/orders_by_year")
+    dim = read_parquet(spark, f"{root}/year_dim").filter(
+        F.col("year_tag") == "Y1997"
+    )
     return (
         fact.join(F.broadcast(dim), fact["o_year"] == dim["year"])
         .groupBy(F.month("o_orderdate").cast("bigint").alias("month"))
@@ -2252,32 +2232,33 @@ ORDER BY nation
     "parquet — bucketing must be semantically invisible.",
 )
 def q65_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
     import shutil
-    import tempfile
 
-    from agentic_etl_poc_spark.queries.core import fixture_fingerprint
+    def stage(root: str) -> None:
+        tag = os.path.basename(root)
+        for src, key, sub in (
+            ("orders", "o_custkey", "orders"),
+            ("customer", "c_custkey", "cust"),
+        ):
+            if not spark.catalog.tableExists(f"q65_{sub}_{tag}"):
+                # files written under another session lack this
+                # session's catalog metadata
+                shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
+                (
+                    table(spark, sf_dir, src)
+                    .write.bucketBy(8, key)
+                    .sortBy(key)
+                    .option("path", os.path.join(root, sub))
+                    .saveAsTable(f"q65_{sub}_{tag}")
+                )
 
-    fp = fixture_fingerprint(sf_dir, ["orders", "customer"])
-    tag = hashlib.md5((sf_dir + "|" + fp).encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), "spark_graft_q65", tag)
+    root = staged(sf_dir, "q65", ["orders", "customer"], stage)
+    # the bucket spec lives in the session catalog: a session that did
+    # not build the copy registers it again
+    stage(root)
+    tag = os.path.basename(root)
     t_orders, t_cust = f"q65_orders_{tag}", f"q65_cust_{tag}"
-    for tbl, src, key, sub in (
-        (t_orders, "orders", "o_custkey", "o"),
-        (t_cust, "customer", "c_custkey", "c"),
-    ):
-        if not spark.catalog.tableExists(tbl):
-            # a dead session may have left files without catalog metadata
-            shutil.rmtree(os.path.join(base, sub), ignore_errors=True)
-            (
-                table(spark, sf_dir, src)
-                .write.bucketBy(8, key)
-                .sortBy(key)
-                .option("path", os.path.join(base, sub))
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
     j = spark.table(t_orders).hint("merge").join(
         spark.table(t_cust), F.col("o_custkey") == F.col("c_custkey")
     )
@@ -2322,30 +2303,12 @@ ORDER BY l_returnflag
     "the plain join: the filter must be semantically invisible.",
 )
 def q66_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_q66",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    out = os.path.join(root, "result")
-    marker = os.path.join(root, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["lineitem", "orders"])
-    if not marker_current(marker, fp):
+    def stage(root: str) -> None:
         with bloom_filter_scope(spark):
-            bloom_join_frame(spark, sf_dir).write.mode("overwrite").parquet(
-                out
-            )
-        write_marker(marker, fp)
-    return spark.read.parquet(out).orderBy("l_returnflag")
+            bloom_join_frame(spark, sf_dir).write.parquet(f"{root}/result")
+
+    root = staged(sf_dir, "q66", ["lineitem", "orders"], stage)
+    return read_parquet(spark, f"{root}/result").orderBy("l_returnflag")
 
 
 @contextlib.contextmanager
@@ -3241,28 +3204,12 @@ ORDER BY key_band
     "semantically invisible.",
 )
 def q80_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_q80",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    out = os.path.join(root, "result")
-    marker = os.path.join(root, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["lineitem"])
-    if not marker_current(marker, fp):
+    def stage(root: str) -> None:
         with aqe_skew_scope(spark):
-            skew_join_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-        write_marker(marker, fp)
-    return spark.read.parquet(out).orderBy("key_band")
+            skew_join_frame(spark, sf_dir).write.parquet(f"{root}/result")
+
+    root = staged(sf_dir, "q80", ["lineitem"], stage)
+    return read_parquet(spark, f"{root}/result").orderBy("key_band")
 
 
 @contextlib.contextmanager
@@ -3402,27 +3349,14 @@ ORDER BY event_type
 )
 def q82_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.operators.scale import compact_parquet
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_q82",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    data = os.path.join(root, "events_fragmented")
-    marker = os.path.join(root, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    if not marker_current(marker, fp):
+    def stage(root: str) -> None:
+        data = os.path.join(root, "events_fragmented")
         ev = table(spark, sf_dir, "events")
         # 64 tiny files: the fragmentation a per-tick appender leaves
-        ev.repartition(64).write.mode("overwrite").parquet(data)
+        ev.repartition(64).write.parquet(data)
         stats = compact_parquet(
             spark, data, target_file_bytes=1 * 1024 * 1024,
             sort_by=["event_type"],
@@ -3435,8 +3369,9 @@ def q82_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         if leftovers:
             raise RuntimeError(f"compaction left debris: {leftovers}")
-        write_marker(marker, fp)
-    compacted = spark.read.parquet(data)
+
+    root = staged(sf_dir, "q82", ["events"], stage)
+    compacted = read_parquet(spark, f"{root}/events_fragmented")
     return (
         compacted.groupBy("event_type")
         .agg(

@@ -12,8 +12,9 @@ pipeline must produce byte-identical results to the batch backfill.
 
 Determinism notes (what makes a *streaming* query oracle-checkable):
 
-- The events table is staged once per (process, sf_dir) as a SINGLE
-  NDJSON file, so the AvailableNow drain sees exactly one input batch —
+- The events table is staged once per fixture fingerprint
+  (``queries/core.py::staged``) as a SINGLE NDJSON file, so the
+  AvailableNow drain sees exactly one input batch —
   batch-boundary effects (which rows share a micro-batch) cannot vary
   between runs.  At 100 TB the same operators run continuously and the
   parity contract is checked against windows the watermark has closed.
@@ -38,13 +39,12 @@ from __future__ import annotations
 import contextlib
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.queries.core import register
+from agentic_etl_poc_spark.queries.core import register, staged
 from agentic_etl_poc_spark.streaming.events import (
     _note_executed_stream_plan,
     dedup_stream,
@@ -62,10 +62,6 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 #: Memory-sink names must be unique per run within a session (the sink
 #: registers a temp view); a monotone suffix keeps reruns independent.
 _MEM_SEQ = itertools.count()
-
-#: sf_dir -> staged single-file NDJSON directory (process-lifetime cache;
-#: the staged copy is deterministic, so cross-run reuse is safe).
-_STAGED: dict[str, str] = {}
 
 #: State-store partition count for the one-shot AvailableNow drains.  The
 #: stateful partition count is locked in at stream START from
@@ -140,45 +136,22 @@ def events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 
     ensure_semantics(spark)
     tune_for_data(spark, sf_dir)
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
 
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    cached = _STAGED.get(sf_dir)
-    if cached is not None and marker_current(
-        os.path.join(cached, "_STAGED_FP"), fp
-    ):
-        return cached
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_streamq",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    marker = os.path.join(out, "_STAGED_FP")
-    if not marker_current(marker, fp):
+    def stage(root: str) -> None:
         ev = table(spark, sf_dir, "events").persist()
         try:
-            # a stale fingerprint restages the WHOLE family (base + typed
-            # topics): a regenerated events fixture must never pair fresh
-            # base files with stale typed ones
+            # one root holds the WHOLE family (base + typed topics): a
+            # regenerated events fixture never pairs fresh base files
+            # with stale typed ones
             for event_type in ("view", "click"):
-                typed_out = out + "_" + event_type
-                (
-                    ev.filter(F.col("event_type") == event_type)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .json(typed_out)
+                ev.filter(F.col("event_type") == event_type).coalesce(1).write.json(
+                    os.path.join(root, f"events_{event_type}")
                 )
-            ev.coalesce(1).write.mode("overwrite").json(out)
-            # marker LAST: it stamps the whole family staged
-            write_marker(marker, fp)
+            ev.coalesce(1).write.json(os.path.join(root, "events"))
         finally:
             ev.unpersist()
-    _STAGED[sf_dir] = out
-    return out
+
+    return os.path.join(staged(sf_dir, "streamq", ["events"], stage), "events")
 
 
 def state_harness_floor(spark: SparkSession, sf_dir: str) -> float:
@@ -386,25 +359,14 @@ def _doubled_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     dedup non-vacuous."""
     import shutil
 
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
-
     src = events_stream_dir(spark, sf_dir)
-    out = src + "_x2"
-    marker = os.path.join(out, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    if not marker_current(marker, fp):
-        os.makedirs(out, exist_ok=True)
-        part = next(
-            f for f in sorted(os.listdir(src)) if f.endswith(".json")
-        )
-        shutil.copy(os.path.join(src, part), os.path.join(out, "a.json"))
-        shutil.copy(os.path.join(src, part), os.path.join(out, "b.json"))
-        write_marker(marker, fp)
-    return out
+
+    def stage(root: str) -> None:
+        part = next(f for f in sorted(os.listdir(src)) if f.endswith(".json"))
+        shutil.copy(os.path.join(src, part), os.path.join(root, "a.json"))
+        shutil.copy(os.path.join(src, part), os.path.join(root, "b.json"))
+
+    return staged(sf_dir, "streamq_x2", ["events"], stage)
 
 
 @register(
@@ -461,21 +423,12 @@ def _eviction_stream_dir(spark: SparkSession, sf_dir: str) -> str:
        rows — so the oracle (base-only counts over closed windows)
        proves the suppression.
     """
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
+    import shutil
+    import time
 
     src = events_stream_dir(spark, sf_dir)
-    out = src + "_evict"
-    marker = os.path.join(out, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    if not marker_current(marker, fp):
-        import shutil
-        import time
 
-        os.makedirs(out, exist_ok=True)
+    def stage(out: str) -> None:
         part = next(f for f in sorted(os.listdir(src)) if f.endswith(".json"))
         shutil.copy(os.path.join(src, part), os.path.join(out, "a_base.json"))
         ev = table(spark, sf_dir, "events")
@@ -498,17 +451,15 @@ def _eviction_stream_dir(spark: SparkSession, sf_dir: str) -> str:
             ("c_late.json", ev.select(*rekey(10_000_000))),
         ):
             tmp = os.path.join(out, "_tmp_" + fname)
-            frame.coalesce(1).write.mode("overwrite").json(tmp)
+            frame.coalesce(1).write.json(tmp)
             p = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".json"))
             os.replace(os.path.join(tmp, p), os.path.join(out, fname))
             shutil.rmtree(tmp)
         now = time.time()
-        for i, fname in enumerate(
-            ("a_base.json", "b_settle.json", "c_late.json")
-        ):
+        for i, fname in enumerate(("a_base.json", "b_settle.json", "c_late.json")):
             os.utime(os.path.join(out, fname), (now - 180 + 60 * i,) * 2)
-        write_marker(marker, fp)
-    return out
+
+    return staged(sf_dir, "streamq_evict", ["events"], stage)
 
 
 @register(
@@ -569,23 +520,7 @@ def _typed_stream_dir(spark: SparkSession, sf_dir: str, event_type: str) -> str:
     the two-topics shape a stream-stream join reads in production.  The
     actual write happens inside :func:`events_stream_dir`'s one staging
     pass (persisted events frame, all topics in one go)."""
-    # ALWAYS go through events_stream_dir first: it owns the family
-    # fingerprint marker, so a regenerated events fixture restages the
-    # typed topics before this cache could hand out a stale one (cheap
-    # when current — marker read only).
-    base = events_stream_dir(spark, sf_dir)
-    out = base + "_" + event_type
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        # base was staged by an EARLIER process whose typed topics were
-        # since removed: restage just this topic
-        (
-            table(spark, sf_dir, "events")
-            .filter(F.col("event_type") == event_type)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(out)
-        )
-    return out
+    return f"{events_stream_dir(spark, sf_dir)}_{event_type}"
 
 
 @register(
@@ -936,40 +871,23 @@ def _tribatch_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     micro-batches — the multi-batch input that makes an upsert sink's
     merge path non-vacuous (a single batch would never overwrite)."""
     import shutil
+    import time
 
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
+    events_stream_dir(spark, sf_dir)  # tunes the session for the drain
 
-    src = events_stream_dir(spark, sf_dir)
-    out = src + "_x3"
-    marker = os.path.join(out, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    if not marker_current(marker, fp):
-        import time
-
-        os.makedirs(out, exist_ok=True)
+    def stage(out: str) -> None:
         ev = table(spark, sf_dir, "events")
         for i in range(3):
             tmp = os.path.join(out, f"_tmp_{i}")
-            (
-                ev.filter(F.col("event_id") % 3 == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .json(tmp)
-            )
-            part = next(
-                f for f in sorted(os.listdir(tmp)) if f.endswith(".json")
-            )
+            ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.json(tmp)
+            part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".json"))
             os.replace(os.path.join(tmp, part), os.path.join(out, f"{i}.json"))
             shutil.rmtree(tmp)
         now = time.time()
         for i in range(3):
             os.utime(os.path.join(out, f"{i}.json"), (now - 180 + 60 * i,) * 2)
-        write_marker(marker, fp)
-    return out
+
+    return staged(sf_dir, "streamq_x3", ["events"], stage)
 
 
 @register(
@@ -1289,33 +1207,18 @@ def _twophase_stream_files(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     a fresh per-run topic because the topic MUTATES mid-entry."""
     import shutil
 
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
+    events_stream_dir(spark, sf_dir)  # tunes the session for the drain
 
-    src = events_stream_dir(spark, sf_dir)
-    out = src + "_2ph"
-    marker = os.path.join(out, "_STAGED")
-    fp = fixture_fingerprint(sf_dir, ["events"])
-    if not marker_current(marker, fp):
-        os.makedirs(out, exist_ok=True)
+    def stage(out: str) -> None:
         ev = table(spark, sf_dir, "events")
         for i, fname in enumerate(("phase1.json", "phase2.json")):
             tmp = os.path.join(out, f"_tmp_{i}")
-            (
-                ev.filter(F.col("event_id") % 2 == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .json(tmp)
-            )
-            part = next(
-                f for f in sorted(os.listdir(tmp)) if f.endswith(".json")
-            )
+            ev.filter(F.col("event_id") % 2 == i).coalesce(1).write.json(tmp)
+            part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".json"))
             shutil.move(os.path.join(tmp, part), os.path.join(out, fname))
             shutil.rmtree(tmp)
-        write_marker(marker, fp)
+
+    out = staged(sf_dir, "streamq_2ph", ["events"], stage)
     return os.path.join(out, "phase1.json"), os.path.join(out, "phase2.json")
 
 

@@ -414,32 +414,34 @@ def test_ledger_append_merge_is_lock_guarded(spark, tmp_path):
     assert manifest["rows"] == 6 and len(manifest["files"]) == 2
 
 
-def test_stage_marker_fingerprint_tracks_fixture(tmp_path):
+def test_stage_marker_fingerprint_tracks_fixture(tmp_path, monkeypatch):
     """Round-6 advisory: staged /tmp fixtures restage when the source
-    fixture changes (mtime/size fingerprint in the marker)."""
+    fixture changes (mtime/size fingerprint in the staged root)."""
     import os
+    import tempfile
     import time
 
-    from agentic_etl_poc_spark.queries.core import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-    )
+    from agentic_etl_poc_spark.queries.core import staged
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     src = tmp_path / "orders.parquet"
     src.write_bytes(b"x" * 100)
-    marker = str(tmp_path / "staged" / "_STAGED")
-    fp = fixture_fingerprint(str(tmp_path), ["orders"])
-    assert not marker_current(marker, fp)
-    write_marker(marker, fp)
-    assert marker_current(marker, fp)
+    builds = []
+
+    def build(root):
+        builds.append(root)
+
+    root = staged(str(tmp_path), "advice_test", ["orders"], build)
+    assert builds == [root]
+    assert staged(str(tmp_path), "advice_test", ["orders"], build) == root
+    assert builds == [root]  # current: no rebuild
     # regenerate the fixture (newer mtime, different size) -> stale
     time.sleep(0.01)
     src.write_bytes(b"y" * 120)
     os.utime(src, (time.time() + 2, time.time() + 2))
-    fp2 = fixture_fingerprint(str(tmp_path), ["orders"])
-    assert fp2 != fp
-    assert not marker_current(marker, fp2)
+    root2 = staged(str(tmp_path), "advice_test", ["orders"], build)
+    assert root2 != root
+    assert builds == [root, root2]
 
 
 def test_quarantine_routes_bad_rows_and_keeps_gate_default(spark, tmp_path):
@@ -570,35 +572,42 @@ def test_dhash_rejects_sub_grid_images():
     assert len(_dhash_hex(ok)) == 16
 
 
-def test_fixture_fingerprint_subsecond_regeneration(tmp_path):
+def test_fixture_fingerprint_subsecond_regeneration(tmp_path, monkeypatch):
     """Two same-size regenerations within one second must fingerprint
-    differently (nanosecond mtimes, not whole seconds)."""
+    differently (nanosecond mtimes, not whole seconds), and so stage
+    into different roots."""
     import os
+    import tempfile
 
-    from agentic_etl_poc_spark.queries.core import fixture_fingerprint
+    from agentic_etl_poc_spark.queries.core import staged
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     p = tmp_path / "events.parquet"
     p.write_bytes(b"x" * 64)
     os.utime(p, ns=(1_700_000_000_000_000_000, 1_700_000_000_000_000_000))
-    fp1 = fixture_fingerprint(str(tmp_path), ["events"])
+    root1 = staged(str(tmp_path), "advice_test", ["events"], lambda root: None)
     # same byte size, same wall second, different nanosecond
     os.utime(p, ns=(1_700_000_000_000_000_001, 1_700_000_000_000_000_001))
-    fp2 = fixture_fingerprint(str(tmp_path), ["events"])
-    assert fp1 != fp2
+    root2 = staged(str(tmp_path), "advice_test", ["events"], lambda root: None)
+    assert root1 != root2
 
 
 def test_tribatch_marker_records_fixture_fingerprint(spark, sf_smoke):
-    """The three-file topic's staging marker must carry the events
-    fixture fingerprint (a bare 'ok' marker silently reuses stale
-    staging after fixture regeneration)."""
+    """The three-file topic's staging is keyed on the events fixture
+    fingerprint (a bare 'ok' marker silently reuses stale staging after
+    fixture regeneration)."""
     import os
 
-    from agentic_etl_poc_spark.queries.core import fixture_fingerprint
+    from agentic_etl_poc_spark.io_tables import fingerprint
+    from agentic_etl_poc_spark.queries.core import staged
     from agentic_etl_poc_spark.queries.streamq import _tribatch_stream_dir
 
     out = _tribatch_stream_dir(spark, sf_smoke)
+    assert out == staged(sf_smoke, "streamq_x3", ["events"], None)
     with open(os.path.join(out, "_STAGED")) as f:
-        assert f.read() == fixture_fingerprint(sf_smoke, ["events"])
+        assert f.read() == repr(
+            (fingerprint(os.path.join(sf_smoke, "events.parquet")),)
+        )
 
 
 def test_quote_ident_is_dialect_aware():

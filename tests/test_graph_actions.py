@@ -62,8 +62,8 @@ def test_graph_memo_runs_no_job_when_warm(spark, sf_smoke):
     )
     assert jobs == 0
     assert e2 is e and deg2 is deg
-    # the memo's key shape: {session: {tables dir: graph}}
-    assert graphq._EDGES[spark][sf_smoke].edges is e
+    # the memo's key shape: {session: {tables dir: (fingerprint, graph)}}
+    assert graphq._EDGES[spark][sf_smoke][1].edges is e
 
 
 def test_observed_node_count(spark, sf_smoke):

@@ -92,9 +92,9 @@ def test_path_without_fingerprint_is_never_memoized(spark, tmp_path):
     f = tmp_path / "a.parquet"
     _write(f, [1, 2])
     uri = f"file://{f}"
-    assert io_tables._fingerprint(uri) is None
-    assert io_tables._fingerprint(str(tmp_path / "missing")) is None
-    assert io_tables._fingerprint(f"{tmp_path}/nothing*") is None
+    assert io_tables.fingerprint(uri) is None
+    assert io_tables.fingerprint(str(tmp_path / "missing")) is None
+    assert io_tables.fingerprint(f"{tmp_path}/nothing*") is None
     a = io_tables.read_parquet(spark, uri)
     b = io_tables.read_parquet(spark, uri)
     assert a is not b
