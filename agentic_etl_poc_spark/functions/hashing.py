@@ -20,6 +20,7 @@ side by side so the two definitions can't drift apart.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -62,6 +63,31 @@ def cosine(a: Column, b: Column) -> Column:
     """cos(a,b) = dot/sqrt(norm_a*norm_b) — the exact formula the DuckDB
     snippet uses, so results are bit-identical."""
     return dot_fold(a, b) / F.sqrt(dot_fold(a, a) * dot_fold(b, b))
+
+
+# ---------- NumPy twins (vectorised executor kernels) ----------
+
+def np_dot_fold(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """The (len(x), len(y)) matrix of ``dot_fold`` over the rows of two
+    (rows, dim) arrays: products accumulate one dimension at a time, left
+    to right from 0.0, so every entry is bit-identical to ``dot_fold``."""
+    acc = np.zeros((len(x), len(y)), dtype=np.float64)
+    for j in range(x.shape[1]):
+        acc += np.multiply.outer(x[:, j], y[:, j])
+    return acc
+
+
+def np_sq_norms(x: np.ndarray) -> np.ndarray:
+    """``dot_fold(v, v)`` for every row v of x, in the same fold order."""
+    nsq = np.zeros(len(x), dtype=np.float64)
+    for j in range(x.shape[1]):
+        nsq += x[:, j] * x[:, j]
+    return nsq
+
+
+def np_cosines(x: np.ndarray, y: np.ndarray, nx: np.ndarray, ny: np.ndarray) -> np.ndarray:
+    """``cosine`` over the rows of x and y given their ``np_sq_norms``."""
+    return np_dot_fold(x, y) / np.sqrt(np.multiply.outer(nx, ny))
 
 
 # ---------- DuckDB snippet builders (oracle side) ----------

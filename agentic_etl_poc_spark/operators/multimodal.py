@@ -1,23 +1,24 @@
 """Multimodal-column operators: opaque binary payloads + typed metadata.
 
 Design (BASELINE.json extension surface): media travels as a ``binary``
-column plus a metadata struct; all per-item compute is Arrow-batched
-``mapInPandas`` so decode kernels see contiguous byte buffers and the
-Spark plumbing (schema, partitioning, batch shape) is real and tested.
+column plus a metadata struct; every operator is one per-item kernel
+run through ``transform.map_rows`` (Arrow-batched ``mapInPandas``), so
+the kernels see whole byte buffers and the Spark plumbing (schema,
+partitioning, batch shape, row explosion) is shared, real and tested.
 
-Decode kernels come in two flavors:
-
-- ``fake=True``: a deterministic pseudo-decode (features derived from a
-  crc of the payload) — runnable on ANY bytes, used to exercise the
-  pipeline end-to-end without media files.
-- ``fake=False`` (real): pure-Python/numpy parsers for the open
-  uncompressed formats — RIFF/WAV PCM audio, PNM (P5 grayscale / P6
-  RGB) images, and concatenated-PPM frame streams for video — so
-  decode, resize, and frame-sample are genuinely computed from pixel /
-  sample data, with zero native media dependencies.  Compressed formats
-  (JPEG/PNG/MP3/MP4) raise ``ValueError`` naming the format: decoding
-  them needs PIL/ffmpeg, deliberately out of scope in this environment
-  (swapping a kernel changes one function).
+The kernels are pure-Python/numpy parsers for the open uncompressed
+formats — RIFF/WAV PCM audio, PNM (P5 grayscale / P6 RGB) images, and
+concatenated-PPM frame streams for video — so decode, resize, crop,
+frame-sample, shot detection, dHash and VAD are genuinely computed from
+pixel / sample data, with zero native media dependencies.  Compressed
+formats (JPEG/PNG/MP3/MP4) raise ``ValueError`` naming the format:
+decoding them needs PIL/ffmpeg, deliberately out of scope in this
+environment (a registered codec is the fallback, see ``register_codec``).
+``fake=True`` on ``image_features``, ``audio_features``,
+``frame_sample``, ``image_resize``, ``image_center_crop`` and
+``audio_resample`` swaps in a deterministic pseudo-kernel derived from
+a crc/md5 of the payload — runnable on ANY bytes, used to exercise the
+pipeline end-to-end without media files.
 
 Partitioning note for 100 TB of media: repartition by a size-balanced key
 (e.g. ``hash(item_id)``) BEFORE mapInPandas so one huge video can't skew a
@@ -33,15 +34,16 @@ import zlib
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from agentic_etl_poc_spark.operators.transform import map_rows
+
 #: Pluggable-codec registry.  A deployment that has PIL/ffmpeg available
 #: registers decoders for the compressed formats the built-in pure-numpy
-#: parsers reject; the Arrow-batched ``mapInPandas`` kernels are
-#: untouched — each kernel consults the registry and the registered
-#: codec runs only as the FALLBACK when the verified built-in raises
+#: parsers reject; the per-item kernels are untouched — each kernel
+#: consults the registry and the registered codec runs only as the
+#: FALLBACK when the verified built-in raises
 #: ValueError (so PNM/WAV keep the tested path, JPEG/MP3 route to the
 #: plugin).  Contracts (same signatures as the built-ins they back up):
 #:
@@ -90,7 +92,7 @@ def _with_codec(kind: str, builtin: Callable) -> Callable:
     miss them.  Consequence: register BEFORE building the DataFrame;
     codecs registered after construction are ignored by that plan.  The
     registered fn must be picklable (module-level fn or closure, same
-    rule as any mapInPandas body)."""
+    rule as any map_rows kernel)."""
     ext = _CODECS.get(kind)
     if ext is None:
         return builtin
@@ -102,6 +104,11 @@ def _with_codec(kind: str, builtin: Callable) -> Callable:
             return ext(payload, *args)
 
     return decode
+
+
+#: The (item_id, payload) frame every kernel reads and the synthesizers
+#: in queries/ emit.
+PAYLOAD_SCHEMA = "item_id bigint, payload binary"
 
 IMAGE_FEATURES_SCHEMA = (
     "item_id bigint, payload_bytes bigint, width int, height int, "
@@ -165,22 +172,42 @@ def _pnm_header(payload: bytes) -> tuple[bytes, int, int, int, int]:
     return magic, width, height, maxval, pos
 
 
-def _decode_image_real(payload: bytes) -> tuple[int, int, int, float]:
-    """Real PNM decode: parse the header, read the raster, compute mean
-    luma (Rec.601 weights for RGB) normalized to [0, 1]."""
+def _pnm_raster(payload: bytes) -> tuple[bytes, int, np.ndarray]:
+    """Decode a PNM (P5/P6) image: returns (magic, maxval, raster) with
+    the raster shaped (height, width, channels) — uint8 samples below
+    maxval 256, big-endian uint16 from there.  A short raster raises
+    ValueError."""
     magic, width, height, maxval, off = _pnm_header(payload)
     channels = 3 if magic == b"P6" else 1
     dtype = np.uint8 if maxval < 256 else np.dtype(">u2")
     count = width * height * channels
-    raster = np.frombuffer(payload, dtype=dtype, count=count, offset=off)
-    if raster.size < count:
+    if len(payload) - off < count * np.dtype(dtype).itemsize:
         raise ValueError("truncated PNM raster")
-    if channels == 3:
-        rgb = raster.reshape(height, width, 3).astype(np.float64)
-        luma = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    else:
-        luma = raster.astype(np.float64)
-    return width, height, channels, float(luma.mean() / maxval)
+    raster = np.frombuffer(payload, dtype=dtype, count=count, offset=off)
+    return magic, maxval, raster.reshape(height, width, channels)
+
+
+def _pnm_bytes(magic: bytes, maxval: int, raster: np.ndarray) -> bytes:
+    """Encode a (height, width, channels) raster as a PNM payload."""
+    height, width = raster.shape[:2]
+    return b"%s\n%d %d\n%d\n" % (magic, width, height, maxval) + raster.tobytes()
+
+
+def _luma(raster: np.ndarray) -> np.ndarray:
+    """(height, width) float64 luma of a PNM raster: Rec.601 weights for
+    RGB, the sample itself for grayscale."""
+    px = raster.astype(np.float64)
+    if px.shape[2] == 3:
+        return 0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
+    return px[..., 0]
+
+
+def _decode_image_real(payload: bytes) -> tuple[int, int, int, float]:
+    """Real PNM decode: parse the header, read the raster, compute mean
+    luma (Rec.601 weights for RGB) normalized to [0, 1]."""
+    _, maxval, raster = _pnm_raster(payload)
+    height, width, channels = raster.shape
+    return width, height, channels, float(_luma(raster).mean() / maxval)
 
 
 def _decode_image_fake(payload: bytes) -> tuple[int, int, int, float]:
@@ -192,39 +219,29 @@ def _decode_image_fake(payload: bytes) -> tuple[int, int, int, float]:
     return width, height, 3, (crc % 10_000) / 10_000.0
 
 
-def image_features(
-    df: DataFrame, fake: bool = False, batch_limit: int = 1024
-) -> DataFrame:
-    """Extract image features per item via Arrow-batched mapInPandas.
-    ``df`` must have columns (item_id, payload)."""
+def _per_item(df: DataFrame, row: Callable, schema: str) -> DataFrame:
+    """Run a per-item kernel ``row(item_id, payload)`` over ``df``."""
+    return map_rows(df.select("item_id", "payload"), row, schema)
+
+
+def _features(df: DataFrame, decode: Callable, schema: str) -> DataFrame:
+    """One (item_id, payload_bytes, *decode(payload)) row per item."""
+
+    def row(item_id, payload):
+        yield (item_id, len(payload), *decode(payload))
+
+    return _per_item(df, row, schema)
+
+
+def image_features(df: DataFrame, fake: bool = False) -> DataFrame:
+    """Extract image features per item.  ``df`` must have columns
+    (item_id, payload)."""
     decode = (
         _decode_image_fake
         if fake
         else _with_codec("image_decode", _decode_image_real)
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                w, h, c, luma = decode(data)
-                out.append((int(item_id), len(data), w, h, c, luma))
-                if len(out) >= batch_limit:
-                    yield pd.DataFrame(
-                        out, columns=["item_id", "payload_bytes", "width",
-                                      "height", "n_channels", "mean_luma"]
-                    )
-                    out = []
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["item_id", "payload_bytes", "width",
-                                  "height", "n_channels", "mean_luma"]
-                )
-
-    return df.select("item_id", "payload").mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return _features(df, decode, IMAGE_FEATURES_SCHEMA)
 
 
 def _iter_ppm_frames(payload: bytes) -> Iterator[bytes]:
@@ -268,36 +285,20 @@ def frame_sample(df: DataFrame, n_frames: int = 4, fake: bool = False) -> DataFr
     payload slices, runnable on any bytes."""
     rasterize = _with_codec("frame_rasters", _ppm_frame_rasters)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    step = max(1, len(data) // n_frames)
-                    for idx in range(n_frames):
-                        chunk = data[idx * step : (idx + 1) * step]
-                        out.append(
-                            (int(item_id), idx, hashlib.md5(chunk).hexdigest())
-                        )
-                else:
-                    rasters = rasterize(data)
-                    k = len(rasters)
-                    take = min(n_frames, k)
-                    # even sampling: frame floor(j*k/take) for j in 0..take-1
-                    for j in range(take):
-                        out.append(
-                            (
-                                int(item_id),
-                                j,
-                                hashlib.md5(rasters[(j * k) // take]).hexdigest(),
-                            )
-                        )
-            yield pd.DataFrame(out, columns=["item_id", "frame_idx", "frame_md5"])
+    def row(item_id, payload):
+        if fake:
+            step = max(1, len(payload) // n_frames)
+            frames = [payload[i * step : (i + 1) * step] for i in range(n_frames)]
+        else:
+            rasters = rasterize(payload)
+            k = len(rasters)
+            take = min(n_frames, k)
+            # even sampling: frame floor(j*k/take) for j in 0..take-1
+            frames = [rasters[(j * k) // take] for j in range(take)]
+        for idx, frame in enumerate(frames):
+            yield item_id, idx, hashlib.md5(frame).hexdigest()
 
-    return df.select("item_id", "payload").mapInPandas(
-        run, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return _per_item(df, row, FRAME_SAMPLE_SCHEMA)
 
 
 RESIZE_SCHEMA = (
@@ -322,46 +323,26 @@ def image_resize(
     """
 
     def resize_real(data: bytes) -> bytes:
-        magic, w0, h0, maxval, off = _pnm_header(data)
-        channels = 3 if magic == b"P6" else 1
-        dtype = np.uint8 if maxval < 256 else np.dtype(">u2")
-        raster = np.frombuffer(
-            data, dtype=dtype, count=w0 * h0 * channels, offset=off
-        ).reshape(h0, w0, channels)
+        magic, maxval, raster = _pnm_raster(data)
+        h0, w0 = raster.shape[:2]
         # nearest-neighbor: src index = floor((dst + 0.5) * src/dst)
         ys = ((np.arange(height) + 0.5) * h0 / height).astype(np.int64)
         xs = ((np.arange(width) + 0.5) * w0 / width).astype(np.int64)
-        resized = raster[ys[:, None], xs[None, :], :]
-        header = b"%s\n%d %d\n%d\n" % (magic, width, height, maxval)
-        return header + resized.tobytes()
+        return _pnm_bytes(magic, maxval, raster[ys[:, None], xs[None, :], :])
 
     resizer = _with_codec("image_resize", lambda data, w, h: resize_real(data))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    w0, h0, _, _ = _decode_image_fake(data)
-                    ratio = (width * height) / float(w0 * h0)
-                    dst_len = max(16, int(len(data) * min(ratio, 1.0)))
-                    header = hashlib.md5(data).digest()
-                    resized = (header + data)[:dst_len]
-                else:
-                    resized = resizer(data, width, height)
-                out.append(
-                    (int(item_id), resized, width, height, len(data), len(resized))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "item_id", "payload", "width", "height",
-                    "src_bytes", "dst_bytes",
-                ],
-            )
+    def row(item_id, payload):
+        if fake:
+            w0, h0, _, _ = _decode_image_fake(payload)
+            ratio = (width * height) / float(w0 * h0)
+            dst_len = max(16, int(len(payload) * min(ratio, 1.0)))
+            resized = (hashlib.md5(payload).digest() + payload)[:dst_len]
+        else:
+            resized = resizer(payload, width, height)
+        yield item_id, resized, width, height, len(payload), len(resized)
 
-    return df.select("item_id", "payload").mapInPandas(run, schema=RESIZE_SCHEMA)
+    return _per_item(df, row, RESIZE_SCHEMA)
 
 
 def image_center_crop(
@@ -375,20 +356,17 @@ def image_center_crop(
     the other half of CLIP-style preprocessing (resize shorter side, then
     center-crop; ``image_resize`` is the first half).  A source smaller
     than the target on either axis is centered on a zero (black) canvas
-    when ``pad=True``, else rejected with ValueError (which also routes
-    to a registered codec, matching the other kernels' fallback shape).
+    when ``pad=True``, else rejected with ValueError.  There is no codec
+    kind for cropping: a non-PNM payload raises the decoder's
+    ValueError.
 
     Real kernel: PNM decode → numpy window slice (and zero-canvas paste
     for letterboxing) → P5/P6 re-encode.  Map-only at scale: no shuffle,
     Arrow batches both directions."""
 
     def crop_real(data: bytes) -> bytes:
-        magic, w0, h0, maxval, off = _pnm_header(data)
-        channels = 3 if magic == b"P6" else 1
-        dtype = np.uint8 if maxval < 256 else np.dtype(">u2")
-        raster = np.frombuffer(
-            data, dtype=dtype, count=w0 * h0 * channels, offset=off
-        ).reshape(h0, w0, channels)
+        magic, maxval, raster = _pnm_raster(data)
+        h0, w0, channels = raster.shape
         if (w0 < width or h0 < height) and not pad:
             raise ValueError(
                 f"source {w0}x{h0} smaller than crop "
@@ -397,51 +375,37 @@ def image_center_crop(
         cw, ch = min(width, w0), min(height, h0)
         sx, sy = (w0 - cw) // 2, (h0 - ch) // 2  # source window origin
         dx, dy = (width - cw) // 2, (height - ch) // 2  # letterbox origin
-        out = np.zeros((height, width, channels), dtype=dtype)
+        out = np.zeros((height, width, channels), dtype=raster.dtype)
         out[dy : dy + ch, dx : dx + cw, :] = raster[
             sy : sy + ch, sx : sx + cw, :
         ]
-        header = b"%s\n%d %d\n%d\n" % (magic, width, height, maxval)
-        return header + out.tobytes()
+        return _pnm_bytes(magic, maxval, out)
 
-    cropper = _with_codec(
-        "image_center_crop", lambda data, w, h: crop_real(data)
-    )
+    def row(item_id, payload):
+        if fake:
+            cropped = (hashlib.md5(payload).digest() + payload)[
+                : max(16, width * height)
+            ]
+        else:
+            cropped = crop_real(payload)
+        yield item_id, cropped, width, height, len(payload), len(cropped)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    header = hashlib.md5(data).digest()
-                    cropped = (header + data)[: max(16, width * height)]
-                else:
-                    cropped = cropper(data, width, height)
-                out.append(
-                    (
-                        int(item_id), cropped, width, height,
-                        len(data), len(cropped),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "item_id", "payload", "width", "height",
-                    "src_bytes", "dst_bytes",
-                ],
-            )
-
-    return df.select("item_id", "payload").mapInPandas(run, schema=RESIZE_SCHEMA)
+    return _per_item(df, row, RESIZE_SCHEMA)
 
 
 def _walk_riff(payload: bytes) -> tuple[tuple, bytes]:
-    """Strict RIFF/WAVE chunk walk shared by the decode and resample
+    """Strict RIFF/WAVE chunk walk shared by the decode, resample and VAD
     kernels: returns (fmt tuple, data bytes).  Every malformation raises
-    ValueError — a declared chunk size overrunning the buffer, a fmt
-    chunk under the 16-byte PCM minimum, or a missing fmt/data chunk —
-    instead of silently truncating via slicing or surfacing a raw
-    struct.error from deeper in."""
+    ValueError — a payload that is not RIFF/WAVE at all, a declared chunk
+    size overrunning the buffer, a fmt chunk under the 16-byte PCM
+    minimum, or a missing fmt/data chunk — instead of silently
+    truncating via slicing or surfacing a raw struct.error from deeper
+    in."""
+    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError(
+            "unsupported audio format (not RIFF/WAVE); the real kernels "
+            "support PCM WAV — MP3/AAC need ffmpeg, out of scope here"
+        )
     pos, n = 12, len(payload)
     fmt = None
     data = None
@@ -473,11 +437,6 @@ def _decode_audio_real(payload: bytes) -> tuple[float, int, float]:
     block, decode PCM samples, return (duration_sec, sample_rate, rms in
     [0, 1]).  Supports integer PCM (8/16/32-bit) and float32 (format 3);
     compressed codecs raise ValueError (they need ffmpeg)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError(
-            "unsupported audio format (not RIFF/WAVE); real decode supports "
-            "PCM WAV — MP3/AAC need ffmpeg, out of scope here"
-        )
     fmt, data = _walk_riff(payload)
     audio_format, channels, sample_rate, _, _, bits = fmt
     if len(data) % max(bits // 8, 1):
@@ -515,32 +474,14 @@ def _decode_audio_fake(payload: bytes) -> tuple[float, int, float]:
 
 
 def audio_features(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Extract audio features per item via Arrow-batched mapInPandas.
-    ``df`` must have columns (item_id, payload)."""
+    """Extract audio features per item.  ``df`` must have columns
+    (item_id, payload)."""
     decode = (
         _decode_audio_fake
         if fake
         else _with_codec("audio_decode", _decode_audio_real)
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                duration, rate, rms = decode(data)
-                out.append((int(item_id), len(data), duration, rate, rms))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "item_id", "payload_bytes", "duration_sec",
-                    "sample_rate", "rms",
-                ],
-            )
-
-    return df.select("item_id", "payload").mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return _features(df, decode, AUDIO_FEATURES_SCHEMA)
 
 
 RESAMPLE_SCHEMA = (
@@ -579,11 +520,6 @@ def audio_resample(df: DataFrame, out_rate: int, fake: bool = False) -> DataFram
     """
 
     def resample_real(data: bytes) -> tuple[bytes, int, int, int]:
-        if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-            raise ValueError(
-                "unsupported audio format (not RIFF/WAVE); real resample "
-                "supports mono PCM16 WAV — compressed codecs need ffmpeg"
-            )
         fmt, body = _walk_riff(data)
         audio_format, channels, src_rate, _, _, bits = fmt
         if not (audio_format == 1 and bits == 16 and channels == 1):
@@ -607,45 +543,23 @@ def audio_resample(df: DataFrame, out_rate: int, fake: bool = False) -> DataFram
         "audio_resample", lambda data, rate: resample_real(data)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    crc = zlib.crc32(data)
-                    n_src = max(len(data) // 2, 1)
-                    n_out = n_src * out_rate // max((8000, 16000)[crc % 2], 1)
-                    resampled = (hashlib.md5(data).digest() + data)[
-                        : max(n_out, 16)
-                    ]
-                    rec = (int(item_id), resampled, 8000, out_rate, n_src, n_out)
-                else:
-                    payload_out, src_rate, n_src, n_out = resampler(
-                        data, out_rate
-                    )
-                    rec = (
-                        int(item_id), payload_out, src_rate, out_rate,
-                        n_src, n_out,
-                    )
-                out.append(rec)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "item_id", "payload", "src_rate", "dst_rate",
-                    "n_src", "n_out",
-                ],
-            )
+    def row(item_id, payload):
+        if fake:
+            n_src = max(len(payload) // 2, 1)
+            n_out = n_src * out_rate // (8000, 16000)[zlib.crc32(payload) % 2]
+            resampled = (hashlib.md5(payload).digest() + payload)[: max(n_out, 16)]
+            yield item_id, resampled, 8000, out_rate, n_src, n_out
+        else:
+            resampled, src_rate, n_src, n_out = resampler(payload, out_rate)
+            yield item_id, resampled, src_rate, out_rate, n_src, n_out
 
-    return df.select("item_id", "payload").mapInPandas(run, schema=RESAMPLE_SCHEMA)
+    return _per_item(df, row, RESAMPLE_SCHEMA)
 
 
 SHOT_SCHEMA = "item_id bigint, n_frames int, n_cuts int, first_cut int"
 
 
-def shot_detect(
-    df: DataFrame, threshold: float = 64.0, fake: bool = False
-) -> DataFrame:
+def shot_detect(df: DataFrame, threshold: float = 64.0) -> DataFrame:
     """Video SHOT-BOUNDARY detection over a concatenated-PPM frame
     stream: decode every frame's raster, compute per-frame mean
     intensity, and flag a cut wherever the absolute mean jump between
@@ -658,34 +572,19 @@ def shot_detect(
     scale: Arrow batches in, scalar features out, no shuffle."""
     rasterize = _with_codec("frame_rasters", _ppm_frame_rasters)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    crc = zlib.crc32(data)
-                    n = 4 + crc % 4
-                    cuts = [j for j in range(1, n) if (crc >> j) & 1]
-                else:
-                    means = [
-                        float(np.frombuffer(r, dtype=np.uint8).mean())
-                        for r in rasterize(data)
-                    ]
-                    n = len(means)
-                    cuts = [
-                        j
-                        for j in range(1, n)
-                        if abs(means[j] - means[j - 1]) > threshold
-                    ]
-                out.append(
-                    (int(item_id), n, len(cuts), cuts[0] if cuts else -1)
-                )
-            yield pd.DataFrame(
-                out, columns=["item_id", "n_frames", "n_cuts", "first_cut"]
-            )
+    def row(item_id, payload):
+        means = [
+            float(np.frombuffer(r, dtype=np.uint8).mean())
+            for r in rasterize(payload)
+        ]
+        cuts = [
+            j
+            for j in range(1, len(means))
+            if abs(means[j] - means[j - 1]) > threshold
+        ]
+        yield item_id, len(means), len(cuts), cuts[0] if cuts else -1
 
-    return df.select("item_id", "payload").mapInPandas(run, schema=SHOT_SCHEMA)
+    return _per_item(df, row, SHOT_SCHEMA)
 
 
 DHASH_COLS = 9  # classic dHash grid: 9 columns -> 8 horizontal gradients
@@ -702,18 +601,8 @@ def _dhash_hex(payload: bytes) -> str:
     gradient sign — the property that makes dHash a NEAR-duplicate key
     (re-encoded / brightness-shifted variants collide) where md5 of the
     payload is an exact-duplicate key."""
-    magic, width, height, maxval, off = _pnm_header(payload)
-    channels = 3 if magic == b"P6" else 1
-    dtype = np.uint8 if maxval < 256 else np.dtype(">u2")
-    count = width * height * channels
-    raster = np.frombuffer(payload, dtype=dtype, count=count, offset=off)
-    if raster.size < count:
-        raise ValueError("truncated PNM raster")
-    if channels == 3:
-        rgb = raster.reshape(height, width, 3).astype(np.float64)
-        luma = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    else:
-        luma = raster.astype(np.float64).reshape(height, width)
+    luma = _luma(_pnm_raster(payload)[2])
+    height, width = luma.shape
     if (height, width) != (DHASH_ROWS, DHASH_COLS):
         if width < DHASH_COLS or height < DHASH_ROWS:
             # upsampling would leave empty grid buckets (0/0 -> NaN cells
@@ -738,25 +627,15 @@ def _dhash_hex(payload: bytes) -> str:
     return "".join(f"{int(b):02x}" for b in row_bytes)
 
 
-def dhash_hashes(df: DataFrame, batch_limit: int = 1024) -> DataFrame:
-    """Per-item perceptual hash via Arrow-batched mapInPandas.  ``df``
-    must have columns (item_id, payload); output (item_id, dhash)."""
+def dhash_hashes(df: DataFrame) -> DataFrame:
+    """Per-item perceptual hash.  ``df`` must have columns (item_id,
+    payload); output (item_id, dhash)."""
     hasher = _with_codec("image_dhash", _dhash_hex)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                out.append((int(item_id), hasher(bytes(payload))))
-                if len(out) >= batch_limit:
-                    yield pd.DataFrame(out, columns=["item_id", "dhash"])
-                    out = []
-            if out:
-                yield pd.DataFrame(out, columns=["item_id", "dhash"])
+    def row(item_id, payload):
+        yield item_id, hasher(payload)
 
-    return df.select("item_id", "payload").mapInPandas(
-        run, schema="item_id bigint, dhash string"
-    )
+    return _per_item(df, row, "item_id bigint, dhash string")
 
 
 VAD_SCHEMA = (
@@ -769,8 +648,6 @@ def _vad_frames(payload: bytes, frame_samples: int) -> "np.ndarray":
     (Q15 grid): frames are fixed windows of ``frame_samples``; a trailing
     partial frame is dropped (matching every streaming VAD's hop
     convention)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("unsupported audio format (not RIFF/WAVE)")
     fmt, data = _walk_riff(payload)
     audio_format, channels, _, _, _, bits = fmt
     if audio_format != 1 or bits != 16 or channels != 1:
@@ -794,36 +671,19 @@ def vad_segments(
     above-threshold frames emitted as (start, length, peak) segments.
     ``df`` must have columns (item_id, payload: PCM16 mono WAV).
 
-    Arrow-batched mapInPandas, map-only (each item's segments derive
+    One ``map_rows`` kernel, map-only (each item's segments derive
     from its own payload alone) — at 100 TB this runs embarrassingly
     parallel over whatever partitioning the payloads arrive in, and the
     run detection is flat numpy (diff/flatnonzero), not a per-frame
     Python loop."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                rms = _vad_frames(bytes(payload), frame_samples)
-                active = rms >= threshold_q15
-                edges = np.diff(np.concatenate(([0], active.view(np.int8), [0])))
-                starts = np.flatnonzero(edges == 1)
-                ends = np.flatnonzero(edges == -1)
-                for seg_idx, (s, e) in enumerate(zip(starts, ends)):
-                    out.append(
-                        (
-                            int(item_id),
-                            seg_idx,
-                            int(s),
-                            int(e - s),
-                            int(rms[s:e].max()),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "item_id", "seg_idx", "start_frame", "n_frames", "peak_q15",
-                ],
-            )
+    def row(item_id, payload):
+        rms = _vad_frames(payload, frame_samples)
+        active = rms >= threshold_q15
+        edges = np.diff(np.concatenate(([0], active.view(np.int8), [0])))
+        starts = np.flatnonzero(edges == 1)
+        ends = np.flatnonzero(edges == -1)
+        for seg_idx, (s, e) in enumerate(zip(starts, ends)):
+            yield item_id, seg_idx, int(s), int(e - s), int(rms[s:e].max())
 
-    return df.select("item_id", "payload").mapInPandas(run, schema=VAD_SCHEMA)
+    return _per_item(df, row, VAD_SCHEMA)

@@ -10,16 +10,18 @@ acts (SURVEY §1.2 calls this the deliberate improvement).
 ``python_udf`` reproduces the reference's pandas-eval expression UDF
 (reference: etl_agent/tools.py:67-72) via Catalyst ``expr`` — arithmetic /
 comparison / boolean expressions over columns stay JVM-side, codegen'd;
-no Python round trip at all.  For genuinely-Python logic use
-``pandas_map_udf`` (Arrow-batched), never row-at-a-time.
+no Python round trip at all.  For genuinely-Python per-row logic use
+``map_rows`` (one Arrow-batched ``mapInPandas`` loop shared by every
+per-row kernel), never a row-at-a-time Python UDF.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from agentic_etl_poc_spark.functions.dialect import rewrite_duckdb_sql
 from agentic_etl_poc_spark.plans.model import TransformStep
@@ -59,15 +61,26 @@ def python_udf(df: DataFrame, expression: str, new_col: str) -> DataFrame:
     return df.withColumn(new_col, F.expr(expression))
 
 
-def pandas_map_udf(
-    df: DataFrame,
-    fn: Callable,
-    schema: str,
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
 ) -> DataFrame:
-    """Escape hatch for real Python logic: Arrow-batched mapInPandas.
-    ``fn(iter_of_pdf) -> iter_of_pdf`` runs once per partition batch."""
+    """The escape hatch for real Python logic: ``fn(*row)`` runs once per
+    row of ``df`` (columns in ``df``'s order) and returns an iterable of
+    output tuples in ``schema``'s column order — one for a 1->1 kernel,
+    several to explode a row, none to drop it.  Arrow-batched through
+    ``mapInPandas``: each input batch becomes one pandas frame.  The
+    column names are parsed from the DDL ``schema`` once, on the driver."""
+    names = StructType.fromDDL(schema).names
 
-    def _wrap(batches: Iterator) -> Iterator:
-        yield from fn(batches)
+    def run(batches):
+        import pandas as pd
 
-    return df.mapInPandas(_wrap, schema=schema)
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema=schema)

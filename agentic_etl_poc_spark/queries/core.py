@@ -138,6 +138,25 @@ def staged(
     return root
 
 
+#: The latest run root per (entry tag, sf_dir), for ``run_root``.
+_RUN_ROOTS: dict[tuple[str, str], str] = {}
+
+
+def run_root(tag: str, sf_dir: str) -> str:
+    """A fresh ``<tmp>/spark_graft_<tag>_*`` working dir for one call of an
+    entry that writes per-run output.  The previous call's dir for the
+    same ``tag`` and ``sf_dir`` is removed first: a result frame stays
+    readable until the entry's next call (the driver collects lazily),
+    and a process keeps at most one root per entry."""
+    prev = _RUN_ROOTS.pop((tag, sf_dir), None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    root = _RUN_ROOTS[(tag, sf_dir)] = tempfile.mkdtemp(
+        prefix=f"spark_graft_{tag}_"
+    )
+    return root
+
+
 def register(name: str, oracle: str | None, description: str = ""):
     """Decorator: add a query to the battery."""
 

@@ -35,6 +35,9 @@ from agentic_etl_poc_spark.functions.hashing import (
     duck_dot_fold,
     duck_md5_48,
     md5_48,
+    np_cosines,
+    np_dot_fold,
+    np_sq_norms,
 )
 from agentic_etl_poc_spark.io_tables import table
 from agentic_etl_poc_spark.queries.core import register
@@ -1174,10 +1177,7 @@ def _d12_assigned_vec(corpus: DataFrame) -> DataFrame:
         return spark.createDataFrame([], out_schema)
     cent_ids = np.array([r.vec_id for r in cent_rows], dtype=np.int64)
     cmat = np.array([r.embedding for r in cent_rows], dtype=np.float64)
-    cnsq = np.zeros(len(cmat), dtype=np.float64)
-    for j in range(cmat.shape[1]):
-        cnsq += cmat[:, j] * cmat[:, j]
-    bc = spark.sparkContext.broadcast((cent_ids, cmat, cnsq))
+    bc = spark.sparkContext.broadcast((cent_ids, cmat, np_sq_norms(cmat)))
 
     def assign(batches):
         ids, cm, cn = bc.value
@@ -1190,13 +1190,8 @@ def _d12_assigned_vec(corpus: DataFrame) -> DataFrame:
             vids = pdf["vec_id"].to_numpy()
             for lo in range(0, len(emb), chunk):
                 ev = emb[lo : lo + chunk]
-                nsq = np.zeros(len(ev), dtype=np.float64)
-                acc = np.zeros((len(ev), kk), dtype=np.float64)
-                for j in range(ev.shape[1]):
-                    ej = ev[:, j]
-                    nsq += ej * ej
-                    acc += np.multiply.outer(ej, cm[:, j])
-                sims = acc / np.sqrt(np.multiply.outer(nsq, cn))
+                nsq = np_sq_norms(ev)
+                sims = np_cosines(ev, cm, nsq, cn)
                 cell = np.argmax(sims, axis=1)
                 yield pd.DataFrame(
                     {
@@ -1264,13 +1259,7 @@ def _d12_dropped_grouped(assigned: DataFrame) -> DataFrame:
         dropped = np.zeros(n, dtype=bool)
         chunk = max(1, (2 << 20) // n)  # sim buffer ~16 MB of doubles
         for lo in range(0, n, chunk):
-            xs = emb[lo : lo + chunk]
-            acc = np.zeros((len(xs), n), dtype=np.float64)
-            for j in range(emb.shape[1]):
-                acc += np.multiply.outer(xs[:, j], emb[:, j])
-            sims = acc / np.sqrt(
-                np.multiply.outer(nsq[lo : lo + chunk], nsq)
-            )
+            sims = np_cosines(emb[lo : lo + chunk], emb, nsq[lo : lo + chunk], nsq)
             close = (sims > tau) | np.isnan(sims)
             hp = (csk[None, :] > csk[lo : lo + chunk, None]) | (
                 (csk[None, :] == csk[lo : lo + chunk, None])
@@ -1372,10 +1361,11 @@ ORDER BY h.dhash
     "the same banding trick d05 (SimHash) already demonstrates.",
 )
 def d13_perceptual_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from agentic_etl_poc_spark.io_tables import table
-    from agentic_etl_poc_spark.operators.multimodal import dhash_hashes
+    from agentic_etl_poc_spark.operators.multimodal import (
+        PAYLOAD_SCHEMA,
+        dhash_hashes,
+    )
+    from agentic_etl_poc_spark.operators.transform import map_rows
 
     d = (
         table(spark, sf_dir, "documents")
@@ -1383,21 +1373,15 @@ def d13_perceptual_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                grp, off = i % 12, i % 40
-                raster = bytes(
-                    (grp * 37 + r * 29 + c * c * 13) % 97 + off
-                    for r in range(8)
-                    for c in range(9)
-                )
-                rows.append((i, b"P5\n9 8\n255\n" + raster))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        grp, off = i % 12, i % 40
+        yield i, b"P5\n9 8\n255\n" + bytes(
+            (grp * 37 + r * 29 + c * c * 13) % 97 + off
+            for r in range(8)
+            for c in range(9)
+        )
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
+    payloads = map_rows(d, synth, PAYLOAD_SCHEMA)
     hashed = dhash_hashes(payloads)
     md5s = payloads.select("item_id", F.md5(F.col("payload")).alias("pmd5"))
     return (
@@ -1697,12 +1681,7 @@ def _dropped_exists_lower(xs: DataFrame, ys: DataFrame) -> DataFrame:
         dropped = np.zeros(len(xe), dtype=bool)
         chunk = max(1, (2 << 20) // len(ye))  # sim buffer ~16 MB
         for lo in range(0, len(xe), chunk):
-            acc = np.zeros((len(xe[lo : lo + chunk]), len(ye)), dtype=np.float64)
-            for j in range(xe.shape[1]):
-                acc += np.multiply.outer(xe[lo : lo + chunk, j], ye[:, j])
-            sims = acc / np.sqrt(
-                np.multiply.outer(xn[lo : lo + chunk], yn)
-            )
+            sims = np_cosines(xe[lo : lo + chunk], ye, xn[lo : lo + chunk], yn)
             close = (sims > tau) | np.isnan(sims)
             lower = yid[None, :] < xid[lo : lo + chunk, None]
             dropped[lo : lo + chunk] = np.any(close & lower, axis=1)
@@ -1849,12 +1828,7 @@ def _d15_assign(e: DataFrame, bf: DataFrame) -> DataFrame:
             emb = np.vstack(pdf["embedding"].to_numpy()).astype(
                 np.float64, copy=False
             )
-            nsq = np.zeros(len(emb), dtype=np.float64)
-            dots = np.zeros((len(emb), len(sh)), dtype=np.float64)
-            for j in range(emb.shape[1]):
-                ej = emb[:, j]
-                nsq += ej * ej
-                dots += np.multiply.outer(ej, wm[:, j])
+            dots = np_dot_fold(emb, wm)
             bits = (dots > 0) | np.isnan(dots)  # Spark NaN-greatest
             yield pd.DataFrame(
                 {
@@ -1863,7 +1837,7 @@ def _d15_assign(e: DataFrame, bf: DataFrame) -> DataFrame:
                         axis=1, dtype=np.int64
                     ),
                     "embedding": list(emb),
-                    "nsq": nsq,
+                    "nsq": np_sq_norms(emb),
                 }
             )
 

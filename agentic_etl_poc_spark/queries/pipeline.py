@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.queries.core import register, staged
+from agentic_etl_poc_spark.queries.core import register, run_root, staged
 
 #: Word n-gram order for decontamination.  Real pipelines use 8-13-gram
 #: exact overlap (the n-gram ORDER is a knob, not a design change); the
@@ -487,12 +487,6 @@ alerts:
     ).orderBy("store_id", "week")
 
 
-#: p03 keeps one working dir per (session, sf_dir); the previous call's
-#: dir is removed on the next call (the result frame stays readable
-#: between calls — the driver collects lazily).
-_P03_DIRS: dict[str, str] = {}
-
-
 @register(
     "p03_plan_incremental",
     oracle="""
@@ -518,16 +512,10 @@ ORDER BY event_id
 )
 def p03_plan_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as dt
-    import shutil
-    import tempfile
 
     from agentic_etl_poc_spark.runtime import run_from_plan
 
-    prev = _P03_DIRS.pop(sf_dir, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix="spark_graft_p03_")
-    _P03_DIRS[sf_dir] = work
+    work = run_root("p03", sf_dir)
     src_dir = f"{work}/src"
     out_dir = f"{work}/out"
     ledger = f"{work}/ledger.db"
@@ -922,11 +910,10 @@ ORDER BY priority
 )
 def p07_plan_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.runtime import run_from_plan
 
-    root = tempfile.mkdtemp(prefix="spark_graft_p07_")
+    root = run_root("p07", sf_dir)
     out_path = os.path.join(root, "clean_orders")
     quarantine = os.path.join(root, "quarantine")
     plan = f"""
@@ -1082,13 +1069,12 @@ ORDER BY event_type
 )
 def p09_plan_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agentic_etl_poc_spark.queries.streamq import events_stream_dir
     from agentic_etl_poc_spark.runtime import run_from_plan
 
     topic = events_stream_dir(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="spark_graft_p09_")
+    root = run_root("p09", sf_dir)
     out_path = os.path.join(root, "stream_events")
     plan = f"""
 source:

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.queries.core import register, staged
+from agentic_etl_poc_spark.queries.core import register, run_root, staged
 from agentic_etl_poc_spark.streaming.events import (
     _note_executed_stream_plan,
     dedup_stream,
@@ -922,17 +922,16 @@ ORDER BY event_type
 )
 def v11_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from agentic_etl_poc_spark import plan_capture
 
     src = _tribatch_stream_dir(spark, sf_dir)
-    run_root = tempfile.mkdtemp(prefix="v11_upsert_")
-    store = os.path.join(run_root, "store")
+    root = run_root("v11", sf_dir)
+    store = os.path.join(root, "store")
     parts = _drain_parts_for(spark, [src], STREAM_DRAIN_PARTITIONS)
 
     def merge(batch_df, batch_id: int) -> None:
-        staged = os.path.join(run_root, f"staged_{batch_id}")
+        staged = os.path.join(root, f"staged_{batch_id}")
         delta = batch_df.select("event_type", "n", "total_value")
         if os.path.exists(store):
             old = batch_df.sparkSession.read.parquet(store)
@@ -969,7 +968,7 @@ def v11_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("update")
             .trigger(availableNow=True)
             .option(
-                "checkpointLocation", os.path.join(run_root, "ckpt")
+                "checkpointLocation", os.path.join(root, "ckpt")
             )
             .start()
         )
@@ -1081,14 +1080,12 @@ ORDER BY side, event_type
     "rate.",
 )
 def v14_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from agentic_etl_poc_spark import plan_capture
 
     src = _tribatch_stream_dir(spark, sf_dir)
-    run_root = tempfile.mkdtemp(prefix="v14_quarantine_")
-    clean_root = os.path.join(run_root, "clean")
-    quar_root = os.path.join(run_root, "quarantined")
+    root = run_root("v14", sf_dir)
+    clean_root = os.path.join(root, "clean")
+    quar_root = os.path.join(root, "quarantined")
     parts = _drain_parts_for(spark, [src], STREAM_DRAIN_PARTITIONS)
     bad = F.col("event_type") == "error"
 
@@ -1117,7 +1114,7 @@ def v14_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(split)
             .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(run_root, "ckpt"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
             .start()
         )
         q.awaitTermination()
@@ -1255,7 +1252,6 @@ ORDER BY dim_ver, event_type
 )
 def v15_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from agentic_etl_poc_spark.streaming.events import (
         enrich_with_dim,
@@ -1263,10 +1259,10 @@ def v15_stream_dim_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ph1, ph2 = _twophase_stream_files(spark, sf_dir)
-    run_root = tempfile.mkdtemp(prefix="v15_dimref_")
-    topic = os.path.join(run_root, "topic")
-    out_dir = os.path.join(run_root, "enriched")
-    ckpt = os.path.join(run_root, "ckpt")
+    root = run_root("v15", sf_dir)
+    topic = os.path.join(root, "topic")
+    out_dir = os.path.join(root, "enriched")
+    ckpt = os.path.join(root, "ckpt")
     os.makedirs(topic)
 
     def dim(version: int) -> DataFrame:
@@ -1345,14 +1341,12 @@ ORDER BY 1, 2
     "unpersisted after the commit.",
 )
 def v16_stream_lakehouse_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from agentic_etl_poc_spark import plan_capture
     from agentic_etl_poc_spark.sinks.parquet_sink import upsert_parquet
 
     src = _tribatch_stream_dir(spark, sf_dir)
-    run_root = tempfile.mkdtemp(prefix="v16_lake_")
-    tbl = os.path.join(run_root, "store")
+    root = run_root("v16", sf_dir)
+    tbl = os.path.join(root, "store")
     parts = _drain_parts_for(spark, [src], STREAM_DRAIN_PARTITIONS)
 
     def apply_batch(batch_df, batch_id: int) -> None:
@@ -1388,7 +1382,7 @@ def v16_stream_lakehouse_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg.writeStream.foreachBatch(apply_batch)
             .outputMode("update")
             .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(run_root, "ckpt"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
             .start()
         )
         q.awaitTermination()

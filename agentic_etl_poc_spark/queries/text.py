@@ -14,12 +14,28 @@ contract (the stopword tables are swappable).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.functions.hashing import duck_md5_48
 from agentic_etl_poc_spark.io_tables import table
+from agentic_etl_poc_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
+    _pnm_raster,
+    _wav_pcm16,
+    attach_binary_payload,
+    audio_features,
+    audio_resample,
+    frame_sample,
+    image_center_crop,
+    image_features,
+    image_resize,
+    shot_detect,
+    vad_segments,
+)
+from agentic_etl_poc_spark.operators.transform import map_rows
 from agentic_etl_poc_spark.queries.core import register
 
 STOPWORDS = {
@@ -648,11 +664,6 @@ ORDER BY item_id, frame_idx
     "row counts — the contract a real video decoder would slot into.",
 )
 def m02_frame_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agentic_etl_poc_spark.operators.multimodal import (
-        attach_binary_payload,
-        frame_sample,
-    )
-
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     frames = frame_sample(attach_binary_payload(d), n_frames=4, fake=True)
     return frames.orderBy("item_id", "frame_idx")
@@ -687,41 +698,21 @@ ORDER BY item_id
     "Arrow-batched mapInPandas, map-only, no shuffle.",
 )
 def m03_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import struct
-
-    import numpy as np
-
-    from agentic_etl_poc_spark.operators.multimodal import audio_features
-
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 7 == 0)
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rate = (8000, 16000, 22050, 44100)[i % 4]
-                n = 100 + (i % 200)
-                amp = (i * 37) % 32768
-                samples = np.empty(n, dtype="<i2")
-                samples[0::2] = amp
-                samples[1::2] = -amp
-                data = samples.tobytes()
-                hdr = struct.pack(
-                    "<4sI4s4sIHHIIHH4sI",
-                    b"RIFF", 36 + len(data), b"WAVE",
-                    b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
-                    b"data", len(data),
-                )
-                rows.append((i, hdr + data))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        amp = (i * 37) % 32768
+        samples = np.empty(100 + i % 200, dtype="<i2")
+        samples[0::2] = amp
+        samples[1::2] = -amp
+        yield i, _wav_pcm16(samples, (8000, 16000, 22050, 44100)[i % 4])
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
-    return audio_features(payloads, fake=False).orderBy("item_id")
+    payloads = map_rows(d, synth, PAYLOAD_SCHEMA)
+    return audio_features(payloads).orderBy("item_id")
 
 
 @register(
@@ -757,28 +748,18 @@ ORDER BY item_id
     "mapInPandas both ways; no shuffle.",
 )
 def m04_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agentic_etl_poc_spark.operators.multimodal import image_features
-
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 4 + i % 13
-                h = 3 + i % 7
-                v = (i * 31) % 256
-                payload = b"P5\n%d %d\n255\n" % (w, h) + bytes([v]) * (w * h)
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        w, h, v = 4 + i % 13, 3 + i % 7, (i * 31) % 256
+        yield i, b"P5\n%d %d\n255\n" % (w, h) + bytes([v]) * (w * h)
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
-    return image_features(payloads, fake=False).orderBy("item_id")
+    payloads = map_rows(d, synth, PAYLOAD_SCHEMA)
+    return image_features(payloads).orderBy("item_id")
 
 
 @register(
@@ -1395,6 +1376,30 @@ def t21_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gradient_p5(i: int, w: int, h: int) -> bytes:
+    """m05/m09 source image: a w x h P5 whose pixel (y, x) is
+    (i*31 + y*7 + x*3) % 256."""
+    yy, xx = np.mgrid[0:h, 0:w]
+    raster = ((i * 31 + yy * 7 + xx * 3) % 256).astype(np.uint8)
+    return b"P5\n%d %d\n255\n" % (w, h) + raster.tobytes()
+
+
+RASTER_CHECKSUM_SCHEMA = (
+    "item_id bigint, width int, height int, "
+    "src_bytes bigint, dst_bytes bigint, checksum bigint"
+)
+
+
+def _raster_checksum(item_id, payload, width, height, src_bytes, dst_bytes):
+    """m05/m09 check kernel over a resize/crop row: re-decode the output
+    P5 payload and sum its raster."""
+    raster = _pnm_raster(payload)[2]
+    yield (
+        item_id, width, height, src_bytes, dst_bytes,
+        int(raster.astype(np.int64).sum()),
+    )
+
+
 @register(
     "m05_image_resize",
     oracle="""
@@ -1439,68 +1444,21 @@ ORDER BY item_id
     "output sort.",
 )
 def m05_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from agentic_etl_poc_spark.operators.multimodal import (
-        _pnm_header,
-        image_resize,
-    )
-
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 4 + i % 13
-                h = 3 + i % 7
-                yy, xx = np.mgrid[0:h, 0:w]
-                raster = ((i * 31 + yy * 7 + xx * 3) % 256).astype(np.uint8)
-                payload = b"P5\n%d %d\n255\n" % (w, h) + raster.tobytes()
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        yield i, _gradient_p5(i, 4 + i % 13, 3 + i % 7)
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
-    resized = image_resize(payloads, width=6, height=4, fake=False)
-
-    def checksum(batches):
-        for pdf in batches:
-            rows = []
-            for item_id, payload, width, height, sb, db in zip(
-                pdf["item_id"], pdf["payload"], pdf["width"], pdf["height"],
-                pdf["src_bytes"], pdf["dst_bytes"],
-            ):
-                data = bytes(payload)
-                _, w, h, _, off = _pnm_header(data)
-                raster = np.frombuffer(data, np.uint8, count=w * h, offset=off)
-                rows.append(
-                    (
-                        int(item_id), int(width), int(height),
-                        int(sb), int(db),
-                        int(raster.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "width", "height",
-                    "src_bytes", "dst_bytes", "checksum",
-                ],
-            )
-
-    out = resized.mapInPandas(
-        checksum,
-        schema=(
-            "item_id bigint, width int, height int, "
-            "src_bytes bigint, dst_bytes bigint, checksum bigint"
-        ),
+    resized = image_resize(
+        map_rows(d, synth, PAYLOAD_SCHEMA), width=6, height=4
     )
-    return out.orderBy("item_id")
+    return map_rows(resized, _raster_checksum, RASTER_CHECKSUM_SCHEMA).orderBy(
+        "item_id"
+    )
 
 
 @register(
@@ -1546,68 +1504,21 @@ ORDER BY item_id
     "three mapInPandas stages, zero shuffles before the output sort.",
 )
 def m09_image_center_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from agentic_etl_poc_spark.operators.multimodal import (
-        _pnm_header,
-        image_center_crop,
-    )
-
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 7 == 0)
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 8 + i % 9
-                h = 6 + i % 5
-                yy, xx = np.mgrid[0:h, 0:w]
-                raster = ((i * 31 + yy * 7 + xx * 3) % 256).astype(np.uint8)
-                payload = b"P5\n%d %d\n255\n" % (w, h) + raster.tobytes()
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        yield i, _gradient_p5(i, 8 + i % 9, 6 + i % 5)
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
-    cropped = image_center_crop(payloads, width=6, height=4, fake=False)
-
-    def checksum(batches):
-        for pdf in batches:
-            rows = []
-            for item_id, payload, width, height, sb, db in zip(
-                pdf["item_id"], pdf["payload"], pdf["width"], pdf["height"],
-                pdf["src_bytes"], pdf["dst_bytes"],
-            ):
-                data = bytes(payload)
-                _, w, h, _, off = _pnm_header(data)
-                raster = np.frombuffer(data, np.uint8, count=w * h, offset=off)
-                rows.append(
-                    (
-                        int(item_id), int(width), int(height),
-                        int(sb), int(db),
-                        int(raster.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "width", "height",
-                    "src_bytes", "dst_bytes", "checksum",
-                ],
-            )
-
-    out = cropped.mapInPandas(
-        checksum,
-        schema=(
-            "item_id bigint, width int, height int, "
-            "src_bytes bigint, dst_bytes bigint, checksum bigint"
-        ),
+    cropped = image_center_crop(
+        map_rows(d, synth, PAYLOAD_SCHEMA), width=6, height=4
     )
-    return out.orderBy("item_id")
+    return map_rows(cropped, _raster_checksum, RASTER_CHECKSUM_SCHEMA).orderBy(
+        "item_id"
+    )
 
 
 def _duck_bpe_round(prev_state: str, n: int) -> str:
@@ -2139,66 +2050,31 @@ ORDER BY item_id
 def m06_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
 
-    import numpy as np
-
-    from agentic_etl_poc_spark.operators.multimodal import (
-        _wav_pcm16,
-        audio_resample,
-    )
-
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)
         .select("doc_id")
     )
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                n_src = 16 + i % 33
-                k = np.arange(n_src, dtype=np.int64)
-                samples = (i * 7 + k * 13) % 2048 - 1024
-                rows.append((i, _wav_pcm16(samples, 8000)))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        k = np.arange(16 + i % 33, dtype=np.int64)
+        yield i, _wav_pcm16((i * 7 + k * 13) % 2048 - 1024, 8000)
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
-    resampled = audio_resample(payloads, out_rate=12000, fake=False)
+    def checksum(item_id, payload, src_rate, dst_rate, n_src, n_out):
+        n = struct.unpack_from("<I", payload, 40)[0] // 2
+        samples = np.frombuffer(payload, "<i2", count=n, offset=44)
+        yield (
+            item_id, src_rate, dst_rate, n_src, n_out, len(payload),
+            int(samples.astype(np.int64).sum()),
+        )
 
-    def checksum(batches):
-        for pdf in batches:
-            rows = []
-            for item_id, payload, src_rate, dst_rate, n_src, n_out in zip(
-                pdf["item_id"], pdf["payload"], pdf["src_rate"],
-                pdf["dst_rate"], pdf["n_src"], pdf["n_out"],
-            ):
-                data = bytes(payload)
-                n = struct.unpack_from("<I", data, 40)[0] // 2
-                samples = np.frombuffer(data, "<i2", count=n, offset=44)
-                rows.append(
-                    (
-                        int(item_id), int(src_rate), int(dst_rate),
-                        int(n_src), int(n_out), len(data),
-                        int(samples.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "src_rate", "dst_rate",
-                    "n_src", "n_out", "dst_bytes", "checksum",
-                ],
-            )
-
-    out = resampled.mapInPandas(
+    resampled = audio_resample(map_rows(d, synth, PAYLOAD_SCHEMA), out_rate=12000)
+    return map_rows(
+        resampled,
         checksum,
-        schema=(
-            "item_id bigint, src_rate int, dst_rate int, n_src bigint, "
-            "n_out bigint, dst_bytes bigint, checksum bigint"
-        ),
-    )
-    return out.orderBy("item_id")
+        "item_id bigint, src_rate int, dst_rate int, n_src bigint, "
+        "n_out bigint, dst_bytes bigint, checksum bigint",
+    ).orderBy("item_id")
 
 
 @register(
@@ -2329,30 +2205,16 @@ ORDER BY item_id
     "for compressed video unchanged.",
 )
 def m07_shot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator as _Iterator
-
-    from agentic_etl_poc_spark.operators.multimodal import shot_detect
-
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 9 == 0)
 
-    def synth(batches: "_Iterator[pd.DataFrame]") -> "_Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                frames = []
-                for j in range(M07_FRAMES):
-                    v = (did * 31 + j * j * 17) % 256
-                    frames.append(b"P6\n4 2\n255\n" + bytes([v]) * 24)
-                rows.append((did, b"".join(frames)))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        yield i, b"".join(
+            b"P6\n4 2\n255\n" + bytes([(i * 31 + j * j * 17) % 256]) * 24
+            for j in range(M07_FRAMES)
+        )
 
-    streams = d.select("doc_id").mapInPandas(
-        synth, schema="item_id bigint, payload binary"
-    )
-    return shot_detect(streams, threshold=M07_THRESH, fake=False).orderBy(
-        "item_id"
-    )
+    streams = map_rows(d.select("doc_id"), synth, PAYLOAD_SCHEMA)
+    return shot_detect(streams, threshold=M07_THRESH).orderBy("item_id")
 
 
 @register(
@@ -2406,12 +2268,6 @@ ORDER BY item_id, seg_idx
     "pretraining pipeline.",
 )
 def m08_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import struct
-
-    import numpy as np
-
-    from agentic_etl_poc_spark.operators.multimodal import vad_segments
-
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)
@@ -2419,30 +2275,18 @@ def m08_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     FRAME = 160
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nf = 6 + i % 7
-                amp = 1000 + (i * 31) % 20000
-                samples = np.zeros(nf * FRAME, dtype="<i2")
-                for f in range(nf):
-                    if ((i // 5 + f) % 4) < 2:
-                        seg = samples[f * FRAME : (f + 1) * FRAME]
-                        seg[0::2] = amp
-                        seg[1::2] = -amp
-                data = samples.tobytes()
-                hdr = struct.pack(
-                    "<4sI4s4sIHHIIHH4sI",
-                    b"RIFF", 36 + len(data), b"WAVE",
-                    b"fmt ", 16, 1, 1, 8000, 16000, 2, 16,
-                    b"data", len(data),
-                )
-                rows.append((i, hdr + data))
-            yield pd.DataFrame(rows, columns=["item_id", "payload"])
+    def synth(i):
+        nf = 6 + i % 7
+        amp = 1000 + (i * 31) % 20000
+        samples = np.zeros(nf * FRAME, dtype="<i2")
+        for f in range(nf):
+            if ((i // 5 + f) % 4) < 2:
+                seg = samples[f * FRAME : (f + 1) * FRAME]
+                seg[0::2] = amp
+                seg[1::2] = -amp
+        yield i, _wav_pcm16(samples, 8000)
 
-    payloads = d.mapInPandas(synth, schema="item_id bigint, payload binary")
+    payloads = map_rows(d, synth, PAYLOAD_SCHEMA)
     return vad_segments(payloads, frame_samples=FRAME, threshold_q15=500).orderBy(
         "item_id", "seg_idx"
     )

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.io_tables import table
-from agentic_etl_poc_spark.queries.core import register
+from agentic_etl_poc_spark.queries.core import register, run_root
 
 
 @register(
@@ -504,8 +504,6 @@ ORDER BY event_type
     "parts.",
 )
 def u10_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from agentic_etl_poc_spark.queries.streamq import (
         _drain_parts_for,
         _drain_partitions,
@@ -523,10 +521,10 @@ def u10_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_stream_writer(spark)
     src = _tribatch_stream_dir(spark, sf_dir)
-    run_root = tempfile.mkdtemp(prefix="u10_pystream_sink_")
+    root = run_root("u10", sf_dir)
     import os
 
-    out = os.path.join(run_root, "ledger")
+    out = os.path.join(root, "ledger")
     parts = _drain_parts_for(spark, [src], STREAM_DRAIN_PARTITIONS)
     with _drain_partitions(spark, parts):
         stream = stream_events(
@@ -536,7 +534,7 @@ def u10_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.select("event_id", "user_id", "event_type")
             .writeStream.format("pyledger_stream")
             .option("path", out)
-            .option("checkpointLocation", os.path.join(run_root, "ckpt"))
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )

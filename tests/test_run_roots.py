@@ -1,0 +1,35 @@
+"""Entries that write per-run output keep one run root each.
+
+p03, p07, p09, v11, v14, v15, v16 and u10 work in a fresh temp dir per
+call (``queries/core.py::run_root``); the previous call's dir goes when the
+next call of the same entry starts, so repeated calls do not pile up dirs.
+"""
+
+from __future__ import annotations
+
+import os
+import tempfile
+
+import pytest
+
+from agentic_etl_poc_spark.queries import load_all
+
+ALL = load_all()
+
+
+@pytest.mark.parametrize(
+    "name", ["p07_plan_quarantine", "v11_stream_upsert_sink"]
+)
+def test_repeated_calls_leave_one_run_root(spark, sf_smoke, tmp_path, monkeypatch, name):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    tag = f"{name[:3]}_"
+
+    def roots():
+        return [d for d in os.listdir(tmp_path) if tag in d]
+
+    first = ALL[name].fn(spark, sf_smoke)
+    assert len(roots()) == 1
+    want = sorted(first.collect())  # readable until the next call
+    second = ALL[name].fn(spark, sf_smoke)
+    assert len(roots()) == 1
+    assert sorted(second.collect()) == want

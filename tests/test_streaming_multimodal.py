@@ -810,3 +810,76 @@ def test_stream_quarantine_split_empty_side_reads_back(spark, tmp_path):
     )
     assert quar.count() == 0
     assert clean.count() == 5
+
+
+def test_map_rows_batching_is_invisible(spark):
+    """The per-row kernels run through ``transform.map_rows``, one pandas
+    frame per Arrow batch.  Their rows must not depend on the batch size,
+    including a row-exploding kernel whose whole first batch yields
+    nothing, and the output must carry the DDL schema's names and
+    types."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    from agentic_etl_poc_spark.operators.multimodal import (
+        IMAGE_FEATURES_SCHEMA,
+        PAYLOAD_SCHEMA,
+        VAD_SCHEMA,
+        _wav_pcm16,
+        image_features,
+        vad_segments,
+    )
+
+    def wav(i: int) -> bytes:
+        s = np.zeros(4 * 160, dtype="<i2")
+        if i >= 3 and i != 7:  # items 0-2 and 7 are silent: no segments
+            for f in range(i % 2, 4, 2):
+                s[f * 160 : (f + 1) * 160 : 2] = 1000 + i
+                s[f * 160 + 1 : (f + 1) * 160 : 2] = -(1000 + i)
+        return _wav_pcm16(s, 8000)
+
+    def pnm(i: int) -> bytes:
+        w = 2 + i % 3
+        return b"P5\n%d 2\n255\n" % w + bytes(range(i, i + 2 * w))
+
+    audio = spark.createDataFrame(
+        [(i, wav(i)) for i in range(10)], PAYLOAD_SCHEMA
+    ).coalesce(1)
+    images = spark.createDataFrame(
+        [(i, pnm(i)) for i in range(10)], PAYLOAD_SCHEMA
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def batch_sizes():
+        return [
+            r.n
+            for r in audio.mapInPandas(
+                lambda it: (pd.DataFrame({"n": [len(p)]}) for p in it), "n long"
+            ).collect()
+        ]
+
+    def run():
+        out = {}
+        for df, ddl in (
+            (vad_segments(audio).orderBy("item_id", "seg_idx"), VAD_SCHEMA),
+            (image_features(images).orderBy("item_id"), IMAGE_FEATURES_SCHEMA),
+        ):
+            want = [(f.name, f.dataType) for f in StructType.fromDDL(ddl)]
+            assert [(f.name, f.dataType) for f in df.schema] == want
+            out[ddl] = df.collect()
+        return out
+
+    assert batch_sizes() == [10]
+    default = run()
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        assert batch_sizes() == [3, 3, 3, 1]
+        small = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert small == default
+    segs = default[VAD_SCHEMA]
+    assert {r.item_id for r in segs} == {3, 4, 5, 6, 8, 9}
+    assert len(segs) == 12 and len(default[IMAGE_FEATURES_SCHEMA]) == 10
