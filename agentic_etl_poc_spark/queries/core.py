@@ -29,6 +29,7 @@ approximately):
 
 from __future__ import annotations
 
+import atexit
 import fcntl
 import hashlib
 import json
@@ -147,7 +148,7 @@ def run_root(tag: str, sf_dir: str) -> str:
     entry that writes per-run output.  The previous call's dir for the
     same ``tag`` and ``sf_dir`` is removed first: a result frame stays
     readable until the entry's next call (the driver collects lazily),
-    and a process keeps at most one root per entry."""
+    and a process keeps at most one root per entry, removed at exit."""
     prev = _RUN_ROOTS.pop((tag, sf_dir), None)
     if prev is not None:
         shutil.rmtree(prev, ignore_errors=True)
@@ -155,6 +156,14 @@ def run_root(tag: str, sf_dir: str) -> str:
         prefix=f"spark_graft_{tag}_"
     )
     return root
+
+
+@atexit.register
+def _remove_run_roots() -> None:
+    """At exit no caller can still read a result frame: remove the last
+    root of every entry."""
+    while _RUN_ROOTS:
+        shutil.rmtree(_RUN_ROOTS.popitem()[1], ignore_errors=True)
 
 
 def register(name: str, oracle: str | None, description: str = ""):

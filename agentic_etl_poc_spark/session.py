@@ -18,19 +18,34 @@ engine, so the defaults matter:
 - Stream checkpoints commit through ``FileSystemBasedCheckpointFileManager``,
   not Spark's ``FileContext`` default.  A pip-installed PySpark ships no
   ``libhadoop``, so Hadoop's local filesystem spawns a ``readlink`` process
-  on each side of every ``FileContext`` rename (data file and ``.crc``),
-  on top of a ``chmod`` per created file.  Every offset, commit, metadata,
-  file-sink and state-store log file is a temp write plus a rename, so an
-  AvailableNow drain spawned ~60 processes (~2.8 ms each); the two-argument
-  ``FileSystem.rename`` spawns none.  See the ``ENGINE_CONF`` comment for
-  why the swap keeps the commit protocol's guarantees.
+  on each side of every ``FileContext`` rename (data file and ``.crc``).
+  Every offset, commit, metadata, file-sink and state-store log file is a
+  temp write plus a rename, so an AvailableNow drain spawned ~60 processes
+  (~2.8 ms each); the two-argument ``FileSystem.rename`` spawns none.  See
+  the ``ENGINE_CONF`` comment for why the swap keeps the commit protocol's
+  guarantees.
+- Local files get their permissions inside the JVM.  Without
+  ``libhadoop``, Hadoop's ``RawLocalFileSystem.setPermission`` runs
+  ``chmod`` in a new process for every file and directory it creates (part
+  files, ``.crc`` twins, ``_SUCCESS``, ``_temporary`` dirs, every checkpoint
+  and file-sink log): 49 per plan-lifecycle pass.  ``jvm/NioLocalFileSystem.java``
+  overrides only that method with ``Files.setPosixFilePermissions``;
+  ``local_fs_conf`` compiles it once per source digest into a per-user
+  cache and makes it ``fs.file.impl`` of a ``local[...]`` session.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import tempfile
 import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -55,7 +70,8 @@ ENGINE_CONF: dict[str, str] = {
     # Checkpoint logs commit as temp write + rename.  The default manager
     # renames through FileContext, which without libhadoop spawns a
     # ``readlink`` per side of each rename (file and .crc): 40 of a drain's
-    # 60 process spawns.  This manager (Spark's own fallback when
+    # 60 process spawns (the other 19 were the ``chmod`` per created file
+    # that ``local_fs_conf`` removes).  This manager (Spark's own fallback when
     # FileContext is unavailable) renames with FileSystem.rename(src, dst),
     # which spawns nothing.  Same guarantees: on the local FS both managers
     # check the destination, then rename (FileContext's Options.Rename.NONE
@@ -167,6 +183,80 @@ def tune_for_data(
     return spark
 
 
+#: Hadoop's local filesystem with ``setPermission`` done by java.nio
+#: instead of a ``chmod`` process (see the module docstring).
+LOCAL_FS_CLASS = "agentic_etl_poc_spark.jvm.NioLocalFileSystem"
+LOCAL_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java"
+)
+
+
+def _class_cache() -> str:
+    """Per-user cache of compiled classes.  Not under ``TMPDIR``: a caller
+    that gives each run its own temp dir would recompile on every run."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(base, "agentic_etl_poc_spark", "jvm")
+
+
+def build_classes(source: str = LOCAL_FS_SOURCE) -> str | None:
+    """Compile ``source`` into ``<class cache>/<source digest>/`` unless that
+    dir exists; return the dir, or None when there is no ``javac`` or it
+    fails.  The classes land under a temp name first and are renamed into
+    place, so a concurrent builder never sees half a directory."""
+    with open(source, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    cache = _class_cache()
+    out = os.path.join(cache, digest)
+    if os.path.isdir(out):
+        return out
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars")
+    cp = os.pathsep.join(glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")))
+    try:
+        os.makedirs(cache, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".{digest}-", dir=cache)
+    except OSError:
+        return None
+    try:
+        cmd = [javac, "--release", "17", "-nowarn", "-d", tmp,
+               "-cp", cp or os.path.join(jars, "*"), source]
+        if subprocess.run(cmd, capture_output=True).returncode == 0:
+            os.rename(tmp, out)
+    except OSError:
+        pass  # javac vanished, or another process renamed its build first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def local_fs_conf(master: str) -> dict[str, str]:
+    """Confs that make ``LOCAL_FS_CLASS`` the session's ``file:`` filesystem,
+    or ``{}`` to keep Hadoop's.  Only for a ``local[...]`` master (the
+    classes go on the driver's class path, and executors share its JVM),
+    and only when this call launches the JVM or the running JVM can
+    already load the class: a static class path cannot reach a JVM that
+    is already up, and naming a class it cannot load would fail every
+    file access."""
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {}
+    jvm = SparkContext._jvm
+    if jvm is not None and not jvm.org.apache.spark.util.Utils.classIsLoadable(
+        LOCAL_FS_CLASS
+    ):
+        return {}
+    classes = build_classes()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+    }
+
+
 def get_spark(
     app_name: str = "agentic-etl-poc-spark",
     master: str | None = None,
@@ -180,8 +270,10 @@ def get_spark(
     """
     builder = SparkSession.builder.appName(app_name)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = builder.master(master or f"local[{cpus}]")
+    master = master or f"local[{cpus}]"
+    builder = builder.master(master)
     conf = dict(ENGINE_CONF)
+    conf.update(local_fs_conf(master))
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

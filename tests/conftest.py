@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -72,3 +73,34 @@ def count_jobs(spark, group: str, fn):
         for k, v in zip(_GROUP_KEYS, saved):
             sc.setLocalProperty(k, v)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_spawns(spark, fn):
+    """Run ``fn()`` under an in-JVM JFR recording of ``jdk.ProcessStart``;
+    return (result, command line of every process the driver JVM started
+    meanwhile, executors included on a ``local`` master)."""
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        try:
+            out = fn()
+        finally:
+            rec.stop()
+        fd, dump = tempfile.mkstemp(suffix=".jfr")
+        os.close(fd)
+        try:
+            path = jvm.java.io.File(dump).toPath()
+            rec.dump(path)
+            events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
+            return out, [e.getString("command") for e in events]
+        finally:
+            os.remove(dump)
+    finally:
+        rec.close()
+
+
+def chmods(commands) -> list[str]:
+    """The ``chmod`` processes among ``count_spawns`` commands."""
+    return [c for c in commands if c.startswith("chmod ")]

@@ -36,6 +36,7 @@ from agentic_etl_poc_spark.sinks.parquet_sink import (
     verify_parquet,
     write_parquet,
 )
+from tests.conftest import chmods, count_spawns
 from tests.conftest import count_jobs as _count_jobs
 
 pytestmark = pytest.mark.usefixtures("fresh_read_memo")
@@ -103,14 +104,8 @@ source:
 """
 
 
-def test_jobs_quarantine_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1; the quarantine write 1, which builds
-    the persisted frame and observes the quarantined count and the DQ
-    gate's clean-row metrics, so the gate runs no scan of its own; sink
-    write 1; verify re-read with the written schema: scan 1.  The second
-    run reads its source from the memo: one job fewer."""
-    bad, clean = tmp_path / "bad", tmp_path / "clean"
-    plan = _orders(sf_smoke) + f"""
+def _quarantine_plan(sf_smoke, bad, clean) -> str:
+    return _orders(sf_smoke) + f"""
 transform:
   sql: |
     SELECT o_orderkey,
@@ -124,6 +119,16 @@ load:
   to: parquet
   file_path: {clean}
 """
+
+
+def test_jobs_quarantine_plan(spark, sf_smoke, tmp_path):
+    """Source schema inference 1; the quarantine write 1, which builds
+    the persisted frame and observes the quarantined count and the DQ
+    gate's clean-row metrics, so the gate runs no scan of its own; sink
+    write 1; verify re-read with the written schema: scan 1.  The second
+    run reads its source from the memo: one job fewer."""
+    bad, clean = tmp_path / "bad", tmp_path / "clean"
+    plan = _quarantine_plan(sf_smoke, bad, clean)
     for group, want in (("plan-quarantine", 4), ("plan-quarantine-warm", 3)):
         (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
         assert res["status"] == "ok" and not alerts, res
@@ -131,6 +136,16 @@ load:
         assert res["dq"]["quarantined"] == n_bad > 0
         assert res["dq"]["rows"] + n_bad == 1500
         assert jobs == want, group
+
+
+def test_quarantine_plan_spawns_no_chmod(spark, sf_smoke, tmp_path):
+    """The quarantine write (the DQ gate too) and the sink create their
+    files and dirs without a ``chmod`` process (``session.local_fs_conf``)."""
+    plan = _quarantine_plan(sf_smoke, tmp_path / "bad", tmp_path / "clean")
+    _run(spark, plan)
+    (res, _), commands = count_spawns(spark, lambda: _run(spark, plan))
+    assert res["status"] == "ok", res
+    assert chmods(commands) == []
 
 
 def test_jobs_parquet_overwrite_plan(spark, sf_smoke, tmp_path):

@@ -9,7 +9,9 @@ each rename when Hadoop has no native library).  These tests pin
 - the exactly-once contract under it: a batch whose commit-log entry is
   lost re-runs without duplicating the file sink's rows, and a checkpoint
   written by Spark's default manager resumes with only new input;
-- that a drain renders its executed plan only for an active plan capture.
+- that a drain renders its executed plan only for an active plan capture;
+- that a drain creates its checkpoint, state and sink files without a
+  ``chmod`` process (``session.local_fs_conf``).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import pytest
 from agentic_etl_poc_spark import plan_capture
 from agentic_etl_poc_spark.runtime import run_from_plan
 from agentic_etl_poc_spark.streaming.events import _note_executed_stream_plan
+from tests.conftest import chmods, count_spawns
 
 MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 _PKG = "org.apache.spark.sql.execution.streaming.checkpointing"
@@ -129,6 +132,16 @@ def test_default_manager_checkpoint_resumes_with_new_input_only(
     res = _drain(spark, topic, out)
     assert _ids(spark, out) == [*range(10), *range(100, 105)]
     assert res["dq"]["rows"] == 15
+
+
+def test_drain_spawns_no_chmod(spark, tmp_path):
+    """The offset, commit, metadata and file-sink logs, the part files and
+    every ``.crc`` twin of a first drain get their modes in the JVM."""
+    topic, out = tmp_path / "topic", tmp_path / "out"
+    _add_file(topic, "a.json", range(10))
+    res, commands = count_spawns(spark, lambda: _drain(spark, topic, out))
+    assert res["dq"]["rows"] == 10
+    assert chmods(commands) == []
 
 
 class _CountingQuery:
