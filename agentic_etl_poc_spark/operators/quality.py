@@ -6,12 +6,16 @@ one set of aggregates:
 
     count(*), sum(isnull(c1)), ..., max(ts)
 
-observed (Spark's ``Observation``) on a ``noop`` write of only the checked
-columns: one distributed pass and one Spark job, with per-task partial
-aggregates merged on the driver — no exchange, no per-column rescans, the
-shape that still works when the frame is 100 TB.  A quarantine split
-(``quarantine_split``) needs no scan at all: the same metrics, restricted
-to the clean rows, ride the write of the violating rows.
+observed (Spark's ``Observation``): one distributed pass and one Spark
+job, with per-task partial aggregates merged on the driver — no exchange,
+no per-column rescans, the shape that still works when the frame is
+100 TB.  A load that writes a stage first needs no scan at all: the plan
+runtime observes the metrics on its stage write (``gate_on``), and a
+quarantine split (``quarantine_write``) observes them, restricted to the
+clean rows, on its one write of every row into the stage, partitioned by
+the violation flag.  A load that writes its target directly (a parquet
+upsert, a JDBC table) is gated first, by the metrics observed on a
+``noop`` write of only the checked columns (``dq_check``).
 
 Result dict matches the reference's JSON exactly:
 ``{"rows": n, "status": bool, "error": str|None}`` with first-failure-wins
@@ -25,6 +29,9 @@ adds ``quarantined``, the count of rows routed away.
 from __future__ import annotations
 
 import datetime as _dt
+import os
+import shutil
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -40,15 +47,22 @@ def lag_minutes(ts: _dt.datetime | None) -> float | None:
     return (_dt.datetime.now(_dt.timezone.utc) - ts).total_seconds() / 60.0
 
 
-def observe_metrics(df: DataFrame, metrics: list, action) -> dict:
-    """The one ``Observation`` builder: run ``action(observed_df)``, which
-    must trigger exactly one Spark action, and return the ``metrics``
-    (aggregate columns, by alias) accumulated during that action."""
+def observe(df: DataFrame, metrics: list) -> tuple[DataFrame, Callable[[], dict]]:
+    """The one ``Observation`` builder: ``df`` with ``metrics`` (aggregate
+    columns, by alias) observed on it, and a function that returns them
+    once exactly one Spark action over the observed frame has run."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    action(df.observe(obs, *metrics))
-    return obs.get
+    return df.observe(obs, *metrics), lambda: obs.get
+
+
+def observe_metrics(df: DataFrame, metrics: list, action) -> dict:
+    """Run ``action(observed_df)``, which must trigger exactly one Spark
+    action, and return the ``metrics`` accumulated during it."""
+    observed, got = observe(df, metrics)
+    action(observed)
+    return got()
 
 
 def observed_scan(df: DataFrame, cols: list[str], metrics: list, label: str) -> dict:
@@ -99,6 +113,14 @@ def _stats(got: dict, columns: list[str], cols: list[str], ts_col: str) -> dict:
     return stats
 
 
+def _gate_columns(
+    df: DataFrame, nonnull_cols: list[str] | None, ts_col: str
+) -> tuple[list[str], str]:
+    """The listed columns present in ``df``, and ``ts_col`` if present."""
+    present = [c for c in dict.fromkeys(nonnull_cols or []) if c in df.columns]
+    return present, ts_col if ts_col and ts_col in df.columns else ""
+
+
 def gate_stats(
     df: DataFrame, nonnull_cols: list[str] | None = None, ts_col: str = ""
 ) -> dict:
@@ -112,8 +134,7 @@ def gate_stats(
 
     Null sums stay raw (``None`` over zero rows): each verdict keeps its
     own reading of an empty frame."""
-    present = [c for c in dict.fromkeys(nonnull_cols or []) if c in df.columns]
-    ts = ts_col if ts_col and ts_col in df.columns else ""
+    present, ts = _gate_columns(df, nonnull_cols, ts_col)
     got = observed_scan(
         df, [*present, ts] if ts else present, _gate_metrics(present, ts),
         "dq_agg",
@@ -121,41 +142,81 @@ def gate_stats(
     return _stats(got, df.columns, present, ts)
 
 
-def quarantine_split(
-    df: DataFrame, nonnull_cols: list[str], write_bad, ts_col: str = ""
-) -> tuple[DataFrame, dict]:
-    """Route the rows of ``df`` with a null in any of ``nonnull_cols`` to
-    ``write_bad(bad_rows)``, which must trigger exactly one action, and
-    take the DQ gate's numbers for the CLEAN rows from that same job.
+def gate_on(
+    df: DataFrame, nonnull_cols: list[str] | None = None, ts_col: str = ""
+) -> tuple[DataFrame, Callable[[], dict]]:
+    """``gate_stats`` without a scan of its own: ``df`` with the same
+    metrics observed on it, and a function that returns them in
+    ``gate_stats``' shape once the caller's one action over that frame
+    (the plan runtime's stage write) has run."""
+    present, ts = _gate_columns(df, nonnull_cols, ts_col)
+    observed, got = observe(df, _gate_metrics(present, ts))
+    return observed, lambda: _stats(got(), df.columns, present, ts)
 
-    Returns the clean rows and their stats in ``gate_stats``' shape
-    (``ts_col``'s max when set) plus ``quarantined``, the violating row
-    count; ``dq_verdict`` reads them as if it had scanned the clean rows.
-    The metrics are observed below the ``filter(viol)``: Spark pushes no
-    Filter below ``CollectMetrics``, so they see every row and select
-    the clean ones themselves (``when(~viol, ...)``).  On a persisted
-    ``df`` the write also fills the cache the sink then reads."""
+
+#: The reserved partition column of the quarantine split's stage write:
+#: the write lays the rows out as ``<path>/dq_quarantined=false|true``.
+QUARANTINE_FLAG = "dq_quarantined"
+
+
+def quarantine_write(
+    df: DataFrame, nonnull_cols: list[str], path: str, ts_col: str = ""
+) -> tuple[str, str, dict]:
+    """Write every row of ``df`` into ``path`` (a new directory in the
+    run's stage) in ONE job, partitioned
+    by whether it has a null in any of ``nonnull_cols``, and take the DQ
+    gate's numbers for the CLEAN rows from that same job.
+
+    Returns the clean and the quarantined directory (each a complete
+    parquet table with ``_SUCCESS``, empty when no row went there) and
+    the clean rows' stats in ``gate_stats``' shape (``ts_col``'s max when
+    set) plus ``quarantined``, the violating row count; ``dq_verdict``
+    reads them as if it had scanned the clean rows.
+
+    The flag has two values, so the write allows two concurrent writers
+    per task (``spark.sql.maxConcurrentOutputFileWriters``): Spark then
+    plans no ``Sort`` by the partition column, and nothing here adds an
+    exchange."""
     from agentic_etl_poc_spark import plan_capture
 
     cols = list(dict.fromkeys(nonnull_cols))
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"quarantine nonnull column not found: {missing[0]}")
-    viol = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in cols])
+    if QUARANTINE_FLAG in df.columns:
+        raise ValueError(f"column name {QUARANTINE_FLAG!r} is reserved")
+    flag = F.col(QUARANTINE_FLAG)
     ts = ts_col if ts_col and ts_col in df.columns else ""
-    metrics = _gate_metrics(cols, ts, where=~viol) + [
-        F.count(F.when(viol, F.lit(1))).alias("quarantined")
+    metrics = _gate_metrics(cols, ts, where=~flag) + [
+        F.count(F.when(flag, F.lit(1))).alias("quarantined")
     ]
+    conf, key = df.sparkSession.conf, "spark.sql.maxConcurrentOutputFileWriters"
 
     def write(observed: DataFrame) -> None:
-        bad = observed.filter(viol)
-        plan_capture.note("quarantine_sink", bad)
-        write_bad(bad)
+        plan_capture.note("quarantine_sink", observed)
+        prev = conf.get(key, None)
+        conf.set(key, "2")
+        try:
+            observed.write.partitionBy(QUARANTINE_FLAG).parquet(path)
+        finally:
+            if prev is None:
+                conf.unset(key)
+            else:
+                conf.set(key, prev)
 
-    got = observe_metrics(df, metrics, write)
+    viol = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in cols])
+    got = observe_metrics(df.withColumn(QUARANTINE_FLAG, viol), metrics, write)
+    sides = [os.path.join(path, f"{QUARANTINE_FLAG}={v}") for v in ("false", "true")]
+    for side in sides:
+        if os.path.isdir(side):
+            for f in ("_SUCCESS", "._SUCCESS.crc"):
+                if os.path.exists(os.path.join(path, f)):
+                    shutil.copyfile(os.path.join(path, f), os.path.join(side, f))
+        else:  # no row went this way: a readable empty table
+            df.limit(0).write.parquet(side)
     stats = _stats(got, df.columns, cols, ts)
     stats["quarantined"] = int(got["quarantined"])
-    return df.filter(~viol), stats
+    return sides[0], sides[1], stats
 
 
 def dq_check(

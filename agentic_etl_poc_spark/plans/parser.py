@@ -31,6 +31,15 @@ _FENCE_RE = re.compile(r"```(?:yaml|yml)?\s*\n(.*?)\n```", re.DOTALL | re.IGNORE
 _HEREDOC_RE = re.compile(r"^mel <<EOF\n?(.*)\nEOF\s*$", re.DOTALL)
 _PLAN_KEYS = ("limits:", "source:", "transform:", "load:", "checks:", "verify:", "alerts:")
 
+#: libyaml's safe loader when PyYAML was built with it (the same document
+#: model as ``yaml.SafeLoader``, about ten times faster on a plan).
+_LOADER = getattr(yaml, "CSafeLoader", yaml.SafeLoader)
+
+
+def load_yaml(text: str) -> Any:
+    """``yaml.safe_load`` through ``_LOADER``."""
+    return yaml.load(text, Loader=_LOADER)
+
 
 def strip_wrappers(text: str) -> str:
     """Remove markdown fences / heredoc wrappers around a YAML plan."""
@@ -67,7 +76,7 @@ def looks_like_plan(text: str) -> bool:
 
 def to_yaml_map(text: str) -> dict[str, Any]:
     s = strip_wrappers(expand_env(text))
-    doc = yaml.safe_load(s)  # duplicate keys: last-wins (PyYAML behavior)
+    doc = load_yaml(s)  # duplicate keys: last-wins (PyYAML behavior)
     if not isinstance(doc, dict):
         raise ValueError(f"Plan YAML must be a mapping; got {type(doc).__name__}")
     return doc

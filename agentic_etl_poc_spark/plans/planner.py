@@ -30,7 +30,7 @@ from typing import Any
 
 import yaml
 
-from agentic_etl_poc_spark.plans.parser import strip_wrappers
+from agentic_etl_poc_spark.plans.parser import load_yaml, strip_wrappers
 
 #: System prompt for an injected LLM planner — same contract the reference
 #: gives its planner agent (etl_agent/agents.py:24-33), restated.
@@ -192,7 +192,7 @@ def plan_from_prompt(
     """
     if llm is not None:
         raw = strip_wrappers(llm(PLANNER_SYSTEM, text))
-        doc = yaml.safe_load(raw)
+        doc = load_yaml(raw)
         if not isinstance(doc, dict):
             raise ValueError("LLM planner did not return a YAML mapping")
         return raw

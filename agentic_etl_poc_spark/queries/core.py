@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import atexit
 import fcntl
+import glob
 import hashlib
 import json
 import math
@@ -108,8 +109,11 @@ def staged(
     while the root has no done-marker, under an exclusive ``flock`` on
     the tag directory (kernel-released on a crash), so two processes
     never build the same copy at once; the marker is written last,
-    through tmp + rename.  Give a stager a new ``tag`` when its output
-    layout changes.
+    through tmp + rename.  Under the same lock, a newly built root
+    replaces every other copy of the tag and sf dir (superseded digests
+    and the flat layout of older checkouts), except an embedded Derby
+    database a live JVM has booted (``_booted_derby``).  Give a stager a
+    new ``tag`` when its output layout changes.
     """
     fps = repr(
         tuple(fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
@@ -134,9 +138,32 @@ def staged(
             with open(done + ".tmp", "w") as f:
                 f.write(fps)
             os.rename(done + ".tmp", done)
+            sf_root = os.path.dirname(root)
+            for d in os.listdir(sf_root):
+                old = os.path.join(sf_root, d)
+                if old == root or _booted_derby(old):
+                    continue
+                if os.path.isdir(old) and not os.path.islink(old):
+                    shutil.rmtree(old, ignore_errors=True)
+                else:
+                    os.remove(old)
     finally:
         os.close(lock)
     return root
+
+
+def _booted_derby(root: str) -> bool:
+    """Whether a live JVM has booted an embedded Derby database directly
+    under ``root``: Derby holds a POSIX lock on the database's
+    ``dbex.lck`` while it is booted (the file itself outlives the JVM)."""
+    for lck in glob.glob(os.path.join(root, "*", "dbex.lck")):
+        with open(lck, "r+") as f:
+            try:
+                fcntl.lockf(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except OSError:
+                return True
+            fcntl.lockf(f, fcntl.LOCK_UN)
+    return False
 
 
 #: The latest run root per (entry tag, sf_dir), for ``run_root``.

@@ -10,18 +10,28 @@ reference's exact control flow and result shapes:
   (reference: etl_agent/templates.py:123-170)
 
 Spark-native twists:
-- the transform chain stays lazy; its FIRST action is the DQ gate (the
-  quarantine write, when the plan splits one off).
-- the output frame is persisted (memory-and-disk) across the DQ action and
-  the sink write, so the pipeline computes the transform once, not twice.
+- the transform chain stays lazy; its first action is the stage write,
+  the quarantine write, or (for a load that writes its target directly)
+  the DQ gate's scan.
+- write–audit–publish: a file load (CSV, parquet overwrite/replace/append)
+  writes into a hidden stage beside its target, the DQ gate and verify
+  judge the stage, and only a passing run publishes it through the
+  journaled commit (``parquet_sink.publish``: an overwrite swaps the
+  directory or file, an append moves the new part files).  A failed
+  gate, write or verify leaves the target byte-identical and the
+  watermark where it was; a rejected run has written (and deleted) its
+  stage.  A parquet upsert keeps its own staged commit; a JDBC load
+  writes its table directly.
+- nothing is persisted except a parquet upsert's batch, which its merge
+  reads twice: every other batch load computes the transform once.
 - alert/status hooks are injectable callables; defaults print like the
   reference (``ALERT to {channel}: {message}`` / ``STATUS[{step}]:``,
   reference: tools.py:267-277).
 
-Spark actions per stage (each stage runs one; a number the run already
-holds is passed on, not recounted).  Every gate aggregate is observed on
-a ``noop`` scan of the columns it checks (``quality.observed_scan``): one
-Spark job, no exchange.
+Spark actions per stage (a number the run already holds is passed on,
+not recounted).  Every gate aggregate is an ``Observation``: on a
+``noop`` scan of the columns it checks (``quality.observed_scan``, one
+Spark job, no exchange) or on a write the run makes anyway.
 
 - extract: only the reader's own (a source without a declared schema
   infers one with one job).  Parquet sources go through the session's
@@ -30,23 +40,31 @@ Spark job, no exchange.
 - incremental: one observed ``max(ts)`` scan for the new watermark, over
   the filtered source, kept apart from the DQ gate so the watermark
   means "newest source row seen" whatever the transform filters.
-- DQ gate: one observed scan (rows, per-column nulls, max ts).  It is
-  the first action, and the same job fills the cache the sink then reads.
-- quarantine split: the split and the DQ gate are ONE job, the write of
-  the violating rows (``quality.quarantine_split``).  The gate's metrics,
-  restricted to the clean rows, plus the quarantined count are observed
-  on the persisted frame below the write's filter, so the gate runs no
-  scan of its own; the write is the first action and fills the cache.
-- load: the sink write; every sink takes the DQ row count as
-  ``row_count`` instead of counting again.  A parquet upsert also
-  collects its touched partition values.  A write that raises fails the
-  run with ``write_error`` (``{"status": "failed", "load": {...}}``).
+- DQ gate: for a file load, no job of its own: its metrics (rows,
+  per-column nulls, max ts) are observed on the stage write.  A parquet
+  upsert or JDBC load, which writes its target, is gated first by one
+  observed scan of the checked columns (``dq_check``).
+- quarantine split: the split, the DQ gate and a parquet load are ONE
+  job (``quality.quarantine_write``): ``out`` is written into the stage
+  partitioned by a violation flag, with the gate's clean-row metrics and
+  the quarantined count observed on the write.  The flag's two
+  directories publish to ``quarantine_path`` and, for an unpartitioned
+  parquet overwrite/append on the same filesystem, to the target; any
+  other load reads the clean rows back from the stage.
+- load: the stage write, whose observed row count the load message
+  reports; a parquet upsert or JDBC load takes the DQ row count as
+  ``row_count`` instead of counting again, and an upsert also collects
+  its touched partition values.  A write that raises fails the run with
+  ``write_error`` (``{"status": "failed", "load": {...}}``), and so does
+  a publish that fails before its journal; one that fails after it
+  raises (the commit is decided: ``recover_table`` rolls it forward).
 - verify: one re-read of the written artifact and one observed scan — a
   separate scan on purpose, because catching sink corruption is its job.
-  A parquet overwrite or append is re-read with the schema it was
-  written with, so no inference job; an upsert's re-read infers, because
-  its merge can widen the table.  A re-read that raises fails the run
-  with ``read_error``.
+  A staged parquet load is re-read with the schema it was written with,
+  so no inference job; an upsert's re-read infers, because its merge can
+  widen the table.  An append's verify counts the staged increment, not
+  the whole table.  A re-read that raises fails the run with
+  ``read_error``.
 - stream plans: the AvailableNow drain, then ONE observed scan of the
   drained artifact, read with the stream's schema, over the union of the
   DQ and verify columns; both verdicts are derived from its metrics
@@ -56,22 +74,25 @@ Spark job, no exchange.
 from __future__ import annotations
 
 import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import functions as F
 
 from agentic_etl_poc_spark.operators.quality import (
     dq_check,
     dq_verdict,
+    gate_on,
     gate_stats,
     observed_scan,
-    quarantine_split,
+    quarantine_write,
 )
 from agentic_etl_poc_spark.operators.transform import run_single_sql, run_steps
 from agentic_etl_poc_spark.operators.verify import verify_csv, verify_table
 from agentic_etl_poc_spark.plans.model import Plan
 from agentic_etl_poc_spark.plans.parser import infer_kind, parse_plan
+from agentic_etl_poc_spark.sinks import parquet_sink
 from agentic_etl_poc_spark.sinks.csv_sink import write_csv
 from agentic_etl_poc_spark.sinks.jdbc_sink import load_to_postgres
 from agentic_etl_poc_spark.sources.csv_source import read_csv, read_csv_triplet
@@ -138,8 +159,6 @@ def _local_source_bytes(src, kind: str) -> int:
     """On-disk bytes a sub-source admits (0 for sources with no local
     path — db/api/parquet) — the draw-down unit for the multi-source
     cumulative input cap."""
-    import os
-
     path = None
     if kind == "csv" and src.csv is not None:
         path = src.csv.path
@@ -289,34 +308,290 @@ def _failed(
     return {"status": "failed", gate: verdict}
 
 
-def _load(out: DataFrame, ld, row_count: int) -> str:
-    """Write ``out`` to the plan's sink; every sink takes the DQ row
-    count instead of counting again.  Returns the sink's message."""
-    if ld.to == "csv":
-        if not ld.file_path:
-            raise ValueError("csv load requires load.file_path")
-        return write_csv(
-            out, ld.file_path, include_header=ld.include_header,
-            row_count=row_count,
-        )
+def _verify(
+    spark: SparkSession,
+    plan: Plan,
+    path: str,
+    schema,
+    dq: dict,
+    msg: str,
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """The verify gate over the artifact at ``path`` (the stage of a
+    file load, the target of an upsert, the table of a JDBC load), and
+    the run's result: ``ok`` with ``dq`` and the load message ``msg``,
+    or the failed verify."""
+    vf, cks, ld = plan.verify, plan.checks, plan.load
+    min_rows = vf.min_rows if vf.min_rows is not None else cks.min_rows
+    nonnull = vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols
     if ld.to == "parquet":
-        from agentic_etl_poc_spark.sinks.parquet_sink import write_parquet
+        from agentic_etl_poc_spark.sinks.parquet_sink import verify_parquet
 
-        if not ld.file_path:
-            raise ValueError("parquet load requires load.file_path")
-        return write_parquet(
-            out,
-            ld.file_path,
-            mode=ld.mode,
-            partition_by=ld.partition_by,
-            key_cols=ld.key_cols,
-            change_feed=ld.change_feed,
-            row_count=row_count,
+        ver = verify_parquet(
+            spark, path, min_rows=min_rows, nonnull_cols=nonnull, schema=schema
         )
-    return load_to_postgres(
-        out, ld.conn_str, ld.table, mode=ld.mode,
-        key_cols=ld.key_cols, row_count=row_count,
+    elif ld.to == "csv":
+        ver = verify_csv(
+            spark, path, min_rows=min_rows, nonnull_cols=nonnull,
+            timestamp_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
+            include_header=ld.include_header,
+        )
+    else:
+        ver = verify_table(
+            spark, ld.conn_str, ld.table,
+            ts_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
+        )
+    if not ver.get("status", False):
+        return _failed(plan, send_alert, "verify", ver)
+    return {"status": "ok", "dq": dq, "message": msg, "verify": ver}
+
+
+def _run_batch_tail(
+    spark: SparkSession,
+    plan: Plan,
+    out: DataFrame,
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """DQ gate → load → verify → publish for a batch plan.
+
+    A file load (CSV, parquet overwrite/replace/append) writes into a
+    hidden stage beside its target with the DQ gate's metrics observed on
+    that write; the gate, then verify (a re-read of the stage) decide,
+    and only a passing run publishes the stage (``_load``).  A failed
+    gate, write or verify leaves the target as it was.  A parquet upsert
+    (its own staged commit) and a JDBC load (transactional) write their
+    target directly, so their gate scans first (``dq_check``).  A
+    quarantine plan's gate rides its split write (``_run_quarantine``)."""
+    cks, ld = plan.checks, plan.load
+    if ld.to in ("csv", "parquet") and not ld.file_path:
+        raise ValueError(f"{ld.to} load requires load.file_path")
+    if ld.to == "parquet" and ld.mode not in ("overwrite", "replace", "append", "upsert"):
+        raise ValueError(f"unknown parquet load mode: {ld.mode!r}")
+    if cks.quarantine_path and cks.nonnull_cols:
+        return _run_quarantine(spark, plan, out, send_alert)
+    if _staged(ld):
+        return _load(spark, plan, out, None, send_alert)
+    upsert = ld.to == "parquet"
+    if upsert:
+        # the upsert reads its batch twice (touched partitions, then the
+        # merge): compute the transform once
+        out = out.persist()
+    try:
+        dq = dq_check(out, **_gate(cks))
+        if not dq["status"]:
+            return _failed(plan, send_alert, "dq", dq)
+        return _load_in_place(spark, plan, out, dq, send_alert)
+    finally:
+        if upsert:
+            out.unpersist()
+
+
+def _staged(ld) -> bool:
+    """Whether the load writes a stage (a file load) rather than its
+    target (a parquet upsert, a JDBC table)."""
+    return ld.to == "csv" or (ld.to == "parquet" and ld.mode != "upsert")
+
+
+def _gate(cks) -> dict:
+    return dict(
+        min_rows=cks.min_rows,
+        nonnull_cols=cks.nonnull_cols,
+        freshness_minutes=cks.freshness_minutes,
+        timestamp_col=cks.timestamp_col,
     )
+
+
+def _gate_ts(cks) -> str:
+    """The column whose max the gate observes (only for freshness)."""
+    return cks.timestamp_col if cks.freshness_minutes else ""
+
+
+def _run_quarantine(
+    spark: SparkSession,
+    plan: Plan,
+    out: DataFrame,
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """A quarantine plan: ``out`` is written once into a stage, split by
+    its violation flag (``quality.quarantine_write``), with the DQ gate's
+    clean-row metrics observed on that write.  The violating rows are
+    published to ``quarantine_path`` whatever the gate and verify decide.
+
+    For an unpartitioned parquet overwrite/append on the filesystem that
+    holds ``quarantine_path``, the stage sits beside the target and the
+    clean side, once verified, is published as written: split, gate and
+    load are one job.  Any other load gets its clean rows read back from
+    the stage, which then sits beside ``quarantine_path`` (``_load``)."""
+    cks, ld = plan.checks, plan.load
+    qpath = cks.quarantine_path
+    as_written = (
+        _staged(ld)
+        and ld.to == "parquet"
+        and not ld.partition_by
+        and parquet_sink.same_device(ld.file_path, qpath)
+    )
+    with parquet_sink.staging(ld.file_path if as_written else qpath) as stage:
+        if as_written:
+            parquet_sink.recover_table(qpath)
+        clean, bad, stats = quarantine_write(
+            out, cks.nonnull_cols, os.path.join(stage, "split"), _gate_ts(cks)
+        )
+        dq = dq_verdict(stats, **_gate(cks))
+        dq["quarantined"] = stats["quarantined"]
+        swaps: list[tuple[str, str]] = []
+        appends: list[tuple[str, str]] = []
+        if not dq["status"]:
+            res = _failed(plan, send_alert, "dq", dq)
+        elif as_written:
+            msg = parquet_sink.wrote(dq["rows"], ld.file_path)
+            res, swaps, appends = _verified(
+                spark, plan, clean, out.schema, dq, msg, send_alert
+            )
+        else:
+            clean_df = spark.read.schema(out.schema).parquet(clean)
+            res = _load(spark, plan, clean_df, dq, send_alert)
+        return _publish(plan, stage, res, [(bad, qpath), *swaps], appends, send_alert)
+
+
+def _load(
+    spark: SparkSession,
+    plan: Plan,
+    out: DataFrame,
+    dq: dict | None,
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """Load and verify ``out``; ``dq`` is the gate's verdict when it
+    already ran (a quarantine split's), else a file load takes it from
+    its stage write.  A file load writes, gates and verifies a stage
+    beside its target, and publishes it if the run passes; any other load
+    writes its target (``_load_in_place``)."""
+    if not _staged(plan.load):
+        return _load_in_place(spark, plan, out, dq, send_alert)
+    with parquet_sink.staging(plan.load.file_path) as stage:
+        res, swaps, appends = _write_stage(spark, plan, out, dq, stage, send_alert)
+        return _publish(plan, stage, res, swaps, appends, send_alert)
+
+
+def _write_stage(
+    spark: SparkSession,
+    plan: Plan,
+    out: DataFrame,
+    dq: dict | None,
+    stage: str,
+    send_alert: Callable[[str, str], str],
+) -> tuple[dict, list[tuple[str, str]], list[tuple[str, str]]]:
+    """Write ``out`` into ``stage`` through the plan's file sink, with
+    the DQ gate's metrics observed on that write (``quality.gate_on``),
+    then gate (unless ``dq`` is the verdict already) and verify the
+    staged copy.  Returns the result and ``_verified``'s publish lists."""
+    from agentic_etl_poc_spark import plan_capture
+
+    cks, ld = plan.checks, plan.load
+    data = os.path.join(stage, os.path.basename(os.path.abspath(ld.file_path)))
+    observed, stats = gate_on(out, cks.nonnull_cols, _gate_ts(cks))
+
+    def rows() -> int:
+        return stats()["rows"]
+
+    plan_capture.note("sink_input", out)
+    try:
+        if ld.to == "csv":
+            msg = write_csv(
+                observed, data, include_header=ld.include_header,
+                row_count=rows, target=ld.file_path,
+            )
+        else:
+            msg = parquet_sink.write_parquet(
+                observed, data, partition_by=ld.partition_by,
+                row_count=rows, target=ld.file_path,
+            )
+    except parquet_sink.READ_ERRORS as e:
+        verdict = parquet_sink.error_verdict(e, "write_error")
+        return _failed(plan, send_alert, "load", verdict), [], []
+    if dq is None:
+        dq = dq_verdict(stats(), **_gate(cks))
+        if not dq["status"]:
+            return _failed(plan, send_alert, "dq", dq), [], []
+    return _verified(spark, plan, data, out.schema, dq, msg, send_alert)
+
+
+def _verified(
+    spark: SparkSession,
+    plan: Plan,
+    data: str,
+    schema,
+    dq: dict,
+    msg: str,
+    send_alert: Callable[[str, str], str],
+) -> tuple[dict, list[tuple[str, str]], list[tuple[str, str]]]:
+    """Verify the staged ``data``.  Returns the result and, when it
+    passed, how ``data`` publishes to the target (``parquet_sink.publish``'s
+    swaps and appends): an append moves its files, anything else swaps."""
+    ld = plan.load
+    res = _verify(spark, plan, data, schema, dq, msg, send_alert)
+    if res["status"] != "ok":
+        return res, [], []
+    if ld.to == "parquet" and ld.mode == "append":
+        return res, [], [(data, ld.file_path)]
+    return res, [(data, ld.file_path)], []
+
+
+def _publish(
+    plan: Plan,
+    stage: str,
+    res: dict,
+    swaps: list[tuple[str, str]],
+    appends: list[tuple[str, str]],
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """Publish from ``stage`` and return the run's result.  A publish
+    that fails before its journal published nothing, and fails a passing
+    run's load with ``write_error``.  From the journal on the commit is
+    decided: the error propagates, and the next ``recover_table`` of the
+    target rolls the commit forward."""
+    if swaps or appends:
+        try:
+            parquet_sink.publish(stage, swaps, appends)
+        except OSError as e:
+            if res["status"] != "ok" or parquet_sink.journaled(stage):
+                raise
+            verdict = parquet_sink.error_verdict(e, "write_error")
+            return _failed(plan, send_alert, "load", verdict)
+    return res
+
+
+def _load_in_place(
+    spark: SparkSession,
+    plan: Plan,
+    out: DataFrame,
+    dq: dict,
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """Load and verify for a sink that writes its target directly (a
+    parquet upsert, a JDBC table); both take the DQ row count instead of
+    counting again."""
+    from agentic_etl_poc_spark import plan_capture
+
+    ld = plan.load
+    plan_capture.note("sink_input", out)
+    try:
+        if ld.to == "parquet":
+            msg = parquet_sink.write_parquet(
+                out, ld.file_path, mode=ld.mode, partition_by=ld.partition_by,
+                key_cols=ld.key_cols, change_feed=ld.change_feed,
+                row_count=dq["rows"],
+            )
+        else:
+            msg = load_to_postgres(
+                out, ld.conn_str, ld.table, mode=ld.mode,
+                key_cols=ld.key_cols, row_count=dq["rows"],
+            )
+    except parquet_sink.READ_ERRORS as e:
+        verdict = parquet_sink.error_verdict(e, "write_error")
+        return _failed(plan, send_alert, "load", verdict)
+    # an upsert's merge can evolve the table wider than the batch: its
+    # re-read infers the schema
+    return _verify(spark, plan, ld.file_path, None, dq, msg, send_alert)
 
 
 def run_from_plan(
@@ -349,15 +624,13 @@ def run_from_plan(
                 "stream source already has exactly-once increment "
                 "bookkeeping in its checkpoint"
             )
-        from pyspark.sql import functions as _F
-
         from agentic_etl_poc_spark.memory import RunLedger
 
         ledger = RunLedger(inc.ledger)
         wm = ledger.get_state(f"watermark:{inc.key}")
         if wm is not None:
             src_df = src_df.filter(
-                _F.col(inc.ts_col) > _F.lit(wm).cast("timestamp")
+                F.col(inc.ts_col) > F.lit(wm).cast("timestamp")
             )
             src_df.createOrReplaceTempView("input_df")
         # High-watermark of THIS increment: a max observed on one scan of
@@ -371,8 +644,8 @@ def run_from_plan(
             src_df,
             [inc.ts_col],
             [
-                _F.date_format(
-                    _F.max(inc.ts_col), "yyyy-MM-dd HH:mm:ss.SSSSSS"
+                F.date_format(
+                    F.max(inc.ts_col), "yyyy-MM-dd HH:mm:ss.SSSSSS"
                 ).alias("m")
             ],
             "incremental_max",
@@ -393,110 +666,20 @@ def run_from_plan(
         # docstring): materialize the drain first, then gate the artifact.
         return _run_stream_plan_tail(spark, plan, out, send_alert, report_status)
 
-    # Persist across the DQ action and the sink write — one compute, two
-    # uses.  Keep the persisted handle: the quarantine split below rebinds
-    # ``out`` to a filtered child, and unpersisting the child would leak
-    # the parent's storage.
-    out = persisted = out.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        cks = plan.checks
-        # 3) DQ gate, the first action.  With a quarantine split (engine
-        # extension, plans/model.py) rows violating the nonnull checks are
-        # ROUTED to a parquet quarantine sink instead of failing the plan,
-        # and the gate judges only the clean rows (min_rows applies to
-        # what reaches the sink; an unset path keeps the reference's
-        # alert-and-abort gate).  The gate's numbers then ride the
-        # quarantine write instead of a scan of their own.
-        gate = dict(
-            min_rows=cks.min_rows,
-            nonnull_cols=cks.nonnull_cols,
-            freshness_minutes=cks.freshness_minutes,
-            timestamp_col=cks.timestamp_col,
-        )
-        if cks.quarantine_path and cks.nonnull_cols:
-            out, stats = quarantine_split(
-                out,
-                cks.nonnull_cols,
-                lambda bad: bad.write.mode("overwrite").parquet(
-                    cks.quarantine_path
-                ),
-                cks.timestamp_col if cks.freshness_minutes else "",
-            )
-            dq = dq_verdict(stats, **gate)
-            dq["quarantined"] = stats["quarantined"]
-        else:
-            dq = dq_check(out, **gate)
-        if not dq["status"]:
-            return _failed(plan, send_alert, "dq", dq)
+    # 3-5) DQ gate, load, verify, publish
+    res = _run_batch_tail(spark, plan, out, send_alert)
+    if res["status"] != "ok":
+        return res
+    report_status("load", res["message"])
 
-        # 4) load: a sink write that raises fails the run; nothing is
-        # verified and the watermark stays where it was
-        from agentic_etl_poc_spark import plan_capture
-        from agentic_etl_poc_spark.sinks.parquet_sink import (
-            READ_ERRORS,
-            error_verdict,
-        )
-
-        plan_capture.note("sink_input", out)
-        ld = plan.load
-        try:
-            msg = _load(out, ld, dq["rows"])
-        except READ_ERRORS as e:
-            return _failed(
-                plan, send_alert, "load", error_verdict(e, "write_error")
-            )
-    finally:
-        persisted.unpersist()
-
-    # 5) verify gate (re-reads the artifact)
-    vf = plan.verify
-    if ld.to == "parquet":
-        from agentic_etl_poc_spark.sinks.parquet_sink import verify_parquet
-
-        ver = verify_parquet(
-            spark,
-            ld.file_path,
-            min_rows=vf.min_rows if vf.min_rows is not None else plan.checks.min_rows,
-            nonnull_cols=(
-                vf.nonnull_cols
-                if vf.nonnull_cols is not None
-                else plan.checks.nonnull_cols
-            ),
-            # an upsert's merge can evolve the table wider than the batch
-            schema=None if ld.mode == "upsert" else out.schema,
-        )
-    elif ld.to == "csv":
-        ver = verify_csv(
-            spark,
-            ld.file_path,
-            min_rows=vf.min_rows if vf.min_rows is not None else plan.checks.min_rows,
-            nonnull_cols=(
-                vf.nonnull_cols
-                if vf.nonnull_cols is not None
-                else plan.checks.nonnull_cols
-            ),
-            timestamp_col=vf.ts_col,
-            max_lag_minutes=vf.max_lag_minutes,
-            include_header=ld.include_header,
-        )
-    else:
-        ver = verify_table(
-            spark, ld.conn_str, ld.table,
-            ts_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
-        )
-    if not ver.get("status", False):
-        return _failed(plan, send_alert, "verify", ver)
-
-    report_status("load", msg)
-
-    # Advance the incremental watermark ONLY after a verified load —
-    # a failed run leaves it untouched, so the next tick reprocesses.
+    # Advance the incremental watermark ONLY after a verified, published
+    # load — a failed run leaves it untouched, so the next tick
+    # reprocesses.
     if inc and inc.ts_col and new_watermark is not None:
         from agentic_etl_poc_spark.memory import RunLedger
 
         RunLedger(inc.ledger).set_state(f"watermark:{inc.key}", new_watermark)
-
-    return {"status": "ok", "dq": dq, "message": msg, "verify": ver}
+    return res
 
 
 def _run_stream_plan_tail(
@@ -517,7 +700,7 @@ def _run_stream_plan_tail(
     if cks.quarantine_path:
         raise ValueError(
             "checks.quarantine_path is a batch-plan feature (the split "
-            "re-reads one persisted transform; a stream cannot persist) — "
+            "is one staged batch write of the whole transform) — "
             "quarantine streaming rows with a foreachBatch sink instead"
         )
     ld = plan.load
@@ -555,7 +738,7 @@ def _run_stream_plan_tail(
         stats = gate_stats(
             spark.read.schema(out.schema).parquet(ld.file_path),
             [*(cks.nonnull_cols or []), *(ver_cols or [])],
-            cks.timestamp_col if cks.freshness_minutes else "",
+            _gate_ts(cks),
         )
     except READ_ERRORS as e:
         return _failed(plan, send_alert, "verify", error_verdict(e))

@@ -9,13 +9,28 @@ downstream scans, append/replace/upsert semantics.  ``upsert_parquet`` is
 the portable Delta/Iceberg ``MERGE INTO`` (copy-on-write), with a
 journaled table-level commit, schema evolution, and an opt-in row-level
 change feed (the plain-parquet equivalent of Delta's change-data-feed).
+
+Every staged write publishes through one journaled commit (``_commit``):
+the upsert's partition swaps, and the plan runtime's write–audit–publish
+of a batch load (``staging`` → write and verify the stage → ``publish``:
+an overwrite swaps the table directory or CSV file, an append moves its
+new part files with their ``.crc`` twins).  Every rename stays on one
+filesystem (checked before the journal), and a journal naming every
+rename is written before the first one, so ``recover_table`` rolls a
+crashed commit forward, and sweeps a stage that never reached its
+journal and that no live run holds.
 """
 
 from __future__ import annotations
 
+import contextlib
+import errno
+import fcntl
 import json
 import os
 import shutil
+import tempfile
+from collections.abc import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
@@ -63,92 +78,291 @@ def _leaf_partition_dirs(root: str) -> list[str]:
     return sorted(out)
 
 
-def _retired_name(rel: str) -> str:
-    """Dot-prefixed retire name for a partition dir being replaced: a
-    crash between the two renames must leave residue every reader
-    (Spark listing, partition_signatures, the next merge read) ignores —
-    a bare ``yr=V__precommit`` would be discovered as a partition and
-    poison the table with stale duplicate rows."""
-    head, leaf = os.path.split(rel)
-    return os.path.join(head, ".precommit_" + leaf) if head else ".precommit_" + leaf
+def _retired(dst: str) -> str:
+    """Dot-prefixed retire name beside ``dst``, for the old copy a swap
+    replaces: a crash between the two renames must leave residue every
+    reader (Spark listing, partition_signatures, the next merge read)
+    ignores — a bare ``yr=V__precommit`` would be discovered as a
+    partition and poison the table with stale duplicate rows."""
+    head, leaf = os.path.split(dst)
+    return os.path.join(head, ".precommit_" + leaf)
+
+
+def _remove(p: str) -> None:
+    if os.path.isdir(p):
+        shutil.rmtree(p)
+    else:
+        os.remove(p)
+
+
+def _device(path: str) -> int:
+    """The filesystem holding ``path``, or the one a new ``path`` would
+    land on (its nearest existing ancestor's)."""
+    path = os.path.abspath(path)
+    while not os.path.exists(path):
+        path = os.path.dirname(path)
+    return os.stat(path).st_dev
+
+
+def same_device(a: str, b: str) -> bool:
+    """Whether one rename can move an entry beside ``a`` to beside ``b``."""
+    return _device(os.path.dirname(os.path.abspath(a))) == _device(
+        os.path.dirname(os.path.abspath(b))
+    )
+
+
+def _commit(
+    jpath: str,
+    stage: str,
+    swaps: list[tuple[str, str]],
+    moves: list[tuple[str, str]],
+) -> None:
+    """The one journaled commit of a completed stage write (absolute
+    paths throughout).  Each ``(src, dst)`` swap replaces ``dst`` — a
+    partition directory, a whole table directory or a file — by ``src``;
+    each ``(src, dst)`` move renames ``src`` to ``dst`` unless ``dst``
+    exists.
+
+    Before the journal, nothing is published: the destinations' parent
+    directories are created, so a target that cannot hold them (a plain
+    file where a table directory belongs) fails here, and a rename that
+    would cross filesystems fails here with ``EXDEV``.  Then the journal
+    naming the stage and every rename is written (tmp + atomic rename):
+    from there the commit is decided.  It is repeatable from the stage
+    alone, an error propagates as it is, and ``recover_table`` rolls the
+    commit forward."""
+    for src, dst in [*swaps, *moves]:
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        if _device(src) != _device(os.path.dirname(dst)):
+            raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), dst)
+    with open(jpath + ".tmp", "w") as f:
+        json.dump({"stage": stage, "swaps": swaps, "moves": moves}, f)
+    os.rename(jpath + ".tmp", jpath)
+    _roll_forward(jpath)
+
+
+def _journal(jpath: str) -> dict:
+    """The journal at ``jpath``.  An upsert journal written before batch
+    loads shared the commit names its renames relative to the stage and
+    to the table holding the journal (``swaps``: partition paths,
+    ``extras``: ``[src, dst]`` pairs); it reads as the same renames."""
+    with open(jpath) as f:
+        j = json.load(f)
+    if "extras" in j or any(isinstance(s, str) for s in j["swaps"]):
+        stage, table = j["stage"], os.path.dirname(jpath)
+        j["swaps"] = [
+            (os.path.join(stage, rel), os.path.join(table, rel)) for rel in j["swaps"]
+        ]
+        j["moves"] = [
+            (os.path.join(stage, src), os.path.join(table, dst))
+            for src, dst in j.pop("extras", [])
+        ]
+    return j
+
+
+def _roll_forward(jpath: str) -> list[str]:
+    """Complete the commit ``jpath`` journals, idempotently: swap in what
+    the stage still holds, restore a retired copy whose swap-in is gone
+    (cannot happen under the write ordering, but never delete the only
+    copy), do the moves not yet done, then remove the retired copies, the
+    journal and the stage.  Returns the renames it did."""
+    j = _journal(jpath)
+    actions: list[str] = []
+    for src, dst in j["swaps"]:
+        old = _retired(dst)
+        if os.path.exists(src):
+            if os.path.exists(dst):
+                if os.path.exists(old):
+                    _remove(old)
+                _rename(dst, old)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            _rename(src, dst)
+            actions.append(f"swap {dst}")
+        elif not os.path.exists(dst) and os.path.exists(old):
+            _rename(old, dst)
+            actions.append(f"restore {dst}")
+    for src, dst in j["moves"]:
+        if os.path.exists(src) and not os.path.exists(dst):
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            _rename(src, dst)
+            actions.append(f"move {dst}")
+    for old in [_retired(dst) for _, dst in j["swaps"]]:
+        if os.path.exists(old):
+            _remove(old)
+    os.remove(jpath)
+    shutil.rmtree(j["stage"], ignore_errors=True)
+    return actions
+
+
+#: Infix of the hidden stage directories a batch load writes beside its
+#: target (``.<target name>.stage-<random>``).
+_STAGE = ".stage-"
+
+#: The lock file inside a stage: its run holds an exclusive ``flock`` on
+#: it for as long as the run lives.
+_LOCK = ".lock"
+
+
+def _stages(path: str) -> list[str]:
+    parent, name = os.path.split(path)
+    prefix = f".{name}{_STAGE}"
+    return sorted(
+        os.path.join(parent, d)
+        for d in (os.listdir(parent) if os.path.isdir(parent) else [])
+        if d.startswith(prefix)
+    )
+
+
+def _claim(stage: str) -> int | None:
+    """The open lock of a stage that no live run holds, or None: a run
+    holds it (a ``flock`` conflicts across open files, in this process
+    too), or the stage has no lock file yet (it is being made)."""
+    try:
+        fd = os.open(os.path.join(stage, _LOCK), os.O_RDWR)
+    except FileNotFoundError:
+        return None
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except OSError:
+        os.close(fd)
+        return None
+    return fd
 
 
 def recover_table(path: str) -> str:
-    """Bring a COW table to a committed state after a crash — called by
-    every writer (and by ``read_table``) before touching the table.
+    """Bring a table (or a CSV artifact) to a committed state after a
+    crash — called by every writer (and by ``read_table``) before
+    touching it.
 
-    * Journal present: the stage write had fully completed before the
-      journal was created (write ordering), so the commit is ROLLED
-      FORWARD — remaining partition swaps and extra renames are
-      completed idempotently, then residue and the journal are cleared.
-      A reader that opens the table after a crash at ANY rename sees
-      the entire new commit, never a mix.
+    * A journal present (in a stage beside ``path``, or an upsert's in
+      ``path``): the stage write had fully completed before the journal
+      was created (write ordering), so the commit is ROLLED FORWARD —
+      remaining swaps and moves are completed idempotently, then residue,
+      the journal and the stage are cleared.  A reader that opens the
+      table after a crash at ANY rename sees the entire new commit, never
+      a mix.
     * No journal: any ``.precommit_`` residue is from a commit that
       already completed its swaps (residue deletion is post-journal) or
-      from external meddling — residue whose live partition dir is
-      MISSING is restored (it may be the only copy of those rows);
-      residue whose live dir exists is stale and is deleted.  Orphan
-      ``.upsert_stage_`` dirs (crash before the journal existed) are
-      swept: the old table state is intact, the aborted batch simply
-      never happened.
+      from external meddling — residue whose live copy is MISSING is
+      restored (it may be the only copy of those rows); residue whose
+      live copy exists is stale and is deleted.  Stages without a
+      journal (a crash or a failed gate before the commit) are swept:
+      the old table state is intact, the aborted batch simply never
+      happened.
+
+    A stage that a live run holds (``staging``) is neither rolled
+    forward nor swept, and while one exists the residue is left alone
+    too (``"in use"``): that run is writing, verifying or publishing.
     """
-    if not os.path.isdir(path):
-        return "no table"
-    jpath = os.path.join(path, _JOURNAL)
-    actions: list[str] = []
-    if os.path.exists(jpath):
-        with open(jpath) as f:
-            j = json.load(f)
-        stage = j["stage"]
-        for rel in j["swaps"]:
-            src = os.path.join(stage, rel)
-            dst = os.path.join(path, rel)
-            old = os.path.join(path, _retired_name(rel))
-            if os.path.exists(src):
-                if os.path.exists(dst):
-                    if os.path.exists(old):
-                        shutil.rmtree(old)
-                    _rename(dst, old)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                _rename(src, dst)
-                actions.append(f"swap {rel}")
-            elif not os.path.exists(dst) and os.path.exists(old):
-                # crash between retire and swap-in, stage gone (cannot
-                # happen under the write ordering, but never delete the
-                # only copy): restore the retired dir
-                _rename(old, dst)
-                actions.append(f"restore {rel}")
-        for src_rel, dst_rel in j.get("extras", []):
-            src = os.path.join(stage, src_rel)
-            dst = os.path.join(path, dst_rel)
-            if os.path.exists(src) and not os.path.exists(dst):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                _rename(src, dst)
-                actions.append(f"extra {dst_rel}")
-        for rel in j["swaps"]:
-            old = os.path.join(path, _retired_name(rel))
-            if os.path.exists(old):
-                shutil.rmtree(old)
-        os.remove(jpath)
-        if os.path.isdir(stage):
-            shutil.rmtree(stage, ignore_errors=True)
+    path = os.path.abspath(path)
+    stages = _stages(path)
+    held = {s: fd for s in stages if (fd := _claim(s)) is not None}
+    try:
+        return _recover(path, list(held), in_use=len(held) < len(stages))
+    finally:
+        for fd in held.values():
+            os.close(fd)
+
+
+def _recover(path: str, stages: list[str], in_use: bool) -> str:
+    """``recover_table`` over the stages this call holds; ``in_use``:
+    a live run holds another."""
+    journals = [
+        j
+        for j in [os.path.join(s, _JOURNAL) for s in stages]
+        + [os.path.join(path, _JOURNAL)]
+        if os.path.exists(j)
+    ]
+    if journals:
+        actions = [a for j in journals for a in _roll_forward(j)]
         return "rolled forward: " + "; ".join(actions) if actions else "journal cleared"
 
-    # no journal: restore-or-sweep orphan residue, sweep dead stages
+    # no journal: sweep dead stages, restore-or-sweep orphan residue
+    for s in stages:
+        shutil.rmtree(s, ignore_errors=True)
+    if in_use:
+        return "in use"
+    actions: list[str] = []
+    residue = [(_retired(path), path)]
     for root, dirs, _files in os.walk(path):
         for d in list(dirs):
             if d.startswith(".precommit_"):
-                live = os.path.join(root, d[len(".precommit_"):])
-                if not os.path.exists(live):
-                    _rename(os.path.join(root, d), live)
-                    actions.append(f"restore {os.path.relpath(live, path)}")
-                else:
-                    shutil.rmtree(os.path.join(root, d))
+                residue.append(
+                    (os.path.join(root, d), os.path.join(root, d[len(".precommit_"):]))
+                )
                 dirs.remove(d)
             elif d.startswith(".upsert_stage_"):
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
                 dirs.remove(d)
-    return "recovered: " + "; ".join(actions) if actions else "clean"
+    for old, live in residue:
+        if not os.path.exists(old):
+            continue
+        if not os.path.exists(live):
+            _rename(old, live)
+            actions.append(f"restore {os.path.relpath(live, path)}")
+        else:
+            _remove(old)
+    if actions:
+        return "recovered: " + "; ".join(actions)
+    return "clean" if os.path.exists(path) else "no table"
+
+
+@contextlib.contextmanager
+def staging(target: str):
+    """A fresh hidden stage directory beside ``target`` (same parent, so
+    the same filesystem: publishing is a rename), made after recovering
+    ``target`` from any interrupted commit and held for the ``with``
+    block: a ``recover_table`` of the same target meanwhile (a reader's,
+    another load's) leaves it alone.  Spark's file listing skips the
+    dot-prefixed name, so a reader of the parent never sees it.
+
+    On exit the stage is deleted, unless its commit is journaled (a
+    ``publish`` that failed half way): then it is released for
+    ``recover_table`` to roll forward."""
+    target = os.path.abspath(target)
+    recover_table(target)
+    parent, name = os.path.split(target)
+    os.makedirs(parent, exist_ok=True)
+    stage = tempfile.mkdtemp(prefix=f".{name}{_STAGE}", dir=parent)
+    lock = os.open(os.path.join(stage, _LOCK), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        yield stage
+    finally:
+        if not journaled(stage):
+            shutil.rmtree(stage, ignore_errors=True)
+        os.close(lock)
+
+
+def publish(
+    stage: str,
+    swaps: list[tuple[str, str]] = (),
+    appends: list[tuple[str, str]] = (),
+) -> None:
+    """Publish what ``stage`` holds through the journaled commit
+    (``_commit``): each ``(src, dst)`` in ``swaps`` replaces ``dst`` by
+    ``src`` (an overwrite: a directory or file swap); each ``(src_dir,
+    dst_dir)`` in ``appends`` moves every file under ``src_dir`` to the
+    same relative path under ``dst_dir``, ``.crc`` twins included (an
+    append: part names are unique per write, and a ``_SUCCESS`` the
+    target already has stays).  An error with ``journaled(stage)`` false
+    published nothing; once it is true the commit is decided."""
+    moves = [
+        (
+            os.path.join(root, f),
+            os.path.abspath(os.path.join(dst, os.path.relpath(root, src), f)),
+        )
+        for src, dst in appends
+        for root, _dirs, files in os.walk(src)
+        for f in files
+    ]
+    swaps = [(s, os.path.abspath(d)) for s, d in swaps]
+    _commit(os.path.join(stage, _JOURNAL), stage, swaps, moves)
+
+
+def journaled(stage: str) -> bool:
+    """Whether a commit of ``stage`` is journaled and not yet complete."""
+    return os.path.exists(os.path.join(stage, _JOURNAL))
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -196,12 +410,15 @@ def write_parquet(
     partition_by: list[str] | None = None,
     key_cols: list[str] | None = None,
     change_feed: bool = False,
-    row_count: int | None = None,
+    row_count: int | Callable[[], int] | None = None,
+    target: str | None = None,
 ) -> str:
     """Write ``df`` as parquet (``mode="upsert"`` delegates to
     ``upsert_parquet``).  ``row_count``, when the caller already holds
-    it (the plan runtime's DQ count of the same persisted frame), skips
-    the count job the message would otherwise cost."""
+    it (the plan runtime's DQ count), skips the count job the message
+    would otherwise cost; a callable is called after the write (a count
+    the caller observes on it).  The message names ``target``, the path
+    a staged write publishes to, or else ``path``."""
     if mode == "upsert":
         return upsert_parquet(
             df, path, key_cols or [], partition_by or [], change_feed,
@@ -220,6 +437,11 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    return wrote(n() if callable(n) else n, target or path)
+
+
+def wrote(n: int, path: str) -> str:
+    """The message of a parquet load of ``n`` rows to ``path``."""
     return f"wrote {n:,} rows to {path} (parquet)"
 
 
@@ -281,10 +503,12 @@ def upsert_parquet(
        distributed, one file per task, never through the driver.  With
        ``change_feed=True`` the insert/update_pre/update_post row sets
        (frames the merge already computes) are staged alongside.
-    5. **Commit**: a journal naming the stage and every swap is written
-       first (tmp + atomic rename), then each touched partition
-       directory is swapped in and the change batch renamed into
-       ``_changes/``.  A crash at ANY point is repaired by
+    5. **Commit** (``_commit``, shared with every staged batch load): a
+       journal naming the stage and every swap is written first (tmp +
+       atomic rename), then each touched partition directory is swapped
+       in and the change batch renamed into ``_changes/``.  The journal
+       lives in the table here (``_JOURNAL``); a batch load's lives in
+       its stage.  A crash at ANY point is repaired by
        ``recover_table``: journal present → the commit ROLLS FORWARD
        from the completed stage; no journal yet → the old table is
        intact and the aborted stage is swept.  Readers that open the
@@ -303,8 +527,6 @@ def upsert_parquet(
     ``row_count`` is the batch's row count when the caller already holds
     it (counted before this call, so before the commit); ``None`` counts
     here."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from agentic_etl_poc_spark import plan_capture
@@ -381,15 +603,15 @@ def upsert_parquet(
     out = survivors.unionByName(df, allowMissingColumns=True)
     plan_capture.note("parquet_upsert_merge", out)
 
-    stage = tempfile.mkdtemp(prefix=".upsert_stage_", dir=path)
+    stage = os.path.abspath(tempfile.mkdtemp(prefix=".upsert_stage_", dir=path))
+    jpath = os.path.join(path, _JOURNAL)
     batch_no = _next_batch_no(path)
-    journaled = False
     try:
         # same clustering rule as the bootstrap write (see above)
         out.repartition(*[F.col(c) for c in pcols]).write.mode(
             "overwrite"
         ).partitionBy(*pcols).parquet(stage)
-        extras: list[tuple[str, str]] = []
+        moves: list[tuple[str, str]] = []
         if change_feed:
             # the merge already holds every needed frame: update_pre =
             # pruned target rows whose key IS in the batch (the
@@ -416,51 +638,24 @@ def upsert_parquet(
                 .withColumn("_batch", F.lit(batch_no))
             )
             plan_capture.note("parquet_upsert_change_feed", changes)
-            changes.write.mode("overwrite").parquet(
-                os.path.join(stage, "_cdf")
+            cdf = os.path.join(stage, "_cdf")
+            changes.write.mode("overwrite").parquet(cdf)
+            moves.append(
+                (cdf, os.path.abspath(
+                    os.path.join(path, CHANGES_DIR, _batch_dir(batch_no))
+                ))
             )
-            extras.append(
-                ("_cdf", os.path.join(CHANGES_DIR, _batch_dir(batch_no)))
-            )
-
-        swaps = _leaf_partition_dirs(stage)
-        # journal BEFORE the first rename: from here the commit is
-        # repeatable from the stage alone (tmp + rename = atomic create)
-        jpath = os.path.join(path, _JOURNAL)
-        with open(jpath + ".tmp", "w") as f:
-            json.dump({"stage": stage, "swaps": swaps, "extras": extras}, f)
-        os.rename(jpath + ".tmp", jpath)
-        journaled = True
-
-        n = 0
-        for rel in swaps:
-            src_dir = os.path.join(stage, rel)
-            dst_dir = os.path.join(path, rel)
-            if os.path.exists(dst_dir):
-                old = os.path.join(path, _retired_name(rel))
-                _rename(dst_dir, old)
-                _rename(src_dir, dst_dir)
-            else:
-                os.makedirs(os.path.dirname(dst_dir), exist_ok=True)
-                _rename(src_dir, dst_dir)
-            n += 1
-        for src_rel, dst_rel in extras:
-            dst = os.path.join(path, dst_rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            _rename(os.path.join(stage, src_rel), dst)
-        for rel in swaps:
-            old = os.path.join(path, _retired_name(rel))
-            if os.path.exists(old):
-                shutil.rmtree(old)
-        os.remove(jpath)
-        journaled = False
+        swaps = [
+            (os.path.join(stage, rel), os.path.abspath(os.path.join(path, rel)))
+            for rel in _leaf_partition_dirs(stage)
+        ]
+        _commit(jpath, stage, swaps, moves)
     finally:
         # the stage is the roll-forward source once the journal exists:
-        # it may only be deleted before the journal is created (aborted
-        # batch — the old table state is intact) or after the journal is
-        # removed (commit complete); recover_table clears it otherwise
-        if not journaled:
+        # recover_table clears it then
+        if not os.path.exists(jpath):
             shutil.rmtree(stage, ignore_errors=True)
+    n = len(swaps)
     return (
         f"upserted {batch_rows:,} rows into {path} "
         f"(parquet COW: {n} partitions rewritten)"

@@ -174,3 +174,43 @@ def test_relative_and_absolute_sf_dir_share_a_staged_root(spark, fx, monkeypatch
         for p in ("sf", fx, "link")
     }
     assert len(roots) == 1 and builds == list(roots)
+
+
+def test_restaging_keeps_one_copy_per_tag(fx):
+    """A restaged fixture replaces every other copy of the tag and sf dir:
+    the superseded digest and the flat layout older checkouts left (their
+    marker and outputs directly in the sf dir's directory).  A copy whose
+    embedded Derby database a live JVM holds stays."""
+    import subprocess
+    import sys
+
+    def build(root):
+        os.makedirs(os.path.join(root, "db"))
+        open(os.path.join(root, "db", "dbex.lck"), "w").close()
+
+    first = core.staged(fx, "prune_test", ["orders"], build)
+    sf_root = os.path.dirname(first)
+    for flat in ("_STAGED", "out.csv"):
+        open(os.path.join(sf_root, flat), "w").close()
+    _halve(fx, "orders")
+    second = core.staged(fx, "prune_test", ["orders"], build)
+    assert os.listdir(sf_root) == [os.path.basename(second)]
+
+    # a live process holding the boot lock, as a JVM holds Derby's
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import fcntl, sys, time; f = open(sys.argv[1], 'r+'); "
+         "fcntl.lockf(f, fcntl.LOCK_EX); print('locked', flush=True); time.sleep(60)",
+         os.path.join(second, "db", "dbex.lck")],
+        stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        _halve(fx, "orders")
+        third = core.staged(fx, "prune_test", ["orders"], build)
+        assert sorted(os.listdir(sf_root)) == sorted(
+            os.path.basename(r) for r in (second, third)
+        )
+    finally:
+        holder.kill()
+        holder.wait(timeout=10)

@@ -1,12 +1,12 @@
 """Spark actions per plan-lifecycle stage.
 
-``run_from_plan`` runs one action per stage: the DQ gate counts the
-persisted frame, the parquet sinks reuse that count instead of recounting,
-the quarantine split and the DQ gate read their numbers off one write of
-the violating rows, and a drained stream is gated by one scan of its
-artifact.  Every other gate (DQ, verify, the stream tail) is one job: its
-aggregates are observed on a ``noop`` scan (``quality.observed_scan``),
-and on the persisted frame that same job fills the cache.  These tests pin
+``run_from_plan`` runs one action per stage: a file load's DQ gate reads
+its numbers off the stage write, the quarantine split, its DQ gate and
+its parquet load are one partitioned write, a load that writes its target
+directly (a parquet upsert) is gated by a scan first, and a drained
+stream is gated by one scan of its artifact.  Every scanning gate (DQ,
+verify, the stream tail) is one job: its aggregates are observed on a
+``noop`` scan (``quality.observed_scan``).  These tests pin
 
 - the exact number of Spark jobs each plan shape runs, counted through a
   test-owned job group (an added action shows up as a diff here);
@@ -122,14 +122,14 @@ load:
 
 
 def test_jobs_quarantine_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1; the quarantine write 1, which builds
-    the persisted frame and observes the quarantined count and the DQ
-    gate's clean-row metrics, so the gate runs no scan of its own; sink
-    write 1; verify re-read with the written schema: scan 1.  The second
-    run reads its source from the memo: one job fewer."""
+    """Source schema inference 1; the quarantine write 1, partitioned by
+    the violation flag, which observes the quarantined count and the DQ
+    gate's clean-row metrics and is also the sink write; verify re-read
+    of the clean half with the written schema: scan 1.  The second run
+    reads its source from the memo: one job fewer."""
     bad, clean = tmp_path / "bad", tmp_path / "clean"
     plan = _quarantine_plan(sf_smoke, bad, clean)
-    for group, want in (("plan-quarantine", 4), ("plan-quarantine-warm", 3)):
+    for group, want in (("plan-quarantine", 3), ("plan-quarantine-warm", 2)):
         (res, alerts), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
         assert res["status"] == "ok" and not alerts, res
         n_bad = spark.read.parquet(str(bad)).count()
@@ -149,9 +149,9 @@ def test_quarantine_plan_spawns_no_chmod(spark, sf_smoke, tmp_path):
 
 
 def test_jobs_parquet_overwrite_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1; DQ scan 1 (the first action, so it
-    also builds the persisted frame); sink write 1, no recount; verify
-    re-read with the written schema: scan 1."""
+    """Source schema inference 1; stage write 1, which observes the DQ
+    gate's metrics, so the gate runs no scan of its own; verify re-read
+    of the stage with the written schema: scan 1."""
     out = tmp_path / "ow"
     (res, _), jobs = _count_jobs(spark, "plan-overwrite", lambda: _run(
         spark,
@@ -168,12 +168,37 @@ load:
     ))
     assert res["status"] == "ok", res
     assert res["message"] == f"wrote 1,500 rows to {out} (parquet)"
-    assert jobs == 4
+    assert jobs == 3
+
+
+def test_jobs_append_plan_gate_cannot_reject(spark, sf_smoke, tmp_path):
+    """An append whose gate cannot reject (``min_rows: 0``, no nonnull or
+    freshness check): source schema inference 1; stage write 1, which
+    observes the gate's row count; verify re-read 1."""
+    out = tmp_path / "inc"
+    (res, _), jobs = _count_jobs(spark, "plan-append", lambda: _run(
+        spark,
+        _orders(sf_smoke) + f"""
+transform:
+  sql: SELECT o_orderkey, o_orderdate, o_totalprice FROM input_df
+checks:
+  min_rows: 0
+load:
+  to: parquet
+  file_path: {out}
+  mode: append
+""",
+    ))
+    assert res["status"] == "ok", res
+    assert res["dq"] == {"rows": 1500, "status": True, "error": None}
+    assert res["message"] == f"wrote 1,500 rows to {out} (parquet)"
+    assert jobs == 3
 
 
 def test_jobs_parquet_upsert_plan(spark, sf_smoke, tmp_path):
-    """An upsert into an existing table: DQ scan 1, which also builds
-    the persisted frame; the merge 7 (touched partitions 2, the target's
+    """An upsert into an existing table (the one batch load that still
+    persists its output: the merge reads it twice): DQ scan 1, which also
+    builds the persisted frame; the merge 7 (touched partitions 2, the target's
     schema 1, the merge write with its query stages 4); verify re-read
     inference 1 and scan 1.  The batch is not recounted before the
     commit (the DQ count already ran before it), and the source comes
@@ -221,9 +246,10 @@ def test_jobs_stream_plan(spark, tmp_path):
 
 
 def test_jobs_dq_rejected_plan(spark, sf_smoke, tmp_path):
-    """Source schema inference 1 + DQ scan 1 (which also builds the
-    persisted frame), then the pre-load abort: nothing written, one
-    alert.  The second run reads its source from the memo: 1 job."""
+    """Source schema inference 1 + the stage write 1, which observes the
+    DQ gate's metrics; the gate then rejects: the stage is deleted, the
+    target never written, one alert.  The second run reads its source
+    from the memo: 1 job."""
     out = tmp_path / "rej"
     plan = f"""
 source:
@@ -250,7 +276,7 @@ alerts:
             "dq": {"rows": 150, "status": False, "error": "nonnull check failed: bal"},
         }
         assert len(alerts) == 1
-        assert not out.exists()
+        assert os.listdir(tmp_path) == []
         assert jobs == want, group
 
 

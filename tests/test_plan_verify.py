@@ -1,13 +1,13 @@
 """The parquet verify gate: re-reads with the written schema, empty
 artifacts, and artifacts that cannot be read.
 
-``run_from_plan`` re-reads an overwrite or append artifact, and the stream
-tail its drained artifact, with the schema that was written instead of
-inferring one.  These tests pin that
+``run_from_plan`` re-reads the stage of an overwrite or append, and the
+stream tail its drained artifact, with the schema that was written instead
+of inferring one.  These tests pin that
 
-- the verify dicts equal the ones the inferring read gives (for the
-  stream tail, ``test_plan_actions.py`` compares both gates with
-  separate inferring reads);
+- the verify dicts equal the ones an inferring read of the same
+  artifact gives (for the stream tail, ``test_plan_actions.py`` compares
+  both gates with separate inferring reads);
 - a declared column the artifact lacks reads as all-null and so fails a
   nonnull check (the inferring read skips it);
 - a zero-row artifact passes nonnull checks at ``min_rows: 0``;
@@ -71,22 +71,35 @@ load:
     ids=["passes", "fails"],
 )
 def test_declared_schema_verify_matches_inference(
-    spark, sf_smoke, tmp_path, load_extra, runs, verify, ok
+    spark, sf_smoke, tmp_path, monkeypatch, load_extra, runs, verify, ok
 ):
+    """Verify re-reads the stage with the written schema; its dict equals
+    an inferring re-read of the same stage.  An append's verify counts
+    the staged increment, and the published table holds every passing
+    increment.  A failed verify publishes nothing."""
     out = tmp_path / "out"
     plan = _orders_plan(sf_smoke, out, load_extra) + verify
+    real = parquet_sink.verify_parquet
+    inferred = []
+
+    def verify_both(spark, path, schema=None, **kw):
+        inferred.append(real(spark, path, **kw))
+        return real(spark, path, schema=schema, **kw)
+
+    monkeypatch.setattr(parquet_sink, "verify_parquet", verify_both)
     for _ in range(runs):
         res, alerts = _run(spark, plan)
-    nonnull = ["o_orderkey", "price", "nope"] if verify else ["o_orderkey"]
-    want = verify_parquet(spark, str(out), min_rows=1, nonnull_cols=nonnull)
+    want = inferred[-1]
     if ok:
         assert res["status"] == "ok" and not alerts, res
         assert res["verify"] == want
-        assert want["rows"] == 1500 * runs
+        assert want["rows"] == 1500
+        assert real(spark, str(out))["rows"] == 1500 * runs
     else:
         assert res == {"status": "failed", "verify": want}
         assert want["error"] == "null values in price"
         assert len(alerts) == 1
+        assert not out.exists()
 
 
 def test_declared_column_missing_from_artifact_fails(spark, tmp_path):
