@@ -219,6 +219,12 @@ def quarantine_write(
     return sides[0], sides[1], stats
 
 
+def gate_ts(freshness_minutes: float | None, timestamp_col: str) -> str:
+    """The column whose max the DQ gate observes: ``timestamp_col``, only
+    when a freshness check is set."""
+    return timestamp_col if freshness_minutes else ""
+
+
 def dq_check(
     df: DataFrame,
     min_rows: int = 1,
@@ -226,9 +232,7 @@ def dq_check(
     freshness_minutes: float | None = None,
     timestamp_col: str = "",
 ) -> dict:
-    stats = gate_stats(
-        df, nonnull_cols, timestamp_col if freshness_minutes else ""
-    )
+    stats = gate_stats(df, nonnull_cols, gate_ts(freshness_minutes, timestamp_col))
     return dq_verdict(
         stats, min_rows, nonnull_cols, freshness_minutes, timestamp_col
     )

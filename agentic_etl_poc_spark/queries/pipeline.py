@@ -379,7 +379,7 @@ ORDER BY store_id, week
     "re-read, all of which must be value-exact for the hash to match.  "
     "Scale: the plan layer itself is declarative Spark SQL (Catalyst "
     "broadcasts the dim joins); the single-file sink is the reference's "
-    "contract, with single_file=False as the partitioned scale path.",
+    "contract.",
 )
 def p02_plan_csv_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os

@@ -3,11 +3,24 @@
 extract → transform → DQ gate → load → verify gate → result JSON, with the
 reference's exact control flow and result shapes:
 
+- source missing or unreadable → alert → ``{"status": "failed",
+  "extract": {...}}``.
 - DQ fail → alert → ``{"status": "failed", "dq": {...}}`` (no load).
 - sink write fails → alert → ``{"status": "failed", "load": {...}}``.
 - verify fail → alert → ``{"status": "failed", "verify": {...}}``.
 - success → ``{"status": "ok", "dq", "message", "verify"}``.
   (reference: etl_agent/templates.py:123-170)
+
+Every plan tail is one sequence: produce the DQ verdict, the load and the
+verify verdict in the tail's own way, and judge them in ``_result``, the
+one place a run passes or fails.  The tails differ only in where the
+verdicts come from: a file load observes its gate on its stage write
+(``_load``), a quarantine plan on its split write (``_run_quarantine``),
+an upsert or JDBC load scans first, and a stream plan drains, then scans
+its artifact once for both gates (``_run_stream_plan_tail``).  Where a
+passing stage publishes follows from ``plan.load`` alone (``_publish``);
+``run_from_plan`` reports the load and advances the watermark for every
+passing tail.
 
 Spark-native twists:
 - the transform chain stays lazy; its first action is the stage write,
@@ -36,7 +49,10 @@ Spark job, no exchange) or on a write the run makes anyway.
 - extract: only the reader's own (a source without a declared schema
   infers one with one job).  Parquet sources go through the session's
   read memo (``io_tables.read_parquet``), so a later run over unchanged
-  files infers nothing.
+  files infers nothing.  A missing CSV or JSON file fails the run with
+  ``file_not_found: <path>``, a parquet read that raises with
+  ``read_error``; a plan error (the admission cap, a malformed source)
+  still raises ``ValueError``.
 - incremental: one observed ``max(ts)`` scan for the new watermark, over
   the filtered source, kept apart from the DQ gate so the watermark
   means "newest source row seen" whatever the transform filters.
@@ -85,6 +101,7 @@ from agentic_etl_poc_spark.operators.quality import (
     dq_verdict,
     gate_on,
     gate_stats,
+    gate_ts,
     observed_scan,
     quarantine_write,
 )
@@ -296,11 +313,11 @@ def _extract_frame(
 def _failed(
     plan: Plan, send_alert: Callable[[str, str], str], gate: str, verdict: dict
 ) -> dict:
-    """A failed stage (``dq``, ``load`` or ``verify``): alert the plan's
-    ``on_fail`` channel (if any) and return ``{"status": "failed", gate:
-    verdict}``."""
+    """A failed stage (``extract``, ``dq``, ``load`` or ``verify``): alert
+    the plan's ``on_fail`` channel (if any) and return ``{"status":
+    "failed", gate: verdict}``."""
     if plan.alerts:
-        label = {"dq": "DQ", "load": "Load", "verify": "Verify"}[gate]
+        label = {"extract": "Extract", "dq": "DQ", "load": "Load", "verify": "Verify"}[gate]
         send_alert(
             plan.alerts.get("on_fail", ""),
             f"{label} failed: {json.dumps(verdict)}",
@@ -308,91 +325,35 @@ def _failed(
     return {"status": "failed", gate: verdict}
 
 
-def _verify(
-    spark: SparkSession,
+def _result(
     plan: Plan,
-    path: str,
-    schema,
-    dq: dict,
-    msg: str,
     send_alert: Callable[[str, str], str],
+    dq: dict | None,
+    load: str | dict | Callable[[], str | dict],
+    verify: Callable[[], dict],
 ) -> dict:
-    """The verify gate over the artifact at ``path`` (the stage of a
-    file load, the target of an upsert, the table of a JDBC load), and
-    the run's result: ``ok`` with ``dq`` and the load message ``msg``,
-    or the failed verify."""
-    vf, cks, ld = plan.verify, plan.checks, plan.load
-    min_rows = vf.min_rows if vf.min_rows is not None else cks.min_rows
-    nonnull = vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols
-    if ld.to == "parquet":
-        from agentic_etl_poc_spark.sinks.parquet_sink import verify_parquet
-
-        ver = verify_parquet(
-            spark, path, min_rows=min_rows, nonnull_cols=nonnull, schema=schema
-        )
-    elif ld.to == "csv":
-        ver = verify_csv(
-            spark, path, min_rows=min_rows, nonnull_cols=nonnull,
-            timestamp_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
-            include_header=ld.include_header,
-        )
-    else:
-        ver = verify_table(
-            spark, ld.conn_str, ld.table,
-            ts_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
-        )
+    """The run's result, judged in lifecycle order: the DQ verdict ``dq``,
+    then ``load`` (the load message, or a write's ``write_error``
+    verdict; a callable runs the load, only once the gate passed), then
+    ``verify()``, called only when both passed.  The first failure
+    alerts once and ends the run (``_failed``); else ``{"status": "ok",
+    "dq", "message", "verify"}``.  ``dq`` is None when there is no
+    verdict: the write or re-read it is observed on raised."""
+    if dq is not None and not dq["status"]:
+        return _failed(plan, send_alert, "dq", dq)
+    if callable(load):
+        load = load()
+    if isinstance(load, dict):
+        return _failed(plan, send_alert, "load", load)
+    ver = verify()
     if not ver.get("status", False):
         return _failed(plan, send_alert, "verify", ver)
-    return {"status": "ok", "dq": dq, "message": msg, "verify": ver}
-
-
-def _run_batch_tail(
-    spark: SparkSession,
-    plan: Plan,
-    out: DataFrame,
-    send_alert: Callable[[str, str], str],
-) -> dict:
-    """DQ gate → load → verify → publish for a batch plan.
-
-    A file load (CSV, parquet overwrite/replace/append) writes into a
-    hidden stage beside its target with the DQ gate's metrics observed on
-    that write; the gate, then verify (a re-read of the stage) decide,
-    and only a passing run publishes the stage (``_load``).  A failed
-    gate, write or verify leaves the target as it was.  A parquet upsert
-    (its own staged commit) and a JDBC load (transactional) write their
-    target directly, so their gate scans first (``dq_check``).  A
-    quarantine plan's gate rides its split write (``_run_quarantine``)."""
-    cks, ld = plan.checks, plan.load
-    if ld.to in ("csv", "parquet") and not ld.file_path:
-        raise ValueError(f"{ld.to} load requires load.file_path")
-    if ld.to == "parquet" and ld.mode not in ("overwrite", "replace", "append", "upsert"):
-        raise ValueError(f"unknown parquet load mode: {ld.mode!r}")
-    if cks.quarantine_path and cks.nonnull_cols:
-        return _run_quarantine(spark, plan, out, send_alert)
-    if _staged(ld):
-        return _load(spark, plan, out, None, send_alert)
-    upsert = ld.to == "parquet"
-    if upsert:
-        # the upsert reads its batch twice (touched partitions, then the
-        # merge): compute the transform once
-        out = out.persist()
-    try:
-        dq = dq_check(out, **_gate(cks))
-        if not dq["status"]:
-            return _failed(plan, send_alert, "dq", dq)
-        return _load_in_place(spark, plan, out, dq, send_alert)
-    finally:
-        if upsert:
-            out.unpersist()
-
-
-def _staged(ld) -> bool:
-    """Whether the load writes a stage (a file load) rather than its
-    target (a parquet upsert, a JDBC table)."""
-    return ld.to == "csv" or (ld.to == "parquet" and ld.mode != "upsert")
+    return {"status": "ok", "dq": dq, "message": load, "verify": ver}
 
 
 def _gate(cks) -> dict:
+    """The DQ gate's arguments, as ``dq_check`` and ``dq_verdict`` take
+    them."""
     return dict(
         min_rows=cks.min_rows,
         nonnull_cols=cks.nonnull_cols,
@@ -402,8 +363,95 @@ def _gate(cks) -> dict:
 
 
 def _gate_ts(cks) -> str:
-    """The column whose max the gate observes (only for freshness)."""
-    return cks.timestamp_col if cks.freshness_minutes else ""
+    """The column whose max the DQ gate observes (``gate_ts``)."""
+    return gate_ts(cks.freshness_minutes, cks.timestamp_col)
+
+
+def _verify_limits(plan: Plan) -> tuple[int, list[str] | None]:
+    """Verify's ``min_rows`` and ``nonnull_cols``: each one the plan's
+    ``verify`` leaves unset is the DQ check's."""
+    vf, cks = plan.verify, plan.checks
+    return (
+        vf.min_rows if vf.min_rows is not None else cks.min_rows,
+        vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols,
+    )
+
+
+def _verify(spark: SparkSession, plan: Plan, path: str, schema) -> dict:
+    """The verify verdict over the artifact at ``path`` (the stage of a
+    file load, the target of an upsert, the table of a JDBC load)."""
+    vf, ld = plan.verify, plan.load
+    min_rows, nonnull = _verify_limits(plan)
+    if ld.to == "parquet":
+        return parquet_sink.verify_parquet(
+            spark, path, min_rows=min_rows, nonnull_cols=nonnull, schema=schema
+        )
+    if ld.to == "csv":
+        return verify_csv(
+            spark, path, min_rows=min_rows, nonnull_cols=nonnull,
+            timestamp_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
+            include_header=ld.include_header,
+        )
+    return verify_table(
+        spark, ld.conn_str, ld.table,
+        ts_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
+    )
+
+
+def _write(plan: Plan, df: DataFrame, path: str, rows) -> str | dict:
+    """Write ``df`` to ``path`` through the plan's sink: its load message,
+    or the ``write_error`` verdict of a write that raised.  ``rows`` is
+    the count the message reports (a callable is read after the write);
+    a staged write's message names the target."""
+    from agentic_etl_poc_spark import plan_capture
+
+    ld = plan.load
+    plan_capture.note("sink_input", df)
+    try:
+        if ld.to == "csv":
+            return write_csv(
+                df, path, include_header=ld.include_header,
+                row_count=rows, target=ld.file_path,
+            )
+        if ld.to == "parquet":
+            # every file mode writes its stage, a new directory, whole
+            mode = "upsert" if ld.mode == "upsert" else "overwrite"
+            return parquet_sink.write_parquet(
+                df, path, mode=mode, partition_by=ld.partition_by,
+                key_cols=ld.key_cols, change_feed=ld.change_feed,
+                row_count=rows, target=ld.file_path,
+            )
+        return load_to_postgres(
+            df, ld.conn_str, ld.table, mode=ld.mode,
+            key_cols=ld.key_cols, row_count=rows,
+        )
+    except parquet_sink.READ_ERRORS as e:
+        return parquet_sink.error_verdict(e, "write_error")
+
+
+def _staged(ld) -> bool:
+    """Whether the load writes a stage (a file load) rather than its
+    target (a parquet upsert, a JDBC table)."""
+    return ld.to == "csv" or (ld.to == "parquet" and ld.mode != "upsert")
+
+
+def _run_batch_tail(
+    spark: SparkSession,
+    plan: Plan,
+    out: DataFrame,
+    send_alert: Callable[[str, str], str],
+) -> dict:
+    """DQ gate → load → verify → publish for a batch plan: a quarantine
+    plan's gate rides its split write (``_run_quarantine``); any other
+    plan's is the load's (``_load``)."""
+    cks, ld = plan.checks, plan.load
+    if ld.to in ("csv", "parquet") and not ld.file_path:
+        raise ValueError(f"{ld.to} load requires load.file_path")
+    if ld.to == "parquet" and ld.mode not in ("overwrite", "replace", "append", "upsert"):
+        raise ValueError(f"unknown parquet load mode: {ld.mode!r}")
+    if cks.quarantine_path and cks.nonnull_cols:
+        return _run_quarantine(spark, plan, out, send_alert)
+    return _load(spark, plan, out, None, send_alert)
 
 
 def _run_quarantine(
@@ -438,19 +486,18 @@ def _run_quarantine(
         )
         dq = dq_verdict(stats, **_gate(cks))
         dq["quarantined"] = stats["quarantined"]
-        swaps: list[tuple[str, str]] = []
-        appends: list[tuple[str, str]] = []
-        if not dq["status"]:
-            res = _failed(plan, send_alert, "dq", dq)
-        elif as_written:
-            msg = parquet_sink.wrote(dq["rows"], ld.file_path)
-            res, swaps, appends = _verified(
-                spark, plan, clean, out.schema, dq, msg, send_alert
+        if as_written:
+            res = _result(
+                plan, send_alert, dq, parquet_sink.wrote(dq["rows"], ld.file_path),
+                lambda: _verify(spark, plan, clean, out.schema),
             )
         else:
             clean_df = spark.read.schema(out.schema).parquet(clean)
             res = _load(spark, plan, clean_df, dq, send_alert)
-        return _publish(plan, stage, res, [(bad, qpath), *swaps], appends, send_alert)
+        return _publish(
+            plan, send_alert, stage, res, clean if as_written else None,
+            [(bad, qpath)],
+        )
 
 
 def _load(
@@ -460,95 +507,77 @@ def _load(
     dq: dict | None,
     send_alert: Callable[[str, str], str],
 ) -> dict:
-    """Load and verify ``out``; ``dq`` is the gate's verdict when it
-    already ran (a quarantine split's), else a file load takes it from
-    its stage write.  A file load writes, gates and verifies a stage
-    beside its target, and publishes it if the run passes; any other load
-    writes its target (``_load_in_place``)."""
-    if not _staged(plan.load):
-        return _load_in_place(spark, plan, out, dq, send_alert)
-    with parquet_sink.staging(plan.load.file_path) as stage:
-        res, swaps, appends = _write_stage(spark, plan, out, dq, stage, send_alert)
-        return _publish(plan, stage, res, swaps, appends, send_alert)
+    """Load and verify ``out``, and judge the run (``_result``).  ``dq``
+    is the gate's verdict when it already ran (a quarantine split's): the
+    load then waits for it.
 
-
-def _write_stage(
-    spark: SparkSession,
-    plan: Plan,
-    out: DataFrame,
-    dq: dict | None,
-    stage: str,
-    send_alert: Callable[[str, str], str],
-) -> tuple[dict, list[tuple[str, str]], list[tuple[str, str]]]:
-    """Write ``out`` into ``stage`` through the plan's file sink, with
-    the DQ gate's metrics observed on that write (``quality.gate_on``),
-    then gate (unless ``dq`` is the verdict already) and verify the
-    staged copy.  Returns the result and ``_verified``'s publish lists."""
-    from agentic_etl_poc_spark import plan_capture
-
+    A file load (CSV, parquet overwrite/replace/append) writes into a
+    hidden stage beside its target, with the gate's metrics observed on
+    that write when ``dq`` is None; verify re-reads the stage and only a
+    passing run publishes it (``_publish``).  A parquet upsert (its own
+    staged commit) and a JDBC load (transactional) write their target,
+    so their gate scans first (``dq_check``) and they take its row count
+    instead of counting again."""
     cks, ld = plan.checks, plan.load
-    data = os.path.join(stage, os.path.basename(os.path.abspath(ld.file_path)))
-    observed, stats = gate_on(out, cks.nonnull_cols, _gate_ts(cks))
-
-    def rows() -> int:
-        return stats()["rows"]
-
-    plan_capture.note("sink_input", out)
-    try:
-        if ld.to == "csv":
-            msg = write_csv(
-                observed, data, include_header=ld.include_header,
-                row_count=rows, target=ld.file_path,
+    if not _staged(ld):
+        # the upsert reads its batch twice (touched partitions, then the
+        # merge): compute the transform once
+        upsert = dq is None and ld.to == "parquet"
+        if upsert:
+            out = out.persist()
+        try:
+            dq = dq or dq_check(out, **_gate(cks))
+            # an upsert's merge can evolve the table wider than the batch:
+            # its re-read infers the schema
+            return _result(
+                plan, send_alert, dq,
+                lambda: _write(plan, out, ld.file_path, dq["rows"]),
+                lambda: _verify(spark, plan, ld.file_path, None),
             )
-        else:
-            msg = parquet_sink.write_parquet(
-                observed, data, partition_by=ld.partition_by,
-                row_count=rows, target=ld.file_path,
-            )
-    except parquet_sink.READ_ERRORS as e:
-        verdict = parquet_sink.error_verdict(e, "write_error")
-        return _failed(plan, send_alert, "load", verdict), [], []
-    if dq is None:
-        dq = dq_verdict(stats(), **_gate(cks))
-        if not dq["status"]:
-            return _failed(plan, send_alert, "dq", dq), [], []
-    return _verified(spark, plan, data, out.schema, dq, msg, send_alert)
+        finally:
+            if upsert:
+                out.unpersist()
+    with parquet_sink.staging(ld.file_path) as stage:
+        data = os.path.join(stage, os.path.basename(os.path.abspath(ld.file_path)))
+        observed, stats = gate_on(out, cks.nonnull_cols, _gate_ts(cks))
 
+        def write() -> str | dict:
+            return _write(plan, observed, data, lambda: stats()["rows"])
 
-def _verified(
-    spark: SparkSession,
-    plan: Plan,
-    data: str,
-    schema,
-    dq: dict,
-    msg: str,
-    send_alert: Callable[[str, str], str],
-) -> tuple[dict, list[tuple[str, str]], list[tuple[str, str]]]:
-    """Verify the staged ``data``.  Returns the result and, when it
-    passed, how ``data`` publishes to the target (``parquet_sink.publish``'s
-    swaps and appends): an append moves its files, anything else swaps."""
-    ld = plan.load
-    res = _verify(spark, plan, data, schema, dq, msg, send_alert)
-    if res["status"] != "ok":
-        return res, [], []
-    if ld.to == "parquet" and ld.mode == "append":
-        return res, [], [(data, ld.file_path)]
-    return res, [(data, ld.file_path)], []
+        load = write
+        if dq is None:  # the gate is the one observed on the stage write
+            load = write()
+            if isinstance(load, str):
+                dq = dq_verdict(stats(), **_gate(cks))
+        res = _result(
+            plan, send_alert, dq, load,
+            lambda: _verify(spark, plan, data, out.schema),
+        )
+        return _publish(plan, send_alert, stage, res, data)
 
 
 def _publish(
     plan: Plan,
+    send_alert: Callable[[str, str], str],
     stage: str,
     res: dict,
-    swaps: list[tuple[str, str]],
-    appends: list[tuple[str, str]],
-    send_alert: Callable[[str, str], str],
+    data: str | None,
+    swaps: list[tuple[str, str]] = (),
 ) -> dict:
-    """Publish from ``stage`` and return the run's result.  A publish
-    that fails before its journal published nothing, and fails a passing
-    run's load with ``write_error``.  From the journal on the commit is
-    decided: the error propagates, and the next ``recover_table`` of the
-    target rolls the commit forward."""
+    """Publish from ``stage`` and return the run's result.  ``swaps`` (a
+    quarantine split's violating rows) publish whatever ``res`` says; the
+    staged load ``data`` only when the run passed, to the plan's target:
+    a parquet append moves its files, any other file load swaps.
+
+    A publish that fails before its journal published nothing, and fails
+    a passing run's load with ``write_error``.  From the journal on the
+    commit is decided: the error propagates, and the next
+    ``recover_table`` of the target rolls the commit forward."""
+    ld = plan.load
+    swaps, appends = list(swaps), []
+    if data and res["status"] == "ok":
+        append = ld.to == "parquet" and ld.mode == "append"
+        (appends if append else swaps).append((data, ld.file_path))
     if swaps or appends:
         try:
             parquet_sink.publish(stage, swaps, appends)
@@ -558,40 +587,6 @@ def _publish(
             verdict = parquet_sink.error_verdict(e, "write_error")
             return _failed(plan, send_alert, "load", verdict)
     return res
-
-
-def _load_in_place(
-    spark: SparkSession,
-    plan: Plan,
-    out: DataFrame,
-    dq: dict,
-    send_alert: Callable[[str, str], str],
-) -> dict:
-    """Load and verify for a sink that writes its target directly (a
-    parquet upsert, a JDBC table); both take the DQ row count instead of
-    counting again."""
-    from agentic_etl_poc_spark import plan_capture
-
-    ld = plan.load
-    plan_capture.note("sink_input", out)
-    try:
-        if ld.to == "parquet":
-            msg = parquet_sink.write_parquet(
-                out, ld.file_path, mode=ld.mode, partition_by=ld.partition_by,
-                key_cols=ld.key_cols, change_feed=ld.change_feed,
-                row_count=dq["rows"],
-            )
-        else:
-            msg = load_to_postgres(
-                out, ld.conn_str, ld.table, mode=ld.mode,
-                key_cols=ld.key_cols, row_count=dq["rows"],
-            )
-    except parquet_sink.READ_ERRORS as e:
-        verdict = parquet_sink.error_verdict(e, "write_error")
-        return _failed(plan, send_alert, "load", verdict)
-    # an upsert's merge can evolve the table wider than the batch: its
-    # re-read infers the schema
-    return _verify(spark, plan, ld.file_path, None, dq, msg, send_alert)
 
 
 def run_from_plan(
@@ -607,8 +602,14 @@ def run_from_plan(
         plan_or_text if isinstance(plan_or_text, Plan) else parse_plan(plan_or_text)
     )
 
-    # 1) extract
-    src_df = extract(spark, plan)
+    # 1) extract; a source that is missing or unreadable fails the run
+    try:
+        src_df = extract(spark, plan)
+    except FileNotFoundError as e:
+        verdict = {"status": False, "error": f"file_not_found: {e.filename or e}"}
+        return _failed(plan, send_alert, "extract", verdict)
+    except parquet_sink.READ_ERRORS as e:
+        return _failed(plan, send_alert, "extract", parquet_sink.error_verdict(e))
 
     # 1b) incremental watermark filter (engine extension, plans/model.py)
     inc = plan.incremental
@@ -661,13 +662,13 @@ def run_from_plan(
             "Provide transform.steps[...].sql (preferred) or transform.sql."
         )
 
+    # 3-5) DQ gate, load, verify, publish.  Streaming plans invert the
+    # gate order (see StreamSource's docstring): drain first, then gate
+    # the artifact.
     if out.isStreaming:
-        # Streaming plans invert the gate order (see StreamSource's
-        # docstring): materialize the drain first, then gate the artifact.
-        return _run_stream_plan_tail(spark, plan, out, send_alert, report_status)
-
-    # 3-5) DQ gate, load, verify, publish
-    res = _run_batch_tail(spark, plan, out, send_alert)
+        res = _run_stream_plan_tail(spark, plan, out, send_alert)
+    else:
+        res = _run_batch_tail(spark, plan, out, send_alert)
     if res["status"] != "ok":
         return res
     report_status("load", res["message"])
@@ -675,10 +676,8 @@ def run_from_plan(
     # Advance the incremental watermark ONLY after a verified, published
     # load — a failed run leaves it untouched, so the next tick
     # reprocesses.
-    if inc and inc.ts_col and new_watermark is not None:
-        from agentic_etl_poc_spark.memory import RunLedger
-
-        RunLedger(inc.ledger).set_state(f"watermark:{inc.key}", new_watermark)
+    if new_watermark is not None:
+        ledger.set_state(f"watermark:{inc.key}", new_watermark)
     return res
 
 
@@ -687,7 +686,6 @@ def _run_stream_plan_tail(
     plan: Plan,
     out: DataFrame,
     send_alert: Callable[[str, str], str],
-    report_status: Callable[[str, str], str],
 ) -> dict:
     """Streaming tail of ``run_from_plan``: drain the transformed stream
     with Trigger.AvailableNow into the parquet sink (exactly-once via the
@@ -726,46 +724,25 @@ def _run_stream_plan_tail(
     # between them, so ONE scan aggregates the union of their columns and
     # each verdict is derived from that row.  The scan declares the
     # stream's schema, so there is nothing to infer.
-    from agentic_etl_poc_spark.sinks.parquet_sink import (
-        READ_ERRORS,
-        error_verdict,
-        parquet_verdict,
-    )
-
-    vf = plan.verify
-    ver_cols = vf.nonnull_cols if vf.nonnull_cols is not None else cks.nonnull_cols
+    min_rows, ver_cols = _verify_limits(plan)
     try:
         stats = gate_stats(
             spark.read.schema(out.schema).parquet(ld.file_path),
             [*(cks.nonnull_cols or []), *(ver_cols or [])],
             _gate_ts(cks),
         )
-    except READ_ERRORS as e:
-        return _failed(plan, send_alert, "verify", error_verdict(e))
-    dq = dq_verdict(
-        stats,
-        min_rows=cks.min_rows,
-        nonnull_cols=cks.nonnull_cols,
-        freshness_minutes=cks.freshness_minutes,
-        timestamp_col=cks.timestamp_col,
-    )
-    if not dq["status"]:
-        return _failed(plan, send_alert, "dq", dq)
-
-    ver = parquet_verdict(
-        stats,
-        min_rows=vf.min_rows if vf.min_rows is not None else cks.min_rows,
-        nonnull_cols=ver_cols,
-    )
-    if not ver.get("status", False):
-        return _failed(plan, send_alert, "verify", ver)
-
+    except parquet_sink.READ_ERRORS as e:
+        error = parquet_sink.error_verdict(e)
+        return _result(plan, send_alert, None, "", lambda: error)
+    dq = dq_verdict(stats, **_gate(cks))
     msg = (
         f"stream drained to {ld.file_path} "
         f"(checkpoint {checkpoint}); rows={dq['rows']}"
     )
-    report_status("load", msg)
-    return {"status": "ok", "dq": dq, "message": msg, "verify": ver}
+    return _result(
+        plan, send_alert, dq, msg,
+        lambda: parquet_sink.parquet_verdict(stats, min_rows, ver_cols),
+    )
 
 
 def run_prompt(spark: SparkSession, text: str, llm=None) -> dict:

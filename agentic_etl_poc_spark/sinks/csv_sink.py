@@ -8,9 +8,7 @@ a temp dir and promote the single part to the target path.
 ``coalesce(1)`` serializes only the final write stage — upstream transforms
 keep full parallelism (coalesce does not repartition the whole plan; it
 narrows the last stage).  That's the right trade for the reference's
-small-aggregate outputs.  For big outputs at the 100 TB ceiling, set
-``single_file=False`` and get a standard partitioned directory instead —
-the plan language stays the same, the sink scales.
+small-aggregate outputs.
 """
 
 from __future__ import annotations
@@ -28,7 +26,6 @@ def write_csv(
     df: DataFrame,
     path: str,
     include_header: bool = True,
-    single_file: bool = True,
     row_count: int | Callable[[], int] | None = None,
     target: str | None = None,
 ) -> str:
@@ -41,24 +38,21 @@ def write_csv(
     if row_count is None:
         row_count = df.count()
 
-    if not single_file:
-        df.write.mode("overwrite").option("header", include_header).csv(path)
-    else:
-        tmp = tempfile.mkdtemp(prefix="csv_sink_", dir=os.path.dirname(path) or ".")
-        try:
-            (
-                df.coalesce(1)
-                .write.mode("overwrite")
-                .option("header", include_header)
-                .csv(tmp)
-            )
-            parts = glob.glob(os.path.join(tmp, "part-*"))
-            if len(parts) != 1:  # pragma: no cover - coalesce(1) guarantees one
-                raise RuntimeError(f"expected exactly 1 part file, got {len(parts)}")
-            if os.path.exists(path):
-                os.remove(path)
-            shutil.move(parts[0], path)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+    tmp = tempfile.mkdtemp(prefix="csv_sink_", dir=os.path.dirname(path) or ".")
+    try:
+        (
+            df.coalesce(1)
+            .write.mode("overwrite")
+            .option("header", include_header)
+            .csv(tmp)
+        )
+        parts = glob.glob(os.path.join(tmp, "part-*"))
+        if len(parts) != 1:  # pragma: no cover - coalesce(1) guarantees one
+            raise RuntimeError(f"expected exactly 1 part file, got {len(parts)}")
+        if os.path.exists(path):
+            os.remove(path)
+        shutil.move(parts[0], path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     n = row_count() if callable(row_count) else row_count
     return f"wrote {n:,} rows to {target or path}"

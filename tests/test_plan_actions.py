@@ -280,6 +280,21 @@ alerts:
         assert jobs == want, group
 
 
+def test_traced_names_resolve():
+    """Every name the benchmark's tracer wraps (``perfbench/trace.py``)
+    still resolves to a callable at the path it is wrapped at: a dropped
+    or renamed one makes ``Tracer.install_wrappers`` raise, and the
+    traced benchmark run fail."""
+    import functools
+    import importlib
+
+    from perfbench.trace import WRAP_TARGETS
+
+    for module, attr, _layer in WRAP_TARGETS:
+        owner = importlib.import_module(module)
+        assert callable(functools.reduce(getattr, attr.split("."), owner)), (module, attr)
+
+
 # -- row_count on the parquet sinks -----------------------------------------
 @pytest.fixture
 def no_count(monkeypatch, spark):

@@ -14,7 +14,8 @@ of inferring one.  These tests pin that
 - a re-read that raises ends the run with ``status: failed``, a
   ``read_error``, one alert and an unchanged watermark;
 - a sink write that raises ends it the same way with a ``write_error``
-  under ``load``.
+  under ``load``, and a source file that is missing with an error under
+  ``extract``.
 """
 
 from __future__ import annotations
@@ -241,6 +242,30 @@ def test_dq_failure_writes_nothing_and_keeps_watermark(spark, sf_smoke, tmp_path
     res, alerts = _run(spark, plan.replace("min_rows: 1", "min_rows: 99999"))
     assert res["status"] == "failed" and set(res) == {"status", "dq"}, res
     assert len(alerts) == 1 and alerts[0].startswith("DQ failed: ")
+    assert not out.exists()
+    assert RunLedger(ledger).get_state("watermark:o") == _WM
+
+
+@pytest.mark.parametrize("kind", ["csv", "parquet"])
+def test_missing_source_fails_extract(spark, sf_smoke, tmp_path, kind):
+    """A source file that is not there: failed run at ``extract`` with
+    one alert, nothing written, watermark unchanged (a missing CSV is
+    ``file_not_found``, a parquet read that raises a ``read_error``)."""
+    out, ledger = tmp_path / "out", str(tmp_path / "ledger.db")
+    missing = str(tmp_path / f"missing.{kind}")
+    plan = _incremental_plan(sf_smoke, out, ledger, "append").replace(
+        f"  kind: parquet\n  parquet:\n    path: {sf_smoke}/orders.parquet\n",
+        f"  kind: {kind}\n  {kind}:\n    path: {missing}\n",
+    )
+    assert missing in plan
+    res, alerts = _run(spark, plan)
+    assert res["status"] == "failed" and set(res) == {"status", "extract"}, res
+    assert res["extract"]["status"] is False
+    if kind == "csv":
+        assert res["extract"]["error"] == f"file_not_found: {missing}"
+    else:
+        assert res["extract"]["error"].startswith("read_error: [PATH_NOT_FOUND]"), res
+    assert len(alerts) == 1 and alerts[0].startswith("Extract failed: ")
     assert not out.exists()
     assert RunLedger(ledger).get_state("watermark:o") == _WM
 

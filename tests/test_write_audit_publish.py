@@ -21,7 +21,10 @@ commit (``parquet_sink.publish``).  These tests pin that
 - a quarantine side with no rows is still a readable table, and the
   quarantine write plans no ``Sort`` and no ``Exchange``;
 - no run, passing or failing, leaves a stage behind, and no batch run
-  persists its output (the parquet upsert aside).
+  persists its output (the parquet upsert aside); a quarantine plan that
+  reads its clean rows back (a CSV target) and fails its DQ gate or its
+  verify leaves the target byte-identical and still publishes its
+  violating rows.
 """
 
 from __future__ import annotations
@@ -327,6 +330,17 @@ def test_recover_rolls_forward_an_older_upsert_journal(spark, tmp_path):
     assert not os.path.exists(os.path.join(table, ps._JOURNAL))
 
 
+def _quarantine_csv_plan(sf, tmp) -> str:
+    """A quarantine plan on the read-back path: its CSV target reads the
+    clean rows back from the split.  A fifth of the clean rows have a
+    null price."""
+    return _quarantine_plan(sf, tmp / "bad", tmp / "out.csv").replace(
+        "END AS priority\n",
+        "END AS priority,\n"
+        "           CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_totalprice END AS price\n",
+    ).replace("  to: parquet\n", "  to: csv\n") + 'alerts:\n  on_fail: "slack://#x"\n'
+
+
 _PLANS = {
     "overwrite": lambda sf, tmp: _orders_plan(sf, tmp / "out", "  mode: overwrite\n"),
     "append": lambda sf, tmp: _incremental_plan(
@@ -340,6 +354,19 @@ _PLANS = {
     "csv": lambda sf, tmp: _orders_plan(sf, tmp / "out.csv").replace(
         "  to: parquet\n", "  to: csv\n"
     ),
+    "quarantine_csv_dq_fails": lambda sf, tmp: _quarantine_csv_plan(sf, tmp).replace(
+        "min_rows: 1", "min_rows: 99999"
+    ),
+    "quarantine_csv_verify_fails": lambda sf, tmp: _quarantine_csv_plan(sf, tmp)
+    + "verify:\n  nonnull_cols: [price]\n",
+}
+
+#: the shapes whose runs fail, each with the stage that fails them
+_FAILS = {
+    "dq_reject": "dq",
+    "verify_fails": "verify",
+    "quarantine_csv_dq_fails": "dq",
+    "quarantine_csv_verify_fails": "verify",
 }
 
 
@@ -350,9 +377,15 @@ def test_batch_runs_leave_no_stage_and_persist_nothing(
     """Warm runs (the second of each plan) with ``DataFrame.persist``
     raising: every non-upsert batch shape runs without a persist, which
     also means without the session clone Spark's cache manager makes per
-    persist.  Whatever the outcome, no stage is left."""
+    persist.  Whatever the outcome, no stage is left, and a failed run
+    alerts once.  A failed quarantine run on the read-back path (a CSV
+    target) leaves the old target byte-identical and still publishes
+    the violating rows to ``quarantine_path``."""
     plan = _PLANS[shape](sf_smoke, tmp_path)
-    want = "failed" if shape in ("dq_reject", "verify_fails") else "ok"
+    want = "failed" if shape in _FAILS else "ok"
+    target, old = tmp_path / "out.csv", b"o_orderkey,priority,price\n1,old,1.0\n"
+    if shape.startswith("quarantine_csv"):
+        target.write_bytes(old)
     assert _run(spark, plan)[0]["status"] == want
     cls = type(spark.range(1))
 
@@ -360,6 +393,15 @@ def test_batch_runs_leave_no_stage_and_persist_nothing(
         raise AssertionError("persist() on the batch path")
 
     monkeypatch.setattr(cls, "persist", boom)
-    res, _ = _run(spark, plan)
+    res, alerts = _run(spark, plan)
     assert res["status"] == want, res
     assert not _stages(tmp_path)
+    if shape in _FAILS:
+        assert set(res) == {"status", _FAILS[shape]} and len(alerts) == 1, res
+    if shape.startswith("quarantine_csv"):
+        assert target.read_bytes() == old
+        violating = spark.read.parquet(f"{sf_smoke}/orders.parquet").filter(
+            "o_orderkey % 7 = 0"
+        )
+        bad = spark.read.parquet(str(tmp_path / "bad"))
+        assert _rows(bad.select("o_orderkey")) == _rows(violating.select("o_orderkey"))
