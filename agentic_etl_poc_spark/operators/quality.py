@@ -9,13 +9,14 @@ one set of aggregates:
 observed (Spark's ``Observation``): one distributed pass and one Spark
 job, with per-task partial aggregates merged on the driver — no exchange,
 no per-column rescans, the shape that still works when the frame is
-100 TB.  A load that writes a stage first needs no scan at all: the plan
-runtime observes the metrics on its stage write (``gate_on``), and a
-quarantine split (``quarantine_write``) observes them, restricted to the
-clean rows, on its one write of every row into the stage, partitioned by
-the violation flag.  A load that writes its target directly (a parquet
-upsert, a JDBC table) is gated first, by the metrics observed on a
-``noop`` write of only the checked columns (``dq_check``).
+100 TB.  The plan runtime's gate needs no scan at all: every batch load
+writes a stage first, and the metrics are observed on the batch's first
+action (``gate_on``) — the stage write, or a parquet upsert's scan of
+its touched partitions; a quarantine split (``quarantine_write``)
+observes them, restricted to the clean rows, on its one write of every
+row into the stage, partitioned by the violation flag.  ``dq_check``
+scans a frame on its own: the metrics observed on a ``noop`` write of
+only the checked columns.
 
 Result dict matches the reference's JSON exactly:
 ``{"rows": n, "status": bool, "error": str|None}`` with first-failure-wins

@@ -12,9 +12,10 @@ Parity with the reference's two verifiers (SURVEY §2.4):
   The re-read is a Spark scan with column pruning — Catalyst reads only
   the checked columns, the distributed equivalent of the reference's
   ``usecols`` + 200k-row chunking (reference: ops.py:65-98).
-- ``verify_table`` (reference: etl_agent/tools.py:120-168): COUNT(*) and
-  MAX(ts) computed IN the sink DB via JDBC pushdown — the data never
-  leaves the database.
+- ``verify_table`` (reference: etl_agent/tools.py:120-168): rows,
+  per-column nulls and MAX(ts) computed IN the sink DB by one query via
+  JDBC pushdown — the data never leaves the database — against the same
+  ``min_rows`` / ``nonnull_cols`` / lag limits as ``verify_csv``.
 """
 
 from __future__ import annotations
@@ -120,14 +121,20 @@ def verify_table(
     spark: SparkSession,
     conn_str: str,
     table: str,
+    min_rows: int = 1,
+    nonnull_cols: list[str] | None = None,
     ts_col: str = "",
     max_lag_minutes: float = DEFAULT_MAX_LAG_MINUTES,
 ) -> dict:
-    """Post-load check of a DB sink — COUNT/MAX pushed down via JDBC."""
+    """Post-load check of a DB sink: ONE query pushed down via JDBC —
+    ``COUNT(*)``, a null count per ``nonnull_cols`` column and
+    ``MAX(ts_col)`` — with ``verify_csv``'s result keys.  An engine error
+    (a missing table or column) is reported, not raised."""
     from agentic_etl_poc_spark.sources.jdbc_source import fetch_db
 
-    # Aliases are quoted dialect-aware (unquoted identifiers case-fold
-    # per engine — Derby uppercases -> row["n"] misses; MySQL needs
+    # Aliases and columns are quoted dialect-aware (unquoted identifiers
+    # case-fold per engine — Derby uppercases, so row["n"] would miss and
+    # a Spark-written lower-case column would not be found; MySQL needs
     # backticks because double quotes are string literals there).  The
     # TABLE identifier stays deliberately UNQUOTED: Spark's JDBC writer
     # issues CREATE TABLE with the name unquoted, so the stored name
@@ -135,34 +142,30 @@ def verify_table(
     # it (quoting a lowercase name here would miss Derby's ORDERS_AGG).
     # Pre-quoted names pass through _quote_ident untouched, so callers
     # verifying a mixed-case table they created themselves can quote it.
-    qa = _quote_ident("n", conn_str)
+    def q(name: str) -> str:
+        return _quote_ident(name, conn_str)
+
+    cols = list(dict.fromkeys(nonnull_cols or []))
+    aggs = [f"COUNT(*) AS {q('n')}"] + [
+        f"SUM(CASE WHEN {q(c)} IS NULL THEN 1 ELSE 0 END) AS {q(f'nulls_{i}')}"
+        for i, c in enumerate(cols)
+    ]
+    if ts_col:
+        aggs.append(f"MAX({q(ts_col)}) AS {q('m')}")
     try:
-        cnt_df = fetch_db(
-            spark, conn_str, f"SELECT COUNT(*) AS {qa} FROM {table}"
-        )
-        rows = int(cnt_df.collect()[0]["n"])
+        row = fetch_db(
+            spark, conn_str, f"SELECT {', '.join(aggs)} FROM {table}"
+        ).collect()[0]
     except Exception as e:  # reference reports engine errors, not raises
         return {"status": False, "error": f"engine_error: {e}"}
-
-    lag_min: float | None = None
-    fresh_ok = True
-    if ts_col:
-        try:
-            ts_df = fetch_db(
-                spark,
-                conn_str,
-                f"SELECT MAX({ts_col}) AS {_quote_ident('m', conn_str)} "
-                f"FROM {table}",
-            )
-            lag_min = lag_minutes(ts_df.collect()[0]["m"])
-            if lag_min is not None:
-                fresh_ok = lag_min <= max_lag_minutes
-        except Exception as e:
-            return {"status": False, "error": f"verify_error: {e}", "rows": rows}
-
+    rows = int(row["n"])
+    nonnull_ok = not any(row[f"nulls_{i}"] for i in range(len(cols)))
+    lag_min = lag_minutes(row["m"]) if ts_col else None
+    fresh_ok = lag_min is None or lag_min <= max_lag_minutes
     return {
         "rows": rows,
+        "nonnull_ok": nonnull_ok,
         "fresh_ok": fresh_ok,
         "lag_minutes": lag_min,
-        "status": rows > 0 and fresh_ok,
+        "status": rows >= min_rows and nonnull_ok and fresh_ok,
     }

@@ -14,29 +14,34 @@ reference's exact control flow and result shapes:
 Every plan tail is one sequence: produce the DQ verdict, the load and the
 verify verdict in the tail's own way, and judge them in ``_result``, the
 one place a run passes or fails.  The tails differ only in where the
-verdicts come from: a file load observes its gate on its stage write
+verdicts come from: a batch load observes its gate on its stage write
 (``_load``), a quarantine plan on its split write (``_run_quarantine``),
-an upsert or JDBC load scans first, and a stream plan drains, then scans
-its artifact once for both gates (``_run_stream_plan_tail``).  Where a
-passing stage publishes follows from ``plan.load`` alone (``_publish``);
-``run_from_plan`` reports the load and advances the watermark for every
-passing tail.
+and a stream plan drains, then scans its artifact once for both gates
+(``_run_stream_plan_tail``).  Where a load's stage lives and what
+publishing it means follow from ``plan.load`` alone (``_staging``,
+``_publish``); ``run_from_plan`` reports the load and advances the
+watermark for every passing tail.
 
 Spark-native twists:
 - the transform chain stays lazy; its first action is the stage write,
-  the quarantine write, or (for a load that writes its target directly)
-  the DQ gate's scan.
-- write–audit–publish: a file load (CSV, parquet overwrite/replace/append)
-  writes into a hidden stage beside its target, the DQ gate and verify
-  judge the stage, and only a passing run publishes it through the
-  journaled commit (``parquet_sink.publish``: an overwrite swaps the
-  directory or file, an append moves the new part files).  A failed
-  gate, write or verify leaves the target byte-identical and the
-  watermark where it was; a rejected run has written (and deleted) its
-  stage.  A parquet upsert keeps its own staged commit; a JDBC load
-  writes its table directly.
-- nothing is persisted except a parquet upsert's batch, which its merge
-  reads twice: every other batch load computes the transform once.
+  the quarantine write, or (for a parquet upsert into an existing
+  table) the scan of the batch's touched partitions.
+- write–audit–publish for every batch load: the load writes a stage,
+  the DQ gate and verify judge the stage, and only a passing run
+  publishes it.  A file load's stage is a hidden directory beside its
+  target, published through the journaled commit
+  (``parquet_sink.publish``: an overwrite swaps the directory or file,
+  an append moves the new part files, an upsert swaps the partitions
+  its merge rewrote and moves its change batch).  A JDBC load's stage
+  is the table ``{table}_stg``, published by one transaction
+  (``jdbc_sink.publish``) and dropped afterwards.  A failed gate, write
+  or verify leaves the target as it was (byte-identical files, the same
+  rows) and the watermark where it was; a rejected run has written (and
+  deleted) its stage.
+- nothing is persisted but the batch of a parquet upsert into an
+  existing table, which its merge reads more than once
+  (``parquet_sink.stage_upsert``); every other batch load computes the
+  transform once.
 - alert/status hooks are injectable callables; defaults print like the
   reference (``ALERT to {channel}: {message}`` / ``STATUS[{step}]:``,
   reference: tools.py:267-277).
@@ -56,10 +61,9 @@ Spark job, no exchange) or on a write the run makes anyway.
 - incremental: one observed ``max(ts)`` scan for the new watermark, over
   the filtered source, kept apart from the DQ gate so the watermark
   means "newest source row seen" whatever the transform filters.
-- DQ gate: for a file load, no job of its own: its metrics (rows,
-  per-column nulls, max ts) are observed on the stage write.  A parquet
-  upsert or JDBC load, which writes its target, is gated first by one
-  observed scan of the checked columns (``dq_check``).
+- DQ gate: no job of its own: its metrics (rows, per-column nulls, max
+  ts) are observed on the batch's first action — the stage write, or a
+  parquet upsert's scan of its touched partitions.
 - quarantine split: the split, the DQ gate and a parquet load are ONE
   job (``quality.quarantine_write``): ``out`` is written into the stage
   partitioned by a violation flag, with the gate's clean-row metrics and
@@ -68,19 +72,23 @@ Spark job, no exchange) or on a write the run makes anyway.
   parquet overwrite/append on the same filesystem, to the target; any
   other load reads the clean rows back from the stage.
 - load: the stage write, whose observed row count the load message
-  reports; a parquet upsert or JDBC load takes the DQ row count as
-  ``row_count`` instead of counting again, and an upsert also collects
-  its touched partition values.  A write that raises fails the run with
-  ``write_error`` (``{"status": "failed", "load": {...}}``), and so does
-  a publish that fails before its journal; one that fails after it
-  raises (the commit is decided: ``recover_table`` rolls it forward).
-- verify: one re-read of the written artifact and one observed scan — a
-  separate scan on purpose, because catching sink corruption is its job.
-  A staged parquet load is re-read with the schema it was written with,
-  so no inference job; an upsert's re-read infers, because its merge can
-  widen the table.  An append's verify counts the staged increment, not
-  the whole table.  A re-read that raises fails the run with
-  ``read_error``.
+  reports.  A parquet upsert into an existing table also scans its
+  touched partitions (one observed ``noop`` scan), reads the target's
+  schema and writes the merge of those partitions.  A write that raises
+  — the stage write, the quarantine split, the stream drain — fails the
+  run with ``write_error`` (``{"status": "failed", "load": {...}}``,
+  ``_sink_write``), and so does a publish that fails before it is
+  decided (a JDBC transaction, a file commit before its journal); a file
+  commit that fails after its journal raises (``recover_table`` rolls it
+  forward).
+- verify: one re-read of the stage and one observed scan — a separate
+  scan on purpose, because catching sink corruption is its job; a JDBC
+  stage is checked by one query in the database (``verify_table``).  A
+  parquet stage is re-read with the schema it was written with (an
+  upsert's merge may widen it), so no inference job.  An append's
+  verify counts the staged increment, an upsert's the partitions it
+  rewrote, a JDBC load's the batch, not the whole table.  A re-read
+  that raises fails the run with ``read_error``.
 - stream plans: the AvailableNow drain, then ONE observed scan of the
   drained artifact, read with the stream's schema, over the union of the
   DQ and verify columns; both verdicts are derived from its metrics
@@ -89,6 +97,7 @@ Spark job, no exchange) or on a write the run makes anyway.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from collections.abc import Callable
@@ -96,7 +105,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from agentic_etl_poc_spark.operators.quality import (
+# dq_check and load_to_postgres are not called here, but the traced
+# benchmark run wraps them at this module (perfbench/trace.py)
+from agentic_etl_poc_spark.operators.quality import (  # noqa: F401
     dq_check,
     dq_verdict,
     gate_on,
@@ -109,9 +120,9 @@ from agentic_etl_poc_spark.operators.transform import run_single_sql, run_steps
 from agentic_etl_poc_spark.operators.verify import verify_csv, verify_table
 from agentic_etl_poc_spark.plans.model import Plan
 from agentic_etl_poc_spark.plans.parser import infer_kind, parse_plan
-from agentic_etl_poc_spark.sinks import parquet_sink
+from agentic_etl_poc_spark.sinks import jdbc_sink, parquet_sink
 from agentic_etl_poc_spark.sinks.csv_sink import write_csv
-from agentic_etl_poc_spark.sinks.jdbc_sink import load_to_postgres
+from agentic_etl_poc_spark.sinks.jdbc_sink import load_to_postgres  # noqa: F401
 from agentic_etl_poc_spark.sources.csv_source import read_csv, read_csv_triplet
 from agentic_etl_poc_spark.sources.json_source import read_json
 
@@ -377,62 +388,82 @@ def _verify_limits(plan: Plan) -> tuple[int, list[str] | None]:
     )
 
 
-def _verify(spark: SparkSession, plan: Plan, path: str, schema) -> dict:
-    """The verify verdict over the artifact at ``path`` (the stage of a
-    file load, the target of an upsert, the table of a JDBC load)."""
+def _verify(spark: SparkSession, plan: Plan, data: str, schema) -> dict:
+    """The verify verdict over the load's staged ``data`` (``_staging``:
+    a file or table in a file load's stage, a JDBC load's stage
+    table)."""
     vf, ld = plan.verify, plan.load
     min_rows, nonnull = _verify_limits(plan)
     if ld.to == "parquet":
         return parquet_sink.verify_parquet(
-            spark, path, min_rows=min_rows, nonnull_cols=nonnull, schema=schema
+            spark, data, min_rows=min_rows, nonnull_cols=nonnull, schema=schema
         )
     if ld.to == "csv":
         return verify_csv(
-            spark, path, min_rows=min_rows, nonnull_cols=nonnull,
+            spark, data, min_rows=min_rows, nonnull_cols=nonnull,
             timestamp_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
             include_header=ld.include_header,
         )
     return verify_table(
-        spark, ld.conn_str, ld.table,
+        spark, ld.conn_str, data, min_rows=min_rows, nonnull_cols=nonnull,
         ts_col=vf.ts_col, max_lag_minutes=vf.max_lag_minutes,
     )
 
 
-def _write(plan: Plan, df: DataFrame, path: str, rows) -> str | dict:
-    """Write ``df`` to ``path`` through the plan's sink: its load message,
-    or the ``write_error`` verdict of a write that raised.  ``rows`` is
-    the count the message reports (a callable is read after the write);
-    a staged write's message names the target."""
-    from agentic_etl_poc_spark import plan_capture
-
-    ld = plan.load
-    plan_capture.note("sink_input", df)
+def _sink_write(write: Callable, *args):
+    """``write(*args)``, or the ``write_error`` verdict of a Spark error it
+    raised: the one ``try`` around every write a run makes (the stage
+    write, the quarantine split, the stream drain)."""
     try:
-        if ld.to == "csv":
-            return write_csv(
-                df, path, include_header=ld.include_header,
-                row_count=rows, target=ld.file_path,
-            )
-        if ld.to == "parquet":
-            # every file mode writes its stage, a new directory, whole
-            mode = "upsert" if ld.mode == "upsert" else "overwrite"
-            return parquet_sink.write_parquet(
-                df, path, mode=mode, partition_by=ld.partition_by,
-                key_cols=ld.key_cols, change_feed=ld.change_feed,
-                row_count=rows, target=ld.file_path,
-            )
-        return load_to_postgres(
-            df, ld.conn_str, ld.table, mode=ld.mode,
-            key_cols=ld.key_cols, row_count=rows,
-        )
+        return write(*args)
     except parquet_sink.READ_ERRORS as e:
         return parquet_sink.error_verdict(e, "write_error")
 
 
-def _staged(ld) -> bool:
-    """Whether the load writes a stage (a file load) rather than its
-    target (a parquet upsert, a JDBC table)."""
-    return ld.to == "csv" or (ld.to == "parquet" and ld.mode != "upsert")
+def _write(plan: Plan, df: DataFrame, data: str, rows, schema: list) -> str:
+    """Write ``df`` to the load's staged ``data`` through the plan's sink
+    and return the load message, which names the target.  ``rows`` is the
+    count it reports, read after the write; ``schema[0]`` is set to the
+    schema the stage holds when that is not ``df``'s (an upsert's merge
+    can widen the table)."""
+    from agentic_etl_poc_spark import plan_capture
+
+    ld = plan.load
+    plan_capture.note("sink_input", df)
+    if ld.to == "csv":
+        return write_csv(
+            df, data, include_header=ld.include_header,
+            row_count=rows, target=ld.file_path,
+        )
+    if ld.to != "parquet":
+        return jdbc_sink.write_stage(
+            df, ld.conn_str, data, ld.table, ld.mode, ld.key_cols, rows
+        )
+    if ld.mode != "upsert":
+        # every other file mode writes its stage, a new directory, whole
+        return parquet_sink.write_parquet(
+            df, data, partition_by=ld.partition_by, row_count=rows,
+            target=ld.file_path,
+        )
+    msg, schema[0] = parquet_sink.stage_upsert(
+        df, data, ld.file_path, ld.key_cols, ld.partition_by,
+        ld.change_feed, rows,
+    )
+    return msg
+
+
+@contextlib.contextmanager
+def _staging(spark: SparkSession, ld):
+    """The load's ``(stage, data)``: a file load's stage is a hidden
+    directory beside its target, which its data goes into under the
+    target's name; a JDBC load's is the table ``{table}_stg``, both at
+    once."""
+    if ld.to not in ("csv", "parquet"):
+        with jdbc_sink.staging(spark, ld.conn_str, ld.table) as stage:
+            yield stage, stage
+        return
+    with parquet_sink.staging(ld.file_path) as stage:
+        yield stage, os.path.join(stage, os.path.basename(os.path.abspath(ld.file_path)))
 
 
 def _run_batch_tail(
@@ -473,17 +504,21 @@ def _run_quarantine(
     cks, ld = plan.checks, plan.load
     qpath = cks.quarantine_path
     as_written = (
-        _staged(ld)
-        and ld.to == "parquet"
+        ld.to == "parquet"
+        and ld.mode != "upsert"
         and not ld.partition_by
         and parquet_sink.same_device(ld.file_path, qpath)
     )
     with parquet_sink.staging(ld.file_path if as_written else qpath) as stage:
         if as_written:
             parquet_sink.recover_table(qpath)
-        clean, bad, stats = quarantine_write(
-            out, cks.nonnull_cols, os.path.join(stage, "split"), _gate_ts(cks)
+        split = _sink_write(
+            quarantine_write,
+            out, cks.nonnull_cols, os.path.join(stage, "split"), _gate_ts(cks),
         )
+        if isinstance(split, dict):
+            return _failed(plan, send_alert, "load", split)
+        clean, bad, stats = split
         dq = dq_verdict(stats, **_gate(cks))
         dq["quarantined"] = stats["quarantined"]
         if as_written:
@@ -507,42 +542,19 @@ def _load(
     dq: dict | None,
     send_alert: Callable[[str, str], str],
 ) -> dict:
-    """Load and verify ``out``, and judge the run (``_result``).  ``dq``
-    is the gate's verdict when it already ran (a quarantine split's): the
-    load then waits for it.
-
-    A file load (CSV, parquet overwrite/replace/append) writes into a
-    hidden stage beside its target, with the gate's metrics observed on
-    that write when ``dq`` is None; verify re-reads the stage and only a
-    passing run publishes it (``_publish``).  A parquet upsert (its own
-    staged commit) and a JDBC load (transactional) write their target,
-    so their gate scans first (``dq_check``) and they take its row count
-    instead of counting again."""
-    cks, ld = plan.checks, plan.load
-    if not _staged(ld):
-        # the upsert reads its batch twice (touched partitions, then the
-        # merge): compute the transform once
-        upsert = dq is None and ld.to == "parquet"
-        if upsert:
-            out = out.persist()
-        try:
-            dq = dq or dq_check(out, **_gate(cks))
-            # an upsert's merge can evolve the table wider than the batch:
-            # its re-read infers the schema
-            return _result(
-                plan, send_alert, dq,
-                lambda: _write(plan, out, ld.file_path, dq["rows"]),
-                lambda: _verify(spark, plan, ld.file_path, None),
-            )
-        finally:
-            if upsert:
-                out.unpersist()
-    with parquet_sink.staging(ld.file_path) as stage:
-        data = os.path.join(stage, os.path.basename(os.path.abspath(ld.file_path)))
+    """Load and verify ``out``, and judge the run (``_result``): every
+    load writes a stage (``_staging``), with the gate's metrics observed
+    on that write when ``dq`` is None; verify reads the stage and only a
+    passing run publishes it (``_publish``).  ``dq`` is the gate's
+    verdict when it already ran (a quarantine split's): the write then
+    waits for it."""
+    cks = plan.checks
+    with _staging(spark, plan.load) as (stage, data):
         observed, stats = gate_on(out, cks.nonnull_cols, _gate_ts(cks))
+        schema = [out.schema]
 
         def write() -> str | dict:
-            return _write(plan, observed, data, lambda: stats()["rows"])
+            return _sink_write(_write, plan, observed, data, lambda: stats()["rows"], schema)
 
         load = write
         if dq is None:  # the gate is the one observed on the stage write
@@ -551,9 +563,9 @@ def _load(
                 dq = dq_verdict(stats(), **_gate(cks))
         res = _result(
             plan, send_alert, dq, load,
-            lambda: _verify(spark, plan, data, out.schema),
+            lambda: _verify(spark, plan, data, schema[0]),
         )
-        return _publish(plan, send_alert, stage, res, data)
+        return _publish(plan, send_alert, stage, res, data, out=out)
 
 
 def _publish(
@@ -563,29 +575,39 @@ def _publish(
     res: dict,
     data: str | None,
     swaps: list[tuple[str, str]] = (),
+    out: DataFrame | None = None,
 ) -> dict:
     """Publish from ``stage`` and return the run's result.  ``swaps`` (a
     quarantine split's violating rows) publish whatever ``res`` says; the
     staged load ``data`` only when the run passed, to the plan's target:
-    a parquet append moves its files, any other file load swaps.
+    a file load by the renames its mode takes (``parquet_sink.renames``),
+    a JDBC load by one transaction (``jdbc_sink.publish``, with the
+    session and columns of ``out``, the frame it loaded).
 
-    A publish that fails before its journal published nothing, and fails
-    a passing run's load with ``write_error``.  From the journal on the
-    commit is decided: the error propagates, and the next
-    ``recover_table`` of the target rolls the commit forward."""
+    A publish that fails before it is decided (a JDBC transaction that
+    rolled back, a file commit before its journal) published nothing,
+    and fails a passing run's load with ``write_error``.  From the
+    journal on, a file commit is decided: the error propagates, and the
+    next ``recover_table`` of the target rolls the commit forward."""
     ld = plan.load
     swaps, appends = list(swaps), []
-    if data and res["status"] == "ok":
-        append = ld.to == "parquet" and ld.mode == "append"
-        (appends if append else swaps).append((data, ld.file_path))
-    if swaps or appends:
-        try:
+    try:
+        if data and res["status"] == "ok" and ld.to not in ("csv", "parquet"):
+            jdbc_sink.publish(
+                out.sparkSession, ld.conn_str, ld.table, data, ld.mode,
+                ld.key_cols, out.columns,
+            )
+        elif data and res["status"] == "ok":
+            mode = ld.mode if ld.to == "parquet" else "overwrite"
+            s, a = parquet_sink.renames(mode, data, ld.file_path)
+            swaps, appends = swaps + s, a
+        if swaps or appends:
             parquet_sink.publish(stage, swaps, appends)
-        except OSError as e:
-            if res["status"] != "ok" or parquet_sink.journaled(stage):
-                raise
-            verdict = parquet_sink.error_verdict(e, "write_error")
-            return _failed(plan, send_alert, "load", verdict)
+    except (OSError, *parquet_sink.READ_ERRORS) as e:
+        if res["status"] != "ok" or parquet_sink.journaled(stage):
+            raise
+        verdict = parquet_sink.error_verdict(e, "write_error")
+        return _failed(plan, send_alert, "load", verdict)
     return res
 
 
@@ -718,7 +740,9 @@ def _run_stream_plan_tail(
     )
     from agentic_etl_poc_spark.streaming.events import run_available_now
 
-    run_available_now(out, checkpoint, ld.file_path)
+    drained = _sink_write(run_available_now, out, checkpoint, ld.file_path)
+    if isinstance(drained, dict):
+        return _failed(plan, send_alert, "load", drained)
 
     # Both gates read the same drained artifact and nothing is written
     # between them, so ONE scan aggregates the union of their columns and
@@ -732,8 +756,7 @@ def _run_stream_plan_tail(
             _gate_ts(cks),
         )
     except parquet_sink.READ_ERRORS as e:
-        error = parquet_sink.error_verdict(e)
-        return _result(plan, send_alert, None, "", lambda: error)
+        return _failed(plan, send_alert, "verify", parquet_sink.error_verdict(e))
     dq = dq_verdict(stats, **_gate(cks))
     msg = (
         f"stream drained to {ld.file_path} "

@@ -1,19 +1,27 @@
-"""JDBC sink: append / replace / upsert.
+"""JDBC sink: append / replace / upsert, each staged, then published in
+one transaction.
 
-append and replace map directly onto Spark's JDBC writer.  upsert is the
-one genuinely custom writer in the whole engine (SURVEY §7): the reference
-stages to ``{table}_stg`` then merges with
+The reference's upsert stages to ``{table}_stg`` then merges with
 ``INSERT ... ON CONFLICT (keys) DO UPDATE`` in one transaction
-(reference: etl_agent/tools.py:83-96).  We reproduce that shape:
+(reference: etl_agent/tools.py:83-96).  Every mode here takes that shape,
+so a load can be verified before its target changes:
 
-1. distributed stage write: ``df.write.jdbc(stage, overwrite)`` — the data
-   plane stays parallel (N executor connections),
-2. driver-side transactional merge: one ``INSERT ... SELECT ... ON
-   CONFLICT DO UPDATE`` running entirely inside the sink DB — no data
-   moves through the driver.
+1. distributed stage write: ``df.write.jdbc("{table}_stg", overwrite)``
+   (``write_stage``) — the data plane stays parallel (N executor
+   connections),
+2. the plan runtime verifies the stage table (``verify_table``),
+3. driver-side transactional publish (``publish``), running entirely
+   inside the sink DB — no data moves through the driver: an append
+   creates the table if absent and inserts the stage; a replace drops
+   the table, creates it with the stage's shape and inserts; an upsert
+   merges (``INSERT ... SELECT ... ON CONFLICT DO UPDATE``; Derby's
+   ``MERGE INTO``).  A failing statement rolls the whole publish back.
 
-That split is exactly how you'd do it against Postgres at scale; with a
-lakehouse sink (Delta/Iceberg) the merge would be ``MERGE INTO`` instead.
+``staging`` drops the stage table afterwards, whether the load passed
+or not.  That split is exactly how you'd do it against Postgres at
+scale; with a lakehouse sink (Delta/Iceberg) the merge would be
+``MERGE INTO`` instead.  Single writer per table: the stage name is
+fixed.
 
 DB driver libraries aren't bundled here; calls raise a clear error when
 the JDBC driver / DB client is missing (import-gated, per environment
@@ -21,6 +29,10 @@ constraints).
 """
 
 from __future__ import annotations
+
+import contextlib
+import warnings
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -45,23 +57,107 @@ def load_to_postgres(
     key_cols: list[str] | None = None,
     row_count: int | None = None,
 ) -> str:
-    if row_count is None:
-        row_count = df.count()
-    if mode == "append":
-        _jdbc_writer(df, conn_str, table, "append").save()
-    elif mode == "replace":
-        _jdbc_writer(df, conn_str, table, "overwrite").save()
-    elif mode == "upsert":
-        if not key_cols:
-            raise ValueError("upsert mode requires key_cols")
-        stage = f"{table}_stg"
-        _jdbc_writer(df, conn_str, stage, "overwrite").save()
-        _merge_on_conflict(
-            conn_str, table, stage, key_cols, df.columns, spark=df.sparkSession
-        )
-    else:
+    """Load ``df`` into ``table``: write the stage table, then publish
+    it in one transaction (steps 1 and 3 of the module docstring)."""
+    spark = df.sparkSession
+    with staging(spark, conn_str, table) as stage:
+        msg = write_stage(df, conn_str, stage, table, mode, key_cols, row_count)
+        publish(spark, conn_str, table, stage, mode, key_cols, df.columns)
+    return msg
+
+
+@contextlib.contextmanager
+def staging(spark, conn_str: str, table: str):
+    """The stage table of ``table`` (``{table}_stg``), dropped when the
+    ``with`` block ends (Derby's 42Y55: it was never written).  A drop
+    that fails only warns: the load is decided by then (a published
+    load must not turn into an error that keeps the watermark back), and
+    the next load's stage write replaces the table."""
+    stage = f"{table}_stg"
+    derby = conn_str.startswith("jdbc:derby:")
+    try:
+        yield stage
+    finally:
+        drop = f"DROP TABLE {stage}" if derby else f"DROP TABLE IF EXISTS {quote_ident(stage)}"
+        try:
+            _execute(spark, conn_str, [drop], ("42Y55",))
+        except Exception as e:  # any driver's error: the DB may be unreachable
+            warnings.warn(f"stage table {stage} was not dropped: {e}")
+
+
+def write_stage(
+    df: DataFrame,
+    conn_str: str,
+    stage: str,
+    table: str,
+    mode: str,
+    key_cols: list[str] | None = None,
+    row_count: int | Callable[[], int] | None = None,
+) -> str:
+    """Write ``df`` to the ``stage`` table of a ``mode`` load into
+    ``table`` and return the load's message.  ``row_count``, when the
+    caller holds it, skips the count; a callable is called after the
+    write (a count the caller observes on it)."""
+    if mode not in ("append", "replace", "upsert"):
         raise ValueError(f"unknown load mode: {mode!r}")
-    return f"loaded {row_count:,} rows into {table} ({mode})"
+    if mode == "upsert" and not key_cols:
+        raise ValueError("upsert mode requires key_cols")
+    n = df.count() if row_count is None else row_count
+    _jdbc_writer(df, conn_str, stage, "overwrite").save()
+    return f"loaded {n() if callable(n) else n:,} rows into {table} ({mode})"
+
+
+def publish(
+    spark,
+    conn_str: str,
+    table: str,
+    stage: str,
+    mode: str,
+    key_cols: list[str] | None,
+    columns: list[str],
+) -> None:
+    """Publish the ``stage`` table to ``table`` in one transaction (see
+    the module docstring).  ``sqlite://`` conn strings use the stdlib
+    driver (always available — also how the statements are unit-tested);
+    ``jdbc:derby:`` runs through the Spark JVM (the embedded engine lives
+    there); everything else goes through SQLAlchemy, matching the
+    reference's engine choice (reference: etl_agent/tools.py:76).
+
+    Derby has no ``IF [NOT] EXISTS``: a CREATE of a table or index that
+    exists fails with X0Y32, which is ignored (so two loads racing to
+    create the table both reach the insert or merge), and a metadata
+    probe decides a replace's DROP."""
+    derby = conn_str.startswith("jdbc:derby:")
+    exists = not derby or _derby_table_exists(spark, conn_str, table)
+    stmts = publish_statements(table, stage, mode, key_cols, columns, derby, exists)
+    _execute(spark, conn_str, stmts, ("X0Y32",))
+
+
+def publish_statements(
+    table: str,
+    stage: str,
+    mode: str,
+    key_cols: list[str] | None,
+    columns: list[str],
+    derby: bool = False,
+    exists: bool = True,
+) -> list[str]:
+    """``publish``'s statements, in the Derby dialect when ``derby``
+    (``merge_statements_derby``) or else the Postgres/SQLite one
+    (``merge_statements``); ``exists``: whether ``table`` does."""
+    merge = merge_statements_derby if derby else merge_statements
+    if mode == "upsert":
+        return merge(table, stage, key_cols, columns)
+    # the merge's CREATE TABLE (and its check of the names); no key index
+    create = merge(table, stage, key_cols or columns, columns)[0]
+    qt, qs = (table, stage) if derby else (quote_ident(table), quote_ident(stage))
+    cols = ", ".join(quote_ident(c) for c in columns)
+    drop = f"DROP TABLE {qt}" if derby else f"DROP TABLE IF EXISTS {qt}"
+    return [
+        *([drop] if mode == "replace" and exists else []),
+        create,
+        f"INSERT INTO {qt} ({cols}) SELECT {cols} FROM {qs}",
+    ]
 
 
 def quote_ident(name: str) -> str:
@@ -112,9 +208,9 @@ def merge_statements_derby(
     Derby >= 10.11 — 10.16 ships on Spark's classpath).  Differences from
     the Postgres/SQLite dialect that merge_statements targets:
 
-    - no ``IF NOT EXISTS`` — the executor (_merge_derby) checks table
-      existence via DatabaseMetaData and runs the DDL statements only on
-      first creation, all inside the same transaction as the merge,
+    - no ``IF NOT EXISTS`` — the executor (``publish``) ignores the
+      X0Y32 (already exists) of the two CREATEs when the table has them,
+      inside the same transaction as the merge,
     - ``CREATE TABLE ... AS SELECT ... WITH NO DATA`` instead of
       ``WHERE 1=0`` (Derby's CTAS form),
     - ``MERGE INTO target USING stage ON keys WHEN [NOT] MATCHED``
@@ -211,54 +307,20 @@ def _derby_table_exists(spark, url: str, table: str) -> bool:
         conn.close()
 
 
-def _merge_derby(
-    spark, url: str, table: str, stage: str, key_cols: list[str], columns: list[str]
-) -> None:
-    """Derby-dialect driver-side merge: create-if-absent (metadata probe —
-    Derby has no IF NOT EXISTS) + MERGE INTO, one transaction."""
-    create_tbl, create_idx, merge = merge_statements_derby(
-        table, stage, key_cols, columns
-    )
-    stmts = [merge]
-    ignore: tuple = ()
-    if not _derby_table_exists(spark, url, table):
-        # Derby DDL is transactional: table + index + merge commit
-        # together.  X0Y32 (object already exists) is ignored on the
-        # CREATEs so two concurrent upserts racing the metadata probe
-        # both proceed to the merge instead of one dying on the DDL.
-        stmts = [create_tbl, create_idx, merge]
-        ignore = ("X0Y32",)
-    derby_exec(spark, url, stmts, ignore_states=ignore)
-
-
-def _merge_on_conflict(
-    conn_str: str,
-    table: str,
-    stage: str,
-    key_cols: list[str],
-    columns: list[str],
-    spark=None,
-) -> None:
-    """Driver-side transactional merge from stage into target.
-
-    ``sqlite://`` conn strings use the stdlib driver (always available —
-    also how the merge logic is unit-tested); ``jdbc:derby:`` runs MERGE
-    INTO through the Spark JVM (the embedded engine lives there);
-    everything else goes through SQLAlchemy, matching the reference's
-    engine choice (reference: etl_agent/tools.py:76)."""
+def _execute(spark, conn_str: str, stmts: list[str], ignore_states: tuple = ()) -> None:
+    """Run ``stmts`` in one transaction on the database ``conn_str``
+    names (``publish`` lists the three ways); ``ignore_states`` as in
+    ``derby_exec``, for Derby only."""
     if conn_str.startswith("jdbc:derby:"):
-        if spark is None:
-            raise ValueError("Derby upsert needs the live SparkSession")
-        _merge_derby(spark, conn_str, table, stage, key_cols, columns)
+        derby_exec(spark, conn_str, stmts, ignore_states)
         return
-    stmts = merge_statements(table, stage, key_cols, columns)
     if conn_str.startswith("sqlite://"):
         import sqlite3
 
         path = conn_str[len("sqlite://") :].lstrip("/")
         con = sqlite3.connect("/" + path if conn_str.startswith("sqlite:////") else path)
         try:
-            with con:  # one transaction: DDL + index + merge
+            with con:
                 for s in stmts:
                     con.execute(s)
         finally:
@@ -268,9 +330,9 @@ def _merge_on_conflict(
         import sqlalchemy
     except ImportError as e:
         raise RuntimeError(
-            "upsert merge requires the 'sqlalchemy' package and a DB driver"
+            "a JDBC load requires the 'sqlalchemy' package and a DB driver"
         ) from e
     engine = sqlalchemy.create_engine(conn_str)
-    with engine.begin() as conn:  # one transaction: DDL + index + merge
+    with engine.begin() as conn:
         for s in stmts:
             conn.exec_driver_sql(s)

@@ -10,15 +10,17 @@ the portable Delta/Iceberg ``MERGE INTO`` (copy-on-write), with a
 journaled table-level commit, schema evolution, and an opt-in row-level
 change feed (the plain-parquet equivalent of Delta's change-data-feed).
 
-Every staged write publishes through one journaled commit (``_commit``):
-the upsert's partition swaps, and the plan runtime's write–audit–publish
-of a batch load (``staging`` → write and verify the stage → ``publish``:
-an overwrite swaps the table directory or CSV file, an append moves its
-new part files with their ``.crc`` twins).  Every rename stays on one
-filesystem (checked before the journal), and a journal naming every
-rename is written before the first one, so ``recover_table`` rolls a
-crashed commit forward, and sweeps a stage that never reached its
-journal and that no live run holds.
+Every load is written into a stage and published through one journaled
+commit (``_commit``): ``staging`` makes a hidden stage beside the target,
+the load writes it (and the plan runtime verifies it), and ``publish``
+commits it with the renames ``renames`` derives from the load mode — an
+overwrite swaps the table directory or CSV file, an append moves its new
+part files with their ``.crc`` twins, an upsert swaps the partitions its
+merge rewrote and moves its change batch.  Every rename stays on one
+filesystem (checked before the journal), and a journal in the stage
+naming every rename is written before the first one, so
+``recover_table`` rolls a crashed commit forward, and sweeps a stage
+that never reached its journal and that no live run holds.
 """
 
 from __future__ import annotations
@@ -26,7 +28,9 @@ from __future__ import annotations
 import contextlib
 import errno
 import fcntl
+import functools
 import json
+import operator
 import os
 import shutil
 import tempfile
@@ -142,10 +146,10 @@ def _commit(
 
 
 def _journal(jpath: str) -> dict:
-    """The journal at ``jpath``.  An upsert journal written before batch
-    loads shared the commit names its renames relative to the stage and
-    to the table holding the journal (``swaps``: partition paths,
-    ``extras``: ``[src, dst]`` pairs); it reads as the same renames."""
+    """The journal at ``jpath``.  An upsert journal written by older
+    versions, which kept it in the table, names its renames relative to
+    the stage and to that table (``swaps``: partition paths, ``extras``:
+    ``[src, dst]`` pairs); it reads as the same renames."""
     with open(jpath) as f:
         j = json.load(f)
     if "extras" in j or any(isinstance(s, str) for s in j["swaps"]):
@@ -234,13 +238,13 @@ def recover_table(path: str) -> str:
     crash — called by every writer (and by ``read_table``) before
     touching it.
 
-    * A journal present (in a stage beside ``path``, or an upsert's in
-      ``path``): the stage write had fully completed before the journal
-      was created (write ordering), so the commit is ROLLED FORWARD —
-      remaining swaps and moves are completed idempotently, then residue,
-      the journal and the stage are cleared.  A reader that opens the
-      table after a crash at ANY rename sees the entire new commit, never
-      a mix.
+    * A journal present (in a stage beside ``path``, or, from older
+      versions, an upsert's in ``path``): the stage write had fully
+      completed before the journal was created (write ordering), so the
+      commit is ROLLED FORWARD — remaining swaps and moves are completed
+      idempotently, then residue, the journal and the stage are cleared.
+      A reader that opens the table after a crash at ANY rename sees the
+      entire new commit, never a mix.
     * No journal: any ``.precommit_`` residue is from a commit that
       already completed its swaps (residue deletion is post-journal) or
       from external meddling — residue whose live copy is MISSING is
@@ -291,7 +295,7 @@ def _recover(path: str, stages: list[str], in_use: bool) -> str:
                     (os.path.join(root, d), os.path.join(root, d[len(".precommit_"):]))
                 )
                 dirs.remove(d)
-            elif d.startswith(".upsert_stage_"):
+            elif d.startswith(".upsert_stage_"):  # older versions' upsert stage
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
                 dirs.remove(d)
     for old, live in residue:
@@ -406,36 +410,24 @@ def read_changes(
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    key_cols: list[str] | None = None,
-    change_feed: bool = False,
     row_count: int | Callable[[], int] | None = None,
     target: str | None = None,
 ) -> str:
-    """Write ``df`` as parquet (``mode="upsert"`` delegates to
-    ``upsert_parquet``).  ``row_count``, when the caller already holds
-    it (the plan runtime's DQ count), skips the count job the message
-    would otherwise cost; a callable is called after the write (a count
-    the caller observes on it).  The message names ``target``, the path
-    a staged write publishes to, or else ``path``."""
-    if mode == "upsert":
-        return upsert_parquet(
-            df, path, key_cols or [], partition_by or [], change_feed,
-            row_count=row_count,
-        )
+    """Write ``df`` as a new parquet table at ``path`` (the plan
+    runtime's stage of a file load), partitioned by ``partition_by``.
+    ``row_count``, when the caller already holds it, skips the count job
+    the message would otherwise cost; a callable is called after the
+    write (a count the caller observes on it).  The message names
+    ``target``, the path a staged write publishes to, or else ``path``."""
     n = df.count() if row_count is None else row_count
+    w = df.write.mode("overwrite")
     if partition_by:
         # cluster rows by the partition columns first — otherwise every
         # upstream task writes a sliver into every partition directory
-        # (tasks x partitions tiny files); see upsert_parquet for the
+        # (tasks x partitions tiny files); see stage_upsert for the
         # at-scale width variant
-        from pyspark.sql import functions as F
-
-        df = df.repartition(*[F.col(c) for c in partition_by])
-    w = df.write.mode("overwrite" if mode == "replace" else mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
+        w = df.repartition(*partition_by).write.mode("overwrite").partitionBy(*partition_by)
     w.parquet(path)
     return wrote(n() if callable(n) else n, target or path)
 
@@ -461,13 +453,6 @@ def _next_batch_no(path: str) -> int:
     return max(nos, default=-1) + 1
 
 
-def _write_change_batch(changes: DataFrame, path: str, batch_no: int) -> None:
-    """Direct (non-journaled) change-feed write — bootstrap only, where
-    the frame's lineage does not read the target table."""
-    dst = os.path.join(path, CHANGES_DIR, _batch_dir(batch_no))
-    changes.write.mode("overwrite").parquet(dst)
-
-
 def upsert_parquet(
     df: DataFrame,
     path: str,
@@ -482,8 +467,12 @@ def upsert_parquet(
     extra jars (Delta/Iceberg are absent here; this is the portable
     equivalent the jdbc_sink docstring points at for the 100 TB target).
 
-    Protocol (mirrors the stage+merge split of the JDBC upsert,
-    reference etl_agent/tools.py:83-96, re-expressed for a file table):
+    The same write–audit–publish every batch load of the plan runtime
+    makes, without the audit: a stage beside the table (``staging``),
+    the stage write (``stage_upsert``: steps 1-4 below), then the commit
+    (``publish`` of ``renames("upsert", ...)``: step 5).  Protocol
+    (mirrors the stage+merge split of the JDBC upsert, reference
+    etl_agent/tools.py:83-96, re-expressed for a file table):
 
     1. **Prune**: the touched partitions are the DISTINCT partition
        values in the batch — a driver-side list (partition counts are
@@ -498,23 +487,24 @@ def upsert_parquet(
     3. **Survivors**: target rows in touched partitions whose key does
        NOT appear in the batch (left_anti on ``key_cols``) survive; the
        batch supplies every other row (update = replaced, insert = new).
-    4. **Stage write**: survivors ∪ batch is written partitioned to a
-       dot-prefixed stage directory INSIDE the table — fully
-       distributed, one file per task, never through the driver.  With
-       ``change_feed=True`` the insert/update_pre/update_post row sets
-       (frames the merge already computes) are staged alongside.
+    4. **Stage write**: survivors ∪ batch is written partitioned into
+       the stage beside the table — fully distributed, one file per
+       task, never through the driver.  With ``change_feed=True`` the
+       insert/update_pre/update_post row sets (frames the merge already
+       computes) are staged in its ``_changes/b<batch>``.  A table that
+       does not exist yet is bootstrapped: the stage holds the batch,
+       and every row is an insert.
     5. **Commit** (``_commit``, shared with every staged batch load): a
-       journal naming the stage and every swap is written first (tmp +
+       journal in the stage naming every rename is written first (tmp +
        atomic rename), then each touched partition directory is swapped
-       in and the change batch renamed into ``_changes/``.  The journal
-       lives in the table here (``_JOURNAL``); a batch load's lives in
-       its stage.  A crash at ANY point is repaired by
-       ``recover_table``: journal present → the commit ROLLS FORWARD
-       from the completed stage; no journal yet → the old table is
-       intact and the aborted stage is swept.  Readers that open the
-       table through ``read_table``/``recover_table`` therefore see the
-       whole commit or none of it — table-level atomicity from a
-       metadata journal, the same trick as a Delta/Iceberg commit log.
+       in and the change batch moved into ``_changes/``.  A crash at ANY
+       point is repaired by ``recover_table``: journal present → the
+       commit ROLLS FORWARD from the completed stage; no journal yet →
+       the old table is intact and the aborted stage is swept.  Readers
+       that open the table through ``read_table``/``recover_table``
+       therefore see the whole commit or none of it — table-level
+       atomicity from a metadata journal, the same trick as a
+       Delta/Iceberg commit log.
 
     Contract: a row's partition value must be stable per key — a key
     that migrates partitions between batches would escape the pruned
@@ -525,141 +515,148 @@ def upsert_parquet(
     ``a=1/b=2`` directories.
 
     ``row_count`` is the batch's row count when the caller already holds
-    it (counted before this call, so before the commit); ``None`` counts
-    here."""
+    it; ``None`` counts here."""
+    with staging(path) as stage:
+        data = os.path.join(stage, os.path.basename(os.path.abspath(path)))
+        msg, _schema = stage_upsert(
+            df, data, path, key_cols, partition_by, change_feed, row_count
+        )
+        publish(stage, *renames("upsert", data, path))
+    return msg
+
+
+def stage_upsert(
+    df: DataFrame,
+    data: str,
+    path: str,
+    key_cols: list[str],
+    partition_by: list[str],
+    change_feed: bool = False,
+    row_count: int | Callable[[], int] | None = None,
+) -> tuple[str, StructType]:
+    """Steps 1-4 of ``upsert_parquet``: write the upsert of ``df`` into
+    the table at ``path`` to ``data``, a new directory in a stage beside
+    it, and return the load message and the schema ``data`` was written
+    with.  ``data`` holds the touched partitions as they will be (all of
+    the batch's, for a table that does not exist yet; nothing, for an
+    empty batch) and, with ``change_feed``, the change batch in its
+    ``_changes``; ``renames("upsert", data, path)`` publishes it.
+
+    The merge reads the batch more than once (the touched partitions,
+    then the merge and the change feed), so only there is ``df``
+    persisted, until the stage is written.  ``row_count`` as in
+    ``write_parquet``."""
     from pyspark.sql import functions as F
 
     from agentic_etl_poc_spark import plan_capture
+    from agentic_etl_poc_spark.operators.quality import observed_scan
 
     if not key_cols:
         raise ValueError("parquet upsert requires load.key_cols")
     if not partition_by:
         raise ValueError("parquet upsert requires load.partition_by")
     pcols = list(partition_by)
-    spark = df.sparkSession
-
-    if not os.path.exists(path):
+    batch_no = _next_batch_no(path)
+    merge = os.path.exists(path)
+    if merge:
+        df = df.persist()
+    try:
+        # the merge's first action over the batch: one observed noop scan
+        # (no exchange) collects the touched partition values and fills
+        # the cache the merge then reads
+        touched = (
+            [tuple(r) for r in observed_scan(
+                df, pcols, [F.collect_set(F.struct(*pcols)).alias("t")],
+                "parquet_upsert_touched",
+            )["t"]]
+            if merge else []
+        )
         n = df.count() if row_count is None else row_count
+        out, changes, what = df, df.withColumn("_change_type", F.lit("insert")), "bootstrap"
+        if merge and not touched:
+            out, changes, what = df, None, "empty batch"
+        elif merge:
+            if any(v is None for t in touched for v in t):
+                # hive encodes a null partition as __HIVE_DEFAULT_PARTITION__,
+                # which the pruned merge read would silently miss — refuse
+                # rather than lose the anti-join against those rows
+                raise ValueError(
+                    f"parquet upsert batch has NULL {pcols!r} partition values; "
+                    "partition columns must be non-null"
+                )
+            # partition filter: OR of per-tuple AND equalities — stays a
+            # pure partition-column predicate, so the scan prunes to the
+            # touched directories (one term per touched partition)
+            pred = functools.reduce(operator.or_, [
+                functools.reduce(operator.and_, [F.col(c) == v for c, v in zip(pcols, t)])
+                for t in touched
+            ])
+            target = (
+                df.sparkSession.read.option("mergeSchema", "true")
+                .parquet(path).filter(pred)
+            )
+            key_frame = df.select(*key_cols).distinct()
+            survivors = target.join(key_frame, on=key_cols, how="left_anti")
+            # schema evolution both ways: batch columns absent from the
+            # target (and vice versa) fill with nulls instead of throwing
+            out = survivors.unionByName(df, allowMissingColumns=True)
+            plan_capture.note("parquet_upsert_merge", out)
+            # update_pre = pruned target rows whose key IS in the batch
+            # (the complement of survivors), insert/update_post = the
+            # batch split on whether the key existed
+            tkeys = target.select(*key_cols).distinct()
+            changes = (
+                target.join(key_frame, on=key_cols, how="left_semi")
+                .withColumn("_change_type", F.lit("update_pre"))
+                .unionByName(
+                    df.join(tkeys, on=key_cols, how="left_semi")
+                    .withColumn("_change_type", F.lit("update_post")),
+                    allowMissingColumns=True,
+                )
+                .unionByName(
+                    df.join(tkeys, on=key_cols, how="left_anti")
+                    .withColumn("_change_type", F.lit("insert")),
+                    allowMissingColumns=True,
+                )
+            )
+            what = f"{len(touched)} partitions rewritten"
         # cluster by the partition columns before the partitioned write:
         # without it every upstream task writes a sliver into every
         # partition directory (tasks x partitions tiny files — the
         # small-file problem compact_parquet exists to undo).  One
         # shuffle, one file per partition here; at scale use
         # repartition(n_files_per_partition, *pcols) for width.
-        df.repartition(*[F.col(c) for c in pcols]).write.mode(
-            "overwrite"
-        ).partitionBy(*pcols).parquet(path)
-        if change_feed:
-            _write_change_batch(
-                df.withColumn("_change_type", F.lit("insert")).withColumn(
-                    "_batch", F.lit(0)
-                ),
-                path,
-                0,
-            )
-        return f"upserted {n:,} rows into {path} (parquet COW: bootstrap)"
-
-    recover_table(path)
-
-    # count BEFORE the commit: a batch whose lineage read the target
-    # would recompute over swapped files afterwards
-    batch_rows = df.count() if row_count is None else row_count
-    touched = [
-        tuple(r) for r in df.select(*pcols).distinct().collect()
-    ]
-    if not touched:
-        return f"upserted 0 rows into {path} (parquet COW: empty batch)"
-    if any(v is None for t in touched for v in t):
-        # hive encodes a null partition as __HIVE_DEFAULT_PARTITION__,
-        # which the pruned merge read would silently miss — refuse
-        # rather than lose the anti-join against those rows
-        raise ValueError(
-            f"parquet upsert batch has NULL {pcols!r} partition values; "
-            "partition columns must be non-null"
-        )
-    # partition filter: OR of per-tuple AND equalities — stays a pure
-    # partition-column predicate, so the scan prunes to the touched
-    # directories (one term per touched partition, driver-side small)
-    import functools
-    import operator
-
-    pred = functools.reduce(
-        operator.or_,
-        (
-            functools.reduce(
-                operator.and_,
-                (F.col(c) == F.lit(v) for c, v in zip(pcols, t)),
-            )
-            for t in touched
-        ),
-    )
-    target = (
-        spark.read.option("mergeSchema", "true").parquet(path).filter(pred)
-    )
-    key_frame = df.select(*key_cols).distinct()
-    survivors = target.join(key_frame, on=key_cols, how="left_anti")
-    # schema evolution both ways: batch columns absent from the target
-    # (and vice versa) fill with nulls instead of throwing
-    out = survivors.unionByName(df, allowMissingColumns=True)
-    plan_capture.note("parquet_upsert_merge", out)
-
-    stage = os.path.abspath(tempfile.mkdtemp(prefix=".upsert_stage_", dir=path))
-    jpath = os.path.join(path, _JOURNAL)
-    batch_no = _next_batch_no(path)
-    try:
-        # same clustering rule as the bootstrap write (see above)
-        out.repartition(*[F.col(c) for c in pcols]).write.mode(
-            "overwrite"
-        ).partitionBy(*pcols).parquet(stage)
-        moves: list[tuple[str, str]] = []
-        if change_feed:
-            # the merge already holds every needed frame: update_pre =
-            # pruned target rows whose key IS in the batch (the
-            # complement of survivors), insert/update_post = the batch
-            # split on whether the key existed.  Staged next to the data
-            # and committed by the SAME journal — the feed and the table
-            # can never disagree about a commit.
-            tkeys = target.select(*key_cols).distinct()
-            update_pre = target.join(key_frame, on=key_cols, how="left_semi")
-            update_post = df.join(tkeys, on=key_cols, how="left_semi")
-            insert = df.join(tkeys, on=key_cols, how="left_anti")
-            changes = (
-                update_pre.withColumn("_change_type", F.lit("update_pre"))
-                .unionByName(
-                    update_post.withColumn(
-                        "_change_type", F.lit("update_post")
-                    ),
-                    allowMissingColumns=True,
-                )
-                .unionByName(
-                    insert.withColumn("_change_type", F.lit("insert")),
-                    allowMissingColumns=True,
-                )
-                .withColumn("_batch", F.lit(batch_no))
-            )
+        out.repartition(*pcols).write.mode("overwrite").partitionBy(*pcols).parquet(data)
+        if change_feed and changes is not None:
+            # staged with the data and committed by the SAME journal: the
+            # feed and the table can never disagree about a commit
+            changes = changes.withColumn("_batch", F.lit(batch_no))
             plan_capture.note("parquet_upsert_change_feed", changes)
-            cdf = os.path.join(stage, "_cdf")
-            changes.write.mode("overwrite").parquet(cdf)
-            moves.append(
-                (cdf, os.path.abspath(
-                    os.path.join(path, CHANGES_DIR, _batch_dir(batch_no))
-                ))
-            )
-        swaps = [
-            (os.path.join(stage, rel), os.path.abspath(os.path.join(path, rel)))
-            for rel in _leaf_partition_dirs(stage)
-        ]
-        _commit(jpath, stage, swaps, moves)
+            changes.write.parquet(os.path.join(data, CHANGES_DIR, _batch_dir(batch_no)))
     finally:
-        # the stage is the roll-forward source once the journal exists:
-        # recover_table clears it then
-        if not os.path.exists(jpath):
-            shutil.rmtree(stage, ignore_errors=True)
-    n = len(swaps)
-    return (
-        f"upserted {batch_rows:,} rows into {path} "
-        f"(parquet COW: {n} partitions rewritten)"
-    )
+        if merge:
+            df.unpersist()
+    n = n() if callable(n) else n
+    return f"upserted {n:,} rows into {path} (parquet COW: {what})", out.schema
+
+
+def renames(
+    mode: str, data: str, target: str
+) -> tuple[list[tuple[str, str]], list[tuple[str, str]]]:
+    """The ``(swaps, appends)`` that ``publish`` takes to publish a
+    stage's ``data`` to ``target`` for a load of this ``mode``: an
+    append moves its new files; an upsert swaps the partitions it
+    rewrote (``stage_upsert``) and moves its change batch; any other
+    load swaps the whole target."""
+    if mode == "append":
+        return [], [(data, target)]
+    if mode != "upsert":
+        return [(data, target)], []
+    swaps = [
+        (os.path.join(data, rel), os.path.join(target, rel))
+        for rel in _leaf_partition_dirs(data)
+    ]
+    return swaps, [(os.path.join(data, CHANGES_DIR), os.path.join(target, CHANGES_DIR))]
 
 
 #: What a failed artifact re-read or sink write raises: Spark's captured

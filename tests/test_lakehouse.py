@@ -2,8 +2,9 @@
 schema evolution, multi-column partitioning, row-level change feed.
 
 The commit protocol under test (sinks/parquet_sink.py::upsert_parquet):
-stage write -> journal (tmp + atomic rename) -> partition-directory
-swaps -> change-feed rename -> residue cleanup -> journal removal.
+stage write beside the table -> journal in the stage (tmp + atomic
+rename) -> partition-directory swaps -> change-feed move -> residue
+cleanup -> journal and stage removal.
 ``recover_table`` must repair a crash at ANY rename so a reader sees the
 whole commit or none of it — never a mix (what a Delta/Iceberg metadata
 commit log provides; reference upsert semantics anchor:
@@ -72,7 +73,11 @@ def test_crash_injection_old_or_new_never_mixed(spark, tmp_path, monkeypatch):
         finally:
             monkeypatch.setattr(ps, "_rename", real_rename)
 
-        journal_present = os.path.exists(os.path.join(tbl, ps._JOURNAL))
+        # the journal lives in the stage beside the table
+        journal_present = any(
+            os.path.exists(os.path.join(d, ps._JOURNAL))
+            for d in [tbl, *ps._stages(tbl)]
+        )
         got = _table_rows(spark, tbl)  # read_table runs recovery
         if completed or journal_present:
             assert got == NEW_STATE, f"crash_at={crash_at}: not rolled forward"
@@ -87,6 +92,7 @@ def test_crash_injection_old_or_new_never_mixed(spark, tmp_path, monkeypatch):
             if d.startswith((".precommit_", ".upsert_stage_"))
         ]
         assert not leftovers, f"crash_at={crash_at}: {leftovers}"
+        assert not ps._stages(tbl), f"crash_at={crash_at}: stage left"
         if completed:
             break
     assert completed, "crash index never reached the end of the commit"

@@ -383,11 +383,12 @@ def test_run_ledger(tmp_path):
 
 
 def test_upsert_merge_on_conflict(tmp_path):
-    """The one genuinely custom writer: stage -> ON CONFLICT merge, run
-    against SQLite (same statement shapes Postgres accepts)."""
+    """The one genuinely custom writer: stage -> ON CONFLICT merge (the
+    upsert's publish), run against SQLite (same statement shapes Postgres
+    accepts)."""
     import sqlite3
 
-    from agentic_etl_poc_spark.sinks.jdbc_sink import _merge_on_conflict
+    from agentic_etl_poc_spark.sinks.jdbc_sink import publish
 
     db = tmp_path / "sink.db"
     conn_str = f"sqlite:///{db}"
@@ -398,7 +399,7 @@ def test_upsert_merge_on_conflict(tmp_path):
             "INSERT INTO tgt_stg VALUES (?, ?, ?)",
             [(1, "a", 10), (2, "b", 20)],
         )
-    _merge_on_conflict(conn_str, "tgt", "tgt_stg", ["id"], ["id", "name", "qty"])
+    publish(None, conn_str, "tgt", "tgt_stg", "upsert", ["id"], ["id", "name", "qty"])
     # second pass: one conflicting update, one fresh insert
     with con:
         con.execute("DELETE FROM tgt_stg")
@@ -406,7 +407,7 @@ def test_upsert_merge_on_conflict(tmp_path):
             "INSERT INTO tgt_stg VALUES (?, ?, ?)",
             [(2, "b2", 22), (3, "c", 30)],
         )
-    _merge_on_conflict(conn_str, "tgt", "tgt_stg", ["id"], ["id", "name", "qty"])
+    publish(None, conn_str, "tgt", "tgt_stg", "upsert", ["id"], ["id", "name", "qty"])
     rows = sorted(con.execute("SELECT id, name, qty FROM tgt").fetchall())
     con.close()
     assert rows == [(1, "a", 10), (2, "b2", 22), (3, "c", 30)]
@@ -749,6 +750,7 @@ def test_jdbc_derby_live_roundtrip(spark, tmp_path):
     ver = verify_table(spark, url, "t")
     assert ver == {
         "rows": 3,
+        "nonnull_ok": True,
         "fresh_ok": True,
         "lag_minutes": None,
         "status": True,

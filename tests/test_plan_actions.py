@@ -1,9 +1,9 @@
 """Spark actions per plan-lifecycle stage.
 
-``run_from_plan`` runs one action per stage: a file load's DQ gate reads
-its numbers off the stage write, the quarantine split, its DQ gate and
-its parquet load are one partitioned write, a load that writes its target
-directly (a parquet upsert) is gated by a scan first, and a drained
+``run_from_plan`` runs one action per stage: a batch load's DQ gate reads
+its numbers off the batch's first action (the stage write, or a parquet
+upsert's scan of its touched partitions), the quarantine split, its DQ
+gate and its parquet load are one partitioned write, and a drained
 stream is gated by one scan of its artifact.  Every scanning gate (DQ,
 verify, the stream tail) is one job: its aggregates are observed on a
 ``noop`` scan (``quality.observed_scan``).  These tests pin
@@ -196,14 +196,15 @@ load:
 
 
 def test_jobs_parquet_upsert_plan(spark, sf_smoke, tmp_path):
-    """An upsert into an existing table (the one batch load that still
-    persists its output: the merge reads it twice): DQ scan 1, which also
-    builds the persisted frame; the merge 7 (touched partitions 2, the target's
-    schema 1, the merge write with its query stages 4); verify re-read
-    inference 1 and scan 1.  The batch is not recounted before the
-    commit (the DQ count already ran before it), and the source comes
-    from the memo the first run filled.  The verify re-read still
-    infers: a merge can evolve the table wider than the batch."""
+    """An upsert into an existing table, staged like every batch load:
+    the touched partitions 1 (an observed ``noop`` scan of the batch,
+    which also builds the merge's persisted batch and carries the DQ
+    gate's metrics, so the gate runs no scan of its own); the target's
+    schema 1; the merge's stage write with its query stages 4; verify
+    re-read of the stage with the schema the merge wrote: scan 1.  The
+    batch is not counted (the gate's observed count is the message's),
+    and the source comes from the memo the first run filled.  Verify
+    counts the rewritten partitions; this batch touches every year."""
     out = tmp_path / "up"
     plan = _orders(sf_smoke) + f"""
 transform:
@@ -226,7 +227,35 @@ load:
     assert res["status"] == "ok", res
     assert res["message"].startswith(f"upserted 300 rows into {out} ")
     assert res["verify"]["rows"] == 700  # 500 + 300 - 100 shared keys
-    assert jobs == 10
+    assert jobs == 7
+
+
+def test_jobs_jdbc_plan(spark, sf_smoke, tmp_path):
+    """A Derby load, staged like every batch load: source schema
+    inference 1 (the second run reads its source from the memo); the
+    stage table's write 1, which observes the DQ gate's metrics; verify
+    1, one query pushed down into Derby over the stage table.  The
+    publish is one transaction inside Derby: no Spark job."""
+    from agentic_etl_poc_spark.queries.pipeline import derby_url
+
+    plan = _orders(sf_smoke) + f"""
+transform:
+  sql: SELECT o_orderkey, o_custkey, o_totalprice FROM input_df
+checks:
+  min_rows: 1
+  nonnull_cols: [o_orderkey]
+load:
+  to: postgres
+  conn_str: "{derby_url(str(tmp_path / "db"), create=True)}"
+  table: jobs_tgt
+  mode: append
+"""
+    for group, want in (("plan-jdbc", 3), ("plan-jdbc-warm", 2)):
+        (res, _), jobs = _count_jobs(spark, group, lambda: _run(spark, plan))
+        assert res["status"] == "ok", res
+        assert res["message"] == "loaded 1,500 rows into jobs_tgt (append)"
+        assert res["verify"]["rows"] == 1500
+        assert jobs == want, group
 
 
 def test_jobs_stream_plan(spark, tmp_path):
@@ -347,16 +376,6 @@ def test_upsert_parquet_row_count_skips_count(spark, tmp_path, no_count):
     assert _rows(read_table(spark, b)) == _rows(read_table(spark, a))
     assert len(_rows(read_table(spark, b))) == 45
     assert jobs_b < jobs_a
-
-
-def test_write_parquet_upsert_mode_forwards_row_count(spark, tmp_path, no_count):
-    no_count()
-    out = str(tmp_path / "t")
-    msg = write_parquet(
-        _batch(spark, 0, 9), out, mode="upsert", partition_by=["yr"],
-        key_cols=["id"], row_count=9,
-    )
-    assert msg == f"upserted 9 rows into {out} (parquet COW: bootstrap)"
 
 
 # -- the stream tail's single-scan gates ------------------------------------

@@ -175,18 +175,19 @@ def _incremental_plan(sf_smoke, out, ledger, mode: str) -> str:
 
 @pytest.mark.parametrize("mode", ["append", "upsert"])
 def test_truncated_artifact_fails_batch_run(spark, sf_smoke, tmp_path, monkeypatch, mode):
-    """The sink writes, then a part file is truncated before the verify
-    re-read (the declared-schema read for append, the inferring one for
-    upsert): failed run, one alert, watermark unchanged."""
+    """The sink writes its stage (an upsert's is ``stage_upsert``), then a
+    part file is truncated before the verify re-read of the stage (with
+    the written schema): failed run, one alert, watermark unchanged."""
     out, ledger = tmp_path / "out", str(tmp_path / "ledger.db")
-    real = parquet_sink.write_parquet
+    name = "stage_upsert" if mode == "upsert" else "write_parquet"
+    real = getattr(parquet_sink, name)
 
-    def write_then_truncate(df, path, **kw):
-        msg = real(df, path, **kw)
+    def write_then_truncate(df, path, *a, **kw):
+        written = real(df, path, *a, **kw)
         _truncate_parts(path)
-        return msg
+        return written
 
-    monkeypatch.setattr(parquet_sink, "write_parquet", write_then_truncate)
+    monkeypatch.setattr(parquet_sink, name, write_then_truncate)
     res, alerts = _run(spark, _incremental_plan(sf_smoke, out, ledger, mode))
     _assert_read_error(res, alerts)
     assert RunLedger(ledger).get_state("watermark:o") == _WM

@@ -1,8 +1,10 @@
 """Write–audit–publish for batch loads.
 
-A file load writes into a hidden stage beside its target, verify re-reads
-the stage, and only a passing run publishes it through the journaled
-commit (``parquet_sink.publish``).  These tests pin that
+Every batch load writes a stage and verify reads it: a file load's (a
+parquet upsert's too) is a hidden directory beside its target, published
+through the journaled commit (``parquet_sink.publish``), a JDBC load's
+the table ``{table}_stg``, published by one transaction.  Only a passing
+run publishes.  These tests pin that
 
 - a failed verify leaves the target's files and bytes, and the ledger
   watermark, as they were (the append reproduction: the corrected retry
@@ -24,7 +26,13 @@ commit (``parquet_sink.publish``).  These tests pin that
   persists its output (the parquet upsert aside); a quarantine plan that
   reads its clean rows back (a CSV target) and fails its DQ gate or its
   verify leaves the target byte-identical and still publishes its
-  violating rows.
+  violating rows;
+- a parquet upsert (bootstrap or merge) or a Derby load (append,
+  replace, upsert) that fails its verify or DQ gate leaves the target's
+  files or rows, and the watermark, as they were, and no stage; a
+  passing one verifies the partitions it rewrote or the batch;
+- a quarantine split or a stream drain that raises fails the load with
+  one alert.
 """
 
 from __future__ import annotations
@@ -405,3 +413,198 @@ def test_batch_runs_leave_no_stage_and_persist_nothing(
         )
         bad = spark.read.parquet(str(tmp_path / "bad"))
         assert _rows(bad.select("o_orderkey")) == _rows(violating.select("o_orderkey"))
+
+
+# -- the staged upsert and JDBC tails ----------------------------------------
+def _upsert_plan(sf, tmp) -> str:
+    """An incremental parquet upsert of the orders, partitioned by year."""
+    return _incremental_plan(sf, tmp / "out", str(tmp / "ledger.db"), "upsert")
+
+
+def _jdbc_plan(sf, tmp, mode: str, bump: int = 0) -> str:
+    """An incremental Derby load of the orders keyed up to 70, ``pri``
+    being the customer key plus ``bump``, NULL for every fifth order when
+    ``bump`` is set."""
+    from agentic_etl_poc_spark.queries.pipeline import derby_url
+
+    null_every = "o_orderkey % 5 = 0" if bump else "false"
+    plan = _orders_plan(sf, "-", f"  mode: {mode}\n")
+    plan = plan.replace(
+        "  to: parquet\n  file_path: -\n",
+        f'  to: postgres\n  conn_str: "{derby_url(str(tmp / "db"), create=True)}"\n'
+        "  table: tgt\n  key_cols: [o_orderkey]\n",
+    ).replace(
+        plan[plan.index("    SELECT"):plan.index("checks:")],
+        f"    SELECT o_orderkey, o_orderdate,\n"
+        f"           CASE WHEN {null_every} THEN NULL ELSE o_custkey + {bump} END AS pri\n"
+        f"    FROM input_df WHERE o_orderkey <= 70\n",
+    )
+    ledger = str(tmp / "ledger.db")
+    RunLedger(ledger).set_state("watermark:o", _WM)
+    return plan + f"incremental:\n  ts_col: o_orderdate\n  ledger: {ledger}\n  key: o\n"
+
+
+#: verify fails on every staged tail below: too few rows, nulls in ``pri``
+_BAD_JDBC_VERIFY = "verify:\n  min_rows: 1000\n  nonnull_cols: [pri]\n"
+
+
+def _jdbc_rows(spark, tmp) -> list[tuple]:
+    from agentic_etl_poc_spark.queries.pipeline import derby_url
+    from agentic_etl_poc_spark.sources.jdbc_source import fetch_db
+
+    return _rows(fetch_db(spark, derby_url(str(tmp / "db")), "SELECT * FROM tgt"))
+
+
+def _jdbc_stage_exists(spark, tmp) -> bool:
+    from agentic_etl_poc_spark.queries.pipeline import derby_url
+    from agentic_etl_poc_spark.sinks.jdbc_sink import _derby_table_exists
+
+    return _derby_table_exists(spark, derby_url(str(tmp / "db")), "tgt_stg")
+
+
+#: cell -> (the plan that passes first, or None for a bootstrap; the plan
+#: that fails; the stage that fails it)
+_STAGED_TAILS = {
+    "upsert_bootstrap_verify": (None, lambda sf, tmp: _upsert_plan(sf, tmp) + _BAD_VERIFY, "verify"),
+    "upsert_merge_verify": (_upsert_plan, lambda sf, tmp: _upsert_plan(sf, tmp) + _BAD_VERIFY, "verify"),
+    "upsert_merge_dq": (_upsert_plan, lambda sf, tmp: _upsert_plan(sf, tmp).replace(
+        "nonnull_cols: [o_orderkey]", "nonnull_cols: [price]"
+    ), "dq"),
+    **{
+        f"jdbc_{mode}_verify": (
+            lambda sf, tmp, m=mode: _jdbc_plan(sf, tmp, m),
+            lambda sf, tmp, m=mode: _jdbc_plan(sf, tmp, m, bump=1) + _BAD_JDBC_VERIFY,
+            "verify",
+        )
+        for mode in ("append", "replace", "upsert")
+    },
+}
+
+
+@pytest.mark.parametrize("cell", list(_STAGED_TAILS))
+def test_failed_staged_tail_leaves_target(spark, sf_smoke, tmp_path, cell):
+    """A parquet upsert (bootstrap or merge) or a Derby load (append,
+    replace, upsert) that fails its verify or its DQ gate: one alert, the
+    target's files (or its ``SELECT *`` rows) as they were, no stage
+    directory or ``{table}_stg`` table left, and the watermark where it
+    was.  Both used to publish before verify ran (a JDBC verify also
+    ignored ``min_rows`` and ``nonnull_cols``)."""
+    first, failing, stage = _STAGED_TAILS[cell]
+    jdbc = cell.startswith("jdbc")
+    if first is not None:
+        assert _run(spark, first(sf_smoke, tmp_path))[0]["status"] == "ok"
+    before = _jdbc_rows(spark, tmp_path) if jdbc else _snapshot(tmp_path / "out")
+    res, alerts = _run(spark, failing(sf_smoke, tmp_path))
+    assert res["status"] == "failed" and set(res) == {"status", stage}, res
+    assert len(alerts) == 1
+    assert (_jdbc_rows(spark, tmp_path) if jdbc else _snapshot(tmp_path / "out")) == before
+    assert before or first is None
+    assert not _stages(tmp_path)
+    assert not (jdbc and _jdbc_stage_exists(spark, tmp_path))
+    assert RunLedger(str(tmp_path / "ledger.db")).get_state("watermark:o") == _WM
+
+
+def test_upsert_verify_counts_rewritten_partitions(spark, sf_smoke, tmp_path):
+    """A passing upsert verifies its stage: ``verify.rows`` counts the
+    rows of the partitions the merge rewrote (survivors and batch), not
+    the whole table; the table then holds each key once."""
+    out = tmp_path / "out"
+    plan = _orders_plan(sf_smoke, out, "  mode: upsert\n  key_cols: [o_orderkey]\n"
+                        "  partition_by: [yr]\n")
+    base = plan.replace("FROM input_df", "FROM input_df WHERE o_orderkey % 3 = 0")
+    batch = plan.replace("FROM input_df", "FROM input_df WHERE o_orderkey % 5 = 1 AND year(o_orderdate) = 1995")
+    assert _run(spark, base)[0]["status"] == "ok"
+    res, alerts = _run(spark, batch)
+    assert res["status"] == "ok" and not alerts, res
+    assert res["message"].endswith("(parquet COW: 1 partitions rewritten)")
+    table = spark.read.parquet(str(out))
+    assert res["verify"]["rows"] == table.filter("yr = 1995").count() < table.count()
+    keys = table.select("o_orderkey")
+    assert keys.count() == keys.distinct().count()
+    assert not _stages(tmp_path)
+
+
+@pytest.mark.parametrize("mode", ["append", "replace", "upsert"])
+def test_jdbc_verify_counts_its_stage(spark, sf_smoke, tmp_path, mode):
+    """A passing Derby load verifies its stage table: ``verify.rows`` is
+    the batch's row count whatever the table held; publishing leaves the
+    table as the mode says and drops the stage."""
+    plan = _jdbc_plan(sf_smoke, tmp_path, mode)
+    assert _run(spark, plan)[0]["status"] == "ok"
+    first = _jdbc_rows(spark, tmp_path)
+    res, alerts = _run(spark, _jdbc_plan(sf_smoke, tmp_path, mode).replace(
+        "o_custkey + 0", "o_custkey + 2"
+    ))
+    assert res["status"] == "ok" and not alerts, res
+    assert res["verify"]["rows"] == len(first) > 0
+    assert res["verify"]["nonnull_ok"] is True
+    bumped = sorted((k, d, p + 2) for k, d, p in first)
+    want = {"append": sorted(first + bumped), "replace": bumped, "upsert": bumped}[mode]
+    assert _jdbc_rows(spark, tmp_path) == want
+    assert not _jdbc_stage_exists(spark, tmp_path)
+
+
+# -- writes that raise -------------------------------------------------------
+def test_raising_quarantine_split_fails_the_load(spark, sf_smoke, tmp_path, monkeypatch):
+    """The quarantine split write raises a Spark error: a failed load
+    (``write_error``) with one alert, nothing published on either side,
+    no stage, the watermark where it was."""
+    from pyspark.errors import PySparkException
+
+    from agentic_etl_poc_spark import runtime
+
+    def boom(*a, **kw):
+        raise PySparkException("split failed")
+
+    ledger = str(tmp_path / "ledger.db")
+    RunLedger(ledger).set_state("watermark:o", _WM)
+    plan = _quarantine_plan(sf_smoke, tmp_path / "bad", tmp_path / "clean") + (
+        f"incremental:\n  ts_col: o_orderdate\n  ledger: {ledger}\n  key: o\n"
+        'alerts:\n  on_fail: "slack://#x"\n'
+    )
+    monkeypatch.setattr(runtime, "quarantine_write", boom)
+    res, alerts = _run(spark, plan)
+    assert res == {"status": "failed", "load": {"status": False, "error": "write_error: split failed"}}
+    assert len(alerts) == 1 and alerts[0].startswith("Load failed: ")
+    assert sorted(os.listdir(tmp_path)) == ["ledger.db"]
+    assert RunLedger(ledger).get_state("watermark:o") == _WM
+
+
+def test_raising_stream_drain_fails_the_load(spark, tmp_path, monkeypatch):
+    """The stream drain raises a Spark error: a failed load
+    (``write_error``) with one alert, and no gate scan."""
+    from pyspark.errors import PySparkException
+
+    from agentic_etl_poc_spark.streaming import events
+    from tests.test_plan_actions import _stage_topic, _stream_plan
+
+    def boom(*a, **kw):
+        raise PySparkException("drain failed")
+
+    topic = _stage_topic(tmp_path / "topic")
+    monkeypatch.setattr(events, "run_available_now", boom)
+    res, alerts = _run(spark, _stream_plan(topic, tmp_path / "out", "checks:\n  min_rows: 1\n"))
+    assert res == {"status": "failed", "load": {"status": False, "error": "write_error: drain failed"}}
+    assert len(alerts) == 1 and alerts[0].startswith("Load failed: ")
+    assert not (tmp_path / "out").exists()
+
+
+def test_jdbc_stage_drop_failure_only_warns(spark, sf_smoke, tmp_path, monkeypatch):
+    """Dropping the stage table fails after the publish: the run still
+    passes (its load is published and its watermark advances) and the
+    failure is a warning."""
+    from agentic_etl_poc_spark.sinks import jdbc_sink
+
+    real = jdbc_sink._execute
+
+    def no_drop(spark, conn_str, stmts, ignore_states=()):
+        if stmts[0].startswith("DROP TABLE tgt_stg"):
+            raise RuntimeError("connection lost")
+        real(spark, conn_str, stmts, ignore_states)
+
+    monkeypatch.setattr(jdbc_sink, "_execute", no_drop)
+    with pytest.warns(UserWarning, match="tgt_stg was not dropped: connection lost"):
+        res, alerts = _run(spark, _jdbc_plan(sf_smoke, tmp_path, "append"))
+    assert res["status"] == "ok" and not alerts, res
+    assert len(_jdbc_rows(spark, tmp_path)) == res["verify"]["rows"]
+    assert RunLedger(str(tmp_path / "ledger.db")).get_state("watermark:o") != _WM
