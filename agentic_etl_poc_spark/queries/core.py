@@ -46,6 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from agentic_etl_poc_spark.io_tables import fingerprint, memo
+from agentic_etl_poc_spark.session import pid_alive
 
 
 @dataclass(frozen=True)
@@ -168,19 +169,40 @@ def _booted_derby(root: str) -> bool:
 
 #: The latest run root per (entry tag, sf_dir), for ``run_root``.
 _RUN_ROOTS: dict[tuple[str, str], str] = {}
+#: Temp dirs whose dead processes' run dirs this process already reaped.
+_REAPED: set[str] = set()
+_RUN_DIR = re.compile(r"spark_graft_run_(\d+)")
+
+
+def _run_dir() -> str:
+    """This process's ``<tmp>/spark_graft_run_<pid>/``, which holds its run
+    roots.  On first use per temp dir, the run dirs of processes that are
+    no longer alive go: a killed process never ran its ``atexit``."""
+    tmp = tempfile.gettempdir()
+    if tmp not in _REAPED:
+        _REAPED.add(tmp)
+        for name in os.listdir(tmp):
+            dead = _RUN_DIR.fullmatch(name)
+            if dead and not pid_alive(int(dead[1])):
+                shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+    own = os.path.join(tmp, f"spark_graft_run_{os.getpid()}")
+    os.makedirs(own, exist_ok=True)
+    return own
 
 
 def run_root(tag: str, sf_dir: str) -> str:
-    """A fresh ``<tmp>/spark_graft_<tag>_*`` working dir for one call of an
-    entry that writes per-run output.  The previous call's dir for the
-    same ``tag`` and ``sf_dir`` is removed first: a result frame stays
-    readable until the entry's next call (the driver collects lazily),
-    and a process keeps at most one root per entry, removed at exit."""
+    """A fresh ``<tmp>/spark_graft_run_<pid>/<tag>_*`` working dir for one
+    call of an entry that writes per-run output.  The previous call's dir
+    for the same ``tag`` and ``sf_dir`` is removed first: a result frame
+    stays readable until the entry's next call (the driver collects
+    lazily), and a process keeps at most one root per entry, removed at
+    exit (or, if the process is killed, by the next process's
+    ``_run_dir``)."""
     prev = _RUN_ROOTS.pop((tag, sf_dir), None)
     if prev is not None:
         shutil.rmtree(prev, ignore_errors=True)
     root = _RUN_ROOTS[(tag, sf_dir)] = tempfile.mkdtemp(
-        prefix=f"spark_graft_{tag}_"
+        prefix=f"{tag}_", dir=_run_dir()
     )
     return root
 
@@ -188,9 +210,12 @@ def run_root(tag: str, sf_dir: str) -> str:
 @atexit.register
 def _remove_run_roots() -> None:
     """At exit no caller can still read a result frame: remove the last
-    root of every entry."""
+    root of every entry, and the process's run dirs."""
     while _RUN_ROOTS:
         shutil.rmtree(_RUN_ROOTS.popitem()[1], ignore_errors=True)
+    for tmp in _REAPED:
+        shutil.rmtree(os.path.join(tmp, f"spark_graft_run_{os.getpid()}"),
+                      ignore_errors=True)
 
 
 def register(name: str, oracle: str | None, description: str = ""):

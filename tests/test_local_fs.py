@@ -12,7 +12,8 @@ process for every file and directory a write creates.  These tests pin
   class spawns them;
 - the same modes as Hadoop's class, under the default umask and under
   ``fs.permissions.umask-mode=077``, and a kept sticky bit;
-- when the setup helper adds nothing, and that a changed source rebuilds.
+- when the setup helper adds nothing, and that a changed source rebuilds
+  its jar.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import os
 import re
 import shutil
 import stat
+import zipfile
 
 import pytest
 
@@ -119,18 +121,20 @@ def test_changed_source_rebuilds(tmp_path, monkeypatch):
     src = tmp_path / "NioLocalFileSystem.java"
     shutil.copy(session.LOCAL_FS_SOURCE, src)
     first = session.build_classes(str(src))
-    cls = os.path.join(first, "agentic_etl_poc_spark", "jvm", "NioLocalFileSystem.class")
-    built = os.stat(cls).st_mtime_ns
+    assert first.endswith(".jar")
+    with zipfile.ZipFile(first) as z:
+        assert "agentic_etl_poc_spark/jvm/NioLocalFileSystem.class" in z.namelist()
+    built = os.stat(first).st_mtime_ns
     assert session.build_classes(str(src)) == first
-    assert os.stat(cls).st_mtime_ns == built
+    assert os.stat(first).st_mtime_ns == built
 
     with open(src, "a") as f:
         f.write("// changed\n")
     second = session.build_classes(str(src))
     assert second != first
-    assert os.path.isfile(
-        os.path.join(second, "agentic_etl_poc_spark", "jvm", "NioLocalFileSystem$Raw.class")
-    )
+    with zipfile.ZipFile(second) as z:
+        assert "agentic_etl_poc_spark/jvm/NioLocalFileSystem$Raw.class" in z.namelist()
+    # the two jars and nothing else: no class dir, no temp build left
     assert sorted(os.listdir(os.path.dirname(first))) == sorted(
         map(os.path.basename, (first, second))
     )
